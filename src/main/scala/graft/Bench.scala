@@ -2,12 +2,10 @@ package graft
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main: runs every SparkEntry query against
   * SPARK_GRAFT_SF_DIR (default sf0.1), forces full materialization via the
   * noop sink (no driver collect, no sink I/O), and prints one JSON line.
-  * One shared session: AQE on, shuffle partitions = cores.
+  * One shared session (GraftSession): AQE on, shuffle partitions = cores.
   */
 object Bench {
   def main(args: Array[String]): Unit = {
@@ -17,21 +15,7 @@ object Bench {
     // gate below): a drifted literal would silently stop history appends
     val defaultSfDir = "/root/testdata/sf0.1"
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", defaultSfDir)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // sized to the bench SFs (tens-of-MB single-file tables): small enough
-      // that scans split across cores, irrelevant at production file sizes
-      .config("spark.sql.files.maxPartitionBytes", "16m")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // tz-naive parquet timestamps → TIMESTAMP (UTC session), not NTZ
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.build(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
 
     // Warm every query once at the smallest SF so measurements capture
     // steady-state plan cost (the number that scales to a real cluster),
@@ -43,9 +27,13 @@ object Bench {
       .map(_.split(",").map(_.trim).toSet)
     def keep(name: String) = only.forall(_.contains(name))
     val bench = SparkEntry.queries.filter(q => keep(q._1))
-    bench.foreach { case (_, fn) =>
+    // A warm failure is reported, never swallowed: an entry that fails
+    // only at sf0.001 would otherwise be invisible.
+    bench.foreach { case (name, fn) =>
       try fn(spark, "/root/testdata/sf0.001").write.format("noop").mode("overwrite").save()
-      catch { case _: Throwable => () }
+      catch { case e: Throwable =>
+        System.err.println(s"[bench] warm $name failed: ${e.getMessage}")
+      }
       finally spark.catalog.clearCache()
     }
 
