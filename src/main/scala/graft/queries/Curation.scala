@@ -1387,20 +1387,16 @@ object Curation {
         |  CAST(1.0 AS DOUBLE) AS epsilon
         |FROM s ORDER BY lang""".stripMargin,
     "c_incr_dedup" ->
-      """WITH snap AS (
-        |  SELECT md5(lower(trim(regexp_replace(text, '[ \t\n\x0B\f\r]+', ' ', 'g')))) AS fp
+      s"""WITH snap AS (
+        |  SELECT md5(${normTextSql("text")}) AS fp
         |  FROM documents),
         |batch AS (
         |  SELECT lang,
-        |    md5(lower(trim(regexp_replace(
-        |      '  ' || regexp_replace(text, ' ', '   ', 'g'),
-        |      '[ \t\n\x0B\f\r]+', ' ', 'g')))) AS fp
+        |    md5(${normTextSql("'  ' || regexp_replace(text, ' ', '   ', 'g')")}) AS fp
         |  FROM documents WHERE doc_id % 3 = 0
         |  UNION ALL
         |  SELECT lang,
-        |    md5(lower(trim(regexp_replace(
-        |      text || ' updated-' || CAST(doc_id AS VARCHAR),
-        |      '[ \t\n\x0B\f\r]+', ' ', 'g')))) AS fp
+        |    md5(${normTextSql("text || ' updated-' || CAST(doc_id AS VARCHAR)")}) AS fp
         |  FROM documents WHERE doc_id % 5 = 1),
         |fresh AS (
         |  SELECT lang, count(*) AS n_fresh FROM batch
@@ -1439,14 +1435,10 @@ object Curation {
         |  round(avg(avg_logprob), 4) AS avg_lp
         |FROM b GROUP BY lang, bucket ORDER BY lang, bucket""".stripMargin,
     "c_dedup_keep_best" ->
-      """WITH dups AS (
-        |  SELECT doc_id * 2 AS doc_id, text, lang, n_chars FROM documents
-        |  UNION ALL
-        |  SELECT doc_id * 2 + 1 AS doc_id, text, lang, n_chars
-        |  FROM documents WHERE doc_id % 5 = 0),
+      s"""WITH dups AS (${dupsSql("text, lang, n_chars")}),
         |f AS (
         |  SELECT lang, n_chars, doc_id,
-        |    md5(lower(trim(regexp_replace(text, '[ \t\n\x0B\f\r]+', ' ', 'g')))) AS fp
+        |    md5(${normTextSql("text")}) AS fp
         |  FROM dups),
         |r AS (SELECT lang, n_chars,
         |  row_number() OVER (PARTITION BY fp ORDER BY n_chars DESC, doc_id) AS rn
@@ -1456,14 +1448,10 @@ object Curation {
         |  CAST(coalesce(sum(CASE WHEN rn > 1 THEN n_chars END), 0) AS BIGINT) AS chars_dropped
         |FROM r GROUP BY lang ORDER BY lang""".stripMargin,
     "c_leakage_split" ->
-      """WITH dups AS (
-        |  SELECT doc_id * 2 AS doc_id, text FROM documents
-        |  UNION ALL
-        |  SELECT doc_id * 2 + 1 AS doc_id, text
-        |  FROM documents WHERE doc_id % 5 = 0),
+      s"""WITH dups AS (${dupsSql("text")}),
         |f AS (
         |  SELECT doc_id,
-        |    md5(lower(trim(regexp_replace(text, '[ \t\n\x0B\f\r]+', ' ', 'g')))) AS fp
+        |    md5(${normTextSql("text")}) AS fp
         |  FROM dups),
         |a AS (
         |  SELECT 'by_fingerprint' AS strategy, fp,

@@ -29,25 +29,18 @@ object Dedup {
     * bijection — a fixed additive offset would alias real doc_ids once the
     * corpus outgrows it). Single scan: rows self-replicate via an exploded
     * copy array instead of a union of two scans (halves the read at scale).
+    * A `stratum` (Tables.stratum) draws the BASE ids before dup planting,
+    * so both engines select the identical sample. The oracle spelling is
+    * Tables.dupsSql.
     */
   def corpusWithDups(s: org.apache.spark.sql.SparkSession, d: String,
-      stratified: Boolean = false, stratumPrime: Int = 41): DataFrame = {
-    val docs0 = t(s, d, "documents")
-    // stratified = the 1-in-`stratumPrime` md5 sub-corpus draw
-    // (Tables.stratum), applied to the BASE ids before dup planting so
-    // both engines select the identical sample — the device that keeps
-    // the heaviest operators' DuckDB replays feasible at 100× volume (see
-    // the *_s41 queries; *_s37 cross-checks the prime choice)
-    val docs =
-      if (stratified) docs0.filter(stratum(col("doc_id"), stratumPrime))
-      else docs0
-    docs
+      stratum: Option[Int] = None): DataFrame =
+    inStratum(t(s, d, "documents"), "doc_id", stratum)
       .withColumn("__copy",
         explode(when(col("doc_id") % 5 === 0, array(lit(0L), lit(1L)))
           .otherwise(array(lit(0L)))))
       .withColumn("doc_id", col("doc_id") * 2 + col("__copy"))
       .drop("__copy")
-  }
 
   /** MinHash-LSH near-dup pairs over the dup corpus: 16 hashes × 4 bands of
     * 4 → explode band signatures → equi-join on (band, bsig) → verify
@@ -55,8 +48,8 @@ object Dedup {
     * At scale this is a shuffle on bucket key, never an O(n²) cross join.
     */
   def minhashPairs(s: org.apache.spark.sql.SparkSession, d: String,
-      stratified: Boolean = false, stratumPrime: Int = 41): DataFrame =
-    minhashPairsOf(corpusWithDups(s, d, stratified, stratumPrime))
+      stratum: Option[Int] = None): DataFrame =
+    minhashPairsOf(corpusWithDups(s, d, stratum))
 
   /** The same LSH pair listing over an ARBITRARY (doc_id, text) frame —
     * the form composable into larger pipelines (c_pretrain_build runs it
@@ -276,8 +269,8 @@ object Dedup {
     * derivation consume it without re-running the gram pass.
     */
   def spanEdges(s: org.apache.spark.sql.SparkSession, d: String, k: Int = 20,
-      stratified: Boolean = false): DataFrame =
-    spanEdgesPlan(s, d, k, stratified).localCheckpoint()
+      stratum: Option[Int] = None): DataFrame =
+    spanEdgesPlan(s, d, k, stratum).localCheckpoint()
 
   /** The un-materialized spanEdges plan — separate so PlanSpec can assert
     * its shape (one gh window, native gram_fps, no per-row md5): the
@@ -285,9 +278,9 @@ object Dedup {
     */
   private[queries] def spanEdgesPlan(
       s: org.apache.spark.sql.SparkSession, d: String, k: Int,
-      stratified: Boolean = false): DataFrame = {
+      stratum: Option[Int] = None): DataFrame = {
     graft.functions.GraftFunctions.ensureRegistered(s)
-    val docs = corpusWithDups(s, d, stratified)
+    val docs = corpusWithDups(s, d, stratum)
       .select(col("doc_id"), Text.normText(col("text")).as("nt"))
       .filter(length(col("nt")) >= k)
     val grams = docs.select(col("doc_id"),
@@ -349,6 +342,37 @@ object Dedup {
       .filter(col("jaccard") >= 0.65)
   }
 
+  /** Near-dup pair listing (d_minhash_lsh and its stratum twins). */
+  private def minhashLsh(s: org.apache.spark.sql.SparkSession, d: String,
+      stratum: Option[Int]): DataFrame =
+    minhashPairs(s, d, stratum)
+      .select(col("id_a"), col("id_b"), round(col("est_sim"), 4).as("est_sim"))
+      .orderBy("id_a", "id_b")
+
+  /** Cluster-size histogram of a component labelling (v, root). */
+  private def clusterHistogram(cc: DataFrame): DataFrame =
+    cc.groupBy("root").agg(count(lit(1)).as("cluster_size"))
+      .groupBy("cluster_size")
+      .agg(count(lit(1)).as("n_clusters"), min("root").as("min_root"))
+      .orderBy("cluster_size")
+
+  private def minhashClusters(s: org.apache.spark.sql.SparkSession, d: String,
+      stratum: Option[Int]): DataFrame =
+    clusterHistogram(connectedComponentsFromEdges(minhashPairs(s, d, stratum)
+      .select(col("id_a").as("src"), col("id_b").as("dst"))))
+
+  // Every clustered doc is an edge ENDPOINT by construction — a dup-gram
+  // group's hub (min doc) appears as src of its star edges and every other
+  // member as dst — so no separate node set exists at all:
+  // connectedComponentsFromEdges derives it inside the label
+  // initialization's aggregate. (A separate nodes branch re-ran the entire
+  // gram pass + window a second time: 5.9 s → this shape materializes the
+  // gram window exactly once.)
+  private def spanClusters(s: org.apache.spark.sql.SparkSession, d: String,
+      stratum: Option[Int]): DataFrame =
+    clusterHistogram(connectedComponentsFromEdges(
+      spanEdges(s, d, stratum = stratum)))
+
   val queries: Map[String, Q] = Map(
     // Exact dedup: first-per-fingerprint via min(doc_id) groupBy (scales as
     // a single hash aggregation; no window needed).
@@ -385,10 +409,7 @@ object Dedup {
     // replays in DuckDB SQL (see oracles below), so the LISTING itself is
     // value-checked, with d_minhash_recall as the family-independent
     // recall companion.
-    "d_minhash_lsh" -> ((s, d) =>
-      minhashPairs(s, d)
-        .select(col("id_a"), col("id_b"), round(col("est_sim"), 4).as("est_sim"))
-        .orderBy("id_a", "id_b")),
+    "d_minhash_lsh" -> ((s, d) => minhashLsh(s, d, None)),
 
     // The COMPLETE scalable near-dup pipeline in one query: LSH candidate
     // pairs (bucketed band equi-join, never O(n²)) → distributed connected
@@ -399,19 +420,11 @@ object Dedup {
     // the same pairs and the same unrolled label-min components.
     // Singleton docs (no near-dup) are out of scope by construction: the
     // histogram describes the DUPLICATED part of the corpus.
-    "d_minhash_clusters" -> ((s, d) => {
-      val pairs = minhashPairs(s, d)
-        .select(col("id_a").as("src"), col("id_b").as("dst"))
-      val cc = connectedComponentsFromEdges(pairs)
-      cc.groupBy("root").agg(count(lit(1)).as("cluster_size"))
-        .groupBy("cluster_size")
-        .agg(count(lit(1)).as("n_clusters"), min("root").as("min_root"))
-        .orderBy("cluster_size")
-    }),
+    "d_minhash_clusters" -> ((s, d) => minhashClusters(s, d, None)),
 
     // STRATUM-ORACLED twins of the two heaviest LSH compositions: the
     // identical operator over the 1-in-41 md5 sub-corpus
-    // (Tables.stratum41, both engines filter the base ids the same way).
+    // (Tables.stratum, both engines filter the base ids the same way).
     // Purpose: at sf10 the FULL d_minhash_lsh/_clusters DuckDB replays hit
     // single-node resource walls (77 GB spill class — SCALE_SF3.md), so
     // the full variants' 100× correctness rested on sf1/sf3 hashes; these
@@ -424,30 +437,16 @@ object Dedup {
     // full-pipeline coverage at this SF comes from the unstratified
     // variants, and the twins only become load-bearing on the scaled
     // corpora (sf10/sf30) they were built for.
-    "d_minhash_lsh_s41" -> ((s, d) =>
-      minhashPairs(s, d, stratified = true)
-        .select(col("id_a"), col("id_b"), round(col("est_sim"), 4).as("est_sim"))
-        .orderBy("id_a", "id_b")),
+    "d_minhash_lsh_s41" -> ((s, d) => minhashLsh(s, d, Some(41))),
 
     // Second-prime cross-check of the stratum device itself (1-in-37):
     // if the 41-draw's interaction with any id-pattern modulus hid a bias
     // class, an independent prime over the same operator would expose it;
     // both primes hash-matching at every tested SF rules that family out.
     // Same code path, one parameter changed.
-    "d_minhash_lsh_s37" -> ((s, d) =>
-      minhashPairs(s, d, stratified = true, stratumPrime = 37)
-        .select(col("id_a"), col("id_b"), round(col("est_sim"), 4).as("est_sim"))
-        .orderBy("id_a", "id_b")),
+    "d_minhash_lsh_s37" -> ((s, d) => minhashLsh(s, d, Some(37))),
 
-    "d_minhash_clusters_s41" -> ((s, d) => {
-      val pairs = minhashPairs(s, d, stratified = true)
-        .select(col("id_a").as("src"), col("id_b").as("dst"))
-      val cc = connectedComponentsFromEdges(pairs)
-      cc.groupBy("root").agg(count(lit(1)).as("cluster_size"))
-        .groupBy("cluster_size")
-        .agg(count(lit(1)).as("n_clusters"), min("root").as("min_root"))
-        .orderBy("cluster_size")
-    }),
+    "d_minhash_clusters_s41" -> ((s, d) => minhashClusters(s, d, Some(41))),
 
     // SELF-VERIFYING: recall of the planted exact-dup pairs. An exact
     // duplicate has an identical shingle set → identical minhash signature →
@@ -528,13 +527,9 @@ object Dedup {
           round(inter.cast("double") /
             (size(col("ga")) + size(col("gb")) - inter), 4).as("jaccard"))
         .filter(col("jaccard") > 0.65)
-      val cc = connectedComponents(
+      clusterHistogram(connectedComponents(
         docs.select(col("doc_id").as("v")),
-        pairs.select(col("id_a").as("src"), col("id_b").as("dst")))
-      cc.groupBy("root").agg(count(lit(1)).as("cluster_size"))
-        .groupBy("cluster_size")
-        .agg(count(lit(1)).as("n_clusters"), min("root").as("min_root"))
-        .orderBy("cluster_size")
+        pairs.select(col("id_a").as("src"), col("id_b").as("dst"))))
     }),
 
     // Exact 3-gram Jaccard over a bounded candidate set (doc_id < 30 pairs).
@@ -697,36 +692,13 @@ object Dedup {
     // connectedComponents (distributed label-min, no driver graph).
     // Output is the cluster-size histogram (the d_dup_clusters shape):
     // deterministic, integer-only, cross-engine exact.
-    "d_span_clusters" -> ((s, d) => {
-      val edges = spanEdges(s, d)
-      // Every clustered doc is an edge ENDPOINT by construction — a
-      // dup-gram group's hub (min doc) appears as src of its star edges
-      // and every other member as dst — so no separate node set exists at
-      // all: connectedComponentsFromEdges derives it inside the label
-      // initialization's aggregate. (The previous nodes branch re-ran
-      // the entire gram pass + window a second time: the two `.distinct()`
-      // branches off one `star` subplan are separate physical plans, and
-      // with a redundant `max` window column each pass sorted twice.
-      // 5.9 s → this shape materializes the gram window exactly once.)
-      val cc = connectedComponentsFromEdges(edges)
-      cc.groupBy("root").agg(count(lit(1)).as("cluster_size"))
-        .groupBy("cluster_size")
-        .agg(count(lit(1)).as("n_clusters"), min("root").as("min_root"))
-        .orderBy("cluster_size")
-    }),
+    "d_span_clusters" -> ((s, d) => spanClusters(s, d, None)),
 
     // Stratum-oracled twin of d_span_clusters (see the *_s41 pair above):
     // same gram pass, same star edges, same CC — over the 1-in-41 md5
     // sub-corpus, so the unrolled label-min SQL replay stays feasible at
     // sf10 where the full replay spilled 77 GB.
-    "d_span_clusters_s41" -> ((s, d) => {
-      val edges = spanEdges(s, d, stratified = true)
-      val cc = connectedComponentsFromEdges(edges)
-      cc.groupBy("root").agg(count(lit(1)).as("cluster_size"))
-        .groupBy("cluster_size")
-        .agg(count(lit(1)).as("n_clusters"), min("root").as("min_root"))
-        .orderBy("cluster_size")
-    }),
+    "d_span_clusters_s41" -> ((s, d) => spanClusters(s, d, Some(41))),
 
     // Blocked SORTED-NEIGHBORHOOD near-dup (Hernández & Stolfo's SNM, the
     // record-linkage classic): sort docs by a blocking key (normalized-text
@@ -823,120 +795,45 @@ object Dedup {
     })
   )
 
-  /** The shared LSH pair CTE chain — dup corpus → md5-48 grams →
-    * seed-42 splitmix XOR minhash members → 4-band signatures → distinct
-    * same-bucket candidates — parameterized by the stratum predicate
-    * (`TRUE` = full corpus). One text, three consumers (the lsh and
-    * clusters oracles below and the streaming near-dup ledger replay in
-    * [[graft.streaming.EventStreams]]), so the replay of the family can
-    * never drift between them. `dups` carries `lang` for the ledger; the
-    * other consumers ignore it.
+  /** d_minhash_lsh replay: the shared pair CTEs (Tables.minhashPairCtesSql)
+    * over the dup corpus, est_sim = the equal-member fraction at 4 dp —
+    * value-for-value the Spark plan's semantics. `dups` carries `lang`
+    * because the streaming near-dup ledger replays over the same CTEs.
     */
-  def minhashPairCtesSql(strat: String): String = {
-      val cs = graft.functions.Sketches.minhashXorConstants(16, 42L)
-        .mkString("[", ",", "]")
-      s"""dups AS MATERIALIZED (
-        |  SELECT doc_id * 2 AS doc_id, text, lang FROM documents WHERE $strat
-        |  UNION ALL
-        |  SELECT doc_id * 2 + 1 AS doc_id, text, lang FROM documents
-        |  WHERE doc_id % 5 = 0 AND $strat),
-        |grams AS MATERIALIZED (
-        |  SELECT doc_id, unnest(list_transform(range(0, greatest(length(text) - 4, 1)),
-        |    i -> CAST('0x' || substr(md5(substr(text, CAST(i AS INT) + 1, 5)),
-        |      1, 12) AS BIGINT))) AS h
-        |  FROM dups),
-        |mins AS (
-        |  SELECT doc_id, j, min(xor(h, list_extract($cs, CAST(j AS INT) + 1))) AS m
-        |  FROM grams CROSS JOIN range(0, 16) t(j) GROUP BY 1, 2),
-        |sigs AS MATERIALIZED (
-        |  SELECT doc_id, list(m ORDER BY j) AS mh FROM mins GROUP BY doc_id),
-        |bands AS (
-        |  SELECT doc_id, b,
-        |    mh[CAST(4 * b + 1 AS INT)] AS m0, mh[CAST(4 * b + 2 AS INT)] AS m1,
-        |    mh[CAST(4 * b + 3 AS INT)] AS m2, mh[CAST(4 * b + 4 AS INT)] AS m3
-        |  FROM sigs CROSS JOIN range(0, 4) t(b)),
-        |cand AS (
-        |  SELECT DISTINCT a.doc_id AS id_a, c.doc_id AS id_b
-        |  FROM bands a JOIN bands c
-        |    ON a.b = c.b AND a.m0 = c.m0 AND a.m1 = c.m1
-        |    AND a.m2 = c.m2 AND a.m3 = c.m3
-        |  WHERE a.doc_id < c.doc_id)""".stripMargin
-  }
-
-  /** d_minhash_lsh replay (md5-48 gram draw, seed-42 splitmix XOR
-    * constants interpolated from Sketches so Scala and SQL can never
-    * drift, band join on the 4 raw members), parameterized by the stratum
-    * predicate: `TRUE` = full corpus, Tables.stratum41Sql = the 1-in-41
-    * draw that keeps the replay feasible at sf10.
-    */
-  private def minhashLshSql(strat: String): String =
-      s"""WITH ${minhashPairCtesSql(strat)},
-        |pairs AS (
-        |  SELECT id_a, id_b,
-        |    round(CAST(list_sum(list_transform(sa.mh, (x, i) ->
-        |      CASE WHEN x = sb.mh[i] THEN 1 ELSE 0 END)) AS DOUBLE) / 16, 4)
-        |      AS est_sim
-        |  FROM cand JOIN sigs sa ON sa.doc_id = id_a
-        |            JOIN sigs sb ON sb.doc_id = id_b)
+  private def minhashLshSql(stratum: Option[Int]): String =
+      s"""WITH dups AS MATERIALIZED (${dupsSql("text, lang", stratum)}),
+        |${minhashPairCtesSql("dups")},
+        |pairs AS (SELECT id_a, id_b, round(est, 4) AS est_sim FROM near)
         |SELECT id_a, id_b, est_sim FROM pairs
         |WHERE est_sim >= 0.7 ORDER BY id_a, id_b""".stripMargin
 
-  /** d_minhash_clusters replay — the LSH pair CTEs feeding the unrolled
-    * label-min component rounds — parameterized like minhashLshSql.
-    */
-  private def minhashClustersSql(strat: String): String =
-      s"""WITH ${minhashPairCtesSql(strat)},
-        |p AS MATERIALIZED (
-        |  SELECT id_a AS src, id_b AS dst FROM cand
-        |  JOIN sigs sa ON sa.doc_id = id_a JOIN sigs sb ON sb.doc_id = id_b
-        |  WHERE CAST(list_sum(list_transform(sa.mh, (x, i) ->
-        |    CASE WHEN x = sb.mh[i] THEN 1 ELSE 0 END)) AS DOUBLE) / 16 >= 0.7),
-        |e AS MATERIALIZED (
-        |  SELECT src, dst FROM p UNION SELECT dst, src FROM p
-        |  UNION SELECT src, src FROM p UNION SELECT dst, dst FROM p),
-        |l0 AS (SELECT dst AS v, min(src) AS lbl FROM e GROUP BY dst),
-        |r1 AS (SELECT e.dst AS v, min(l.lbl) AS lbl FROM e JOIN l0 l ON e.src = l.v GROUP BY e.dst),
-        |d1 AS (SELECT a.v, least(a.lbl, coalesce(b.lbl, a.lbl)) AS lbl
-        |       FROM r1 a LEFT JOIN r1 b ON a.lbl = b.v),
-        |r2 AS (SELECT e.dst AS v, min(l.lbl) AS lbl FROM e JOIN d1 l ON e.src = l.v GROUP BY e.dst),
-        |d2 AS (SELECT a.v, least(a.lbl, coalesce(b.lbl, a.lbl)) AS lbl
-        |       FROM r2 a LEFT JOIN r2 b ON a.lbl = b.v),
-        |r3 AS (SELECT e.dst AS v, min(l.lbl) AS lbl FROM e JOIN d2 l ON e.src = l.v GROUP BY e.dst),
-        |d3 AS (SELECT a.v, least(a.lbl, coalesce(b.lbl, a.lbl)) AS lbl
-        |       FROM r3 a LEFT JOIN r3 b ON a.lbl = b.v),
-        |r4 AS (SELECT e.dst AS v, min(l.lbl) AS lbl FROM e JOIN d3 l ON e.src = l.v GROUP BY e.dst),
-        |d4 AS (SELECT a.v, least(a.lbl, coalesce(b.lbl, a.lbl)) AS lbl
-        |       FROM r4 a LEFT JOIN r4 b ON a.lbl = b.v),
-        |r5 AS (SELECT e.dst AS v, min(l.lbl) AS lbl FROM e JOIN d4 l ON e.src = l.v GROUP BY e.dst),
-        |d5 AS (SELECT a.v, least(a.lbl, coalesce(b.lbl, a.lbl)) AS lbl
-        |       FROM r5 a LEFT JOIN r5 b ON a.lbl = b.v),
-        |r6 AS (SELECT e.dst AS v, min(l.lbl) AS lbl FROM e JOIN d5 l ON e.src = l.v GROUP BY e.dst),
-        |d6 AS MATERIALIZED (SELECT a.v, least(a.lbl, coalesce(b.lbl, a.lbl)) AS lbl
-        |       FROM r6 a LEFT JOIN r6 b ON a.lbl = b.v),
-        |r7 AS (SELECT e.dst AS v, min(l.lbl) AS lbl FROM e JOIN d6 l ON e.src = l.v GROUP BY e.dst),
-        |chk AS (SELECT count(*) AS n_changed
-        |        FROM r7 JOIN d6 ON r7.v = d6.v WHERE r7.lbl < d6.lbl),
+  /** Cluster-size histogram over the label-min replay of the edge CTEs
+    * `edges` (which define `p(src, dst)`); `name` is the entry the
+    * convergence guard names. */
+  private def ccHistogramSql(name: String, edges: String): String =
+      s"""WITH $edges,
+        |${labelMinCcSql(name)},
         |cs AS (SELECT lbl AS root, count(*) AS cluster_size FROM d6 GROUP BY lbl)
         |SELECT CAST(cluster_size AS BIGINT) AS cluster_size,
         |       count(*) AS n_clusters,
-        |       min(root) + (SELECT CASE WHEN n_changed > 0 THEN error(
-        |         'd_minhash_clusters oracle: label-min replay NOT converged after the 6 unrolled rounds - deepen the unroll')
-        |         ELSE 0 END FROM chk) AS min_root
+        |       min(root) + (SELECT guard FROM chk) AS min_root
         |FROM cs GROUP BY cluster_size ORDER BY cluster_size""".stripMargin
 
-  /** d_span_clusters replay, parameterized by the stratum predicate
-    * (`TRUE` = the full corpus; Tables.stratum41Sql = the 1-in-41 draw
-    * that keeps this unrolled label-min replay feasible at sf10).
-    */
-  private def spanClustersSql(strat: String): String =
-    raw"""WITH dups AS (
-       |  SELECT doc_id * 2 AS doc_id, text FROM documents WHERE $strat
-       |  UNION ALL
-       |  SELECT doc_id * 2 + 1 AS doc_id, text FROM documents
-       |  WHERE doc_id % 5 = 0 AND $strat),
+  /** d_minhash_clusters replay — the LSH pairs feeding the unrolled
+    * label-min component rounds. */
+  private def minhashClustersSql(stratum: Option[Int]): String =
+    ccHistogramSql("d_minhash_clusters",
+      s"""dups AS MATERIALIZED (${dupsSql("text, lang", stratum)}),
+        |${minhashPairCtesSql("dups")},
+        |p AS MATERIALIZED (SELECT id_a AS src, id_b AS dst FROM near WHERE est >= 0.7)""".stripMargin)
+
+  /** d_span_clusters replay: the d_dup_spans gram draw, star edges per dup
+    * gram (min-doc → member), then the label-min rounds. */
+  private def spanClustersSql(stratum: Option[Int]): String =
+    ccHistogramSql("d_span_clusters",
+      s"""dups AS (${dupsSql("text", stratum)}),
         |norm AS (
-        |  SELECT doc_id,
-        |    lower(trim(regexp_replace(text, '[ \t\n\x0B\f\r]+', ' ', 'g'))) AS nt
+        |  SELECT doc_id, ${normTextSql("text")} AS nt
         |  FROM dups),
         |g AS (
         |  SELECT doc_id, unnest(ghs) AS gh FROM (
@@ -950,78 +847,68 @@ object Dedup {
         |  HAVING min(doc_id) <> max(doc_id)),
         |p AS MATERIALIZED (
         |  SELECT DISTINCT dupg.mn AS src, g.doc_id AS dst
-        |  FROM g JOIN dupg USING (gh) WHERE g.doc_id <> dupg.mn),
-        |e AS MATERIALIZED (
-        |  SELECT src, dst FROM p UNION SELECT dst, src FROM p
-        |  UNION SELECT src, src FROM p UNION SELECT dst, dst FROM p),
-        |l0 AS (SELECT dst AS v, min(src) AS lbl FROM e GROUP BY dst),
-        |r1 AS (SELECT e.dst AS v, min(l.lbl) AS lbl FROM e JOIN l0 l ON e.src = l.v GROUP BY e.dst),
-        |d1 AS (SELECT a.v, least(a.lbl, coalesce(b.lbl, a.lbl)) AS lbl
-        |       FROM r1 a LEFT JOIN r1 b ON a.lbl = b.v),
-        |r2 AS (SELECT e.dst AS v, min(l.lbl) AS lbl FROM e JOIN d1 l ON e.src = l.v GROUP BY e.dst),
-        |d2 AS (SELECT a.v, least(a.lbl, coalesce(b.lbl, a.lbl)) AS lbl
-        |       FROM r2 a LEFT JOIN r2 b ON a.lbl = b.v),
-        |r3 AS (SELECT e.dst AS v, min(l.lbl) AS lbl FROM e JOIN d2 l ON e.src = l.v GROUP BY e.dst),
-        |d3 AS (SELECT a.v, least(a.lbl, coalesce(b.lbl, a.lbl)) AS lbl
-        |       FROM r3 a LEFT JOIN r3 b ON a.lbl = b.v),
-        |r4 AS (SELECT e.dst AS v, min(l.lbl) AS lbl FROM e JOIN d3 l ON e.src = l.v GROUP BY e.dst),
-        |d4 AS (SELECT a.v, least(a.lbl, coalesce(b.lbl, a.lbl)) AS lbl
-        |       FROM r4 a LEFT JOIN r4 b ON a.lbl = b.v),
-        |r5 AS (SELECT e.dst AS v, min(l.lbl) AS lbl FROM e JOIN d4 l ON e.src = l.v GROUP BY e.dst),
-        |d5 AS (SELECT a.v, least(a.lbl, coalesce(b.lbl, a.lbl)) AS lbl
-        |       FROM r5 a LEFT JOIN r5 b ON a.lbl = b.v),
-        |r6 AS (SELECT e.dst AS v, min(l.lbl) AS lbl FROM e JOIN d5 l ON e.src = l.v GROUP BY e.dst),
-        |d6 AS MATERIALIZED (SELECT a.v, least(a.lbl, coalesce(b.lbl, a.lbl)) AS lbl
-        |       FROM r6 a LEFT JOIN r6 b ON a.lbl = b.v),
-        |r7 AS (SELECT e.dst AS v, min(l.lbl) AS lbl FROM e JOIN d6 l ON e.src = l.v GROUP BY e.dst),
-        |chk AS (SELECT count(*) AS n_changed
-        |        FROM r7 JOIN d6 ON r7.v = d6.v WHERE r7.lbl < d6.lbl),
-        |cs AS (SELECT lbl AS root, count(*) AS cluster_size FROM d6 GROUP BY lbl)
-        |SELECT CAST(cluster_size AS BIGINT) AS cluster_size,
-        |       count(*) AS n_clusters,
-        |       min(root) + (SELECT CASE WHEN n_changed > 0 THEN error(
-        |         'd_span_clusters oracle: label-min replay NOT converged after the 6 unrolled rounds - deepen the unroll')
-        |         ELSE 0 END FROM chk) AS min_root
-        |FROM cs GROUP BY cluster_size ORDER BY cluster_size""".stripMargin
+        |  FROM g JOIN dupg USING (gh) WHERE g.doc_id <> dupg.mn)""".stripMargin)
+
+  /** The sorted-neighborhood candidate+verify CTEs (snmPairs in SQL):
+    * lead(i) over (blk ORDER BY nt, doc_id) ≡ the row_number self-join on
+    * rank distance 1..3 — both engines order identically (nt then the
+    * collision-free doc_id), and the trigram sets are the identical
+    * md5-48 gram_fps draw. `j` holds every candidate with its jaccard. */
+  private val snmCtesSql: String =
+      s"""dups AS (${dupsSql("text")}),
+        |n AS (
+        |  SELECT doc_id,
+        |    ${normTextSql("text")} AS nt
+        |  FROM dups),
+        |g AS (
+        |  SELECT doc_id, substr(nt, 1, 8) AS blk, nt,
+        |    list_distinct(list_transform(range(0, greatest(length(nt) - 2, 0)),
+        |      i -> CAST('0x' || substr(md5(substr(nt, CAST(i AS INT) + 1, 3)),
+        |        1, 12) AS BIGINT))) AS gr,
+        |    row_number() OVER (PARTITION BY substr(nt, 1, 8)
+        |                       ORDER BY nt, doc_id) AS rn
+        |  FROM n WHERE length(nt) >= 3),
+        |cand AS (
+        |  SELECT a.doc_id AS ia, b.doc_id AS ib, a.gr AS ga, b.gr AS gb
+        |  FROM g a JOIN g b
+        |    ON a.blk = b.blk AND b.rn - a.rn BETWEEN 1 AND 3),
+        |j AS (
+        |  SELECT least(ia, ib) AS id_a, greatest(ia, ib) AS id_b,
+        |    round(CAST(len(list_intersect(ga, gb)) AS DOUBLE) /
+        |      (len(ga) + len(gb) - len(list_intersect(ga, gb))), 4) AS jaccard
+        |  FROM cand)""".stripMargin
+
+  /** Recall of the planted exact-dup pairs is 1.0 by construction
+    * (identical text → identical signatures), so the expected output is
+    * plain SQL over `documents`. */
+  private val plantedRecallSql: String =
+      """SELECT CAST(count(*) AS BIGINT) AS n_truth,
+        |       CAST(count(*) AS BIGINT) AS n_found,
+        |       CAST(1.0 AS DOUBLE) AS recall,
+        |       CAST(1 AS BOOLEAN) AS pass
+        |FROM documents WHERE doc_id % 5 = 0""".stripMargin
 
   val oracles: Map[String, String] = Map(
-    // recall of planted exact-dup pairs is 1.0 by construction (identical
-    // text → identical signatures → guaranteed LSH collision), so the
-    // expected output is plain SQL over `documents`
-    "d_minhash_recall" ->
-      """SELECT CAST(count(*) AS BIGINT) AS n_truth,
-        |       CAST(count(*) AS BIGINT) AS n_found,
-        |       CAST(1.0 AS DOUBLE) AS recall,
-        |       CAST(1 AS BOOLEAN) AS pass
-        |FROM documents WHERE doc_id % 5 = 0""".stripMargin,
-    "d_simhash_recall" ->
-      """SELECT CAST(count(*) AS BIGINT) AS n_truth,
-        |       CAST(count(*) AS BIGINT) AS n_found,
-        |       CAST(1.0 AS DOUBLE) AS recall,
-        |       CAST(1 AS BOOLEAN) AS pass
-        |FROM documents WHERE doc_id % 5 = 0""".stripMargin,
+    "d_minhash_recall" -> plantedRecallSql,
+    "d_simhash_recall" -> plantedRecallSql,
     // Full replay of the minhash LSH listing: the same md5-48 gram draw as
     // winnow_fps/gram_fps, the same seed-42 splitmix XOR constants
     // (interpolated from Sketches.minhashXorConstants so Scala and SQL can
     // never drift), band join on the 4 raw members, est_sim = equal-member
     // fraction — value-for-value the Spark plan's semantics.
-    "d_minhash_lsh" -> minhashLshSql("TRUE"),
-    "d_minhash_lsh_s41" -> minhashLshSql(stratum41Sql("doc_id")),
-    "d_minhash_lsh_s37" -> minhashLshSql(stratumSql("doc_id", 37)),
-    "d_minhash_clusters" -> minhashClustersSql("TRUE"),
-    "d_minhash_clusters_s41" -> minhashClustersSql(stratum41Sql("doc_id")),
+    "d_minhash_lsh" -> minhashLshSql(None),
+    "d_minhash_lsh_s41" -> minhashLshSql(Some(41)),
+    "d_minhash_lsh_s37" -> minhashLshSql(Some(37)),
+    "d_minhash_clusters" -> minhashClustersSql(None),
+    "d_minhash_clusters_s41" -> minhashClustersSql(Some(41)),
     // Full replay of the simhash bucket listing: one md5-48 draw per
     // token of the normalized text, 48 ±1 bit sums, sign fold, top-16-bit
     // bucket — the exact Sketches.simhash arithmetic in SQL.
     "d_simhash" ->
-      """WITH dups AS MATERIALIZED (
-        |  SELECT doc_id * 2 AS doc_id, text FROM documents
-        |  UNION ALL
-        |  SELECT doc_id * 2 + 1 AS doc_id, text FROM documents
-        |  WHERE doc_id % 5 = 0),
+      s"""WITH dups AS MATERIALIZED (${dupsSql("text")}),
         |norm AS MATERIALIZED (
         |  SELECT doc_id,
-        |    lower(trim(regexp_replace(text, '[ \t\n\x0B\f\r]+', ' ', 'g'))) AS nt
+        |    ${normTextSql("text")} AS nt
         |  FROM dups),
         |toks AS (
         |  SELECT doc_id, unnest(string_split(nt, ' ')) AS tok
@@ -1041,14 +928,10 @@ object Dedup {
         |SELECT CAST(simhash >> 32 AS BIGINT) AS bucket, count(*) AS n_docs
         |FROM sig GROUP BY 1 HAVING count(*) > 1 ORDER BY bucket""".stripMargin,
     "d_stream_dedup_mirror" ->
-      """WITH dups AS (
-        |  SELECT doc_id * 2 AS doc_id, text, source FROM documents
-        |  UNION ALL
-        |  SELECT doc_id * 2 + 1 AS doc_id, text, source
-        |  FROM documents WHERE doc_id % 5 = 0),
+      s"""WITH dups AS (${dupsSql("text, source")}),
         |fp AS (
         |  SELECT doc_id, source,
-        |    md5(lower(trim(regexp_replace(text, '[ \t\n\x0B\f\r]+', ' ', 'g')))) AS fp
+        |    md5(${normTextSql("text")}) AS fp
         |  FROM dups),
         |k AS (
         |  SELECT source,
@@ -1059,13 +942,9 @@ object Dedup {
         |  CAST(sum(CASE WHEN keep THEN 0 ELSE 1 END) AS BIGINT) AS n_dropped
         |FROM k GROUP BY source ORDER BY source""".stripMargin,
     "d_exact_dedup" ->
-      """WITH dups AS (
-        |  SELECT doc_id * 2 AS doc_id, text, lang, source, n_chars FROM documents
-        |  UNION ALL
-        |  SELECT doc_id * 2 + 1 AS doc_id, text, lang, source, n_chars
-        |  FROM documents WHERE doc_id % 5 = 0),
+      s"""WITH dups AS (${dupsSql("text, lang, source, n_chars")}),
         |grp AS (
-        |  SELECT md5(lower(trim(regexp_replace(text, '[ \t\n\x0B\f\r]+', ' ', 'g')))) AS fp,
+        |  SELECT md5(${normTextSql("text")}) AS fp,
         |         min(doc_id) AS keep_id, count(*) AS n_copies
         |  FROM dups GROUP BY 1)
         |SELECT n_copies, count(*) AS n_groups, min(keep_id) AS min_keep
@@ -1133,14 +1012,10 @@ object Dedup {
     // identical md5 gram draws; only set sizes/intersections compared, so
     // list_distinct order differences can't matter
     "d_winnow_fingerprints" ->
-      """WITH dups AS MATERIALIZED (
-        |  SELECT doc_id * 2 AS doc_id, text FROM documents
-        |  UNION ALL
-        |  SELECT doc_id * 2 + 1 AS doc_id, text FROM documents
-        |  WHERE doc_id % 5 = 0),
+      s"""WITH dups AS MATERIALIZED (${dupsSql("text")}),
         |norm AS MATERIALIZED (
         |  SELECT doc_id,
-        |    lower(trim(regexp_replace(text, '[ \t\n\x0B\f\r]+', ' ', 'g'))) AS nt
+        |    ${normTextSql("text")} AS nt
         |  FROM dups),
         |fps AS MATERIALIZED (
         |  SELECT doc_id,
@@ -1171,14 +1046,10 @@ object Dedup {
     // struct list (never re-carrying nt per gram row), then the same
     // gaps-and-islands merge — all-integer after the hash
     "d_dup_spans" ->
-      """WITH dups AS MATERIALIZED (
-        |  SELECT doc_id * 2 AS doc_id, text FROM documents
-        |  UNION ALL
-        |  SELECT doc_id * 2 + 1 AS doc_id, text FROM documents
-        |  WHERE doc_id % 5 = 0),
+      s"""WITH dups AS MATERIALIZED (${dupsSql("text")}),
         |norm AS MATERIALIZED (
         |  SELECT doc_id,
-        |    lower(trim(regexp_replace(text, '[ \t\n\x0B\f\r]+', ' ', 'g'))) AS nt
+        |    ${normTextSql("text")} AS nt
         |  FROM dups),
         |g AS MATERIALIZED (
         |  SELECT doc_id, len, unnest(ghs) AS u FROM (
@@ -1214,89 +1085,26 @@ object Dedup {
         |FROM span GROUP BY doc_id ORDER BY doc_id""".stripMargin,
 
     // same gram draw as d_dup_spans; star edges per dup gram (min-doc →
-    // member), label-min rounds replay connectedComponents exactly.
-    // Memory-lean formulation (the sf1 lesson, twice over): (a) the first
-    // draft MATERIALIZED the full gram stream and ran a min/max WINDOW
-    // over it — at sf1 (~300 M gram rows) DuckDB's window materialization
-    // asked for 32 GiB on top of a 90 GiB working set and OOM'd; dup-gram
-    // hubs now come from a plain GROUP BY (hash-aggregatable, spillable)
-    // and the edge probe re-derives the gram stream instead of storing it
-    // (md5 runs twice, trading CPU for bounded memory). (b) the recursive
-    // label-min CTE accumulates the full (node × reachable-smaller-label)
-    // CLOSURE — O(Σ component²) rows once replication merges components —
-    // so the replay is instead UNROLLED: six (neighbor-min, label-of-label
-    // doubling) round pairs, each a plain join+aggregate over O(V+E)
-    // rows, covering > 100 hops of diameter — far past this graph family's
-    // star-chain depth. An unconverged replay cannot silently pass: its
-    // labels would differ from Spark's converged components and the gate
-    // would FAIL loudly. Nodes derive from edge endpoints (every
-    // clustered doc is one by construction — the Spark side's argument);
-    // the self-loops in `e` make each round's min include the node's own
-    // label.
-    "d_span_clusters" -> spanClustersSql("TRUE"),
-    "d_span_clusters_s41" -> spanClustersSql(stratum41Sql("doc_id")),
-    // lead(i) over (blk ORDER BY nt, doc_id) ≡ the row_number self-join on
-    // rank distance 1..3 — both engines order identically (nt then the
-    // collision-free doc_id), and the trigram sets are the identical
-    // md5-48 gram_fps draw (the span-family replay form)
+    // member), label-min rounds (Tables.labelMinCcSql) replay
+    // connectedComponents exactly. Memory-lean (the sf1 lesson): the
+    // first draft MATERIALIZED the full gram stream and ran a min/max
+    // WINDOW over it — at sf1 (~300 M gram rows) DuckDB's window
+    // materialization asked for 32 GiB on top of a 90 GiB working set and
+    // OOM'd; dup-gram hubs now come from a plain GROUP BY
+    // (hash-aggregatable, spillable) and the edge probe re-derives the
+    // gram stream instead of storing it (md5 runs twice, trading CPU for
+    // bounded memory). Nodes derive from edge endpoints (every clustered
+    // doc is one by construction — the Spark side's argument).
+    "d_span_clusters" -> spanClustersSql(None),
+    "d_span_clusters_s41" -> spanClustersSql(Some(41)),
     "d_sorted_neighborhood" ->
-      """WITH dups AS (
-        |  SELECT doc_id * 2 AS doc_id, text FROM documents
-        |  UNION ALL
-        |  SELECT doc_id * 2 + 1 AS doc_id, text
-        |  FROM documents WHERE doc_id % 5 = 0),
-        |n AS (
-        |  SELECT doc_id,
-        |    lower(trim(regexp_replace(text, '[ \t\n\x0B\f\r]+', ' ', 'g'))) AS nt
-        |  FROM dups),
-        |g AS (
-        |  SELECT doc_id, substr(nt, 1, 8) AS blk, nt,
-        |    list_distinct(list_transform(range(0, greatest(length(nt) - 2, 0)),
-        |      i -> CAST('0x' || substr(md5(substr(nt, CAST(i AS INT) + 1, 3)),
-        |        1, 12) AS BIGINT))) AS gr,
-        |    row_number() OVER (PARTITION BY substr(nt, 1, 8)
-        |                       ORDER BY nt, doc_id) AS rn
-        |  FROM n WHERE length(nt) >= 3),
-        |cand AS (
-        |  SELECT a.doc_id AS ia, b.doc_id AS ib, a.gr AS ga, b.gr AS gb
-        |  FROM g a JOIN g b
-        |    ON a.blk = b.blk AND b.rn - a.rn BETWEEN 1 AND 3),
-        |j AS (
-        |  SELECT least(ia, ib) AS id_a, greatest(ia, ib) AS id_b,
-        |    round(CAST(len(list_intersect(ga, gb)) AS DOUBLE) /
-        |      (len(ga) + len(gb) - len(list_intersect(ga, gb))), 4) AS jaccard
-        |  FROM cand)
+      s"""WITH $snmCtesSql
         |SELECT id_a, id_b, jaccard FROM j
         |WHERE jaccard >= 0.65 ORDER BY id_a, id_b""".stripMargin,
     // the SNM pair CTEs + the reciprocal filter: per-src argmax by
     // (jaccard DESC, partner ASC) via the same max-of-struct device
     "d_mutual_best_match" ->
-      """WITH dups AS (
-        |  SELECT doc_id * 2 AS doc_id, text FROM documents
-        |  UNION ALL
-        |  SELECT doc_id * 2 + 1 AS doc_id, text
-        |  FROM documents WHERE doc_id % 5 = 0),
-        |n AS (
-        |  SELECT doc_id,
-        |    lower(trim(regexp_replace(text, '[ \t\n\x0B\f\r]+', ' ', 'g'))) AS nt
-        |  FROM dups),
-        |g AS (
-        |  SELECT doc_id, substr(nt, 1, 8) AS blk, nt,
-        |    list_distinct(list_transform(range(0, greatest(length(nt) - 2, 0)),
-        |      i -> CAST('0x' || substr(md5(substr(nt, CAST(i AS INT) + 1, 3)),
-        |        1, 12) AS BIGINT))) AS gr,
-        |    row_number() OVER (PARTITION BY substr(nt, 1, 8)
-        |                       ORDER BY nt, doc_id) AS rn
-        |  FROM n WHERE length(nt) >= 3),
-        |cand AS (
-        |  SELECT a.doc_id AS ia, b.doc_id AS ib, a.gr AS ga, b.gr AS gb
-        |  FROM g a JOIN g b
-        |    ON a.blk = b.blk AND b.rn - a.rn BETWEEN 1 AND 3),
-        |j AS (
-        |  SELECT least(ia, ib) AS id_a, greatest(ia, ib) AS id_b,
-        |    round(CAST(len(list_intersect(ga, gb)) AS DOUBLE) /
-        |      (len(ga) + len(gb) - len(list_intersect(ga, gb))), 4) AS jaccard
-        |  FROM cand),
+      s"""WITH $snmCtesSql,
         |pr AS (SELECT id_a, id_b, jaccard FROM j WHERE jaccard >= 0.65),
         |sym AS (
         |  SELECT id_a AS src, id_b AS dst, jaccard FROM pr
@@ -1310,15 +1118,13 @@ object Dedup {
         |FROM best x JOIN best y ON x.src = y.bd AND x.bd = y.src
         |WHERE x.src < x.bd ORDER BY id_a, id_b""".stripMargin,
     "d_snapshot_diff" ->
-      """WITH old AS (
+      s"""WITH old AS (
         |  SELECT doc_id,
-        |    md5(lower(trim(regexp_replace(text, '[ \t\n\x0B\f\r]+', ' ', 'g')))) AS fp_old
+        |    md5(${normTextSql("text")}) AS fp_old
         |  FROM documents WHERE doc_id % 7 <> 1),
         |nw AS (
         |  SELECT doc_id,
-        |    md5(lower(trim(regexp_replace(
-        |      CASE WHEN doc_id % 7 = 3 THEN text || ' rev2' ELSE text END,
-        |      '[ \t\n\x0B\f\r]+', ' ', 'g')))) AS fp_new
+        |    md5(${normTextSql("CASE WHEN doc_id % 7 = 3 THEN text || ' rev2' ELSE text END")}) AS fp_new
         |  FROM documents WHERE doc_id % 7 <> 2),
         |j AS (
         |  SELECT coalesce(old.doc_id, nw.doc_id) AS doc_id,

@@ -15,34 +15,28 @@ import Tables._
   */
 object EtlSurface {
 
-  val queries: Map[String, Q] = Map(
-    // The flagship reference pipelines end-to-end (read → detect → clean →
-    // standardize → merge) over the deterministic fixture CSVs. All five
-    // are hash-checked cross-engine: the oracles below replay the same
-    // CSVs through DuckDB read_csv + the same clean/rename/conform/union
-    // (the fixtures are pure CSV, and Verify materializes them before the
-    // driver's DuckDB pass runs).
-    "etl_pipeline_apsl" -> ((s, _) =>
-      new MultiSourceAdEtl(graft.etl.Configs.apsl)
-        .run(s, graft.etl.Fixtures.materialize("apsl"), capitalize = true)
-        .orderBy("Source", "Day")),
-    "etl_pipeline_like_eat" -> ((s, _) =>
-      new MultiSourceAdEtl(graft.etl.Configs.likeEat)
-        .run(s, graft.etl.Fixtures.materialize("like_eat"), capitalize = true)
-        .orderBy("Source", "일")),
-    "etl_pipeline_mnb" -> ((s, _) =>
-      new MultiSourceAdEtl(graft.etl.Configs.mnb)
-        .run(s, graft.etl.Fixtures.materialize("mnb"), capitalize = false)
-        .orderBy("Source", "Day")),
-    "etl_pipeline_podl" -> ((s, _) =>
-      new MultiSourceAdEtl(graft.etl.Configs.podl)
-        .run(s, graft.etl.Fixtures.materialize("podl"), capitalize = false)
-        .orderBy("Source", "Day")),
-    "etl_pipeline_kcon" -> ((s, _) =>
-      new MultiSourceAdEtl(graft.etl.Configs.kcon)
-        .run(s, graft.etl.Fixtures.materialize("kcon"), capitalize = false)
-        .orderBy("Source", "Day")),
+  /** The flagship reference pipelines end-to-end (read → detect → clean →
+    * standardize → merge) over the deterministic fixture CSVs, one entry
+    * `etl_pipeline_<name>` per shipped config in Configs.all (which also
+    * says whether the pipeline capitalizes). Rows are ordered by Source,
+    * then the first DateType column of the standard schema — the column
+    * A1.makeDateFilename reads. All five are hash-checked cross-engine:
+    * the oracles below replay the same CSVs through DuckDB read_csv + the
+    * same clean/rename/conform/union (the fixtures are pure CSV, and
+    * Verify materializes them before the DuckDB oracle pass runs).
+    */
+  private val pipelines: Map[String, Q] = graft.etl.Configs.all.map {
+    case (name, (cfg, capitalize)) =>
+      val day = cfg.standardSchema.fields
+        .collectFirst { case f if f.dataType == DateType => f.name }
+        .getOrElse(throw new IllegalStateException(s"$name has no DateType column"))
+      s"etl_pipeline_$name" -> ((s: org.apache.spark.sql.SparkSession, _: String) =>
+        new MultiSourceAdEtl(cfg)
+          .run(s, graft.etl.Fixtures.materialize(name), capitalize)
+          .orderBy("Source", day))
+  }
 
+  val queries: Map[String, Q] = pipelines ++ Map(
     // P8/E1: Polars `remove` translation — rows with a NULL predicate are
     // KEPT (filter(!coalesce(pred, false))), via the engine's removeRows.
     "etl_remove_prefix" -> ((s, d) => {

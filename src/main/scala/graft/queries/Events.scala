@@ -1,5 +1,6 @@
 package graft.queries
 
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -10,6 +11,19 @@ import Tables._
   * event-time tumbling windows, sessionization by inactivity gap.
   */
 object Events {
+
+  /** Hourly calendar spine of `events`: one `hour_ts` row per hour from
+    * the hour of the first event to the hour of the last. A 1-row
+    * aggregate is exploded, so the spine's length is the TIME RANGE,
+    * independent of event volume. `extra` columns may read the bounds
+    * `h0`/`h1`; each caller joins its own panel onto the spine.
+    */
+  private def hourSpine(e: DataFrame, extra: Column*): DataFrame =
+    e.agg(
+        date_trunc("HOUR", min(col("ts"))).as("h0"),
+        date_trunc("HOUR", max(col("ts"))).as("h1"))
+      .select(explode(expr("sequence(h0, h1, interval 1 hour)")).as("hour_ts")
+        +: extra: _*)
 
   val queries: Map[String, Q] = Map(
     // JSON extraction from the props column (get_json_object ~ E-extension).
@@ -146,10 +160,7 @@ object Events {
       val hourly = e.filter(col("event_type") === "error")
         .groupBy(date_trunc("HOUR", col("ts")).as("hour_ts"))
         .agg(count(lit(1)).as("n_err"))
-      val spine = e.agg(
-          date_trunc("HOUR", min(col("ts"))).as("h0"),
-          date_trunc("HOUR", max(col("ts"))).as("h1"))
-        .select(explode(expr("sequence(h0, h1, interval 1 hour)")).as("hour_ts"))
+      val spine = hourSpine(e)
       spine.join(hourly, Seq("hour_ts"), "left")
         .select(col("hour_ts"),
           coalesce(col("n_err"), lit(0L)).as("n_err"),
@@ -305,10 +316,7 @@ object Events {
       val hourly = e.filter(col("event_type") === "error")
         .groupBy(date_trunc("HOUR", col("ts")).as("hour_ts"))
         .agg(count(lit(1)).as("n_err"))
-      val spine = e.agg(
-          date_trunc("HOUR", min(col("ts"))).as("h0"),
-          date_trunc("HOUR", max(col("ts"))).as("h1"))
-        .select(explode(expr("sequence(h0, h1, interval 1 hour)")).as("hour_ts"))
+      val spine = hourSpine(e)
       val filled = spine.join(hourly, Seq("hour_ts"), "left")
         .select(col("hour_ts"), coalesce(col("n_err"), lit(0L)).as("v"))
       val w = Window.orderBy("hour_ts")
@@ -678,10 +686,7 @@ object Events {
       val hourly = e
         .groupBy(date_trunc("HOUR", col("ts")).as("hour_ts"), col("event_type"))
         .agg(count(lit(1)).as("c"))
-      val spine = e.agg(
-          date_trunc("HOUR", min(col("ts"))).as("h0"),
-          date_trunc("HOUR", max(col("ts"))).as("h1"))
-        .select(explode(expr("sequence(h0, h1, interval 1 hour)")).as("hour_ts"))
+      val spine = hourSpine(e)
       val panel = spine
         .crossJoin(e.select("event_type").distinct())
         .join(hourly, Seq("hour_ts", "event_type"), "left")
@@ -712,10 +717,7 @@ object Events {
       val hourly = e
         .groupBy(date_trunc("HOUR", col("ts")).as("hour_ts"), col("event_type"))
         .agg(count(lit(1)).as("c"))
-      val spine = e.agg(
-          date_trunc("HOUR", min(col("ts"))).as("h0"),
-          date_trunc("HOUR", max(col("ts"))).as("h1"))
-        .select(explode(expr("sequence(h0, h1, interval 1 hour)")).as("hour_ts"))
+      val spine = hourSpine(e)
       val panel = spine
         .crossJoin(e.select("event_type").distinct())
         .join(hourly, Seq("hour_ts", "event_type"), "left")
@@ -801,10 +803,7 @@ object Events {
       val hourly = e
         .groupBy(date_trunc("HOUR", col("ts")).as("hour_ts"), col("event_type"))
         .agg(count(lit(1)).as("c"))
-      val spine = e.agg(
-          date_trunc("HOUR", min(col("ts"))).as("h0"),
-          date_trunc("HOUR", max(col("ts"))).as("h1"))
-        .select(explode(expr("sequence(h0, h1, interval 1 hour)")).as("hour_ts"))
+      val spine = hourSpine(e)
       val panel = spine
         .crossJoin(e.select("event_type").distinct())
         .join(hourly, Seq("hour_ts", "event_type"), "left")
@@ -1062,10 +1061,7 @@ object Events {
           count(lit(1)).as("n"))
         .select(col("event_type"), col("hour_ts"),
           (expr("(200 * cents + n) div (2 * n)") / 10000.0).as("v"))
-      val spine = e.agg(
-          date_trunc("HOUR", min(col("ts"))).as("h0"),
-          date_trunc("HOUR", max(col("ts"))).as("h1"))
-        .select(explode(expr("sequence(h0, h1, interval 1 hour)")).as("hour_ts"))
+      val spine = hourSpine(e)
       val types = e.select("event_type").distinct()
       val w = Window.partitionBy("event_type").orderBy("hour_ts")
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
@@ -1130,11 +1126,7 @@ object Events {
       val hourly = e
         .groupBy(col("event_type"), date_trunc("HOUR", col("ts")).as("hour_ts"))
         .agg(count(lit(1)).as("y"))
-      val spine = e.agg(
-          date_trunc("HOUR", min(col("ts"))).as("h0"),
-          date_trunc("HOUR", max(col("ts"))).as("h1"))
-        .select(explode(expr("sequence(h0, h1, interval 1 hour)")).as("hour_ts"),
-          unix_micros(col("h0")).as("t0"))
+      val spine = hourSpine(e, unix_micros(col("h0")).as("t0"))
       val types = e.select("event_type").distinct()
       val m = types.crossJoin(broadcast(spine))
         .join(hourly, Seq("event_type", "hour_ts"), "left")
@@ -1238,11 +1230,7 @@ object Events {
       val hourly = e
         .groupBy(col("event_type"), date_trunc("HOUR", col("ts")).as("hour_ts"))
         .agg(count(lit(1)).as("y"))
-      val spine = e.agg(
-          date_trunc("HOUR", min(col("ts"))).as("h0"),
-          date_trunc("HOUR", max(col("ts"))).as("h1"))
-        .select(explode(expr("sequence(h0, h1, interval 1 hour)")).as("hour_ts"),
-          unix_micros(col("h0")).as("t0"))
+      val spine = hourSpine(e, unix_micros(col("h0")).as("t0"))
       val types = e.select("event_type").distinct()
       val w = Window.partitionBy("event_type").orderBy("t")
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
@@ -1273,6 +1261,16 @@ object Events {
         .orderBy("event_type")
     })
   )
+
+  /** hourSpine in SQL: the bounds CTE `b(h0, h1)` and
+    * `spine(hour_ts$extra)`; each caller joins its own panel. */
+  private def hourSpineSql(extra: String = ""): String =
+    s"""b AS (
+       |  SELECT CAST(date_trunc('hour', min(ts)) AS TIMESTAMP) AS h0,
+       |         CAST(date_trunc('hour', max(ts)) AS TIMESTAMP) AS h1
+       |  FROM events),
+       |spine AS (
+       |  SELECT unnest(generate_series(h0, h1, INTERVAL 1 HOUR)) AS hour_ts$extra FROM b)""".stripMargin
 
   val oracles: Map[String, String] = Map(
     "e_json_extract" ->
@@ -1352,12 +1350,7 @@ object Events {
         |  round(max(abs(z6)), 3) AS max_abs_z
         |FROM z GROUP BY event_type ORDER BY event_type""".stripMargin,
     "e_gap_fill" ->
-      """WITH b AS (
-        |  SELECT CAST(date_trunc('hour', min(ts)) AS TIMESTAMP) AS h0,
-        |         CAST(date_trunc('hour', max(ts)) AS TIMESTAMP) AS h1
-        |  FROM events),
-        |spine AS (
-        |  SELECT unnest(generate_series(h0, h1, INTERVAL 1 HOUR)) AS hour_ts FROM b),
+      s"""WITH ${hourSpineSql()},
         |hourly AS (
         |  SELECT CAST(date_trunc('hour', ts) AS TIMESTAMP) AS hour_ts, count(*) AS n_err
         |  FROM events WHERE event_type = 'error' GROUP BY 1)
@@ -1451,12 +1444,7 @@ object Events {
         |FROM cr GROUP BY user_id ORDER BY user_id""".stripMargin,
     // same 8-tap kernel, same left-to-right fold, same exact binary weights
     "e_ewma" ->
-      """WITH b AS (
-        |  SELECT CAST(date_trunc('hour', min(ts)) AS TIMESTAMP) AS h0,
-        |         CAST(date_trunc('hour', max(ts)) AS TIMESTAMP) AS h1
-        |  FROM events),
-        |spine AS (
-        |  SELECT unnest(generate_series(h0, h1, INTERVAL 1 HOUR)) AS hour_ts FROM b),
+      s"""WITH ${hourSpineSql()},
         |hourly AS (
         |  SELECT CAST(date_trunc('hour', ts) AS TIMESTAMP) AS hour_ts, count(*) AS n_err
         |  FROM events WHERE event_type = 'error' GROUP BY 1),
@@ -1668,12 +1656,7 @@ object Events {
         |   * 281474976710656) // theta AS est_du FROM m ORDER BY day""".stripMargin,
     // the identical panel + 24-row sorted-list window, same 1-based picks
     "e_moving_percentile" ->
-      """WITH b AS (
-        |  SELECT CAST(date_trunc('hour', min(ts)) AS TIMESTAMP) AS h0,
-        |         CAST(date_trunc('hour', max(ts)) AS TIMESTAMP) AS h1
-        |  FROM events),
-        |spine AS (
-        |  SELECT unnest(generate_series(h0, h1, INTERVAL 1 HOUR)) AS hour_ts FROM b),
+      s"""WITH ${hourSpineSql()},
         |types AS (SELECT DISTINCT event_type FROM events),
         |hourly AS (
         |  SELECT CAST(date_trunc('hour', ts) AS TIMESTAMP) AS hour_ts, event_type,
@@ -1693,12 +1676,7 @@ object Events {
         |FROM wl WHERE len(win) = 24
         |ORDER BY hour_ts, event_type""".stripMargin,
     "e_forecast_baseline" ->
-      """WITH b AS (
-        |  SELECT CAST(date_trunc('hour', min(ts)) AS TIMESTAMP) AS h0,
-        |         CAST(date_trunc('hour', max(ts)) AS TIMESTAMP) AS h1
-        |  FROM events),
-        |spine AS (
-        |  SELECT unnest(generate_series(h0, h1, INTERVAL 1 HOUR)) AS hour_ts FROM b),
+      s"""WITH ${hourSpineSql()},
         |types AS (SELECT DISTINCT event_type FROM events),
         |hourly AS (
         |  SELECT CAST(date_trunc('hour', ts) AS TIMESTAMP) AS hour_ts, event_type,
@@ -1761,12 +1739,7 @@ object Events {
     // same gap-filled panel as e_forecast_baseline, hour-of-day profile
     // subtraction, z rounded to 6 dp before the threshold (e_anomaly)
     "e_seasonal_anomaly" ->
-      """WITH b AS (
-        |  SELECT CAST(date_trunc('hour', min(ts)) AS TIMESTAMP) AS h0,
-        |         CAST(date_trunc('hour', max(ts)) AS TIMESTAMP) AS h1
-        |  FROM events),
-        |spine AS (
-        |  SELECT unnest(generate_series(h0, h1, INTERVAL 1 HOUR)) AS hour_ts FROM b),
+      s"""WITH ${hourSpineSql()},
         |types AS (SELECT DISTINCT event_type FROM events),
         |hourly AS (
         |  SELECT CAST(date_trunc('hour', ts) AS TIMESTAMP) AS hour_ts, event_type,
@@ -1918,17 +1891,12 @@ object Events {
         |FROM exact JOIN est USING (event_type) ORDER BY event_type""".stripMargin,
     // 4-dp rounding happens BEFORE the fill on both engines
     "e_forward_fill" ->
-      """WITH hourly AS (
+      s"""WITH hourly AS (
         |  SELECT event_type, CAST(date_trunc('hour', ts) AS TIMESTAMP) AS hour_ts,
         |    CAST((200 * sum(CAST(round(value * 100) AS BIGINT)) + count(*))
         |      // (2 * count(*)) AS BIGINT) / 10000.0 AS v
         |  FROM events GROUP BY 1, 2),
-        |b AS (
-        |  SELECT CAST(date_trunc('hour', min(ts)) AS TIMESTAMP) AS h0,
-        |         CAST(date_trunc('hour', max(ts)) AS TIMESTAMP) AS h1
-        |  FROM events),
-        |spine AS (
-        |  SELECT unnest(generate_series(h0, h1, INTERVAL 1 HOUR)) AS hour_ts FROM b),
+        |${hourSpineSql()},
         |types AS (SELECT DISTINCT event_type FROM events),
         |panel AS (SELECT event_type, hour_ts FROM types CROSS JOIN spine)
         |SELECT panel.event_type, panel.hour_ts, v,
@@ -1964,18 +1932,11 @@ object Events {
         |FROM adj GROUP BY variant ORDER BY variant""".stripMargin,
     // exact BIGINT moment sums; doubles only in the final divisions
     "e_trend_ols" ->
-      """WITH hourly AS (
+      s"""WITH hourly AS (
         |  SELECT event_type, CAST(date_trunc('hour', ts) AS TIMESTAMP) AS hour_ts,
         |    count(*) AS y
         |  FROM events GROUP BY 1, 2),
-        |b AS (
-        |  SELECT CAST(date_trunc('hour', min(ts)) AS TIMESTAMP) AS h0,
-        |         CAST(date_trunc('hour', max(ts)) AS TIMESTAMP) AS h1
-        |  FROM events),
-        |spine AS (
-        |  SELECT unnest(generate_series(h0, h1, INTERVAL 1 HOUR)) AS hour_ts,
-        |         epoch_us(h0) AS t0
-        |  FROM b),
+        |${hourSpineSql(", epoch_us(h0) AS t0")},
         |types AS (SELECT DISTINCT event_type FROM events),
         |pts AS (
         |  SELECT t.event_type,
@@ -2043,18 +2004,11 @@ object Events {
         |FROM phi CROSS JOIN tot ORDER BY channel""".stripMargin,
     // exact-BIGINT CUSUM search; struct-max with -t breaks ties earliest
     "e_changepoint" ->
-      """WITH hourly AS (
+      s"""WITH hourly AS (
         |  SELECT event_type, CAST(date_trunc('hour', ts) AS TIMESTAMP) AS hour_ts,
         |    count(*) AS y
         |  FROM events GROUP BY 1, 2),
-        |b AS (
-        |  SELECT CAST(date_trunc('hour', min(ts)) AS TIMESTAMP) AS h0,
-        |         CAST(date_trunc('hour', max(ts)) AS TIMESTAMP) AS h1
-        |  FROM events),
-        |spine AS (
-        |  SELECT unnest(generate_series(h0, h1, INTERVAL 1 HOUR)) AS hour_ts,
-        |         epoch_us(h0) AS t0
-        |  FROM b),
+        |${hourSpineSql(", epoch_us(h0) AS t0")},
         |types AS (SELECT DISTINCT event_type FROM events),
         |panel AS (
         |  SELECT ty.event_type, s.hour_ts,

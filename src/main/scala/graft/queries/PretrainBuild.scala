@@ -148,19 +148,14 @@ object PretrainBuild {
     "c_pretrain_build" -> ((s, d) => build(s, d)))
 
   /** The whole build replayed as one CTE chain: gopher gate → min-id per
-    * fingerprint → the minhashLshSql pair CTEs → the unrolled label-min
-    * CC rounds (with the standard convergence guard) → mix rates + md5
-    * draw → md5-48 shard placement → histogram.
+    * fingerprint → the shared MinHash pair CTEs (Tables.minhashPairCtesSql)
+    * → the unrolled label-min CC rounds (Tables.labelMinCcSql, with its
+    * convergence guard) → mix rates + md5 draw → md5-48 shard placement →
+    * histogram.
     */
   val oracles: Map[String, String] = Map(
-    "c_pretrain_build" -> {
-      val cs = graft.functions.Sketches.minhashXorConstants(16, 42L)
-        .mkString("[", ",", "]")
-      s"""WITH dups AS MATERIALIZED (
-        |  SELECT doc_id * 2 AS doc_id, text, lang FROM documents
-        |  UNION ALL
-        |  SELECT doc_id * 2 + 1 AS doc_id, text, lang FROM documents
-        |  WHERE doc_id % 5 = 0),
+    "c_pretrain_build" ->
+      s"""WITH dups AS MATERIALIZED (${dupsSql("text, lang")}),
         |spd AS (
         |  SELECT doc_id, lang, text,
         |    string_split_regex(trim(text), '[ \\t\\n\\x0B\\f\\r]+') AS sp
@@ -177,61 +172,13 @@ object PretrainBuild {
         |  WHERE b.n_words >= 20 AND CAST(t.top_cnt AS DOUBLE) / b.n_words <= 0.15),
         |ex AS MATERIALIZED (
         |  SELECT doc_id, lang, text, n_words,
-        |    md5(lower(trim(regexp_replace(text, '[ \\t\\n\\x0B\\f\\r]+', ' ', 'g')))) AS fp
+        |    md5(${normTextSql("text")}) AS fp
         |  FROM q
         |  QUALIFY doc_id = min(doc_id) OVER (PARTITION BY
-        |    md5(lower(trim(regexp_replace(text, '[ \\t\\n\\x0B\\f\\r]+', ' ', 'g')))))),
-        |grams AS MATERIALIZED (
-        |  SELECT doc_id, unnest(list_transform(range(0, greatest(length(text) - 4, 1)),
-        |    i -> CAST('0x' || substr(md5(substr(text, CAST(i AS INT) + 1, 5)),
-        |      1, 12) AS BIGINT))) AS h
-        |  FROM ex),
-        |mins AS (
-        |  SELECT doc_id, j, min(xor(h, list_extract($cs, CAST(j AS INT) + 1))) AS m
-        |  FROM grams CROSS JOIN range(0, 16) t(j) GROUP BY 1, 2),
-        |sigs AS MATERIALIZED (
-        |  SELECT doc_id, list(m ORDER BY j) AS mh FROM mins GROUP BY doc_id),
-        |bands AS (
-        |  SELECT doc_id, b,
-        |    mh[CAST(4 * b + 1 AS INT)] AS m0, mh[CAST(4 * b + 2 AS INT)] AS m1,
-        |    mh[CAST(4 * b + 3 AS INT)] AS m2, mh[CAST(4 * b + 4 AS INT)] AS m3
-        |  FROM sigs CROSS JOIN range(0, 4) t(b)),
-        |cand AS (
-        |  SELECT DISTINCT a.doc_id AS id_a, c.doc_id AS id_b
-        |  FROM bands a JOIN bands c
-        |    ON a.b = c.b AND a.m0 = c.m0 AND a.m1 = c.m1
-        |    AND a.m2 = c.m2 AND a.m3 = c.m3
-        |  WHERE a.doc_id < c.doc_id),
-        |p AS MATERIALIZED (
-        |  SELECT id_a AS src, id_b AS dst FROM cand
-        |  JOIN sigs sa ON sa.doc_id = id_a JOIN sigs sb ON sb.doc_id = id_b
-        |  WHERE CAST(list_sum(list_transform(sa.mh, (x, i) ->
-        |    CASE WHEN x = sb.mh[i] THEN 1 ELSE 0 END)) AS DOUBLE) / 16 >= 0.7),
-        |e AS MATERIALIZED (
-        |  SELECT src, dst FROM p UNION SELECT dst, src FROM p
-        |  UNION SELECT src, src FROM p UNION SELECT dst, dst FROM p),
-        |l0 AS (SELECT dst AS v, min(src) AS lbl FROM e GROUP BY dst),
-        |r1 AS (SELECT e.dst AS v, min(l.lbl) AS lbl FROM e JOIN l0 l ON e.src = l.v GROUP BY e.dst),
-        |d1 AS (SELECT a.v, least(a.lbl, coalesce(b.lbl, a.lbl)) AS lbl
-        |       FROM r1 a LEFT JOIN r1 b ON a.lbl = b.v),
-        |r2 AS (SELECT e.dst AS v, min(l.lbl) AS lbl FROM e JOIN d1 l ON e.src = l.v GROUP BY e.dst),
-        |d2 AS (SELECT a.v, least(a.lbl, coalesce(b.lbl, a.lbl)) AS lbl
-        |       FROM r2 a LEFT JOIN r2 b ON a.lbl = b.v),
-        |r3 AS (SELECT e.dst AS v, min(l.lbl) AS lbl FROM e JOIN d2 l ON e.src = l.v GROUP BY e.dst),
-        |d3 AS (SELECT a.v, least(a.lbl, coalesce(b.lbl, a.lbl)) AS lbl
-        |       FROM r3 a LEFT JOIN r3 b ON a.lbl = b.v),
-        |r4 AS (SELECT e.dst AS v, min(l.lbl) AS lbl FROM e JOIN d3 l ON e.src = l.v GROUP BY e.dst),
-        |d4 AS (SELECT a.v, least(a.lbl, coalesce(b.lbl, a.lbl)) AS lbl
-        |       FROM r4 a LEFT JOIN r4 b ON a.lbl = b.v),
-        |r5 AS (SELECT e.dst AS v, min(l.lbl) AS lbl FROM e JOIN d4 l ON e.src = l.v GROUP BY e.dst),
-        |d5 AS (SELECT a.v, least(a.lbl, coalesce(b.lbl, a.lbl)) AS lbl
-        |       FROM r5 a LEFT JOIN r5 b ON a.lbl = b.v),
-        |r6 AS (SELECT e.dst AS v, min(l.lbl) AS lbl FROM e JOIN d5 l ON e.src = l.v GROUP BY e.dst),
-        |d6 AS MATERIALIZED (SELECT a.v, least(a.lbl, coalesce(b.lbl, a.lbl)) AS lbl
-        |       FROM r6 a LEFT JOIN r6 b ON a.lbl = b.v),
-        |r7 AS (SELECT e.dst AS v, min(l.lbl) AS lbl FROM e JOIN d6 l ON e.src = l.v GROUP BY e.dst),
-        |chk AS (SELECT count(*) AS n_changed
-        |        FROM r7 JOIN d6 ON r7.v = d6.v WHERE r7.lbl < d6.lbl),
+        |    md5(${normTextSql("text")}))),
+        |${minhashPairCtesSql("ex")},
+        |p AS MATERIALIZED (SELECT id_a AS src, id_b AS dst FROM near WHERE est >= 0.7),
+        |${labelMinCcSql("c_pretrain_build")},
         |nd AS MATERIALIZED (
         |  SELECT ex.doc_id, ex.lang, ex.text, ex.n_words, ex.fp
         |  FROM ex LEFT JOIN d6 ON ex.doc_id = d6.v
@@ -256,11 +203,7 @@ object PretrainBuild {
         |         n_words, fp
         |  FROM mx)
         |SELECT shard, count(*) AS n_docs,
-        |  CAST(sum(n_words) AS BIGINT) +
-        |    (SELECT CASE WHEN n_changed > 0 THEN error(
-        |      'c_pretrain_build oracle: label-min replay NOT converged after the 6 unrolled rounds - deepen the unroll')
-        |      ELSE 0 END FROM chk) AS n_tokens,
+        |  CAST(sum(n_words) AS BIGINT) + (SELECT guard FROM chk) AS n_tokens,
         |  min(fp) AS min_fp
-        |FROM sh GROUP BY shard ORDER BY shard""".stripMargin
-    })
+        |FROM sh GROUP BY shard ORDER BY shard""".stripMargin)
 }

@@ -148,12 +148,11 @@ object Similarity {
     s.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
 
   private def semDedup(s: org.apache.spark.sql.SparkSession, d: String,
-      stratified: Boolean): DataFrame = {
+      stratum: Option[Int]): DataFrame = {
     graft.functions.GraftFunctions.ensureRegistered(s)
     val emb0 = t(s, d, "embeddings")
-    val emb =
-      if (stratified) emb0.filter(col("vec_id") < 8 || stratum41(col("vec_id")))
-      else emb0
+    val emb = stratum.fold(emb0)(p =>
+      emb0.filter(col("vec_id") < 8 || Tables.stratum(col("vec_id"), p)))
     val n = emb.count()
     val k = math.max(8L, (n + 249L) / 250L)
     // ADAPTIVE assignment (round 14): k grows linearly with N, so a flat
@@ -885,7 +884,7 @@ object Similarity {
     // m-order so both engines sum bit-identically.
     "s_pq_topk" -> ((s, d) => pqTopk(s, d, None)),
 
-    // Stratum-oracled twin (the d_*_s41 device, see Tables.stratum41):
+    // Stratum-oracled twin (the d_*_s41 device, see Tables.stratum):
     // identical PQ pipeline over codebook+query (vec_id < 8, kept
     // unconditionally — THEY are the quantizer, the corpus is what
     // scales) plus the 1-in-41 md5 stratum of the scored vectors, so the
@@ -1801,13 +1800,13 @@ object Similarity {
     // the 4-dp cosine (the d_embed_neardup discipline): the synthetic
     // embeddings are near-uniform, so this sits in the observed upper
     // tail and exercises both drop and keep paths.
-    "s_semdedup" -> ((s, d) => semDedup(s, d, stratified = false)),
+    "s_semdedup" -> ((s, d) => semDedup(s, d, None)),
 
     // Stratum-oracled twin (the *_s41 device): the identical SemDeDup
     // pipeline over seeds (vec_id < 8, always kept) plus the 1-in-41 md5
     // stratum, so the cluster-local pairwise SQL replay stays feasible at
     // sf10 where the full replay timed out.
-    "s_semdedup_s41" -> ((s, d) => semDedup(s, d, stratified = true)),
+    "s_semdedup_s41" -> ((s, d) => semDedup(s, d, Some(41))),
 
     // Maximal Marginal Relevance re-ranking (Carbonell & Goldstein 1998):
     // greedily pick k=5 results trading relevance against redundancy,
@@ -2628,14 +2627,13 @@ object Similarity {
       |ORDER BY qid, rnk""".stripMargin
   }
 
-  /** The frozen-parameter DELTA replay plus the merged segment views,
-    * appended after either train block (annIndexCtesSql or
-    * annIndexStratCtesSql — both define e/c/cb/ms/assign/codes): the
-    * deterministic %7==3 re-keyed reversed delta assigned and coded
-    * against the FROZEN artifacts, then massign/mcodes as the base∪delta
-    * union — the lifecycle state the segmented-query family reads.
+  /** The frozen-parameter DELTA segment replay, appended after a train
+    * block (annIndexPreludeSql — it defines e/c/cb/ms/assign/codes): the
+    * deterministic %7==3 re-keyed reversed delta `deltae`, assigned
+    * (`dassign`) and PQ-coded (`dsubv`/`dcodes`) against the FROZEN
+    * artifacts.
     */
-  private def annIndexDeltaMergedCtesSql: String =
+  private val annIndexDeltaCtesSql: String =
     """deltae AS (SELECT vec_id + 1000000 AS vec_id, list_reverse(v) AS v
       |  FROM e WHERE vec_id % 7 = 3),
       |dassign AS (
@@ -2650,7 +2648,14 @@ object Similarity {
       |dcodes AS (
       |  SELECT vec_id, dsubv.m,
       |    (max({'d': round(list_dot_product(sv, cw), 9), 'code': code})).code AS code
-      |  FROM dsubv JOIN cb ON dsubv.m = cb.m GROUP BY vec_id, dsubv.m),
+      |  FROM dsubv JOIN cb ON dsubv.m = cb.m GROUP BY vec_id, dsubv.m)""".stripMargin
+
+  /** The delta segment plus the merged segment views massign/mcodes (the
+    * base∪delta union) — the lifecycle state the segmented-query family
+    * reads.
+    */
+  private val annIndexDeltaMergedCtesSql: String =
+    s"""$annIndexDeltaCtesSql,
       |mcodes AS MATERIALIZED (
       |  SELECT vec_id, m, code FROM codes
       |  UNION ALL SELECT vec_id, m, code FROM dcodes),
@@ -2821,9 +2826,9 @@ object Similarity {
     * centroids and stage 1 is verdict-free); above the cutoff it is the
     * identical two-level hierarchy, 9-dp at every boundary.
     */
-  private def semDedupSql(strat: String): String =
+  private def semDedupSql(stratum: Option[Int]): String =
     s"""WITH e AS MATERIALIZED (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
-        |     WHERE $strat),
+        |     WHERE ${stratum.fold("TRUE")(p => s"vec_id < 8 OR ${stratumSql("vec_id", p)}")}),
         |kk AS (SELECT greatest(8, (count(*) + 249) // 250) AS k FROM e),
         |kk2 AS (SELECT CASE WHEN k <= 256 THEN 1
         |               ELSE CAST(ceil(sqrt(k)) AS BIGINT) END AS k2 FROM kk),
@@ -3190,20 +3195,7 @@ object Similarity {
     // merged per-cell census
     "s_index_delta" ->
       s"""WITH $annIndexCtesSql,
-        |deltae AS (SELECT vec_id + 1000000 AS vec_id, list_reverse(v) AS v
-        |  FROM e WHERE vec_id % 7 = 3),
-        |dassign AS (
-        |  SELECT vec_id, (max({'c': c2c, 'cell': cell})).cell AS cell
-        |  FROM (SELECT de.vec_id, c.cell,
-        |          round(list_dot_product(de.v, c.centroid) /
-        |            (sqrt(list_dot_product(de.v, de.v)) *
-        |             sqrt(list_dot_product(c.centroid, c.centroid))), 9) AS c2c
-        |        FROM deltae de, c) GROUP BY vec_id),
-        |dsubv AS (SELECT vec_id, m, v[m*16+1 : m*16+16] AS sv FROM deltae, ms),
-        |dcodes AS (
-        |  SELECT vec_id, dsubv.m,
-        |    (max({'d': round(list_dot_product(sv, cw), 9), 'code': code})).code AS code
-        |  FROM dsubv JOIN cb ON dsubv.m = cb.m GROUP BY vec_id, dsubv.m),
+        |$annIndexDeltaCtesSql,
         |${wideSql("wide", "codes")},
         |${wideSql("dwide", "dcodes")},
         |merged AS (
@@ -3221,20 +3213,7 @@ object Similarity {
     // math, with min/max ids pinning that both segments were folded in
     "s_index_compact" ->
       s"""WITH $annIndexCtesSql,
-        |deltae AS (SELECT vec_id + 1000000 AS vec_id, list_reverse(v) AS v
-        |  FROM e WHERE vec_id % 7 = 3),
-        |dassign AS (
-        |  SELECT vec_id, (max({'c': c2c, 'cell': cell})).cell AS cell
-        |  FROM (SELECT de.vec_id, c.cell,
-        |          round(list_dot_product(de.v, c.centroid) /
-        |            (sqrt(list_dot_product(de.v, de.v)) *
-        |             sqrt(list_dot_product(c.centroid, c.centroid))), 9) AS c2c
-        |        FROM deltae de, c) GROUP BY vec_id),
-        |dsubv AS (SELECT vec_id, m, v[m*16+1 : m*16+16] AS sv FROM deltae, ms),
-        |dcodes AS (
-        |  SELECT vec_id, dsubv.m,
-        |    (max({'d': round(list_dot_product(sv, cw), 9), 'code': code})).code AS code
-        |  FROM dsubv JOIN cb ON dsubv.m = cb.m GROUP BY vec_id, dsubv.m),
+        |$annIndexDeltaCtesSql,
         |${wideSql("wide", "codes")},
         |${wideSql("dwide", "dcodes")},
         |merged AS (
@@ -3412,15 +3391,7 @@ object Similarity {
           |  round(sum(n) / (${graft.io.AnnIndex.batch}.0 * (SELECT t FROM tot)), 4) AS frac_scanned
           |FROM ranked JOIN cc USING (cell) WHERE rn <= $np""".stripMargin
       s"""WITH $annIndexCtesSql,
-        |deltae AS (SELECT vec_id + 1000000 AS vec_id, list_reverse(v) AS v
-        |  FROM e WHERE vec_id % 7 = 3),
-        |dassign AS (
-        |  SELECT vec_id, (max({'c': c2c, 'cell': cell})).cell AS cell
-        |  FROM (SELECT de.vec_id, c.cell,
-        |          round(list_dot_product(de.v, c.centroid) /
-        |            (sqrt(list_dot_product(de.v, de.v)) *
-        |             sqrt(list_dot_product(c.centroid, c.centroid))), 9) AS c2c
-        |        FROM deltae de, c) GROUP BY vec_id),
+        |$annIndexDeltaCtesSql,
         |${qPanelSql(None)},
         |$rankedSql,
         |cc AS (SELECT cell, count(*) AS n FROM (
@@ -3634,8 +3605,8 @@ object Similarity {
         |    nullif(CAST(n.n AS DOUBLE) * (CAST(n.n AS DOUBLE) - 1.0), 0.0), 6) AS mean_pair_cos
         |FROM q JOIN n USING (label) ORDER BY label""".stripMargin,
     // the s_kmeans two-iteration chain verbatim, then cluster-local pairs
-    "s_semdedup" -> semDedupSql("TRUE"),
-    "s_semdedup_s41" -> semDedupSql(s"vec_id < 8 OR ${stratum41Sql("vec_id")}"),
+    "s_semdedup" -> semDedupSql(None),
+    "s_semdedup_s41" -> semDedupSql(Some(41)),
     // the same greedy chain as four unrolled argmax CTEs
     "s_mmr_rerank" ->
       """WITH e AS MATERIALIZED (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),

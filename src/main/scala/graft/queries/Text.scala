@@ -123,6 +123,12 @@ object Text {
     (merges, v.select(col("w"), col("sym")))
   }
 
+  /** t_bpe_encode_bytes over the full corpus, or (its stratum twin) over
+    * the md5 doc_id stratum. */
+  private def bpeEncodeBytes(s: org.apache.spark.sql.SparkSession, d: String,
+      stratum: Option[Int]): DataFrame =
+    bpeEncodeBytesOver(inStratum(t(s, d, "documents"), "doc_id", stratum))
+
   /** The byte-fallback encode pipeline over an arbitrary documents slice
     * (full corpus for t_bpe_encode_bytes; the 1-in-41 md5 doc_id stratum
     * for its _s41 twin — train corpus and encode stream are the SAME
@@ -555,8 +561,7 @@ object Text {
     // order, byte-identical to the trainer); the stream side is one
     // explode + an unhinted vocab join + one partial-agg'd groupBy —
     // the corpus pass dominates, exactly like t_bpe_encode.
-    "t_bpe_encode_bytes" -> ((s, d) =>
-      bpeEncodeBytesOver(t(s, d, "documents"))),
+    "t_bpe_encode_bytes" -> ((s, d) => bpeEncodeBytes(s, d, None)),
 
     // The byte-fallback encode's 1-in-41 STRATUM twin (the established
     // high-SF device, VERDICT r17 ask #6): the identical train → vocab →
@@ -566,9 +571,7 @@ object Text {
     // contract to the 1000× gate alongside the index twins. Training
     // corpus and encode stream are BOTH the stratum (the tokenizer is
     // trained on, and applied to, the same slice).
-    "t_bpe_encode_bytes_s41" -> ((s, d) =>
-      bpeEncodeBytesOver(
-        t(s, d, "documents").filter(stratum41(col("doc_id"))))),
+    "t_bpe_encode_bytes_s41" -> ((s, d) => bpeEncodeBytes(s, d, Some(41))),
 
     // Whitespace + BPE-ish regex token counts per document.
     "t_token_count" -> ((s, d) =>
@@ -1314,7 +1317,7 @@ object Text {
     * byte-identical to the trainer), and the byte-fallback cost — 1
     * token for in-vocabulary symbols, strlen (UTF-8 octets) for OOV.
     */
-  private def bpeEncodeBytesSql(k: Int, pred: String = "TRUE"): String = {
+  private def bpeEncodeBytesSql(k: Int, stratum: Option[Int]): String = {
     val applySeg = (1 to k).map { i =>
       s"""seg$i AS (SELECT w, replace(replace(sym, ' ' || (SELECT pr FROM m$i) || ' ',
          |    ' ' || replace((SELECT pr FROM m$i), ' ', '') || ' '),
@@ -1325,6 +1328,7 @@ object Text {
     val learned = (1 to k)
       .map(i => s"SELECT replace(pr, ' ', '') AS sym FROM m$i")
       .mkString("\n  UNION ALL ")
+    val pred = stratum.fold("TRUE")(stratumSql("doc_id", _))
     s"""WITH ${bpeCtesSql(k, pred)},
        |alpha AS (SELECT DISTINCT sym FROM (
        |  SELECT unnest(list_transform(range(1, length(w) + 1),
@@ -1359,9 +1363,9 @@ object Text {
 
   val oracles: Map[String, String] = Map(
     "t_bpe_merges" -> bpeMergesSql(5),
-    "t_bpe_encode_bytes" -> bpeEncodeBytesSql(5),
+    "t_bpe_encode_bytes" -> bpeEncodeBytesSql(5, None),
     // the stratum twin: identical replay over the 1-in-41 md5 doc_id draw
-    "t_bpe_encode_bytes_s41" -> bpeEncodeBytesSql(5, stratum41Sql("doc_id")),
+    "t_bpe_encode_bytes_s41" -> bpeEncodeBytesSql(5, Some(41)),
     // all deepK rounds replayed as ONE recursive CTE over the bigram
     // unit vocabulary — same rule, argmax and tie-break as the word form
     "t_bpe_merges_deep" -> (s"WITH ${bpeDeepRecursiveCtes(deepK, bigramWordsCte)}\n" +
@@ -1411,7 +1415,7 @@ object Text {
         |  ELSE 'en' END AS lang_guess FROM documents)
         |SELECT lang_guess, count(*) AS cnt FROM g GROUP BY 1 ORDER BY lang_guess""".stripMargin,
     "t_fingerprint" ->
-      """SELECT doc_id, md5(lower(trim(regexp_replace(text, '[ \t\n\x0B\f\r]+', ' ', 'g')))) AS fp
+      s"""SELECT doc_id, md5(${normTextSql("text")}) AS fp
         |FROM documents ORDER BY doc_id""".stripMargin,
     "t_quality_filter" ->
       """WITH q AS (

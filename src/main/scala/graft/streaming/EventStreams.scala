@@ -5,6 +5,7 @@ import java.sql.Timestamp
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import graft.queries.Tables.{dupsSql, minhashPairCtesSql, normTextSql}
 
 /** Structured-Streaming forms of the `graft.queries.Events` batch operators.
   * Each takes a (possibly streaming) DataFrame of the `events` schema
@@ -91,20 +92,6 @@ object EventStreams {
     def keyTag(d: String): String = d.replaceAll("[^A-Za-z0-9]", "_")
   }
 
-  /** Env-gated micro-batch diagnostics (`GRAFT_STREAM_PROBE=1`): dump each
-    * completed micro-batch's duration breakdown (triggerExecution,
-    * addBatch, getBatch, commitOffsets, walCommit, state-store metrics)
-    * to stderr after a ledger stream drains. Off by default — the bench
-    * and driver never set the env, so the measured spans are unchanged;
-    * this exists so state-store/commit cost claims rest on the engine's
-    * own per-batch numbers instead of end-to-end guesswork.
-    */
-  private def dumpProgress(
-      tag: String, q: org.apache.spark.sql.streaming.StreamingQuery): Unit =
-    if (sys.env.contains("GRAFT_STREAM_PROBE"))
-      q.recentProgress.foreach(p =>
-        System.err.println(s"[stream-probe] $tag ${p.json}"))
-
   /** State-partition count for the ledger streams (fixed at query start
     * from `spark.sql.shuffle.partitions`). The state here is KB-scale
     * (bounded by the watermark horizon, not the corpus), and every
@@ -117,6 +104,20 @@ object EventStreams {
     */
   private def statePartitions(s: org.apache.spark.sql.SparkSession): String =
     s.conf.getOption("spark.graft.stream.statePartitions").getOrElse("2")
+
+  /** Runs `body` with `spark.sql.shuffle.partitions` set to
+    * [[statePartitions]] — the state-partition count a stream fixes at
+    * query start — and restores the previous value on every exit path,
+    * including a throw. The scope is intra-process only: queries in one
+    * Verify/Bench session run sequentially, and a concurrent run is a
+    * separate JVM with its own SparkSession (no shared conf to race).
+    */
+  private def withStatePartitions[T](s: org.apache.spark.sql.SparkSession)(
+      body: => T): T = {
+    val prev = s.conf.get("spark.sql.shuffle.partitions")
+    s.conf.set("spark.sql.shuffle.partitions", statePartitions(s))
+    try body finally s.conf.set("spark.sql.shuffle.partitions", prev)
+  }
 
   /** Event-time tumbling hourly counts; 2h watermark bounds state. */
   def hourlyCounts(events: DataFrame): DataFrame =
@@ -621,27 +622,20 @@ object EventStreams {
       val outDir = s"${root.getAbsolutePath}/out"
       val ckDir = s"${root.getAbsolutePath}/ck"
       val schema = s.read.parquet(srcDir).schema
-      // Scope the stream to 8 shuffle partitions: the state-partition
-      // count is fixed at query start from this conf, and each micro-batch
+      // Scope the stream to the state-partition width: each micro-batch
       // commits one state-store delta + up to nShards sink files PER
       // partition — at 32 that is 4 batches x 32 commits of per-partition
       // KB-scale state, pure fixed overhead. The histogram is
       // partition-count-invariant, and a real deployment sizes state
       // partitions to state volume anyway (this is the ingest-rate knob's
       // sibling, not a test shortcut). The checkpoint dir is nonce-fresh,
-      // so the persisted count can never clash. The session-conf scope is
-      // intra-process only: queries in one Verify/Bench session run
-      // sequentially, and a concurrent driver round is a separate JVM
-      // with its own SparkSession (no shared conf to race).
-      val prevShuffle = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", statePartitions(s))
-      try {
-        val q = ingestDocsToShards(s, srcDir, schema, outDir, ckDir, nShards,
+      // so the persisted count can never clash.
+      withStatePartitions(s) {
+        ingestDocsToShards(s, srcDir, schema, outDir, ckDir, nShards,
           availableNow = true,
           shardFn = graft.io.TrainingShards.assignShardReplayable)
-        q.awaitTermination()
-        dumpProgress("st_ingest_shards", q)
-      } finally s.conf.set("spark.sql.shuffle.partitions", prevShuffle)
+          .awaitTermination()
+      }
       // bounded extract (≤ nShards rows) so the nonce dir can be removed
       // before returning instead of accumulating one tree per invocation
       val hist = s.read.parquet(outDir)
@@ -704,7 +698,7 @@ object EventStreams {
     */
   private def nearDupLedger(
       s: org.apache.spark.sql.SparkSession, d: String,
-      stratified: Boolean = false): DataFrame = {
+      stratum: Option[Int] = None): DataFrame = {
     graft.util.Dirs.withNonceDir("graft_neardup_") { root =>
       val dropDir = s"${root.getAbsolutePath}/drops"
       val ckDir = s"${root.getAbsolutePath}/ck"
@@ -718,8 +712,8 @@ object EventStreams {
       // ~2× cheaper than 1-file-per-trigger while still exercising
       // cross-batch state accumulation
       val srcDir = StagedInputs.dirFor(
-          s"neardup_${StagedInputs.keyTag(d)}_$stratified") { dir =>
-        graft.queries.Dedup.corpusWithDups(s, d, stratified)
+          s"neardup_${StagedInputs.keyTag(d)}_${stratum.getOrElse(0)}") { dir =>
+        graft.queries.Dedup.corpusWithDups(s, d, stratum)
           .select(col("doc_id"), timestamp_seconds(lit(t0)).as("ts"),
             col("text"), col("lang"))
           .repartition(2).write.mode("overwrite").parquet(dir.getAbsolutePath)
@@ -728,13 +722,11 @@ object EventStreams {
         }
       }.getAbsolutePath
       val schema = s.read.parquet(srcDir).schema
-      val prevShuffle = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", statePartitions(s))
-      try {
+      withStatePartitions(s) {
         val src = s.readStream.schema(schema)
           .option("maxFilesPerTrigger", 2)
           .parquet(srcDir)
-        val q = nearDupDropStream(src.withWatermark("ts", "2 hours"))
+        nearDupDropStream(src.withWatermark("ts", "2 hours"))
           .writeStream
           .format("parquet")
           .option("path", dropDir)
@@ -742,9 +734,8 @@ object EventStreams {
           .outputMode(OutputMode.Append)
           .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
           .start()
-        q.awaitTermination()
-        dumpProgress("st_neardup_ingest", q)
-      } finally s.conf.set("spark.sql.shuffle.partitions", prevShuffle)
+          .awaitTermination()
+      }
       val drops = s.read.schema("doc_id BIGINT").parquet(dropDir)
         .select(col("doc_id")).distinct()
         .withColumn("dr", lit(1))
@@ -855,22 +846,19 @@ object EventStreams {
       val outDir = s"${root.getAbsolutePath}/out"
       val ckDir = s"${root.getAbsolutePath}/ck"
       val schema = s.read.parquet(srcDir.getAbsolutePath).schema
-      val prevShuffle = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", statePartitions(s))
-      try {
+      withStatePartitions(s) {
         val src = s.readStream.schema(schema)
           .option("maxFilesPerTrigger", 1)
           .parquet(srcDir.getAbsolutePath)
-        val q = sessionizeStateful(src.as[Event], gapMs)
+        sessionizeStateful(src.as[Event], gapMs)
           .writeStream.format("parquet")
           .option("path", outDir)
           .option("checkpointLocation", ckDir)
           .outputMode(OutputMode.Append)
           .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
           .start()
-        q.awaitTermination()
-        dumpProgress("st_sessionize", q)
-      } finally s.conf.set("spark.sql.shuffle.partitions", prevShuffle)
+          .awaitTermination()
+      }
       val hist = s.read.parquet(outDir)
         .filter(col("user_id") >= 0)
         .select(col("user_id"), col("n_events"),
@@ -896,7 +884,7 @@ object EventStreams {
       // identical checkpointed stream over the 1-in-41 md5 sub-corpus,
       // which keeps the DuckDB pair replay feasible at sf10+ where the
       // full listing replay hits the 77 GB spill wall
-      "st_neardup_ingest_s41" -> ((s, d) => nearDupLedger(s, d, stratified = true)))
+      "st_neardup_ingest_s41" -> ((s, d) => nearDupLedger(s, d, Some(41))))
 
   /** The batch-mirror SQL: distinct content fingerprints of the dup
     * corpus, placed by the same md5-48 draw — count per shard is
@@ -928,14 +916,10 @@ object EventStreams {
         |  min(user_id) AS min_user
         |FROM sess GROUP BY 1 ORDER BY len_bucket""".stripMargin,
     "st_ingest_shards" ->
-      """WITH dups AS (
-        |  SELECT doc_id * 2 AS doc_id, text FROM documents
-        |  UNION ALL
-        |  SELECT doc_id * 2 + 1 AS doc_id, text FROM documents
-        |  WHERE doc_id % 5 = 0),
+      s"""WITH dups AS (${dupsSql("text")}),
         |fp AS (
         |  SELECT DISTINCT
-        |    md5(lower(trim(regexp_replace(text, '[ \t\n\x0B\f\r]+', ' ', 'g')))) AS fp
+        |    md5(${normTextSql("text")}) AS fp
         |  FROM dups),
         |s AS (
         |  SELECT CAST('0x' || substr(md5(fp), 1, 12) AS BIGINT) % 7 AS shard, fp
@@ -943,22 +927,18 @@ object EventStreams {
         |SELECT shard, count(*) AS n_docs, min(fp) AS min_fp
         |FROM s GROUP BY shard ORDER BY shard""".stripMargin,
     // The near-dup ledger replay: the SAME shared pair CTE chain the
-    // d_minhash_lsh oracle hash-matches (Dedup.minhashPairCtesSql), with
+    // d_minhash_lsh oracle hash-matches (Tables.minhashPairCtesSql), with
     // the bucket-close drop rule "distinct greater-side id of any
     // >= 12/16-equal candidate pair" — est >= 0.75 on candidates, which
     // coincides exactly with the batch >= 0.7 threshold (11/16 = 0.6875
     // is the next value down).
-    "st_neardup_ingest" -> nearDupLedgerSql("TRUE"),
-    "st_neardup_ingest_s41" ->
-      nearDupLedgerSql(graft.queries.Tables.stratum41Sql("doc_id")))
+    "st_neardup_ingest" -> nearDupLedgerSql(None),
+    "st_neardup_ingest_s41" -> nearDupLedgerSql(Some(41)))
 
-  private def nearDupLedgerSql(strat: String): String =
-      s"""WITH ${graft.queries.Dedup.minhashPairCtesSql(strat)},
-        |drp AS (
-        |  SELECT DISTINCT id_b AS doc_id FROM cand
-        |  JOIN sigs sa ON sa.doc_id = id_a JOIN sigs sb ON sb.doc_id = id_b
-        |  WHERE CAST(list_sum(list_transform(sa.mh, (x, i) ->
-        |    CASE WHEN x = sb.mh[i] THEN 1 ELSE 0 END)) AS DOUBLE) / 16 >= 0.7)
+  private def nearDupLedgerSql(stratum: Option[Int]): String =
+      s"""WITH dups AS MATERIALIZED (${dupsSql("text, lang", stratum)}),
+        |${minhashPairCtesSql("dups")},
+        |drp AS (SELECT DISTINCT id_b AS doc_id FROM near WHERE est >= 0.7)
         |SELECT lang, count(*) AS n_docs,
         |  CAST(sum(CASE WHEN drp.doc_id IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_dropped,
         |  CAST(sum(CASE WHEN drp.doc_id IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_kept

@@ -81,13 +81,17 @@ class ExactTopKSpec extends SparkSpec {
     assert(got == brute(small, Seq(0L)))
   }
 
-  test("every _s41 entry has its base, an oracle exactly when the base does") {
+  test("every _s<p> twin has its base, an oracle exactly when the base does") {
     val queries = graft.SparkEntry.queries.keySet
     val oracles = graft.SparkEntry.oracleSql.keySet
-    val twins = queries.filter(_.endsWith("_s41"))
-    assert(twins.nonEmpty)
-    for (twin <- twins) {
-      val base = twin.stripSuffix("_s41")
+    val suffix = "_s(\\d+)$".r.unanchored
+    def prime(p: Int) = p > 1 && (2 until p).forall(p % _ != 0)
+    val twins = queries.toSeq.collect {
+      case q @ suffix(p) if prime(p.toInt) => q -> q.stripSuffix(s"_s$p")
+    }
+    assert(twins.map(_._1).exists(_.endsWith("_s41")))
+    assert(twins.map(_._1).exists(_.endsWith("_s37")))
+    for ((twin, base) <- twins) {
       assert(queries.contains(base), s"$twin has no base entry $base")
       assert(oracles.contains(twin) == oracles.contains(base),
         s"$twin and $base disagree on having an oracle")
