@@ -5,7 +5,8 @@ import org.apache.spark.sql.functions._
 
 import graft.io.Sources
 
-/** A per-file frame tagged with its detected source. The engine carries the
+/** A raw frame (one group of same-shaped files, or one XLSX file) tagged
+  * with its detected source. The engine carries the
   * source *next to* the plan instead of re-reading `df["Source"][0]` from
   * data like the reference does (`multi_source_ad_etl.py:157,178`) — that
   * would force a collect per frame; here everything stays a lazy plan until
@@ -17,22 +18,27 @@ final case class Sourced(source: String, df: DataFrame)
   *
   * Same contract as the reference engine
   * (`/root/reference/src/multi_source_ad_etl/multi_source_ad_etl.py`):
-  * read per-file → detect source from column signature → per-source clean →
+  * read → detect source from column signature → per-source clean →
   * standardize (rename → null-fill → project → cast) → union — but composed
   * as ONE lazy logical plan per pipeline. Catalyst collapses the whole
   * rename/conform/cast chain into a single Project over each scan and pushes
   * filters into the readers; nothing materializes before the caller's sink.
   *
-  * Scale note: each input file is one independent scan branch of a final
-  * `UNION ALL`; on a real cluster the N branches read/clean/conform in
-  * parallel with zero shuffles (every stage here is narrow).
+  * Scale note: the files of a raw directory are read as one multi-file scan
+  * per group of same-header, same-inferred-schema files, and each group is
+  * one independent branch of a final `UNION ALL`. Detect/clean/conform run
+  * once per group, so the plan grows with the number of distinct export
+  * shapes, not with the number of files; every stage is narrow (zero
+  * shuffles).
   */
 final class MultiSourceAdEtl(val config: EtlConfig) {
   config.validate()
 
-  /** Read every tabular file in `rawDir` (one DataFrame per file — files can
-    * have heterogeneous schemas, which multi-file reads would merge and
-    * break detection). Reference S1/S3 (`multi_source_ad_etl.py:96-108`).
+  /** Read every tabular file in `rawDir`: one DataFrame per group of CSV
+    * files that share a header and a per-file inferred schema, one per
+    * XLSX file (a single read over heterogeneous files would merge their
+    * schemas and break detection). Reference S1/S3
+    * (`multi_source_ad_etl.py:96-108`).
     */
   def readTabularFiles(spark: SparkSession, rawDir: String): Seq[DataFrame] =
     Sources.readTabularFiles(spark, rawDir)
@@ -51,7 +57,8 @@ final class MultiSourceAdEtl(val config: EtlConfig) {
     config.sourceCriteria
       .collectFirst { case (src, crit) if crit.subsetOf(cols) => src }
       .getOrElse(throw new IllegalArgumentException(
-        s"Source: 'Unknown' assigned (columns: ${df.columns.mkString(", ")})"))
+        s"Source: 'Unknown' assigned (columns: ${df.columns.mkString(", ")}; " +
+          s"files: ${df.inputFiles.mkString(", ")})"))
   }
 
   /** Detect each frame's source, stamp it as the first column

@@ -98,6 +98,14 @@ class MultiSourceAdEtlSpec extends SparkSpec {
     val e = intercept[IllegalArgumentException] { engine.detectSource(df) }
     assert(e.getMessage.contains("Unknown"))
     assert(e.getMessage.contains("Mystery"))
+
+    // read from a directory, the error also names the file(s) behind the frame
+    val dir = Files.createTempDirectory("graft-unknown")
+    Files.write(dir.resolve("mystery_export.csv"), "Mystery\na".getBytes)
+    val e2 = intercept[IllegalArgumentException] { engine.run(spark, dir.toString) }
+    assert(e2.getMessage.contains("Unknown"))
+    assert(e2.getMessage.contains("Mystery"))
+    assert(e2.getMessage.contains("mystery_export.csv"))
   }
 
   test("podl e2e: no-capitalize pipeline, Total row removed, never-mapped column is null") {
