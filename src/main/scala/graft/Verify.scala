@@ -1,7 +1,8 @@
 package graft
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+  * plus oracle_sql.json, for the driver's DuckDB compare, and
+  * failures.json (name → message of every query whose dump failed). */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
@@ -14,11 +15,13 @@ object Verify {
     val only = sys.env.get("SPARK_GRAFT_ONLY")
       .map(_.split(",").map(_.trim).toSet)
     def keep(name: String) = only.forall(_.contains(name))
+    val failures = scala.collection.mutable.LinkedHashMap.empty[String, String]
     SparkEntry.queries.filter(q => keep(q._1)).foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        failures(name) = Option(e.getMessage).getOrElse(e.toString)
+        System.err.println(s"[verify] $name failed: ${failures(name)}")
       }
       // a few queries persist() small reused intermediates inside their
       // closure; the write above is their final consumer, so drop the cache
@@ -48,6 +51,8 @@ object Verify {
     val json = SparkEntry.oracleSql.filter(e => keep(e._1))
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    Files.writeString(Paths.get(s"$outDir/failures.json"), failures
+      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}"))
     // full declared-query list so tooling can flag queries whose dump FAILED
     // (a missing output dir must read as a failure, not be skipped)
     Files.writeString(Paths.get(s"$outDir/queries.json"),

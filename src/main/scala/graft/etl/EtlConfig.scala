@@ -94,17 +94,3 @@ final case class EtlConfig(
     )
   }
 }
-
-object EtlConfig {
-
-  /** Convenience constructor accepting one cleaner per source (the reference
-    * normalizes single cleaners to lists, `multi_source_ad_etl.py:24-29`).
-    */
-  def single(
-      sourceCriteria: Seq[(String, Set[String])],
-      renameMappings: Map[String, Map[String, String]],
-      standardSchema: StructType,
-      cleaners: Map[String, DataFrame => DataFrame]
-  ): EtlConfig =
-    EtlConfig(sourceCriteria, renameMappings, standardSchema, cleaners.map { case (k, v) => k -> Seq(v) })
-}

@@ -4,6 +4,9 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.functions.Quantizer
+import graft.functions.Quantizer.{Cands, Collected, sub}
+
 /** Persisted build-once / query-many IVF-PQ index (VERDICT r13 ask #1) —
   * the operational split of the one-shot `s_ivfpq_topk` composition
   * (FAISS IVFADC, Jégou et al. 2011): a WRITE-ONCE build pays the corpus
@@ -49,9 +52,7 @@ import org.apache.spark.sql.functions._
   * No window, no data-sized collect, no all-pairs.
   */
 object AnnIndex {
-  val M = 4
-  val sub = 16
-  val nCodes = 8
+  val nCodes: Int = Quantizer.nCodes
   val nProbe = 3
   val batch = 4 // query ids: vec_id < 4
   val shortlist = 20
@@ -137,93 +138,45 @@ object AnnIndex {
             col("vec_id"), col("embedding"))
     }
 
+  /** [[Quantizer.subspaces]], kept under this name for the reference
+    * formulation in LiteralQuantizerSpec. */
   private[graft] def subspaces(v: Column, out: String): Column =
-    explode(array((0 until M).map(m =>
-      struct(lit(m).as("m"), slice(v, m * sub + 1, sub).as(out))): _*))
+    Quantizer.subspaces(v, out)
 
   /** The frozen-parameter assignment/coding pass, LITERAL form (r20
     * optimization, guide §2.3/§2.4/§8 "decide with small rows"): the
     * coarse quantizer and PQ codebook are catalog-scale metadata
     * (cells·64 + M·codes·16 values), so they re-enter the pass as
-    * literal expressions under the bounded-scalar-extract license the
-    * query side's probe extract established. The former shape
-    * crossJoined a broadcast centroid/codebook subplan and argmax'd via
-    * two groupBy(vec_id) aggregates plus an equi-join — three exchanges
-    * of the FULL corpus payload (embedding carried through every one)
-    * per build, and each broadcast re-executed its source subplan. The
-    * literal form computes the identical 9-dp argmaxes per row —
-    * `greatest` over the same (metric, id) structs IS the former
-    * max-of-struct ordering (ties → larger id) — in ONE narrow
-    * codegen'd projection: zero corpus shuffles before the partitioned
-    * write, and the FLOP count per row is unchanged (cells cosines +
-    * M·codes dots either way). LiteralQuantizerSpec pins the
-    * equivalence against the former broadcast-join formulation.
+    * literal expressions ([[graft.functions.Quantizer]]) under the
+    * bounded-scalar-extract license the query side's probe extract
+    * established. The former shape crossJoined a broadcast
+    * centroid/codebook subplan and argmax'd via two groupBy(vec_id)
+    * aggregates plus an equi-join — three exchanges of the FULL corpus
+    * payload per build. The literal form computes the identical 9-dp
+    * argmaxes per row in ONE narrow codegen'd projection: zero corpus
+    * shuffles before the partitioned write, and the FLOP count per row
+    * is unchanged. LiteralQuantizerSpec pins the equivalence against
+    * the former broadcast-join formulation.
     */
   private def litVecD(xs: scala.collection.Seq[Double]): Column =
     array(xs.toSeq.map(lit): _*)
 
-  /** (cell → centroid values) pairs from collected centroid rows. */
-  private def centsLit(rows: Array[org.apache.spark.sql.Row]): Seq[(Int, Seq[Double])] =
-    rows.toSeq.map(r =>
-        (r.getAs[Int]("cell"),
-          r.getAs[scala.collection.Seq[Double]]("centroid").toVector: Seq[Double]))
-      .sortBy(_._1)
-
-  /** (m → (code, codeword values) list) from collected codebook rows;
-    * float codewords widen to double exactly (the metric arithmetic is
-    * double either way).
+  /** Assign + PQ-code every row in one narrow projection: same output
+    * columns and values as the former broadcast-join pass, zero
+    * exchanges.
     */
-  private def cbLit(rows: Array[org.apache.spark.sql.Row]): Map[Int, Seq[(Int, Seq[Double])]] =
-    rows.toSeq.map { r =>
-      val cw: Seq[Double] = r.getAs[scala.collection.Seq[Any]]("cw") match {
-        case s if s.nonEmpty && s.head.isInstanceOf[java.lang.Float] =>
-          s.asInstanceOf[scala.collection.Seq[Float]].toVector.map(_.toDouble)
-        case s => s.asInstanceOf[scala.collection.Seq[Double]].toVector
-      }
-      (r.getAs[Int]("m"), r.getAs[Int]("code"), cw)
-    }.groupBy(_._1).map { case (m, cs) =>
-      m -> cs.sortBy(_._2).map(c => (c._2, c._3))
-    }
-
-  /** Nearest-centroid cell of vector column `v` against literal
-    * centroids: 9-dp-rounded cosine argmax, larger cell on ties — the
-    * native [[graft.functions.ArgmaxSim]] expression, the exact former
-    * max(struct(c2c, cell)) ordering behind one small codegen'd call.
-    */
-  private def cellExpr(v: Column, cents: Seq[(Int, Seq[Double])]): Column =
-    graft.functions.GraftFunctions.argmaxSim(v, cosine = true, offset = 0,
-      cents.map(_._1), cents.map(_._2))
-
-  /** PQ code of subspace `m` of vector column `v` against a literal
-    * codebook: 9-dp dot argmax over the subspace slice, larger code on
-    * ties — [[graft.functions.ArgmaxSim]], the exact former
-    * max(struct(dp, code)) ordering.
-    */
-  private def codeExpr(v: Column, m: Int, codes: Seq[(Int, Seq[Double])]): Column =
-    graft.functions.GraftFunctions.argmaxSim(v, cosine = false,
-      offset = m * sub, codes.map(_._1), codes.map(_._2))
-
-  /** Assign + PQ-code every row in one narrow projection (see the
-    * literal-form note above): same output columns and values as the
-    * former broadcast-join pass, zero exchanges.
-    */
-  private def assignAndCode(rows: DataFrame, cents: Seq[(Int, Seq[Double])],
-      cb: Map[Int, Seq[(Int, Seq[Double])]]): DataFrame =
-    rows.select(cellExpr(col("embedding"), cents).as("cell"),
-      col("vec_id"), col("embedding"),
-      codeExpr(col("embedding"), 0, cb(0)).as("c0"),
-      codeExpr(col("embedding"), 1, cb(1)).as("c1"),
-      codeExpr(col("embedding"), 2, cb(2)).as("c2"),
-      codeExpr(col("embedding"), 3, cb(3)).as("c3"))
+  private def assignAndCode(rows: DataFrame, cents: Cands,
+      cb: Map[Int, Cands]): DataFrame =
+    rows.select(Quantizer.cellOf(col("embedding"), cents).as("cell") +:
+      col("vec_id") +: col("embedding") +:
+      Quantizer.codeCols(col("embedding"), cb): _*)
 
   /** Write a collected bounded row set as a single-file parquet artifact
     * with the plan's exact schema — the artifact write no longer
     * re-executes the source subplan.
     */
-  private def writeLocal(s: SparkSession, rows: Array[org.apache.spark.sql.Row],
-      schema: org.apache.spark.sql.types.StructType, path: String): Unit =
-    s.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
-      .coalesce(1).write.mode("overwrite").parquet(path)
+  private def writeLocal(s: SparkSession, rows: Collected, path: String): Unit =
+    rows.local(s).coalesce(1).write.mode("overwrite").parquet(path)
 
   /** Per-cell row counts of segment `seg`, persisted as `<seg>_stats/`
     * next to the tree — the catalog metadata a 100 TB index keeps at
@@ -246,11 +199,8 @@ object AnnIndex {
       prime: Option[Int] = None): String = synchronized {
     graft.functions.GraftFunctions.ensureRegistered(s)
     val emb = embFor(s, d, prime)
-    val vecMean = graft.functions.VectorMean(64)
-    val cents = emb.groupBy(col("label").cast("int").as("cell"))
-      .agg(vecMean(col("embedding")).as("c0"))
-      .select(col("cell"), transform(col("c0"), x => round(x, 9)).as("centroid"))
-    writeIndex(s, rootFor(d, prime), d, emb, cents, prime)
+    writeIndex(s, rootFor(d, prime), d, emb, Quantizer.labelCentroids(emb),
+      prime)
   }
 
   /** The LEARNED-coarse-quantizer build variant (r18 VERDICT ask #3):
@@ -275,42 +225,25 @@ object AnnIndex {
       prime: Option[Int] = None, k: Int = nCodes): String = synchronized {
     graft.functions.GraftFunctions.ensureRegistered(s)
     val emb = embFor(s, d, prime)
-    val vecMean = graft.functions.VectorMean(64)
-    // Each Lloyd round: ONE corpus pass assigning against LITERAL
-    // centroids (cellExpr — the identical 9-dp cosine argmax with the
-    // larger-cell tie-break) + one partial-agg'd mean, COLLECTED at the
-    // round boundary (≤ k 9-dp-rounded vectors — bounded driver
+    // Each Lloyd round (Quantizer.lloydRound): ONE corpus pass assigning
+    // against LITERAL centroids (the identical 9-dp cosine argmax with
+    // the larger-cell tie-break) + one partial-agg'd mean, COLLECTED at
+    // the round boundary (≤ k 9-dp-rounded vectors — bounded driver
     // metadata, the probe-extract license). The former lazy chain
     // mean9(assign(mean9(assign(seeds)))) shuffled the full corpus
     // payload through a groupBy(vec_id) per round and re-executed the
     // growing lineage inside each round's broadcast.
-    def assignLit(cents: Seq[(Int, Seq[Double])]): DataFrame =
-      emb.select(col("vec_id"), col("embedding"),
-        cellExpr(col("embedding"), cents).as("cl"))
-    def mean9(assigned: DataFrame): Seq[(Int, Seq[Double])] =
-      assigned.groupBy("cl").agg(vecMean(col("embedding")).as("c0"))
-        .select(col("cl"), transform(col("c0"), x => round(x, 9)).as("cent"))
-        .collect().toSeq
-        .map(r => (r.getAs[Int]("cl"),
-          r.getAs[scala.collection.Seq[Double]]("cent").toVector: Seq[Double]))
-        .sortBy(_._1)
-    // seeds follow the codebook's stratum-safe discipline: unstratified
+    // Seeds follow the codebook's stratum-safe discipline: unstratified
     // = the first k vec_ids (cl = vec_id, the s_kmeans seed rule);
     // stratified = the k smallest stratum ids re-labeled densely. k
     // defaults to the historical nCodes (the r18 tree); matched-k
     // training (k = the label-cell count) separates the TRAINING effect
     // from the cell-count effect in the quantizer A/B (r19 VERDICT
     // ask #3 — the 8-seed tree partly measured having 8 cells vs 10).
-    // Seed floats widen to double exactly (the cosine arithmetic is
-    // double either way, so round 1 compares the identical operands).
-    val seeds = codebookRows(emb, prime, k)
-      .select(col("code").as("cl"), col("embedding").as("cent"))
-      .collect().toSeq
-      .map(r => (r.getAs[Int]("cl"),
-        r.getAs[scala.collection.Seq[Float]]("cent")
-          .toVector.map(_.toDouble): Seq[Double]))
-      .sortBy(_._1)
-    val trained = mean9(assignLit(mean9(assignLit(seeds))))
+    val seeds = Quantizer.collect("AnnIndex k-means seeds",
+      codebookRows(emb, prime, k).select(col("code"), col("embedding"))).cands
+    val trained = Quantizer.lloydRound("AnnIndex k-means round 2", emb,
+      Quantizer.lloydRound("AnnIndex k-means round 1", emb, seeds))
     import s.implicits._
     val cents = trained.toDF("cell", "centroid")
     writeIndex(s, rootFor(d, prime, Some(kmVariant(k))), d, emb, cents, prime)
@@ -329,8 +262,7 @@ object AnnIndex {
     * first so both engines subtract identical operands (float→double
     * widening is exact).
     */
-  private def residualExpr(cellCol: Column,
-      cents: Seq[(Int, Seq[Double])]): Column = {
+  private def residualExpr(cellCol: Column, cents: Cands): Column = {
     val centroidOf = cents.tail.foldLeft(
         when(cellCol === lit(cents.head._1), litVecD(cents.head._2))) {
       case (acc, (cl, cv)) => acc.when(cellCol === lit(cl), litVecD(cv))
@@ -362,48 +294,38 @@ object AnnIndex {
       prime: Option[Int] = None): String = synchronized {
     graft.functions.GraftFunctions.ensureRegistered(s)
     val emb = embFor(s, d, prime)
-    val vecMean = graft.functions.VectorMean(64)
-    val cents = emb.groupBy(col("label").cast("int").as("cell"))
-      .agg(vecMean(col("embedding")).as("c0"))
-      .select(col("cell"),
-        transform(col("c0"), x => round(x, 9)).as("centroid"))
     val rootF = rootFor(d, prime, Some("res"))
     val root = rootF.getAbsolutePath
     // one bounded materialization of the centroid plan (see writeIndex);
     // the former shape re-executed it FOUR times (artifact write + the
     // assignCells/withResidual broadcasts of both the seed and the full
     // pass)
-    val centRows = cents.collect()
-    writeLocal(s, centRows, cents.schema, s"$root/centroids")
-    val cl = centsLit(centRows)
+    val centRows = Quantizer.collect("AnnIndex centroids",
+      Quantizer.labelCentroids(emb))
+    writeLocal(s, centRows, s"$root/centroids")
+    val cl = centRows.cands
     // residual codebook from the SEED rows only (bounded ≤ nCodes rows,
     // assigned + subtracted over a LOCAL relation): per-row argmax is
     // independent, so this equals slicing them out of the full
     // assignment
-    val seedDf = codebookRows(emb, prime)
-    val seedLocal = s.createDataFrame(
-      java.util.Arrays.asList(seedDf.collect(): _*), seedDf.schema)
-    val rcbDf = seedLocal
-      .select(col("code"), col("embedding"),
-        cellExpr(col("embedding"), cl).as("cell"))
-      .select(col("code"), residualExpr(col("cell"), cl).as("rv"))
-      .select(col("code"), subspaces(col("rv"), "cw").as("x"))
-      .select(col("x.m").as("m"), col("code"), col("x.cw").as("cw"))
-    val rcbRows = rcbDf.collect()
-    writeLocal(s, rcbRows, rcbDf.schema, s"$root/codebook")
-    val rcb = cbLit(rcbRows)
+    val seedLocal = Quantizer.collect("AnnIndex codebook seeds",
+      codebookRows(emb, prime)).local(s)
+    val rcbRows = Quantizer.collect("AnnIndex residual codebook",
+      Quantizer.codewords(seedLocal
+        .select(col("code"), col("embedding"),
+          Quantizer.cellOf(col("embedding"), cl).as("cell"))
+        .select(col("code"), residualExpr(col("cell"), cl).as("rv")),
+        col("code"), col("rv")))
+    writeLocal(s, rcbRows, s"$root/codebook")
     // ONE corpus pass: assign, subtract, code — all literal-parameter
     // per-row expressions (the former shape ran the assignment subtree
     // TWICE through a vec_id self-join and shuffled the payload 3×)
     emb.select(col("vec_id"), col("embedding"),
-        cellExpr(col("embedding"), cl).as("cell"))
+        Quantizer.cellOf(col("embedding"), cl).as("cell"))
       .select(col("cell"), col("vec_id"), col("embedding"),
         residualExpr(col("cell"), cl).as("rv"))
-      .select(col("cell"), col("vec_id"), col("embedding"),
-        codeExpr(col("rv"), 0, rcb(0)).as("c0"),
-        codeExpr(col("rv"), 1, rcb(1)).as("c1"),
-        codeExpr(col("rv"), 2, rcb(2)).as("c2"),
-        codeExpr(col("rv"), 3, rcb(3)).as("c3"))
+      .select(col("cell") +: col("vec_id") +: col("embedding") +:
+        Quantizer.codeCols(col("rv"), rcbRows.codebook): _*)
       .write.mode("overwrite").partitionBy("cell")
       .parquet(s"$root/vectors")
     writeCellStats(s, root, "vectors")
@@ -435,14 +357,12 @@ object AnnIndex {
   private def writeIndex(s: SparkSession, rootF: java.io.File, d: String,
       emb: DataFrame, cents: DataFrame, prime: Option[Int]): String = {
     val root = rootF.getAbsolutePath
-    val centRows = cents.collect()
-    writeLocal(s, centRows, cents.schema, s"$root/centroids")
-    val cbDf = codebookRows(emb, prime)
-      .select(col("code"), subspaces(col("embedding"), "cw").as("x"))
-      .select(col("x.m").as("m"), col("code"), col("x.cw").as("cw"))
-    val cbRows = cbDf.collect()
-    writeLocal(s, cbRows, cbDf.schema, s"$root/codebook")
-    assignAndCode(emb, centsLit(centRows), cbLit(cbRows))
+    val centRows = Quantizer.collect("AnnIndex centroids", cents)
+    writeLocal(s, centRows, s"$root/centroids")
+    val cbRows = Quantizer.collect("AnnIndex codebook", Quantizer.codewords(
+      codebookRows(emb, prime), col("code"), col("embedding")))
+    writeLocal(s, cbRows, s"$root/codebook")
+    assignAndCode(emb, centRows.cands, cbRows.codebook)
       .write.mode("overwrite").partitionBy("cell")
       .parquet(s"$root/vectors")
     writeCellStats(s, root, "vectors")
@@ -463,11 +383,7 @@ object AnnIndex {
   def writeDeltaSegment(s: SparkSession, d: String, root: String,
       prime: Option[Int] = None): Unit = {
     graft.functions.GraftFunctions.ensureRegistered(s)
-    // frozen artifacts are bounded catalog metadata: collect once and
-    // re-enter as literals (the former broadcasts re-read both artifact
-    // parquets and paid the groupBy/join argmax machinery per segment)
-    val cents = centsLit(s.read.parquet(s"$root/centroids").collect())
-    val cb = cbLit(s.read.parquet(s"$root/codebook").collect())
+    val (cents, cb) = frozen(s, root)
     val delta = embFor(s, d, prime)
       .filter(col("vec_id") % 7 === 3)
       .select((col("vec_id") + 1000000L).as("vec_id"),
@@ -480,6 +396,16 @@ object AnnIndex {
       deltaMarkerContent(d, prime)
         .getBytes(java.nio.charset.StandardCharsets.UTF_8))
   }
+
+  /** The frozen (centroids, codebook) artifacts of the tree at `root`,
+    * collected as literal candidates (bounded catalog metadata: the
+    * former broadcasts re-read both artifact parquets and paid the
+    * groupBy/join argmax machinery per segment). */
+  private def frozen(s: SparkSession, root: String): (Cands, Map[Int, Cands]) =
+    (Quantizer.collect(s"centroids of $root",
+      s.read.parquet(s"$root/centroids")).cands,
+     Quantizer.collect(s"codebook of $root",
+      s.read.parquet(s"$root/codebook")).codebook)
 
   private def deltaMarker(root: String) =
     new java.io.File(root, "_fingerprint_delta")
@@ -555,8 +481,7 @@ object AnnIndex {
     */
   def writeUpdateSegment(s: SparkSession, d: String, root: String): Unit = {
     graft.functions.GraftFunctions.ensureRegistered(s)
-    val cents = centsLit(s.read.parquet(s"$root/centroids").collect())
-    val cb = cbLit(s.read.parquet(s"$root/codebook").collect())
+    val (cents, cb) = frozen(s, root)
     val upd = graft.queries.Tables.t(s, d, "embeddings")
       .filter(col("vec_id") % 13 === 2)
       .select(col("vec_id"), reverse(col("embedding")).as("embedding"))

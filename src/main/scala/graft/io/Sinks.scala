@@ -66,35 +66,6 @@ object Sinks {
     }: _*)
   }
 
-  /** Large-scale columnar sink: parquet partitioned by low-cardinality
-    * key(s), sorted within partitions for locality/compression, and
-    * re-bucketed to a bounded file count per partition via repartition on
-    * the partition keys (avoids the many-small-files failure mode when
-    * every task writes every partition value).
-    */
-  def writePartitionedParquet(
-      df: DataFrame,
-      path: String,
-      partitionBy: Seq[String],
-      sortWithin: Seq[String],
-      filesPerPartition: Int = 1): Unit = {
-    require(partitionBy.nonEmpty, "partitionBy must not be empty")
-    require(filesPerPartition > 0, s"filesPerPartition must be positive, got $filesPerPartition")
-    val keyCols = partitionBy.map(df(_))
-    // repartitioning on the keys alone routes each partition VALUE to one
-    // task (one giant file, one hot executor at scale) — a bounded salt
-    // spreads every value across exactly filesPerPartition tasks
-    val salt = pmod(xxhash64(monotonically_increasing_id()), lit(filesPerPartition.toLong))
-    // enough shuffle buckets that distinct (value, salt) pairs rarely
-    // collide into the same task — collisions only reduce the file count,
-    // never exceed filesPerPartition files per partition value
-    df.repartition(filesPerPartition * 32, (keyCols :+ salt): _*)
-      .sortWithinPartitions((partitionBy ++ sortWithin).map(df(_)): _*)
-      .write.mode("overwrite")
-      .partitionBy(partitionBy: _*)
-      .parquet(path)
-  }
-
   /** Spreadsheet transport abstraction. The reference talks to Google Sheets
     * over HTTP (`google_cloud_client.py`); that network client is out of
     * scope offline (SURVEY §7.5), so the engine depends on this trait and
@@ -134,23 +105,11 @@ object Sinks {
     }
   }
 
-  /** Clear the sheet's column range, then upload header + rows with Date
-    * columns converted to Excel serials — the reference upload path
-    * (S6, `google_cloud_client.py:101-197`). `orderBy` makes the collected
-    * row order deterministic (the reference relied on eager concat order;
-    * Spark guarantees none without a sort — SURVEY §7.6).
-    */
-  def uploadDataFrame(
-      svc: SheetService,
-      df: DataFrame,
-      sheetKey: String,
-      sheetName: String,
-      orderBy: Seq[Column]): Unit = {
-    val (header, rows) = collectSheetPayload(df, orderBy)
-    uploadPayload(svc, header, rows, sheetKey, sheetName)
-  }
-
-  /** One sorted serial-dated collect — callers with several sheet targets
+  /** One sorted serial-dated collect for the reference upload path
+    * (S6, `google_cloud_client.py:101-197`): Date columns become Excel
+    * serials, and `orderBy` makes the collected row order deterministic
+    * (the reference relied on eager concat order; Spark guarantees none
+    * without a sort — SURVEY §7.6). Callers with several sheet targets
     * collect once and fan the payload out via [[uploadPayload]].
     */
   def collectSheetPayload(df: DataFrame, orderBy: Seq[Column]): (Seq[Any], Seq[Seq[Any]]) = {

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import Tables._
+import graft.functions.Quantizer
 
 /** Similarity search over `embeddings.embedding` (Array[Float], dim 64):
   * brute-force cosine top-k as the exact baseline, and an LSH-bucketed
@@ -95,58 +96,6 @@ object Similarity {
     * count() is one columnar scan action; k.toInt is safe far past any
     * testable SF (k = N/250).
     */
-  /** r21 literal-quantizer re-entry (the r20 AnnIndex license — guide
-    * §2.3/§2.4/§8 "decide with small rows" — extended to the one-shot
-    * similarity composites): a bounded candidate table (seed vectors,
-    * label centroids, the 8-code PQ codebook — catalog-scale metadata)
-    * is collected once and
-    * (a) re-enters the per-row assignment as the native
-    *     [[graft.functions.ArgmaxSim]] literal — the exact former
-    *     round(metric, 9) max-of-struct argmax, larger id on ties —
-    *     replacing a crossJoin(broadcast(cands)) + groupBy(vec_id)
-    *     aggregate that shuffled the FULL embedding payload once per
-    *     assignment pass, and
-    * (b) re-enters scalar subplans (probe ranking, ADC LUT) as
-    *     LocalRelations, so they compute the identical engine
-    *     expressions over the identical values with zero extra corpus
-    *     scans.
-    * Rows arrive as (id int, vector array<float|double>); float
-    * components widen to double exactly (the metric arithmetic is
-    * double either way — the cbLit discipline). Sorted ascending so
-    * ArgmaxSim's later-candidate-wins tie rule IS max-of-struct's
-    * larger-id rule.
-    */
-  private def candLit(rows: Array[org.apache.spark.sql.Row]): Seq[(Int, Seq[Double])] =
-    rows.toSeq.map { r =>
-      val v: Seq[Double] = r.getAs[scala.collection.Seq[Any]](1) match {
-        case s if s.nonEmpty && s.head.isInstanceOf[java.lang.Float] =>
-          s.asInstanceOf[scala.collection.Seq[Float]].toVector.map(_.toDouble)
-        case s => s.asInstanceOf[scala.collection.Seq[Double]].toVector
-      }
-      (r.getInt(0), v)
-    }.sortBy(_._1)
-
-  /** Per-row nearest-candidate id (9-dp cosine, larger id on ties) —
-    * see [[candLit]]. */
-  private def argmaxCos(v: Column, cands: Seq[(Int, Seq[Double])]): Column =
-    graft.functions.GraftFunctions.argmaxSim(v, cosine = true, offset = 0,
-      cands.map(_._1), cands.map(_._2))
-
-  /** Per-row PQ code of subspace `m` (9-dp dot over the subspace slice,
-    * larger code on ties) — see [[candLit]]. */
-  private def argmaxDot(v: Column, m: Int, sub: Int,
-      cands: Seq[(Int, Seq[Double])]): Column =
-    graft.functions.GraftFunctions.argmaxSim(v, cosine = false,
-      offset = m * sub, cands.map(_._1), cands.map(_._2))
-
-  /** Collected bounded rows re-entered as a LocalRelation (the AnnIndex
-    * writeLocal/seedLocal device): downstream expressions are unchanged
-    * engine expressions over the identical values, with no scan. */
-  private def localDf(s: org.apache.spark.sql.SparkSession,
-      rows: Array[org.apache.spark.sql.Row],
-      schema: org.apache.spark.sql.types.StructType): DataFrame =
-    s.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
-
   private def semDedup(s: org.apache.spark.sql.SparkSession, d: String,
       stratum: Option[Int]): DataFrame = {
     graft.functions.GraftFunctions.ensureRegistered(s)
@@ -245,18 +194,18 @@ object Similarity {
       assign(seeds).groupBy("cl")
         .agg(vecMean(col("embedding")).as("c0"))
         .select(col("cl"), transform(col("c0"), x => round(x, 9)).as("cent"))
-    // r21 (the candLit license): on the FLAT path the seed table is
-    // bounded by the branch itself (k ≤ 256 rows), so both Lloyd rounds
-    // take the literal ArgmaxSim form — assignment becomes one narrow
-    // codegen'd projection per round instead of a crossJoin(broadcast) +
-    // full-payload groupBy(vec_id) exchange (the former shape shuffled
-    // the embedding column twice per sweep). Values are unchanged:
-    // ArgmaxSim IS the former round(cos,9) max-of-struct argmax, and the
-    // round-boundary collect carries the engine-rounded 9-dp means. Seed
-    // ids are vec_ids; a (theoretical) stratified corpus whose smallest
-    // k ids overflow Int falls back to the former broadcast-join shape.
-    // The two-level path (k > 256) stays fully distributed — ITS seed
-    // table grows with N and holds no bounded-collect license.
+    // r21 (the literal-quantizer license): on the FLAT path the seed
+    // table is bounded by the branch itself (k ≤ 256 rows), so both
+    // Lloyd rounds take the literal ArgmaxSim form (Quantizer.lloydRound)
+    // — assignment becomes one narrow codegen'd projection per round
+    // instead of a crossJoin(broadcast) + full-payload groupBy(vec_id)
+    // exchange. Values are unchanged: ArgmaxSim IS the former
+    // round(cos,9) max-of-struct argmax, and the round-boundary collect
+    // carries the engine-rounded 9-dp means. Seed ids are vec_ids; a
+    // (theoretical) stratified corpus whose smallest k ids overflow Int
+    // falls back to the former broadcast-join shape. The two-level path
+    // (k > 256) stays fully distributed — ITS seed table grows with N
+    // and holds no bounded-collect license.
     val asg: DataFrame = if (!flat) {
       assignTwoLevel(cent1Of(assignTwoLevel))
     } else {
@@ -264,17 +213,9 @@ object Similarity {
       if (seedRows.exists(_.getLong(0) > Int.MaxValue.toLong)) {
         assignFlat(cent1Of(assignFlat))
       } else {
-        def assignLit(cands: Seq[(Int, Seq[Double])]) =
-          emb.select(col("vec_id"), col("embedding"),
-            argmaxCos(col("embedding"), cands).cast("bigint").as("cl"))
-        val seedLit = candLit(seedRows.map(r =>
-          org.apache.spark.sql.Row(r.getLong(0).toInt, r.get(1))))
-        val cent1 = candLit(assignLit(seedLit).groupBy("cl")
-          .agg(vecMean(col("embedding")).as("c0"))
-          .select(col("cl").cast("int"),
-            transform(col("c0"), x => round(x, 9)))
-          .collect())
-        assignLit(cent1)
+        val seedLit = Quantizer.candidates("s_semdedup seeds", seedRows.toSeq)
+        Quantizer.assign(emb,
+          Quantizer.lloydRound("s_semdedup round 1", emb, seedLit))
       }
     }
     val a = asg.select(col("cl"), col("vec_id").as("id_a"),
@@ -305,61 +246,30 @@ object Similarity {
   private def pqTopk(s: org.apache.spark.sql.SparkSession, d: String,
       stratum: Option[Int]): DataFrame = {
     graft.functions.GraftFunctions.ensureRegistered(s)
-    val dot = graft.functions.GraftFunctions.dotProduct _
     val emb0 = t(s, d, "embeddings")
     val emb = stratum.fold(emb0)(p =>
       emb0.filter(col("vec_id") < 8 || Tables.stratum(col("vec_id"), p)))
-    val M = 4; val sub = 16
-      def subspaces(v: Column, out: String): Column =
-      explode(array((0 until M).map(m =>
-      struct(lit(m).as("m"), slice(v, m * sub + 1, sub).as(out))): _*))
-    // r21 (the candLit license): the codebook (8 seed rows) and the query
-    // (1 row) are bounded — collected once, the ADC LUT engine-computed
-    // over their LocalRelations. The corpus pass is then ONE narrow scan:
-    // per-row subspace codes via ArgmaxSim (the exact former
-    // max(struct(dp, code)) over the same 9-dp dots) + a literal
+    // r21 (the literal-quantizer license): the codebook (8 seed rows) and
+    // the query (1 row) are bounded — collected once, the ADC LUT
+    // engine-computed over their LocalRelations. The corpus pass is then
+    // ONE narrow scan: per-row subspace codes via ArgmaxSim (the exact
+    // former max(struct(dp, code)) over the same 9-dp dots) + a literal
     // (m, code) → qd map lookup summed in the same fixed m-order +
-    // TakeOrdered. The former shape exploded every scored vector into 4
-    // subspace rows, broadcast-joined the codebook, shuffled the
-    // (vec_id, m) stream through a groupBy argmax, and re-joined the LUT
-    // through a second groupBy pivot.
-    val cbDf = emb.filter(col("vec_id") < 8)
-      .select(col("vec_id").cast("int").as("code"),
-      subspaces(col("embedding"), "cw").as("x"))
-      .select(col("x.m").as("m"), col("code"), col("x.cw").as("cw"))
-    val cbRows = cbDf.collect()
-    val cb: Map[Int, Seq[(Int, Seq[Double])]] =
-      cbRows.toSeq.groupBy(_.getInt(0)).map { case (m, rs) =>
-        m -> candLit(rs.map(r =>
-          org.apache.spark.sql.Row(r.getInt(1), r.get(2))).toArray)
-      }
-    val qDf = emb.filter(col("vec_id") === 0).select(col("embedding").as("qv"))
-    val qRows = qDf.collect()
-    if (qRows.isEmpty)
+    // TakeOrdered (Quantizer.adc). The former shape exploded every
+    // scored vector into 4 subspace rows, broadcast-joined the codebook,
+    // shuffled the (vec_id, m) stream through a groupBy argmax, and
+    // re-joined the LUT through a second groupBy pivot.
+    val q = Quantizer.collect("s_pq_topk query",
+      emb.filter(col("vec_id") === 0).select(col("embedding").as("qv")))
+    if (q.rows.isEmpty)
       // no query vector: the former inner joins produced zero rows
       emb.filter(lit(false)).select(col("vec_id"),
         lit(null).cast("double").as("approx_dot"))
     else {
-      val qlut: Map[(Int, Int), java.lang.Double] =
-        localDf(s, cbRows, cbDf.schema)
-          .crossJoin(broadcast(localDf(s, qRows, qDf.schema)))
-          .select(col("m"), col("code"),
-            round(dot(slice(col("qv"), col("m") * sub + 1, lit(sub)), col("cw")), 9)
-              .as("qd"))
-          .collect()
-          .map(r => ((r.getInt(0), r.getInt(1)),
-            if (r.isNullAt(2)) null
-            else Double.box(r.getDouble(2)): java.lang.Double))
-          .toMap
-      def qd(m: Int, code: Column): Column =
-        element_at(map(cb(m).flatMap { case (c, _) =>
-          val v = qlut((m, c))
-          Seq(lit(c),
-            (if (v == null) lit(null) else lit(v.doubleValue())).cast("double"))
-        }: _*), code)
-      val adc = (0 until M)
-        .map(m => qd(m, argmaxDot(col("embedding"), m, sub, cb(m))))
-        .reduce(_ + _)
+      val cb = Quantizer.collect("s_pq_topk codebook", Quantizer.codewords(
+        emb.filter(col("vec_id") < Quantizer.nCodes),
+        col("vec_id").cast("int"), col("embedding")))
+      val adc = Quantizer.adc(s, cb, q.local(s), col("embedding"))
       emb.filter(col("vec_id") =!= 0)
         .select(col("vec_id"), round(adc, 4).as("approx_dot"))
         .orderBy(col("approx_dot").desc, col("vec_id"))
@@ -619,43 +529,34 @@ object Similarity {
       graft.functions.GraftFunctions.ensureRegistered(s)
       val nprobe = 3
       val emb = t(s, d, "embeddings")
-      val vecMean = graft.functions.VectorMean(64)
       // Centroid COMPONENTS are rounded to 9 dp on both engines before any
-      // cosine: averaging is summation-order-dependent, and a last-ulp
-      // difference exactly at a cosine rounding boundary would flip a
-      // discrete assignment. Bit-identical inputs remove the boundary case.
+      // cosine (Quantizer.labelCentroids): averaging is
+      // summation-order-dependent, and a last-ulp difference exactly at a
+      // cosine rounding boundary would flip a discrete assignment.
       //
-      // r21 (the candLit license): the centroid table is bounded catalog
-      // metadata (one row per label) — engine-computed including the 9-dp
-      // rounding, collected once. It re-enters the assignment as an
-      // ArgmaxSim literal (the exact former round(cos,9) max-of-struct
+      // r21 (the literal-quantizer license): the centroid table is bounded
+      // catalog metadata (one row per label) — engine-computed including
+      // the 9-dp rounding, collected once. It re-enters the assignment as
+      // an ArgmaxSim literal (the exact former round(cos,9) max-of-struct
       // argmax — larger cell on ties) and the probe ranking as a
       // LocalRelation (identical expressions over identical values). The
       // former shape crossJoined the broadcast centroids and shuffled the
       // full embedding payload through a groupBy(vec_id) argmax, and the
       // probe/refine broadcasts each re-executed their source subplans.
-      val centDf = emb.groupBy(col("label").cast("int").as("cell"))
-        .agg(vecMean(col("embedding")).as("c0"))
-        .select(col("cell"), transform(col("c0"), x => round(x, 9)).as("centroid"))
-      val centRows = centDf.collect()
-      val cents = candLit(centRows)
-      val qDf = emb.filter(col("vec_id") === 0).select(col("embedding").as("qvec"))
-      val qRows = qDf.collect()
-      if (qRows.isEmpty)
+      val q = Quantizer.collect("s_ivf_topk query",
+        emb.filter(col("vec_id") === 0).select(col("embedding").as("qvec")))
+      if (q.rows.isEmpty)
         // no query vector: the former broadcast cross join produced zero rows
         emb.filter(lit(false))
           .select(col("vec_id"), lit(null).cast("double").as("cos"))
       else {
-        val qLocal = localDf(s, qRows, qDf.schema)
-        val probed = localDf(s, centRows, centDf.schema)
-          .crossJoin(broadcast(qLocal))
-          .select(col("cell"), round(graft.functions.GraftFunctions.cosineSim(
-            col("centroid"), col("qvec")), 9).as("qc"))
-          .orderBy(col("qc").desc, col("cell"))
-          .limit(nprobe)
-          .collect().map(_.getInt(0)).toSeq
+        val cents = Quantizer.collect("s_ivf_topk label centroids",
+          Quantizer.labelCentroids(emb))
+        val qLocal = q.local(s)
+        val probed = Quantizer.probe(s, cents, qLocal, "qvec", nprobe)
         emb.filter(col("vec_id") =!= 0)
-          .filter(argmaxCos(col("embedding"), cents).isin(probed: _*))
+          .filter(Quantizer.cellOf(col("embedding"), cents.cands)
+            .isin(probed: _*))
           .crossJoin(broadcast(qLocal))
           .select(col("vec_id"),
             round(graft.functions.GraftFunctions.cosineSim(col("embedding"), col("qvec")), 4).as("cos"))
@@ -679,30 +580,23 @@ object Similarity {
       val k = 8
       val emb = t(s, d, "embeddings")
       val vecMean = graft.functions.VectorMean(64)
-      // r21 (the candLit license, the exact buildKMeans discipline): each
-      // Lloyd round's quantizer is bounded metadata (≤ k = 8 centroids),
-      // collected at the round boundary — the k seed vectors, then the k
-      // engine-rounded 9-dp round-1 means — and re-entered as an ArgmaxSim
-      // literal. Assignment becomes one narrow codegen'd projection per
-      // round; the former shape crossJoined the broadcast centroids and
-      // shuffled the FULL embedding payload through a groupBy(vec_id)
-      // argmax — twice per sweep. ArgmaxSim IS the former
+      // r21 (the literal-quantizer license, the exact buildKMeans
+      // discipline): each Lloyd round's quantizer is bounded metadata
+      // (≤ k = 8 centroids), collected at the round boundary — the k seed
+      // vectors, then the k engine-rounded 9-dp round-1 means
+      // (Quantizer.lloydRound: round-2 assignment inputs bit-identical,
+      // not just ulp-close, so a cosine landing exactly on the 9-dp
+      // rounding boundary cannot flip one assignment) — and re-entered as
+      // an ArgmaxSim literal. Assignment becomes one narrow codegen'd
+      // projection per round; the former shape crossJoined the broadcast
+      // centroids and shuffled the FULL embedding payload through a
+      // groupBy(vec_id) argmax — twice per sweep. ArgmaxSim IS the former
       // round(cos, 9) max-of-struct argmax (larger cl on ties).
-      def assign(cands: Seq[(Int, Seq[Double])]) =
-        emb.select(col("vec_id"), col("embedding"),
-          argmaxCos(col("embedding"), cands).cast("bigint").as("cl"))
-      val seeds = candLit(emb.filter(col("vec_id") < k)
-        .select(col("vec_id").cast("int"), col("embedding")).collect())
-      // Round-1 centroid components rounded to 9 dp on both engines, so the
-      // round-2 assignment inputs are bit-identical (not just ulp-close) —
-      // otherwise a cosine landing exactly on the 9-dp rounding boundary
-      // could flip one assignment and fail the hash check.
-      val cent1 = candLit(assign(seeds).groupBy("cl")
-        .agg(vecMean(col("embedding")).as("c0"))
-        .select(col("cl").cast("int"),
-          transform(col("c0"), x => round(x, 9)))
-        .collect())
-      assign(cent1).groupBy("cl")
+      val seeds = Quantizer.collect("s_kmeans seeds", emb
+        .filter(col("vec_id") < k)
+        .select(col("vec_id").cast("int"), col("embedding"))).cands
+      val cent1 = Quantizer.lloydRound("s_kmeans round 1", emb, seeds)
+      Quantizer.assign(emb, cent1).groupBy("cl")
         .agg(count(lit(1)).as("n_members"), vecMean(col("embedding")).as("cent2"))
         .select(col("cl"), col("n_members"),
           round(norm(col("cent2")), 4).as("centroid_norm"))
@@ -754,15 +648,17 @@ object Similarity {
       graft.functions.GraftFunctions.ensureRegistered(s)
       val k = 8
       val emb = t(s, d, "embeddings")
-      // r21 (the candLit license): the k = 8 seed quantizer collects
-      // once; assignment is a narrow per-row ArgmaxSim projection — the
-      // former crossJoin(broadcast(seeds)) + groupBy(vec_id) argmax
-      // shuffled every (vec_id, c, cl) triple. Size census, rate policy
-      // and the keep draw are the identical expressions downstream.
-      val seeds = candLit(emb.filter(col("vec_id") < k)
-        .select(col("vec_id").cast("int"), col("embedding")).collect())
+      // r21 (the literal-quantizer license): the k = 8 seed quantizer
+      // collects once; assignment is a narrow per-row ArgmaxSim
+      // projection — the former crossJoin(broadcast(seeds)) +
+      // groupBy(vec_id) argmax shuffled every (vec_id, c, cl) triple.
+      // Size census, rate policy and the keep draw are the identical
+      // expressions downstream.
+      val seeds = Quantizer.collect("s_cluster_balance_sample seeds", emb
+        .filter(col("vec_id") < k)
+        .select(col("vec_id").cast("int"), col("embedding"))).cands
       val assigned = emb.select(col("vec_id"),
-        argmaxCos(col("embedding"), seeds).cast("bigint").as("cl"))
+        Quantizer.cellOf(col("embedding"), seeds).cast("bigint").as("cl"))
       val rates = assigned.groupBy("cl").agg(count(lit(1)).as("n_members"))
         .select(col("cl"), col("n_members"),
           least(lit(1.0), lit(40.0) / col("n_members")).as("rate"))
@@ -918,78 +814,41 @@ object Similarity {
     "s_ivfpq_topk" -> ((s, d) => {
       graft.functions.GraftFunctions.ensureRegistered(s)
       val cos = graft.functions.GraftFunctions.cosineSim _
-      val dotN = graft.functions.GraftFunctions.dotProduct _
-      val nprobe = 3; val M = 4; val sub = 16; val shortlist = 20
+      val nprobe = 3; val shortlist = 20
       val emb = t(s, d, "embeddings")
-      val vecMean = graft.functions.VectorMean(64)
       // coarse quantizer: the s_ivf_topk label-centroid codebook, 9-dp
       // components (averaging is summation-order-dependent; rounding
       // makes both engines' assignment inputs bit-identical)
       //
-      // r21 (the candLit license): centroids (one row per label) and the
-      // PQ codebook (8 seed rows) are bounded catalog metadata —
-      // collected once (engine-computed, incl. the 9-dp rounding), they
-      // re-enter the assignment/coding pass as ArgmaxSim literals and the
-      // probe ranking + ADC LUT as LocalRelations. The former shape
-      // shuffled the FULL embedding payload through a groupBy(vec_id)
-      // argmax, exploded every candidate into 4 subspace rows and
-      // shuffled those through a groupBy(vec_id, m) argmax + a pivot
-      // groupBy; all three are now per-row codegen'd projections, leaving
-      // two narrow probed-cell scans (ADC shortlist + exact refine).
-      val centDf = emb.groupBy(col("label").cast("int").as("cell"))
-        .agg(vecMean(col("embedding")).as("c0"))
-        .select(col("cell"), transform(col("c0"), x => round(x, 9)).as("centroid"))
-      val centRows = centDf.collect()
-      val cents = candLit(centRows)
-      def subspaces(v: Column, out: String): Column =
-        explode(array((0 until M).map(m =>
-          struct(lit(m).as("m"), slice(v, m * sub + 1, sub).as(out))): _*))
-      val cbDf = emb.filter(col("vec_id") < 8)
-        .select(col("vec_id").cast("int").as("code"),
-          subspaces(col("embedding"), "cw").as("x"))
-        .select(col("x.m").as("m"), col("code"), col("x.cw").as("cw"))
-      val cbRows = cbDf.collect()
-      val cb: Map[Int, Seq[(Int, Seq[Double])]] =
-        cbRows.toSeq.groupBy(_.getInt(0)).map { case (m, rs) =>
-          m -> candLit(rs.map(r =>
-            org.apache.spark.sql.Row(r.getInt(1), r.get(2))).toArray)
-        }
-      val qDf = emb.filter(col("vec_id") === 0).select(col("embedding").as("qv"))
-      val qRows = qDf.collect()
-      if (qRows.isEmpty)
+      // r21 (the literal-quantizer license): centroids (one row per
+      // label) and the PQ codebook (8 seed rows) are bounded catalog
+      // metadata — collected once (engine-computed, incl. the 9-dp
+      // rounding), they re-enter the assignment/coding pass as ArgmaxSim
+      // literals and the probe ranking + ADC LUT as LocalRelations. The
+      // former shape shuffled the FULL embedding payload through a
+      // groupBy(vec_id) argmax, exploded every candidate into 4 subspace
+      // rows and shuffled those through a groupBy(vec_id, m) argmax + a
+      // pivot groupBy; all three are now per-row codegen'd projections,
+      // leaving two narrow probed-cell scans (ADC shortlist + exact
+      // refine).
+      val q = Quantizer.collect("s_ivfpq_topk query",
+        emb.filter(col("vec_id") === 0).select(col("embedding").as("qv")))
+      if (q.rows.isEmpty)
         // no query vector: the former broadcast joins produced zero rows
         emb.filter(lit(false)).select(col("vec_id"),
           lit(null).cast("double").as("adc"), lit(null).cast("double").as("cos"))
       else {
-        val qLocal = localDf(s, qRows, qDf.schema)
-        val probed = localDf(s, centRows, centDf.schema)
-          .crossJoin(broadcast(qLocal))
-          .select(col("cell"), round(cos(col("centroid"), col("qv")), 9).as("qc"))
-          .orderBy(col("qc").desc, col("cell")).limit(nprobe)
-          .collect().map(_.getInt(0)).toSeq
+        val cents = Quantizer.collect("s_ivfpq_topk label centroids",
+          Quantizer.labelCentroids(emb))
+        val cb = Quantizer.collect("s_ivfpq_topk codebook", Quantizer.codewords(
+          emb.filter(col("vec_id") < Quantizer.nCodes),
+          col("vec_id").cast("int"), col("embedding")))
+        val qLocal = q.local(s)
+        val probed = Quantizer.probe(s, cents, qLocal, "qv", nprobe)
         def cand = emb.filter(col("vec_id") =!= 0)
-          .withColumn("cell", argmaxCos(col("embedding"), cents))
+          .withColumn("cell", Quantizer.cellOf(col("embedding"), cents.cands))
           .filter(col("cell").isin(probed: _*))
-        val qlut: Map[(Int, Int), java.lang.Double] =
-          localDf(s, cbRows, cbDf.schema)
-            .crossJoin(broadcast(qLocal))
-            .select(col("m"), col("code"),
-              round(dotN(slice(col("qv"), col("m") * sub + 1, lit(sub)), col("cw")), 9)
-                .as("qd"))
-            .collect()
-            .map(r => ((r.getInt(0), r.getInt(1)),
-              if (r.isNullAt(2)) null
-              else Double.box(r.getDouble(2)): java.lang.Double))
-            .toMap
-        def qd(m: Int, code: Column): Column =
-          element_at(map(cb(m).flatMap { case (c, _) =>
-            val v = qlut((m, c))
-            Seq(lit(c),
-              (if (v == null) lit(null) else lit(v.doubleValue())).cast("double"))
-          }: _*), code)
-        val adc = round((0 until M)
-          .map(m => qd(m, argmaxDot(col("embedding"), m, sub, cb(m))))
-          .reduce(_ + _), 4)
+        val adc = round(Quantizer.adc(s, cb, qLocal, col("embedding")), 4)
         val short = cand.select(col("vec_id"), adc.as("adc"))
           .orderBy(col("adc").desc, col("vec_id")).limit(shortlist)
         cand.select(col("vec_id"), col("embedding"))
@@ -1920,25 +1779,7 @@ object Similarity {
     // and the fusion join is 50×50-bounded.
     "s_hybrid_rrf" -> ((s, d) => {
       graft.functions.GraftFunctions.ensureRegistered(s)
-      val toks = t(s, d, "documents").filter(col("doc_id") =!= 0)
-        .select(col("doc_id"), Text.tokens(lower(col("text"))).as("sp"))
-      val dl = toks.select(col("doc_id"), size(col("sp")).cast("double").as("dl"))
-      val stats = dl.agg(count(lit(1)).cast("double").as("n_docs"),
-        avg("dl").as("avgdl"))
-      val tf = toks.select(col("doc_id"), explode(col("sp")).as("term"))
-        .filter(col("term").isin("hash", "join", "filter"))
-        .groupBy("doc_id", "term").agg(count(lit(1)).cast("double").as("tf"))
-      val dfreq = tf.groupBy("term")
-        .agg(countDistinct("doc_id").cast("double").as("df"))
-      val idf = dfreq.crossJoin(broadcast(stats))
-        .select(col("term"),
-          expr("ln((n_docs - df + 0.5d) / (df + 0.5d) + 1.0d)").as("idf"))
-      val bm25 = tf.join(dl, "doc_id").join(broadcast(idf), "term")
-        .crossJoin(broadcast(stats))
-        .select(col("doc_id"), expr(
-          "idf * tf * 2.2d / (tf + 1.2d * (0.25d + 0.75d * dl / avgdl))")
-          .as("contrib"))
-        .groupBy("doc_id").agg(round(sum("contrib"), 6).as("bm25"))
+      val bm25 = Text.bm25(t(s, d, "documents").filter(col("doc_id") =!= 0))
         .orderBy(col("bm25").desc, col("doc_id")).limit(50)
       val rb = bm25.withColumn("r_bm25",
           row_number().over(Window.orderBy(col("bm25").desc, col("doc_id"))))
@@ -2153,6 +1994,75 @@ object Similarity {
       |            ELSE CAST(0 AS BIGINT) END),
       |  CAST(0 AS BIGINT), (acc, b) -> acc | b)""".stripMargin)
 
+  /** SQL cosine of list expressions `x` and `y` (the oracles' one
+    * spelling of the engine's CosineSimilarity). */
+  private def cosSql(x: String, y: String): String =
+    s"list_dot_product($x, $y) /\n" +
+      s"      (sqrt(list_dot_product($x, $x)) * sqrt(list_dot_product($y, $y)))"
+
+  /** The SQL twin of the engine's literal-quantizer assignment
+    * (Quantizer.cellOf), CTE `name`: every row of FROM item `rows` (id
+    * `id`, vector `v`) takes the `key` of the candidate in `cands`
+    * (vector `cv`) with the largest 9-dp-rounded cosine, the larger key
+    * on ties — max-of-struct. Candidates meet rows by cross join, or
+    * `USING (using)`; `keepV` carries the row vector through. SQL only:
+    * it never calls the engine module, so the oracle stays independent.
+    */
+  private def nearestSql(name: String, rows: String, cands: String,
+      key: String, cv: String, id: String = "vec_id", v: String = "v",
+      keepV: Boolean = true, using: String = "", hint: String = ""): String = {
+    val from =
+      if (using.isEmpty) s"$rows r, $cands k"
+      else s"$rows r JOIN $cands k USING ($using)"
+    val carry = if (keepV) s" any_value(r.$v) AS $v," else ""
+    s"""$name AS $hint(
+      |  SELECT r.$id,$carry
+      |    (max({'c': round(${cosSql(s"r.$v", s"k.$cv")}, 9),
+      |          'k': k.$key})).k AS $key
+      |  FROM $from GROUP BY r.$id)""".stripMargin
+  }
+
+  /** The per-(key, pos) component means `mv` of vector `v` over FROM
+    * item `src`, keyed by `key AS k` — CTE `means`. */
+  private def posMeansSql(means: String, src: String, key: String, k: String,
+      v: String = "v", hint: String = ""): String =
+    s"""$means AS $hint(
+      |  SELECT $key AS $k, CAST(r.i AS INT) AS pos,
+      |         avg(CAST($v[CAST(r.i AS INT) + 1] AS DOUBLE)) AS mv
+      |  FROM $src, range(64) r(i) GROUP BY $key, pos)""".stripMargin
+
+  /** The SQL twin of Quantizer's 9-dp mean frame (labelCentroids, the
+    * Lloyd mean): [[posMeansSql]] CTE `means`, then CTE `name` with one
+    * `list(round(mv, 9) ORDER BY pos) AS out` per key (`keyOut` renders
+    * the key in that SELECT; default `k`). */
+  private def meanFrameSql(means: String, name: String, src: String,
+      key: String, k: String, out: String, v: String = "v",
+      keyOut: String = "", meansHint: String = "", hint: String = ""): String =
+    s"""${posMeansSql(means, src, key, k, v, meansHint)},
+      |$name AS $hint(SELECT ${if (keyOut.isEmpty) k else keyOut},
+      |    list(round(mv, 9) ORDER BY pos) AS $out
+      |  FROM $means GROUP BY $k)""".stripMargin
+
+  /** The PQ codebook CTE `cb` (m, code, cw): the 4×16 subvectors of the
+    * first 8 vec_ids of `e`, code = vec_id. */
+  private val cbSql: String =
+    """cb AS (SELECT m, CAST(vec_id AS INT) AS code, v[m*16+1 : m*16+16] AS cw
+      |       FROM e, ms WHERE vec_id < 8)""".stripMargin
+
+  /** The SQL twin of the engine's PQ coding (Quantizer.codeOf), CTE
+    * `name` (vec_id, m, code): every 16-dim subvector of vector `v` of
+    * FROM item `src` (rows filtered by `where`) takes the code of
+    * codebook CTE `cb` (m, code, cw) with the largest 9-dp-rounded dot,
+    * the larger code on ties — max-of-struct. The subvectors are CTE
+    * `sv_<name>`; callers provide `ms`. */
+  private def codesSql(name: String, src: String, cb: String,
+      v: String = "v", where: String = "", hint: String = ""): String =
+    s"""sv_$name AS (SELECT vec_id, m, $v[m*16+1 : m*16+16] AS sv FROM $src, ms$where),
+      |$name AS $hint(
+      |  SELECT vec_id, sv_$name.m,
+      |    (max({'d': round(list_dot_product(sv, cw), 9), 'code': code})).code AS code
+      |  FROM sv_$name JOIN $cb ON sv_$name.m = $cb.m GROUP BY vec_id, sv_$name.m)""".stripMargin
+
   /** s_pq_topk ADC replay, parameterized by the stratum on the `e` base
     * CTE (`None` = full corpus; `Some(p)` keeps codebook + query and the
     * 1-in-p md5 draw of the scored vectors).
@@ -2161,13 +2071,8 @@ object Similarity {
     s"""WITH ms AS (SELECT CAST(r.i AS INT) AS m FROM range(4) r(i)),
         |e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
         |       WHERE ${stratum.fold("TRUE")(p => s"vec_id < 8 OR ${stratumSql("vec_id", p)}")}),
-        |cb AS (SELECT m, CAST(vec_id AS INT) AS code, v[m*16+1 : m*16+16] AS cw
-        |       FROM e, ms WHERE vec_id < 8),
-        |sub AS (SELECT vec_id, m, v[m*16+1 : m*16+16] AS sv FROM e, ms WHERE vec_id <> 0),
-        |assign AS (
-        |  SELECT vec_id, sub.m,
-        |    (max({'d': round(list_dot_product(sv, cw), 9), 'code': code})).code AS code
-        |  FROM sub JOIN cb ON sub.m = cb.m GROUP BY vec_id, sub.m),
+        |$cbSql,
+        |${codesSql("assign", "e", "cb", where = " WHERE vec_id <> 0")},
         |q AS (SELECT v AS qv FROM e WHERE vec_id = 0),
         |qlut AS (SELECT m, code,
         |         round(list_dot_product(qv[m*16+1 : m*16+16], cw), 9) AS qd
@@ -2375,29 +2280,13 @@ object Similarity {
     * append their own CTEs.
     */
   private def annIndexCtesSql: String =
-    """m0 AS (
-      |  SELECT label AS cell, CAST(r.i AS INT) AS pos,
-      |         avg(CAST(embedding[CAST(r.i AS INT) + 1] AS DOUBLE)) AS v
-      |  FROM embeddings, range(64) r(i) GROUP BY label, pos),
-      |c AS MATERIALIZED (SELECT cell, list(round(v, 9) ORDER BY pos) AS centroid
-      |     FROM m0 GROUP BY cell),
+    s"""${meanFrameSql("m0", "c", "embeddings", "label", "cell", "centroid",
+        v = "embedding", hint = "MATERIALIZED ")},
       |e AS MATERIALIZED (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-      |assign AS MATERIALIZED (
-      |  SELECT vec_id, any_value(v) AS v,
-      |         (max({'c': c2c, 'cell': cell})).cell AS cell
-      |  FROM (SELECT e.vec_id, e.v, c.cell,
-      |          round(list_dot_product(e.v, c.centroid) /
-      |            (sqrt(list_dot_product(e.v, e.v)) *
-      |             sqrt(list_dot_product(c.centroid, c.centroid))), 9) AS c2c
-      |        FROM e, c) GROUP BY vec_id),
+      |${nearestSql("assign", "e", "c", "cell", "centroid", hint = "MATERIALIZED ")},
       |ms AS (SELECT CAST(r.i AS INT) AS m FROM range(4) r(i)),
-      |cb AS (SELECT m, CAST(vec_id AS INT) AS code, v[m*16+1 : m*16+16] AS cw
-      |       FROM e, ms WHERE vec_id < 8),
-      |subv AS (SELECT vec_id, m, v[m*16+1 : m*16+16] AS sv FROM e, ms),
-      |codes AS MATERIALIZED (
-      |  SELECT vec_id, subv.m,
-      |    (max({'d': round(list_dot_product(sv, cw), 9), 'code': code})).code AS code
-      |  FROM subv JOIN cb ON subv.m = cb.m GROUP BY vec_id, subv.m)""".stripMargin
+      |$cbSql,
+      |${codesSql("codes", "e", "cb", hint = "MATERIALIZED ")}""".stripMargin
 
   /** The STRATIFIED index-train replay (s_index_build_s41 /
     * s_index_query_s41): the annIndexCtesSql math over the 1-in-`prime`
@@ -2409,30 +2298,15 @@ object Similarity {
   private def annIndexStratCtesSql(pred: String): String =
     s"""e AS MATERIALIZED (SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS v
       |     FROM embeddings WHERE $pred),
-      |m0 AS (
-      |  SELECT label AS cell, CAST(r.i AS INT) AS pos,
-      |         avg(v[CAST(r.i AS INT) + 1]) AS mv
-      |  FROM e, range(64) r(i) GROUP BY label, pos),
-      |c AS MATERIALIZED (SELECT cell, list(round(mv, 9) ORDER BY pos) AS centroid
-      |     FROM m0 GROUP BY cell),
-      |assign AS MATERIALIZED (
-      |  SELECT vec_id, any_value(v) AS v,
-      |         (max({'c': c2c, 'cell': cell})).cell AS cell
-      |  FROM (SELECT e.vec_id, e.v, c.cell,
-      |          round(list_dot_product(e.v, c.centroid) /
-      |            (sqrt(list_dot_product(e.v, e.v)) *
-      |             sqrt(list_dot_product(c.centroid, c.centroid))), 9) AS c2c
-      |        FROM e, c) GROUP BY vec_id),
+      |${meanFrameSql("m0", "c", "e", "label", "cell", "centroid",
+        hint = "MATERIALIZED ")},
+      |${nearestSql("assign", "e", "c", "cell", "centroid", hint = "MATERIALIZED ")},
       |ms AS (SELECT CAST(r.i AS INT) AS m FROM range(4) r(i)),
       |cbsel AS (SELECT vec_id, v, CAST(rn - 1 AS INT) AS code FROM (
       |   SELECT vec_id, v, row_number() OVER (ORDER BY vec_id) AS rn FROM e)
       |   WHERE rn <= 8),
       |cb AS (SELECT m, code, v[m*16+1 : m*16+16] AS cw FROM cbsel, ms),
-      |subv AS (SELECT vec_id, m, v[m*16+1 : m*16+16] AS sv FROM e, ms),
-      |codes AS MATERIALIZED (
-      |  SELECT vec_id, subv.m,
-      |    (max({'d': round(list_dot_product(sv, cw), 9), 'code': code})).code AS code
-      |  FROM subv JOIN cb ON subv.m = cb.m GROUP BY vec_id, subv.m)""".stripMargin
+      |${codesSql("codes", "e", "cb", hint = "MATERIALIZED ")}""".stripMargin
 
   /** The TRAINED-coarse-quantizer replay (s_index_build_kmeans /
     * s_index_recall_quantizers): the oracled s_kmeans Lloyd chain —
@@ -2459,38 +2333,13 @@ object Similarity {
         |   SELECT v, row_number() OVER (ORDER BY vec_id) AS rn FROM e)
         |   WHERE rn <= $k""".stripMargin)
     s"""kseeds AS ($seeds),
-      |ka1 AS (
-      |  SELECT vec_id, any_value(v) AS v, (max({'c': c, 'cl': cl})).cl AS cl FROM
-      |    (SELECT e.vec_id, e.v, s.cl,
-      |       round(list_dot_product(e.v, s.cent) /
-      |         (sqrt(list_dot_product(e.v, e.v)) * sqrt(list_dot_product(s.cent, s.cent))), 9) AS c
-      |     FROM e, kseeds s)
-      |  GROUP BY vec_id),
-      |km1 AS (
-      |  SELECT cl, CAST(r.i AS INT) AS pos, avg(v[CAST(r.i AS INT) + 1]) AS mv
-      |  FROM ka1, range(64) r(i) GROUP BY cl, pos),
-      |kc1 AS (SELECT cl, list(round(mv, 9) ORDER BY pos) AS cent FROM km1 GROUP BY cl),
-      |ka2 AS (
-      |  SELECT vec_id, any_value(v) AS v, (max({'c': c, 'cl': cl})).cl AS cl FROM
-      |    (SELECT e.vec_id, e.v, k.cl,
-      |       round(list_dot_product(e.v, k.cent) /
-      |         (sqrt(list_dot_product(e.v, e.v)) * sqrt(list_dot_product(k.cent, k.cent))), 9) AS c
-      |     FROM e, kc1 k)
-      |  GROUP BY vec_id),
-      |km2 AS (
-      |  SELECT cl, CAST(r.i AS INT) AS pos, avg(v[CAST(r.i AS INT) + 1]) AS mv
-      |  FROM ka2, range(64) r(i) GROUP BY cl, pos),
-      |kc AS MATERIALIZED (
-      |  SELECT CAST(cl AS INT) AS cell, list(round(mv, 9) ORDER BY pos) AS centroid
-      |  FROM km2 GROUP BY cl),
-      |kassign AS MATERIALIZED (
-      |  SELECT vec_id, any_value(v) AS v,
-      |         (max({'c': c2c, 'cell': cell})).cell AS cell
-      |  FROM (SELECT e.vec_id, e.v, kc.cell,
-      |          round(list_dot_product(e.v, kc.centroid) /
-      |            (sqrt(list_dot_product(e.v, e.v)) *
-      |             sqrt(list_dot_product(kc.centroid, kc.centroid))), 9) AS c2c
-      |        FROM e, kc) GROUP BY vec_id)""".stripMargin
+      |${nearestSql("ka1", "e", "kseeds", "cl", "cent")},
+      |${meanFrameSql("km1", "kc1", "ka1", "cl", "cl", "cent")},
+      |${nearestSql("ka2", "e", "kc1", "cl", "cent")},
+      |${meanFrameSql("km2", "kc", "ka2", "cl", "cl", "centroid",
+        keyOut = "CAST(cl AS INT) AS cell", hint = "MATERIALIZED ")},
+      |${nearestSql("kassign", "e", "kc", "cell", "centroid",
+        hint = "MATERIALIZED ")}""".stripMargin
   }
 
   /** The RESIDUAL-coding replay (s_index_build_residual /
@@ -2516,11 +2365,7 @@ object Similarity {
       |rseed AS ($seedSel),
       |rcb AS (SELECT m, s.code, rv[m*16+1 : m*16+16] AS cw
       |        FROM rsub JOIN rseed s USING (vec_id), ms),
-      |rsubv AS (SELECT vec_id, m, rv[m*16+1 : m*16+16] AS sv FROM rsub, ms),
-      |rcodes AS MATERIALIZED (
-      |  SELECT vec_id, rsubv.m,
-      |    (max({'d': round(list_dot_product(sv, cw), 9), 'code': code})).code AS code
-      |  FROM rsubv JOIN rcb ON rsubv.m = rcb.m GROUP BY vec_id, rsubv.m)"""
+      |${codesSql("rcodes", "rsub", "rcb", v = "rv", hint = "MATERIALIZED ")}"""
       .stripMargin
   }
 
@@ -2630,25 +2475,14 @@ object Similarity {
   /** The frozen-parameter DELTA segment replay, appended after a train
     * block (annIndexPreludeSql — it defines e/c/cb/ms/assign/codes): the
     * deterministic %7==3 re-keyed reversed delta `deltae`, assigned
-    * (`dassign`) and PQ-coded (`dsubv`/`dcodes`) against the FROZEN
+    * (`dassign`) and PQ-coded (`dcodes`) against the FROZEN
     * artifacts.
     */
   private val annIndexDeltaCtesSql: String =
-    """deltae AS (SELECT vec_id + 1000000 AS vec_id, list_reverse(v) AS v
+    s"""deltae AS (SELECT vec_id + 1000000 AS vec_id, list_reverse(v) AS v
       |  FROM e WHERE vec_id % 7 = 3),
-      |dassign AS (
-      |  SELECT vec_id, any_value(v) AS v,
-      |         (max({'c': c2c, 'cell': cell})).cell AS cell
-      |  FROM (SELECT de.vec_id, de.v, c.cell,
-      |          round(list_dot_product(de.v, c.centroid) /
-      |            (sqrt(list_dot_product(de.v, de.v)) *
-      |             sqrt(list_dot_product(c.centroid, c.centroid))), 9) AS c2c
-      |        FROM deltae de, c) GROUP BY vec_id),
-      |dsubv AS (SELECT vec_id, m, v[m*16+1 : m*16+16] AS sv FROM deltae, ms),
-      |dcodes AS (
-      |  SELECT vec_id, dsubv.m,
-      |    (max({'d': round(list_dot_product(sv, cw), 9), 'code': code})).code AS code
-      |  FROM dsubv JOIN cb ON dsubv.m = cb.m GROUP BY vec_id, dsubv.m)""".stripMargin
+      |${nearestSql("dassign", "deltae", "c", "cell", "centroid")},
+      |${codesSql("dcodes", "deltae", "cb")}""".stripMargin
 
   /** The delta segment plus the merged segment views massign/mcodes (the
     * base∪delta union) — the lifecycle state the segmented-query family
@@ -2836,67 +2670,25 @@ object Similarity {
         |          QUALIFY row_number() OVER (ORDER BY vec_id) <= (SELECT k FROM kk)),
         |sseeds AS (SELECT cl AS sl, cent AS scent FROM seeds
         |           QUALIFY row_number() OVER (ORDER BY cl) <= (SELECT k2 FROM kk2)),
-        |sasg AS (
-        |  SELECT cl, any_value(cent) AS cent, (max({'c': c, 'sl': sl})).sl AS sl FROM
-        |    (SELECT s.cl, s.cent, ss.sl,
-        |       round(list_dot_product(s.cent, ss.scent) /
-        |         (sqrt(list_dot_product(s.cent, s.cent)) * sqrt(list_dot_product(ss.scent, ss.scent))), 9) AS c
-        |     FROM seeds s, sseeds ss)
-        |  GROUP BY cl),
-        |sm AS (
-        |  SELECT sl, CAST(r.i AS INT) AS pos, avg(cent[CAST(r.i AS INT) + 1]) AS mv
-        |  FROM sasg, range(64) r(i) GROUP BY sl, pos),
-        |sup AS MATERIALIZED (SELECT sl, list(round(mv, 9) ORDER BY pos) AS scent FROM sm GROUP BY sl),
-        |cm1 AS MATERIALIZED (
-        |  SELECT cl, any_value(cent) AS cent, (max({'c': c, 'sl': sl})).sl AS sl FROM
-        |    (SELECT s.cl, s.cent, sup.sl,
-        |       round(list_dot_product(s.cent, sup.scent) /
-        |         (sqrt(list_dot_product(s.cent, s.cent)) * sqrt(list_dot_product(sup.scent, sup.scent))), 9) AS c
-        |     FROM seeds s, sup)
-        |  GROUP BY cl),
+        |${nearestSql("sasg", "seeds", "sseeds", "sl", "scent", id = "cl", v = "cent")},
+        |${meanFrameSql("sm", "sup", "sasg", "sl", "sl", "scent", v = "cent",
+            hint = "MATERIALIZED ")},
+        |${nearestSql("cm1", "seeds", "sup", "sl", "scent", id = "cl", v = "cent",
+            hint = "MATERIALIZED ")},
         |live1 AS (SELECT sup.sl, sup.scent FROM sup
         |          JOIN (SELECT DISTINCT sl FROM cm1) d USING (sl)),
-        |vsl1 AS MATERIALIZED (
-        |  SELECT vec_id, any_value(v) AS v, (max({'c': c, 'sl': sl})).sl AS sl FROM
-        |    (SELECT e.vec_id, e.v, l.sl,
-        |       round(list_dot_product(e.v, l.scent) /
-        |         (sqrt(list_dot_product(e.v, e.v)) * sqrt(list_dot_product(l.scent, l.scent))), 9) AS c
-        |     FROM e, live1 l)
-        |  GROUP BY vec_id),
-        |a1 AS MATERIALIZED (
-        |  SELECT vec_id, any_value(v) AS v, (max({'c': c, 'cl': cl})).cl AS cl FROM
-        |    (SELECT t.vec_id, t.v, c.cl,
-        |       round(list_dot_product(t.v, c.cent) /
-        |         (sqrt(list_dot_product(t.v, t.v)) * sqrt(list_dot_product(c.cent, c.cent))), 9) AS c
-        |     FROM vsl1 t JOIN cm1 c USING (sl))
-        |  GROUP BY vec_id),
-        |m1 AS MATERIALIZED (
-        |  SELECT cl, CAST(r.i AS INT) AS pos, avg(v[CAST(r.i AS INT) + 1]) AS mv
-        |  FROM a1, range(64) r(i) GROUP BY cl, pos),
-        |c1 AS MATERIALIZED (SELECT cl, list(round(mv, 9) ORDER BY pos) AS cent FROM m1 GROUP BY cl),
-        |cm2 AS MATERIALIZED (
-        |  SELECT cl, any_value(cent) AS cent, (max({'c': c, 'sl': sl})).sl AS sl FROM
-        |    (SELECT c1.cl, c1.cent, sup.sl,
-        |       round(list_dot_product(c1.cent, sup.scent) /
-        |         (sqrt(list_dot_product(c1.cent, c1.cent)) * sqrt(list_dot_product(sup.scent, sup.scent))), 9) AS c
-        |     FROM c1, sup)
-        |  GROUP BY cl),
+        |${nearestSql("vsl1", "e", "live1", "sl", "scent", hint = "MATERIALIZED ")},
+        |${nearestSql("a1", "vsl1", "cm1", "cl", "cent", using = "sl",
+            hint = "MATERIALIZED ")},
+        |${meanFrameSql("m1", "c1", "a1", "cl", "cl", "cent",
+            meansHint = "MATERIALIZED ", hint = "MATERIALIZED ")},
+        |${nearestSql("cm2", "c1", "sup", "sl", "scent", id = "cl", v = "cent",
+            hint = "MATERIALIZED ")},
         |live2 AS (SELECT sup.sl, sup.scent FROM sup
         |          JOIN (SELECT DISTINCT sl FROM cm2) d USING (sl)),
-        |vsl2 AS MATERIALIZED (
-        |  SELECT vec_id, any_value(v) AS v, (max({'c': c, 'sl': sl})).sl AS sl FROM
-        |    (SELECT e.vec_id, e.v, l.sl,
-        |       round(list_dot_product(e.v, l.scent) /
-        |         (sqrt(list_dot_product(e.v, e.v)) * sqrt(list_dot_product(l.scent, l.scent))), 9) AS c
-        |     FROM e, live2 l)
-        |  GROUP BY vec_id),
-        |a2 AS MATERIALIZED (
-        |  SELECT vec_id, any_value(v) AS v, (max({'c': c, 'cl': cl})).cl AS cl FROM
-        |    (SELECT t.vec_id, t.v, c.cl,
-        |       round(list_dot_product(t.v, c.cent) /
-        |         (sqrt(list_dot_product(t.v, t.v)) * sqrt(list_dot_product(c.cent, c.cent))), 9) AS c
-        |     FROM vsl2 t JOIN cm2 c USING (sl))
-        |  GROUP BY vec_id),
+        |${nearestSql("vsl2", "e", "live2", "sl", "scent", hint = "MATERIALIZED ")},
+        |${nearestSql("a2", "vsl2", "cm2", "cl", "cent", using = "sl",
+            hint = "MATERIALIZED ")},
         |drp AS MATERIALIZED (
         |  SELECT DISTINCT b.vec_id
         |  FROM a2 a JOIN a2 b ON a.cl = b.cl AND a.vec_id < b.vec_id
@@ -2916,21 +2708,10 @@ object Similarity {
     // differ in the last ulp between engines) and exact ties break on the
     // larger cell via max-of-struct.
     "s_ivf_topk" ->
-      """WITH m AS (
-        |  SELECT label AS cell, CAST(r.i AS INT) AS pos,
-        |         avg(CAST(embedding[CAST(r.i AS INT) + 1] AS DOUBLE)) AS v
-        |  FROM embeddings, range(64) r(i) GROUP BY label, pos),
-        |c AS (SELECT cell, list(round(v, 9) ORDER BY pos) AS centroid FROM m GROUP BY cell),
+      s"""WITH ${meanFrameSql("m", "c", "embeddings", "label", "cell", "centroid",
+          v = "embedding")},
         |e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-        |scored AS (
-        |  SELECT e.vec_id, e.v, c.cell,
-        |    round(list_dot_product(e.v, c.centroid) /
-        |      (sqrt(list_dot_product(e.v, e.v)) * sqrt(list_dot_product(c.centroid, c.centroid))), 9) AS c2c
-        |  FROM e, c),
-        |assign AS (
-        |  SELECT vec_id, any_value(v) AS v,
-        |         (max({'c': c2c, 'cell': cell})).cell AS cell
-        |  FROM scored GROUP BY vec_id),
+        |${nearestSql("assign", "e", "c", "cell", "centroid")},
         |q AS (SELECT v AS qv FROM e WHERE vec_id = 0),
         |probe AS (
         |  SELECT cell FROM c, q
@@ -2944,29 +2725,12 @@ object Similarity {
         |WHERE a.vec_id <> 0 AND a.cell IN (SELECT cell FROM probe)
         |ORDER BY cos DESC, vec_id LIMIT 10""".stripMargin,
     "s_kmeans" ->
-      """WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
+      s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
         |seeds AS (SELECT vec_id AS cl, v AS cent FROM e WHERE vec_id < 8),
-        |a1 AS (
-        |  SELECT vec_id, any_value(v) AS v, (max({'c': c, 'cl': cl})).cl AS cl FROM
-        |    (SELECT e.vec_id, e.v, s.cl,
-        |       round(list_dot_product(e.v, s.cent) /
-        |         (sqrt(list_dot_product(e.v, e.v)) * sqrt(list_dot_product(s.cent, s.cent))), 9) AS c
-        |     FROM e, seeds s)
-        |  GROUP BY vec_id),
-        |m1 AS (
-        |  SELECT cl, CAST(r.i AS INT) AS pos, avg(v[CAST(r.i AS INT) + 1]) AS mv
-        |  FROM a1, range(64) r(i) GROUP BY cl, pos),
-        |c1 AS (SELECT cl, list(round(mv, 9) ORDER BY pos) AS cent FROM m1 GROUP BY cl),
-        |a2 AS (
-        |  SELECT vec_id, any_value(v) AS v, (max({'c': c, 'cl': cl})).cl AS cl FROM
-        |    (SELECT e.vec_id, e.v, c1.cl,
-        |       round(list_dot_product(e.v, c1.cent) /
-        |         (sqrt(list_dot_product(e.v, e.v)) * sqrt(list_dot_product(c1.cent, c1.cent))), 9) AS c
-        |     FROM e, c1)
-        |  GROUP BY vec_id),
-        |m2 AS (
-        |  SELECT cl, CAST(r.i AS INT) AS pos, avg(v[CAST(r.i AS INT) + 1]) AS mv
-        |  FROM a2, range(64) r(i) GROUP BY cl, pos),
+        |${nearestSql("a1", "e", "seeds", "cl", "cent")},
+        |${meanFrameSql("m1", "c1", "a1", "cl", "cl", "cent")},
+        |${nearestSql("a2", "e", "c1", "cl", "cent")},
+        |${posMeansSql("m2", "a2", "cl", "cl")},
         |nrm AS (SELECT cl, round(sqrt(sum(mv * mv)), 4) AS centroid_norm FROM m2 GROUP BY cl),
         |n AS (SELECT cl, count(*) AS n_members FROM a2 GROUP BY cl)
         |SELECT CAST(n.cl AS BIGINT) AS cl, n.n_members, nrm.centroid_norm
@@ -2996,15 +2760,9 @@ object Similarity {
     // seed-centroid assignment replay (the s_kmeans a1 CTE) + the exact
     // 2^48 md5(vec_id) keep draw against rate = min(1, 40/cell size)
     "s_cluster_balance_sample" ->
-      """WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
+      s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
         |seeds AS (SELECT vec_id AS cl, v AS cent FROM e WHERE vec_id < 8),
-        |a AS (
-        |  SELECT vec_id, (max({'c': c, 'cl': cl})).cl AS cl FROM
-        |    (SELECT e.vec_id, s.cl,
-        |       round(list_dot_product(e.v, s.cent) /
-        |         (sqrt(list_dot_product(e.v, e.v)) * sqrt(list_dot_product(s.cent, s.cent))), 9) AS c
-        |     FROM e, seeds s)
-        |  GROUP BY vec_id),
+        |${nearestSql("a", "e", "seeds", "cl", "cent", keepV = false)},
         |r AS (
         |  SELECT cl, count(*) AS n_members,
         |    least(CAST(1.0 AS DOUBLE), 40.0 / count(*)) AS rate
@@ -3090,21 +2848,13 @@ object Similarity {
         |  (CAST(sum(CASE WHEN t.vec_id IS NOT NULL THEN 1 ELSE 0 END) AS DOUBLE) / 10 >= 0.5) AS pass
         |FROM cand LEFT JOIN top10 t USING (vec_id)""".stripMargin,
     "s_centroid_udaf" ->
-      """WITH ex AS (
-        |  SELECT label, CAST(r.i AS INT) AS pos,
-        |         CAST(embedding[CAST(r.i AS INT) + 1] AS DOUBLE) AS v
-        |  FROM embeddings, range(64) r(i)),
-        |m AS (SELECT label, pos, avg(v) AS mean_v FROM ex GROUP BY label, pos)
-        |SELECT label, round(sqrt(sum(mean_v * mean_v)), 4) AS centroid_norm,
+      s"""WITH ${posMeansSql("m", "embeddings", "label", "label", v = "embedding")}
+        |SELECT label, round(sqrt(sum(mv * mv)), 4) AS centroid_norm,
         |CAST(1 AS BIGINT) AS dim_check
         |FROM m GROUP BY label ORDER BY label""".stripMargin,
     "s_label_centroid_norm" ->
-      """WITH ex AS (
-        |  SELECT label, CAST(r.i AS INT) AS pos,
-        |         CAST(embedding[CAST(r.i AS INT) + 1] AS DOUBLE) AS v
-        |  FROM embeddings, range(64) r(i)),
-        |m AS (SELECT label, pos, avg(v) AS mean_v FROM ex GROUP BY label, pos)
-        |SELECT label, round(sqrt(sum(mean_v * mean_v)), 4) AS centroid_norm,
+      s"""WITH ${posMeansSql("m", "embeddings", "label", "label", v = "embedding")}
+        |SELECT label, round(sqrt(sum(mv * mv)), 4) AS centroid_norm,
         |CAST(count(*) / 64 AS BIGINT) AS dim_check
         |FROM m GROUP BY label ORDER BY label""".stripMargin,
     "s_quantize_int8" ->
@@ -3135,21 +2885,10 @@ object Similarity {
     // the 20-row ADC shortlist — the identical hierarchy of discrete
     // decisions the Spark plan makes, in the identical rounding order
     "s_ivfpq_topk" ->
-      """WITH m0 AS (
-        |  SELECT label AS cell, CAST(r.i AS INT) AS pos,
-        |         avg(CAST(embedding[CAST(r.i AS INT) + 1] AS DOUBLE)) AS v
-        |  FROM embeddings, range(64) r(i) GROUP BY label, pos),
-        |c AS (SELECT cell, list(round(v, 9) ORDER BY pos) AS centroid FROM m0 GROUP BY cell),
+      s"""WITH ${meanFrameSql("m0", "c", "embeddings", "label", "cell", "centroid",
+          v = "embedding")},
         |e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-        |scored AS (
-        |  SELECT e.vec_id, e.v, c.cell,
-        |    round(list_dot_product(e.v, c.centroid) /
-        |      (sqrt(list_dot_product(e.v, e.v)) * sqrt(list_dot_product(c.centroid, c.centroid))), 9) AS c2c
-        |  FROM e, c),
-        |assign AS (
-        |  SELECT vec_id, any_value(v) AS v,
-        |         (max({'c': c2c, 'cell': cell})).cell AS cell
-        |  FROM scored GROUP BY vec_id),
+        |${nearestSql("assign", "e", "c", "cell", "centroid")},
         |q AS (SELECT v AS qv FROM e WHERE vec_id = 0),
         |probe AS (
         |  SELECT cell FROM c, q
@@ -3160,13 +2899,8 @@ object Similarity {
         |  SELECT a.vec_id, a.v FROM assign a
         |  WHERE a.vec_id <> 0 AND a.cell IN (SELECT cell FROM probe)),
         |ms AS (SELECT CAST(r.i AS INT) AS m FROM range(4) r(i)),
-        |cb AS (SELECT m, CAST(vec_id AS INT) AS code, v[m*16+1 : m*16+16] AS cw
-        |       FROM e, ms WHERE vec_id < 8),
-        |subv AS (SELECT vec_id, m, v[m*16+1 : m*16+16] AS sv FROM cand, ms),
-        |codes AS (
-        |  SELECT vec_id, subv.m,
-        |    (max({'d': round(list_dot_product(sv, cw), 9), 'code': code})).code AS code
-        |  FROM subv JOIN cb ON subv.m = cb.m GROUP BY vec_id, subv.m),
+        |$cbSql,
+        |${codesSql("codes", "cand", "cb")},
         |qlut AS (SELECT m, code,
         |         round(list_dot_product(qv[m*16+1 : m*16+16], cw), 9) AS qd
         |         FROM cb, q),
@@ -3336,19 +3070,8 @@ object Similarity {
     "s_index_query_updated" ->
       s"""WITH $annIndexCtesSql,
         |upde AS (SELECT vec_id, list_reverse(v) AS v FROM e WHERE vec_id % 13 = 2),
-        |uassign AS (
-        |  SELECT vec_id, any_value(v) AS v,
-        |         (max({'c': c2c, 'cell': cell})).cell AS cell
-        |  FROM (SELECT ue.vec_id, ue.v, c.cell,
-        |          round(list_dot_product(ue.v, c.centroid) /
-        |            (sqrt(list_dot_product(ue.v, ue.v)) *
-        |             sqrt(list_dot_product(c.centroid, c.centroid))), 9) AS c2c
-        |        FROM upde ue, c) GROUP BY vec_id),
-        |usubv AS (SELECT vec_id, m, v[m*16+1 : m*16+16] AS sv FROM upde, ms),
-        |ucodes AS (
-        |  SELECT vec_id, usubv.m,
-        |    (max({'d': round(list_dot_product(sv, cw), 9), 'code': code})).code AS code
-        |  FROM usubv JOIN cb ON usubv.m = cb.m GROUP BY vec_id, usubv.m),
+        |${nearestSql("uassign", "upde", "c", "cell", "centroid")},
+        |${codesSql("ucodes", "upde", "cb")},
         |mcodes AS MATERIALIZED (
         |  SELECT vec_id, m, code FROM codes WHERE vec_id % 13 <> 2
         |  UNION ALL SELECT vec_id, m, code FROM ucodes),
@@ -3657,27 +3380,7 @@ object Similarity {
     // over the rounded scores, reciprocals forced to DOUBLE (a bare
     // 1.0/(60.0+BIGINT) would divide in DECIMAL and drift from Spark)
     "s_hybrid_rrf" ->
-      """WITH toks AS MATERIALIZED (
-        |  SELECT doc_id,
-        |    string_split_regex(trim(lower(text)), '[ \t\n\x0B\f\r]+') AS sp
-        |  FROM documents WHERE doc_id <> 0),
-        |dl AS MATERIALIZED (SELECT doc_id, CAST(len(sp) AS DOUBLE) AS dl FROM toks),
-        |stats AS (
-        |  SELECT CAST(count(*) AS DOUBLE) AS n_docs, avg(dl) AS avgdl FROM dl),
-        |tf AS MATERIALIZED (
-        |  SELECT doc_id, term, CAST(count(*) AS DOUBLE) AS tf
-        |  FROM (SELECT doc_id, unnest(sp) AS term FROM toks) u
-        |  WHERE term IN ('hash', 'join', 'filter') GROUP BY doc_id, term),
-        |df AS (
-        |  SELECT term, CAST(count(DISTINCT doc_id) AS DOUBLE) AS df
-        |  FROM tf GROUP BY term),
-        |idf AS (
-        |  SELECT term, ln((n_docs - df + 0.5) / (df + 0.5) + 1.0) AS idf
-        |  FROM df CROSS JOIN stats),
-        |sc AS (
-        |  SELECT doc_id,
-        |    idf * tf * 2.2 / (tf + 1.2 * (0.25 + 0.75 * dl / avgdl)) AS contrib
-        |  FROM tf JOIN dl USING (doc_id) JOIN idf USING (term) CROSS JOIN stats),
+      s"""WITH ${Text.bm25CtesSql(" WHERE doc_id <> 0")},
         |bm AS MATERIALIZED (
         |  SELECT doc_id, round(sum(contrib), 6) AS bm25 FROM sc GROUP BY doc_id
         |  ORDER BY bm25 DESC, doc_id LIMIT 50),

@@ -388,6 +388,65 @@ object Text {
     rows.map(r => (r.getString(0), r.getLong(1))).toSeq
   }
 
+  /** BM25 (k1=1.2, b=0.75) of every document of `docs` (doc_id, text)
+    * for the fixed 3-term query, as (doc_id, bm25 rounded to 6 dp) — the
+    * lexical tower of t_bm25_topk and s_hybrid_rrf. One data-sized pass
+    * (explode → filter to the 3 query terms, so the shuffle carries only
+    * matching postings, never the full token stream); df/idf and the
+    * (N, avgdl) stats are single-row/3-row broadcasts. avgdl is exact on
+    * both engines (token counts are integer-valued doubles, their sum is
+    * exact), every per-posting factor is a fixed-order expression, and
+    * only the per-doc sum of ≤3 contributions needs the 6-dp rounding.
+    * All double literals are spelled identically on both engines (2.2d,
+    * 0.25d — never `1.0 + 1.2` left for one engine to constant-fold).
+    */
+  private[queries] def bm25(docs: DataFrame): DataFrame = {
+    val toks = docs.select(col("doc_id"), tokens(lower(col("text"))).as("sp"))
+    val dl = toks.select(col("doc_id"), size(col("sp")).cast("double").as("dl"))
+    val stats = dl.agg(count(lit(1)).cast("double").as("n_docs"),
+      avg("dl").as("avgdl"))
+    val tf = toks.select(col("doc_id"), explode(col("sp")).as("term"))
+      .filter(col("term").isin("hash", "join", "filter"))
+      .groupBy("doc_id", "term").agg(count(lit(1)).cast("double").as("tf"))
+    val dfreq = tf.groupBy("term")
+      .agg(countDistinct("doc_id").cast("double").as("df"))
+    val idf = dfreq.crossJoin(broadcast(stats))
+      .select(col("term"),
+        expr("ln((n_docs - df + 0.5d) / (df + 0.5d) + 1.0d)").as("idf"))
+    tf.join(dl, "doc_id").join(broadcast(idf), "term")
+      .crossJoin(broadcast(stats))
+      .select(col("doc_id"), expr(
+        "idf * tf * 2.2d / (tf + 1.2d * (0.25d + 0.75d * dl / avgdl))")
+        .as("contrib"))
+      .groupBy("doc_id").agg(round(sum("contrib"), 6).as("bm25"))
+  }
+
+  /** The SQL twin of [[bm25]]: CTEs toks/dl/stats/tf/df/idf/sc over
+    * `documents` filtered by `where` (empty, or " WHERE <predicate>");
+    * callers sum `sc.contrib` per doc_id. */
+  private[queries] def bm25CtesSql(where: String): String =
+    s"""toks AS MATERIALIZED (
+      |  SELECT doc_id,
+      |    string_split_regex(trim(lower(text)), '[ \\t\\n\\x0B\\f\\r]+') AS sp
+      |  FROM documents$where),
+      |dl AS MATERIALIZED (SELECT doc_id, CAST(len(sp) AS DOUBLE) AS dl FROM toks),
+      |stats AS (
+      |  SELECT CAST(count(*) AS DOUBLE) AS n_docs, avg(dl) AS avgdl FROM dl),
+      |tf AS MATERIALIZED (
+      |  SELECT doc_id, term, CAST(count(*) AS DOUBLE) AS tf
+      |  FROM (SELECT doc_id, unnest(sp) AS term FROM toks) u
+      |  WHERE term IN ('hash', 'join', 'filter') GROUP BY doc_id, term),
+      |df AS (
+      |  SELECT term, CAST(count(DISTINCT doc_id) AS DOUBLE) AS df
+      |  FROM tf GROUP BY term),
+      |idf AS (
+      |  SELECT term, ln((n_docs - df + 0.5) / (df + 0.5) + 1.0) AS idf
+      |  FROM df CROSS JOIN stats),
+      |sc AS (
+      |  SELECT doc_id,
+      |    idf * tf * 2.2 / (tf + 1.2 * (0.25 + 0.75 * dl / avgdl)) AS contrib
+      |  FROM tf JOIN dl USING (doc_id) JOIN idf USING (term) CROSS JOIN stats)""".stripMargin
+
   val queries: Map[String, Q] = Map(
     // BPE merge TRAINING (Sennrich et al. 2016) — the canonical tokenizer
     // construction step, distributed the way real trainers run it:
@@ -1107,38 +1166,11 @@ object Text {
     }),
 
     // BM25 retrieval scoring (k1=1.2, b=0.75) for a fixed 3-term query —
-    // the IR ranking function TF-IDF graduates into. One data-sized pass
-    // (explode → filter to the 3 query terms, so the shuffle carries only
-    // matching postings, never the full token stream); df/idf and the
-    // (N, avgdl) stats are single-row/3-row broadcasts. avgdl is exact on
-    // both engines (token counts are integer-valued doubles, their sum is
-    // exact), every per-posting factor is a fixed-order expression, and
-    // only the per-doc sum of ≤3 contributions needs the 6-dp rounding.
-    // All double literals are spelled identically on both engines (2.2d,
-    // 0.25d — never `1.0 + 1.2` left for one engine to constant-fold).
-    "t_bm25_topk" -> ((s, d) => {
-      val toks = t(s, d, "documents")
-        .select(col("doc_id"), Text.tokens(lower(col("text"))).as("sp"))
-      val dl = toks.select(col("doc_id"), size(col("sp")).cast("double").as("dl"))
-      val stats = dl.agg(count(lit(1)).cast("double").as("n_docs"),
-        avg("dl").as("avgdl"))
-      val tf = toks.select(col("doc_id"), explode(col("sp")).as("term"))
-        .filter(col("term").isin("hash", "join", "filter"))
-        .groupBy("doc_id", "term").agg(count(lit(1)).cast("double").as("tf"))
-      val dfreq = tf.groupBy("term")
-        .agg(countDistinct("doc_id").cast("double").as("df"))
-      val idf = dfreq.crossJoin(broadcast(stats))
-        .select(col("term"),
-          expr("ln((n_docs - df + 0.5d) / (df + 0.5d) + 1.0d)").as("idf"))
-      tf.join(dl, "doc_id").join(broadcast(idf), "term")
-        .crossJoin(broadcast(stats))
-        .select(col("doc_id"), expr(
-          "idf * tf * 2.2d / (tf + 1.2d * (0.25d + 0.75d * dl / avgdl))")
-          .as("contrib"))
-        .groupBy("doc_id").agg(round(sum("contrib"), 6).as("bm25"))
+    // the IR ranking function TF-IDF graduates into (see [[bm25]]).
+    "t_bm25_topk" -> ((s, d) =>
+      bm25(t(s, d, "documents"))
         .orderBy(col("bm25").desc, col("doc_id"))
-        .limit(15)
-    }),
+        .limit(15)),
 
     // RAKE keyword extraction (Rose et al. 2010): candidate phrases are
     // maximal stopword-free token runs (gaps-and-islands: pos −
@@ -1681,27 +1713,7 @@ object Text {
     // identical literal spelling both engines; only the per-doc sum of
     // <=3 contributions is order-dependent -> rounded to 6 dp
     "t_bm25_topk" ->
-      """WITH toks AS MATERIALIZED (
-        |  SELECT doc_id,
-        |    string_split_regex(trim(lower(text)), '[ \t\n\x0B\f\r]+') AS sp
-        |  FROM documents),
-        |dl AS MATERIALIZED (SELECT doc_id, CAST(len(sp) AS DOUBLE) AS dl FROM toks),
-        |stats AS (
-        |  SELECT CAST(count(*) AS DOUBLE) AS n_docs, avg(dl) AS avgdl FROM dl),
-        |tf AS MATERIALIZED (
-        |  SELECT doc_id, term, CAST(count(*) AS DOUBLE) AS tf
-        |  FROM (SELECT doc_id, unnest(sp) AS term FROM toks) u
-        |  WHERE term IN ('hash', 'join', 'filter') GROUP BY doc_id, term),
-        |df AS (
-        |  SELECT term, CAST(count(DISTINCT doc_id) AS DOUBLE) AS df
-        |  FROM tf GROUP BY term),
-        |idf AS (
-        |  SELECT term, ln((n_docs - df + 0.5) / (df + 0.5) + 1.0) AS idf
-        |  FROM df CROSS JOIN stats),
-        |sc AS (
-        |  SELECT doc_id,
-        |    idf * tf * 2.2 / (tf + 1.2 * (0.25 + 0.75 * dl / avgdl)) AS contrib
-        |  FROM tf JOIN dl USING (doc_id) JOIN idf USING (term) CROSS JOIN stats)
+      s"""WITH ${bm25CtesSql("")}
         |SELECT doc_id, round(sum(contrib), 6) AS bm25 FROM sc GROUP BY doc_id
         |ORDER BY bm25 DESC, doc_id LIMIT 15""".stripMargin,
     // 1-based positions shift-invariantly form the same islands; integer

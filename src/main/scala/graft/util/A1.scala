@@ -67,13 +67,6 @@ object A1 {
     case other => throw new IllegalArgumentException(s"malformed A1 range: $other")
   }
 
-  /** A1 range of a DataFrame — `df.shape` is a count() action (reference M4,
-    * `utils.py:38-41`); call once per sink, not per stage.
-    */
-  def dfRange(df: DataFrame, rangeMode: String = "full_range",
-      verticalOffset: Int = 0, horizontalOffset: Int = 0): String =
-    range(df.count(), df.columns.length, rangeMode, verticalOffset, horizontalOffset)
-
   /** `"{prefix}_{min}–{max}.csv"` (EN-DASH separator, ref `utils.py:26`) from
     * the FIRST DateType column; errors when none exists (`utils.py:17-21`).
     * One job computes both bounds (the reference runs two full passes).

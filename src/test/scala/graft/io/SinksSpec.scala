@@ -19,33 +19,6 @@ class SinksSpec extends SparkSpec {
     assert(!body.contains("\\\""))
   }
 
-  test("writePartitionedParquet: filesPerPartition > 1 actually spreads a partition over tasks") {
-    val docs = graft.queries.Tables.t(spark, graft.TestSpark.sf0001, "documents")
-    val out = java.nio.file.Files.createTempDirectory("part-salt").resolve("docs").toString
-    Sinks.writePartitionedParquet(docs, out, partitionBy = Seq("lang"),
-      sortWithin = Seq("doc_id"), filesPerPartition = 4)
-    val en = new java.io.File(s"$out/lang=en")
-      .listFiles().count(_.getName.endsWith(".parquet"))
-    assert(en > 1 && en <= 4, s"lang=en has $en files")
-    assert(spark.read.parquet(out).count() == docs.count())
-  }
-
-  test("writePartitionedParquet: hive-style lang partitions, bounded file count, round-trips") {
-    val docs = graft.queries.Tables.t(spark, graft.TestSpark.sf0001, "documents")
-    val out = java.nio.file.Files.createTempDirectory("part-out").resolve("docs").toString
-    Sinks.writePartitionedParquet(docs, out, partitionBy = Seq("lang"),
-      sortWithin = Seq("doc_id"))
-    val dirs = new java.io.File(out).listFiles().filter(_.isDirectory).map(_.getName).sorted
-    assert(dirs.toSeq == Seq("lang=de", "lang=en", "lang=es", "lang=fr", "lang=zh"))
-    // bounded files per partition (no every-task-writes-every-partition blowup)
-    dirs.foreach { d =>
-      val files = new java.io.File(s"$out/$d").listFiles().count(_.getName.endsWith(".parquet"))
-      assert(files >= 1 && files <= 8, s"$d has $files files")
-    }
-    val back = spark.read.parquet(out)
-    assert(back.count() == docs.count())
-    assert(back.columns.toSet == docs.columns.toSet)
-  }
   import spark.implicits._
 
   test("writeCsvWithBom produces one headered CSV starting with the UTF-8 BOM") {
@@ -68,11 +41,12 @@ class SinksSpec extends SparkSpec {
     assert(out.map(_.getString(1)).toSeq == Seq("x", "y"))
   }
 
-  test("uploadDataFrame clears the column range then uploads header+rows with serial dates") {
+  test("sheet payload pair clears the column range, uploads serial dates") {
     val svc = new Sinks.InMemorySheetService
     val df = Seq(("2025-08-01", 10L), ("2025-08-02", 20L)).toDF("Day", "Clicks")
       .select(col("Day").cast(DateType).as("Day"), col("Clicks"))
-    Sinks.uploadDataFrame(svc, df, "key1", "raw", orderBy = Seq(col("Day")))
+    val (header, payload) = Sinks.collectSheetPayload(df, orderBy = Seq(col("Day")))
+    Sinks.uploadPayload(svc, header, payload, "key1", "raw")
     assert(svc.cleared.toSeq == Seq(("key1", "raw", "A:B")))
     val rows = svc.get("key1", "raw", "A1:B3")
     assert(rows == Seq(Seq("Day", "Clicks"), Seq("45870", "10"), Seq("45871", "20")))

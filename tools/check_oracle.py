@@ -53,6 +53,13 @@ for t in ["region", "nation", "customer", "supplier", "part", "orders",
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{p}'")
 
 oracle = json.load(open(f"{out_dir}/oracle_sql.json"))
+# graft.Verify records each failed dump's message (name -> message)
+failures_path = f"{out_dir}/failures.json"
+failures = json.load(open(failures_path)) if os.path.exists(failures_path) else {}
+
+def missing(name):
+    msg = failures.get(name, "no message recorded; see Verify stderr")
+    print(f"MISSING {name}: query dump failed: {msg}")
 
 def canon(rows, cols):
     order = sorted(range(len(cols)), key=lambda i: cols[i])
@@ -103,7 +110,7 @@ for name in sorted(set(declared) - set(oracle)):
     d = f"{out_dir}/{name}/"
     if not os.path.isdir(d):
         fails.append(name)
-        print(f"MISSING {name}: query dump failed (see Verify stderr)")
+        missing(name)
         continue
     try:
         n = con.execute(f"SELECT count(*) FROM '{d}*.parquet'").fetchone()[0]
@@ -117,7 +124,7 @@ for name in sorted(set(declared) - set(oracle)):
 for name in sorted(set(oracle)):
     if not os.path.isdir(f"{out_dir}/{name}/"):
         fails.append(name)
-        print(f"MISSING {name}: query dump failed (see Verify stderr)")
+        missing(name)
 
 print(f"\n{'ALL PASS' if not fails else 'FAILURES: ' + ', '.join(sorted(set(fails)))}")
 sys.exit(1 if fails else 0)
