@@ -9,6 +9,15 @@ import org.apache.spark.sql.types.StringType
   * (`/root/reference/src/multi_source_ad_etl/data_clean_lib.py`). Cleaners
   * are `DataFrame => DataFrame` — the engine's extension point — and every
   * one of them stays inside whole-stage codegen (no UDFs).
+  *
+  * A cleaner that uses a derived string more than once stages it as a
+  * helper column first and derives its outputs from that column.
+  * Catalyst's `CollapseProject` does not re-inline a non-cheap expression
+  * that is referenced more than once, so the derivation runs once per row
+  * and is generated once. Inlined into every `when` branch instead, the
+  * regex chains grow the stage's generated method past HotSpot's
+  * 8,000-byte `DontCompileHugeMethods` limit, and the JIT then leaves the
+  * whole stage interpreted (`CodegenSizeSpec` guards the limit).
   */
 object Cleaners {
 
@@ -48,6 +57,9 @@ object Cleaners {
   }
 
   private val AgeGenderCol = "연령 및 성별"
+  // staged helper columns of cleanNaverGfaAgeGender; never in its output
+  private val NormCol = "__gfa_age_gender_norm"
+  private val AgeStrCol = "__gfa_age_str"
 
   /** Split Naver GFA's combined `연령 및 성별` ("age and gender") column into
     * normalized `연령` (`"25-34"`, `"45+"`, `"unknown"`) and `성`
@@ -55,10 +67,17 @@ object Cleaners {
     * Ref `data_clean_lib.py:26-85`. Uses null-on-no-match extraction
     * (`regexp_extract` yields `""` in Spark → wrapped in `nullif` to keep
     * the reference's `.is_not_null()` branch semantics, SURVEY §1.4).
+    * The normalized string and the age string are staged as helper
+    * columns (see the object doc); an input that already holds a helper's
+    * name fails rather than being overwritten.
     */
   val cleanNaverGfaAgeGender: DataFrame => DataFrame = { df =>
-    val s = trim(regexp_replace(col(s"`$AgeGenderCol`").cast(StringType), "\\s+", " "))
-    val sAge = regexp_replace(regexp_replace(s, "[~–—]", "-"), "\\s*세\\s*", "")
+    val clash = Seq(NormCol, AgeStrCol).filter(h => df.columns.exists(_.equalsIgnoreCase(h)))
+    require(clash.isEmpty,
+      s"cleaner clean_naver_gfa_age_gender: input already has helper column(s) " +
+        s"${clash.mkString(", ")} (columns: ${df.columns.mkString(", ")})")
+    val s = col(NormCol)
+    val sAge = col(AgeStrCol)
 
     val ageRange = regexp_replace(
       nullIfEmpty(regexp_extract(sAge, "(\\d{1,2})\\s*-\\s*(\\d{1,2})", 0)),
@@ -75,7 +94,11 @@ object Cleaners {
       .when(s.rlike("여자|여성"), lit("female"))
       .otherwise(lit("unknown"))
 
-    df.withColumn("연령", age).withColumn("성", gender).drop(AgeGenderCol)
+    df.withColumn(NormCol,
+        trim(regexp_replace(col(s"`$AgeGenderCol`").cast(StringType), "\\s+", " ")))
+      .withColumn(AgeStrCol, regexp_replace(regexp_replace(s, "[~–—]", "-"), "\\s*세\\s*", ""))
+      .withColumn("연령", age).withColumn("성", gender)
+      .drop(NormCol, AgeStrCol, AgeGenderCol)
   }
 
   /** Normalize Naver GFA's dotted dates in place: `"2026.02.09."` →

@@ -698,15 +698,20 @@ object Similarity {
       val tables = 16
       val planesPer = 4
       val emb = t(s, d, "embeddings")
-      // per-table bucket id: 4 sign bits from this table's private planes
-      val bucketVals = (0 until tables).map { tb =>
-        (0 until planesPer).map { j =>
-          when(planeProj(col("qemb"), tb * planesPer + j) > 0, lit(1 << j)).otherwise(lit(0))
-        }.reduce(_ + _)
-      }
+      // one row per table: each row carries that table's 4 private planes
+      // (a 16-element literal), and its bucket id is the 4 sign bits of
+      // the row's projections. Inlining all 64 projections into one
+      // array(...) would put them in one generated method, past HotSpot's
+      // 8,000-byte JIT limit.
+      val tablePlanes = typedLit((0 until tables).map(tb =>
+        (0 until planesPer).map(j => hyperplane(tb * planesPer + j))))
+      val bucket = (0 until planesPer).map { j =>
+        when(graft.functions.GraftFunctions.dotProduct(col("qemb"), col("planes")(j)) > 0,
+          lit(1 << j)).otherwise(lit(0))
+      }.reduce(_ + _)
       val buckets = emb.select(col("vec_id"), quantizedEmbedding.as("qemb"))
-        .select(col("vec_id"),
-          posexplode(array(bucketVals: _*)).as(Seq("tbl", "bucket")))
+        .select(col("vec_id"), col("qemb"), posexplode(tablePlanes).as(Seq("tbl", "planes")))
+        .select(col("vec_id"), col("tbl"), bucket.as("bucket"))
       val qb = buckets.filter(col("vec_id") === 0)
         .select(col("tbl").as("qtbl"), col("bucket").as("qbucket"))
       // candidates = vectors sharing ANY table-bucket with the query — an

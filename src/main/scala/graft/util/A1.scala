@@ -68,7 +68,8 @@ object A1 {
   }
 
   /** `"{prefix}_{min}–{max}.csv"` (EN-DASH separator, ref `utils.py:26`) from
-    * the FIRST DateType column; errors when none exists (`utils.py:17-21`).
+    * the FIRST DateType column; errors when none exists (`utils.py:17-21`),
+    * and when that column holds no non-null date (no range to name).
     * One job computes both bounds (the reference runs two full passes).
     */
   def makeDateFilename(prefix: String, df: DataFrame): String = {
@@ -77,6 +78,10 @@ object A1 {
     val row = df.agg(
       date_format(min(col(s"`$dateCol`")), "yyyy-MM-dd"),
       date_format(max(col(s"`$dateCol`")), "yyyy-MM-dd")).head()
+    // min is null exactly when every value is null or the frame is empty
+    if (row.isNullAt(0))
+      throw new IllegalArgumentException(
+        s"""Date col "$dateCol" has no non-null value: no date range for the file name""")
     s"${prefix}_${row.getString(0)}–${row.getString(1)}.csv"
   }
 }

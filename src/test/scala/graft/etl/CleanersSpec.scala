@@ -1,7 +1,7 @@
 package graft.etl
 
 import graft.SparkSpec
-import org.apache.spark.sql.Row
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.types._
 
 /** Golden tests per cleaner, on hand-built frames replicating each
@@ -79,5 +79,69 @@ class CleanersSpec extends SparkSpec {
     val df = strDf("기간", Seq("2026.02.09.", " 2026.02.10. ", "2026-02-11", null))
     val out = Cleaners.cleanNaverGfaDate(df).collect().map(_.getString(0)).toSeq
     assert(out == Seq("2026-02-09", "2026-02-10", "2026-02-11", null))
+  }
+
+  /** The age/gender cleaner as it was before staging: both derived strings
+    * inlined into every branch. Kept as the reference the staged cleaner
+    * must match row for row.
+    */
+  private def inlineAgeGender(df: DataFrame): DataFrame = {
+    import org.apache.spark.sql.functions._
+    val s = trim(regexp_replace(col("`연령 및 성별`").cast(StringType), "\\s+", " "))
+    val sAge = regexp_replace(regexp_replace(s, "[~–—]", "-"), "\\s*세\\s*", "")
+    val ageRange = regexp_replace(
+      Cleaners.nullIfEmpty(regexp_extract(sAge, "(\\d{1,2})\\s*-\\s*(\\d{1,2})", 0)),
+      "\\s*-\\s*", "-")
+    val agePlus = Cleaners.nullIfEmpty(regexp_extract(sAge, "(\\d{1,2})\\s*이상", 1))
+    val age = when(s.rlike("연령모름"), lit("unknown"))
+      .when(ageRange.isNotNull, ageRange)
+      .when(agePlus.isNotNull, concat(agePlus, lit("+")))
+      .otherwise(lit("unknown"))
+    val gender = when(s.rlike("성별모름"), lit("unknown"))
+      .when(s.rlike("남자|남성"), lit("male"))
+      .when(s.rlike("여자|여성"), lit("female"))
+      .otherwise(lit("unknown"))
+    df.withColumn("연령", age).withColumn("성", gender).drop("연령 및 성별")
+  }
+
+  test("staged clean_naver_gfa_age_gender is row-identical to the inline formula") {
+    import org.scalacheck.{Gen, Prop, Test => SCTest}
+    // the five GFA spellings, their pieces, and the noise around them
+    val token = Gen.oneOf(
+      "25세~34세 남성", "45세 이상 여자", "연령모름 성별모름", "18세–24세 여성",
+      "35 세 ~ 44 세 남자", "세", "~", "–", "—", "-", " ", "   ", "\t", "\n",
+      "이상", "7", "18", "25", "45", "100", "남자", "여성", "연령모름", "성별모름", "x")
+    val value = Gen.frequency(
+      1 -> Gen.const(null: String),
+      9 -> Gen.choose(1, 6).flatMap(n => Gen.listOfN(n, token).map(_.mkString)))
+    val rows = Gen.choose(1, 40).flatMap(n => Gen.listOfN(n, value))
+    val prop = Prop.forAll(rows) { values =>
+      val df = strDf("연령 및 성별", values)
+        .withColumn("n", org.apache.spark.sql.functions.monotonically_increasing_id())
+      val staged = Cleaners.cleanNaverGfaAgeGender(df)
+      val inline = inlineAgeGender(df)
+      staged.schema == inline.schema &&
+        staged.orderBy("n").collect().toSeq == inline.orderBy("n").collect().toSeq
+    }
+    val res = SCTest.check(SCTest.Parameters.default.withMinSuccessfulTests(30), prop)
+    assert(res.passed, res.status.toString)
+  }
+
+  test("clean_naver_gfa_age_gender's helper columns never reach the output") {
+    val df = strDf("연령 및 성별", Seq("25세~34세 남성", null))
+      .withColumn("캠페인", org.apache.spark.sql.functions.lit("c"))
+    val out = Cleaners.cleanNaverGfaAgeGender(df)
+    assert(out.columns.toSeq == Seq("캠페인", "연령", "성"))
+    assert(out.collect().map(_.toSeq).toSeq ==
+      Seq(Seq("c", "25-34", "male"), Seq("c", "unknown", "unknown")))
+  }
+
+  test("clean_naver_gfa_age_gender refuses an input that holds a helper's name") {
+    for (helper <- Seq("__gfa_age_gender_norm", "__GFA_AGE_STR")) {
+      val df = strDf("연령 및 성별", Seq("25세~34세 남성"))
+        .withColumn(helper, org.apache.spark.sql.functions.lit("kept"))
+      val e = intercept[IllegalArgumentException] { Cleaners.cleanNaverGfaAgeGender(df) }
+      assert(e.getMessage.contains(helper), e.getMessage)
+    }
   }
 }

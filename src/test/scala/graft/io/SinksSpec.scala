@@ -86,4 +86,13 @@ class SinksSpec extends SparkSpec {
     val noDate = Seq(1, 2).toDF("n")
     intercept[IllegalArgumentException] { A1.makeDateFilename("x", noDate) }
   }
+
+  test("makeDateFilename on an all-null or empty Date column names the column, never _null–null") {
+    val allNull = Seq(Option.empty[String], None).toDF("s")
+      .select(col("s").cast(DateType).as("Day"), lit(1).as("n"))
+    for (df <- Seq(allNull, allNull.filter(lit(false)))) {
+      val e = intercept[IllegalArgumentException] { A1.makeDateFilename("apsl", df) }
+      assert(e.getMessage.contains("\"Day\""), e.getMessage)
+    }
+  }
 }
