@@ -2,7 +2,8 @@ package graft.etl
 
 import java.nio.file.Paths
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.functions.{count, lit}
 
 import graft.io.Sinks
 import graft.util.A1
@@ -10,9 +11,11 @@ import graft.util.A1
 /** The reference's script lifecycle (`scripts/apsl_internal.py:138-192`) as
   * one reusable driver: run the conformance pipeline, derive the
   * date-range filename, export to a BOM CSV and to each configured sheet
-  * (clear range → serial-dated upload). Laziness note: the pipeline plan
-  * executes once per sink action; `orderBy` keys make collected row order
-  * deterministic where the reference relied on eager concat order.
+  * (clear range → serial-dated upload). The pipeline is persisted and read
+  * by three actions: one aggregate for the row count and the file name's
+  * date range, the sorted CSV write, and one sheet collect when there are
+  * sheet targets. `orderBy` keys make the exported row order deterministic
+  * where the reference relied on eager concat order.
   */
 object PipelineRunner {
 
@@ -30,16 +33,18 @@ object PipelineRunner {
       orderBy: Seq[Column],
       svc: Sinks.SheetService,
       sheets: Seq[SheetTarget]): ExportResult = {
-    // persist before the first action: the filename agg, CSV write, each
-    // sheet collect, and the row count are separate actions — uncached they
-    // would re-read and re-clean the raw dir per action, and a file landing
+    // persist before the first action: the row-count/date-range agg, CSV
+    // write and sheet collect are separate actions — uncached they would
+    // re-read and re-clean the raw dir per action, and a file landing
     // mid-run would make filename/CSV/sheet reflect different data
     val merged = new MultiSourceAdEtl(config).run(spark, rawDir, capitalize).persist()
     try {
-      val rowCount = merged.count()
+      val dateCol = A1.dateColumn(merged.schema)
+      val stats = merged.agg(count(lit(1)), A1.dateBounds(dateCol): _*).head()
+      val rowCount = stats.getLong(0)
       if (rowCount == 0) throw new IllegalStateException(
         s"Pipeline produced 0 rows from $rawDir — refusing to export an empty artifact")
-      val fileName = A1.makeDateFilename(filenamePrefix, merged)
+      val fileName = A1.dateFilename(filenamePrefix, dateCol, stats.getString(1), stats.getString(2))
       val csvPath = Paths.get(processedDir, fileName).toString
       Sinks.writeCsvWithBom(merged, csvPath, orderBy)
       if (sheets.nonEmpty) {

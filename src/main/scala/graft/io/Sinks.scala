@@ -1,10 +1,14 @@
 package graft.io
 
-import java.nio.file.{Files, Path, Paths, StandardCopyOption, StandardOpenOption}
+import java.io.StringWriter
+import java.nio.file.{Files, Paths, StandardCopyOption}
 import scala.collection.mutable
 import scala.jdk.CollectionConverters._
+import scala.util.Using
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.csv.{CSVOptions, UnivocityGenerator}
+import org.apache.spark.sql.classic.ClassicConversions.castToImpl
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DateType
 
@@ -15,42 +19,70 @@ object Sinks {
 
   private val Utf8Bom: Array[Byte] = Array(0xEF.toByte, 0xBB.toByte, 0xBF.toByte)
 
+  /** How [[writeCsvWithBom]] renders its parts and its header. RFC-4180
+    * quote doubling ("" not \") — Excel, the BOM's whole purpose,
+    * mis-parses backslash escapes. The parts carry no header: the driver
+    * writes it once, ahead of them.
+    */
+  private val CsvWriteOptions: Map[String, String] = Map("header" -> "false", "escape" -> "\"")
+
   /** Write a DataFrame as ONE headered CSV file at `outFile`, prepending a
     * UTF-8 BOM so Excel renders Korean text correctly — the reference's
     * `write_csv(include_bom=True)` (S5, `apsl_internal.py:191`). Spark's CSV
-    * sink has no BOM option, so: single-partition write to a temp dir, then
-    * a driver-side move that prepends the 3 BOM bytes.
-    *
-    * Scale note: a single CSV for a spreadsheet upload is inherently a
-    * 1-partition sink; for big outputs use the parquet writer instead — this
-    * sink exists for the reference's small daily exports.
+    * sink has no BOM option, so the sorted frame is written as header-less
+    * parts in parallel, one per partition, to a stage dir next to `outFile`;
+    * the driver then streams BOM + header + the parts in partition order
+    * into one staged file and renames it onto `outFile`. A failed write
+    * leaves any earlier `outFile` as it was.
     */
   def writeCsvWithBom(df: DataFrame, outFile: String, orderBy: Seq[Column] = Nil): Unit = {
     val out = Paths.get(outFile).toAbsolutePath
     Option(out.getParent).foreach(Files.createDirectories(_))
+    // same filesystem as `out`, so the final move is a rename
     val tmp = Files.createTempDirectory(out.getParent, ".csv-stage-")
     try {
       val ordered = if (orderBy.nonEmpty) df.orderBy(orderBy: _*) else df
-      ordered.coalesce(1).write.mode("overwrite").option("header", "true")
-        // RFC-4180 quote doubling ("" not \") — Excel, the BOM's whole
-        // purpose, mis-parses backslash escapes
-        .option("escape", "\"")
-        .csv(tmp.resolve("out").toString)
-      val part = scala.util.Using.resource(Files.list(tmp.resolve("out")))(
-        _.iterator().asScala.find(_.getFileName.toString.startsWith("part-")))
-        .getOrElse(throw new IllegalStateException(s"no part file under $tmp"))
-      Files.deleteIfExists(out)
-      // stream the part file after the BOM — readAllBytes would hold the
-      // whole CSV on the driver heap
-      scala.util.Using.resource(Files.newOutputStream(out,
-          StandardOpenOption.CREATE, StandardOpenOption.TRUNCATE_EXISTING)) { os =>
+      val partsDir = tmp.resolve("parts")
+      ordered.write.options(CsvWriteOptions).csv(partsDir.toString)
+      val parts = Using.resource(Files.list(partsDir))(_.iterator().asScala
+        .filter(_.getFileName.toString.startsWith("part-")).toSeq)
+        // then by name: `maxRecordsPerFile` splits a partition into c000, c001…
+        .sortBy(p => (partIndex(p.getFileName.toString), p.getFileName.toString))
+      val staged = tmp.resolve("out.csv")
+      // stream the parts after the BOM and header — readAllBytes would hold
+      // the whole CSV on the driver heap
+      Using.resource(Files.newOutputStream(staged)) { os =>
         os.write(Utf8Bom)
-        Files.copy(part, os)
+        os.write(csvHeader(ordered))
+        parts.foreach(Files.copy(_, os))
       }
+      Files.move(staged, out, StandardCopyOption.REPLACE_EXISTING, StandardCopyOption.ATOMIC_MOVE)
     } finally {
-      scala.util.Using.resource(Files.walk(tmp))(
+      Using.resource(Files.walk(tmp))(
         _.iterator().asScala.toSeq.reverse.foreach(Files.deleteIfExists(_)))
     }
+  }
+
+  /** The partition id in a Spark part file name (`part-00012-<job>-c000.csv`),
+    * as a number: past 99,999 partitions the id outgrows its 5-digit padding
+    * and string order is no longer partition order.
+    */
+  private[io] def partIndex(fileName: String): Long =
+    fileName.stripPrefix("part-").takeWhile(_.isDigit).toLong
+
+  /** The header line Spark's CSV writer puts at the top of a part written
+    * with `header=true`: Spark's own generator, with the options and
+    * session conf that Spark's CSV sink builds for the parts.
+    */
+  private def csvHeader(df: DataFrame): Array[Byte] = {
+    val conf = castToImpl(df.sparkSession).sessionState.conf
+    val options = new CSVOptions(CsvWriteOptions, conf.csvColumnPruning,
+      conf.sessionLocalTimeZone, conf.columnNameOfCorruptRecord)
+    val text = new StringWriter
+    val gen = new UnivocityGenerator(df.schema, text, options)
+    gen.writeHeaders()
+    gen.close()
+    text.toString.getBytes(options.charset)
   }
 
   /** Convert every DateType column to its Excel serial number — days since

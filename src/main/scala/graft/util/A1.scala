@@ -1,12 +1,15 @@
 package graft.util
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions.{col, date_format, max, min}
-import org.apache.spark.sql.types.DateType
+import org.apache.spark.sql.types.{DateType, StructType}
 
 /** Spreadsheet A1-range math and date-range filenames (reference M4–M6,
   * `utils.py:6-60`). Pure driver-side utilities; the only Spark action is
-  * the single min/max aggregation in [[makeDateFilename]].
+  * the single min/max aggregation in [[makeDateFilename]]. A caller that
+  * needs other aggregates too (the pipeline's row count) puts
+  * [[dateBounds]] in its own `agg` and names the file with
+  * [[dateFilename]], so one job serves both.
   */
 object A1 {
 
@@ -67,21 +70,39 @@ object A1 {
     case other => throw new IllegalArgumentException(s"malformed A1 range: $other")
   }
 
-  /** `"{prefix}_{min}–{max}.csv"` (EN-DASH separator, ref `utils.py:26`) from
-    * the FIRST DateType column; errors when none exists (`utils.py:17-21`),
-    * and when that column holds no non-null date (no range to name).
+  /** The column a date-range file name is built from: the FIRST DateType
+    * column; errors when none exists (`utils.py:17-21`).
+    */
+  def dateColumn(schema: StructType): String =
+    schema.fields.collectFirst { case f if f.dataType == DateType => f.name }
+      .getOrElse(throw new IllegalArgumentException(s"Date col not found in schema ${schema.simpleString}"))
+
+  /** The two aggregates the file name needs: min and max of `dateCol` as
+    * `yyyy-MM-dd` strings, for the caller to put in one `agg` with any
+    * other aggregates it wants from the same job.
+    */
+  def dateBounds(dateCol: String): Seq[Column] = Seq(
+    date_format(min(col(s"`$dateCol`")), "yyyy-MM-dd"),
+    date_format(max(col(s"`$dateCol`")), "yyyy-MM-dd"))
+
+  /** `"{prefix}_{min}–{max}.csv"` (EN-DASH separator, ref `utils.py:26`)
+    * from the [[dateBounds]] values; errors when `dateCol` held no non-null
+    * date (min is null exactly when every value is null or the frame is
+    * empty): there is no range to name.
+    */
+  def dateFilename(prefix: String, dateCol: String, minDay: String, maxDay: String): String = {
+    if (minDay == null)
+      throw new IllegalArgumentException(
+        s"""Date col "$dateCol" has no non-null value: no date range for the file name""")
+    s"${prefix}_$minDay–$maxDay.csv"
+  }
+
+  /** The date-range file name of `df` ([[dateColumn]], [[dateFilename]]).
     * One job computes both bounds (the reference runs two full passes).
     */
   def makeDateFilename(prefix: String, df: DataFrame): String = {
-    val dateCol = df.schema.fields.collectFirst { case f if f.dataType == DateType => f.name }
-      .getOrElse(throw new IllegalArgumentException(s"Date col not found in schema ${df.schema.simpleString}"))
-    val row = df.agg(
-      date_format(min(col(s"`$dateCol`")), "yyyy-MM-dd"),
-      date_format(max(col(s"`$dateCol`")), "yyyy-MM-dd")).head()
-    // min is null exactly when every value is null or the frame is empty
-    if (row.isNullAt(0))
-      throw new IllegalArgumentException(
-        s"""Date col "$dateCol" has no non-null value: no date range for the file name""")
-    s"${prefix}_${row.getString(0)}–${row.getString(1)}.csv"
+    val dateCol = dateColumn(df.schema)
+    val row = df.select(dateBounds(dateCol): _*).head()
+    dateFilename(prefix, dateCol, row.getString(0), row.getString(1))
   }
 }

@@ -1,6 +1,7 @@
 package graft.etl
 
-import java.nio.file.{Files, Paths}
+import java.nio.charset.StandardCharsets.UTF_8
+import java.nio.file.{Files, Path, Paths}
 
 import org.apache.spark.sql.functions.col
 
@@ -42,5 +43,37 @@ class PipelineRunnerSpec extends SparkSpec {
     assert(uploaded.head.take(2) == Seq("Day", "Source"))
     // 2025-08-01 → Excel serial 45870
     assert(uploaded.tail.exists(_.head == "45870"))
+  }
+
+  /** A raw dir holding one apsl TikTok export with these data rows. */
+  private def tiktokRaw(rows: String*): String = {
+    val header = Files.readAllLines(Paths.get(Fixtures.materialize("apsl"), "tiktok.csv"), UTF_8).get(0)
+    val dir = Files.createTempDirectory("graft-runner-raw")
+    Files.write(dir.resolve("tiktok.csv"), (header +: rows).mkString("\n").getBytes(UTF_8))
+    dir.toString
+  }
+
+  private def exportTo(raw: String, processed: Path): PipelineRunner.ExportResult =
+    PipelineRunner.runAndExport(spark, Configs.apsl, raw, capitalize = true,
+      processed.toString, "apsl_daily", Seq(col("Source"), col("Day")),
+      new Sinks.InMemorySheetService, Seq(PipelineRunner.SheetTarget("key1", "raw_data")))
+
+  private def isEmptyDir(dir: Path): Boolean =
+    scala.util.Using.resource(Files.list(dir))(!_.iterator().hasNext)
+
+  test("runAndExport: cleaners that remove every row raise the 0-row error and write no CSV") {
+    val raw = tiktokRaw("Total of 1 campaign,,,,,60.0,6000,1.4,4300,150,15,9,4,327.0")
+    val processed = Files.createTempDirectory("processed")
+    val e = intercept[IllegalStateException](exportTo(raw, processed))
+    assert(e.getMessage.startsWith("Pipeline produced 0 rows"), e.getMessage)
+    assert(isEmptyDir(processed))
+  }
+
+  test("runAndExport: rows whose Date column is all null raise the error naming the column") {
+    val raw = tiktokRaw(",acct_t,camp_t2,grp_t2,fall_teaser,60.0,6000,1.4,4300,150,15,9,4,327.0")
+    val processed = Files.createTempDirectory("processed")
+    val e = intercept[IllegalArgumentException](exportTo(raw, processed))
+    assert(e.getMessage.contains("\"Day\""), e.getMessage)
+    assert(isEmptyDir(processed))
   }
 }

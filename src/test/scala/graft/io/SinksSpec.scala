@@ -1,9 +1,14 @@
 package graft.io
 
-import java.nio.file.{Files, Paths}
+import java.nio.charset.StandardCharsets.UTF_8
+import java.nio.file.{Files, Path, Paths}
+
+import scala.jdk.CollectionConverters._
+import scala.util.Using
 
 import graft.SparkSpec
 import graft.util.A1
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DateType, LongType}
 
@@ -94,5 +99,105 @@ class SinksSpec extends SparkSpec {
       val e = intercept[IllegalArgumentException] { A1.makeDateFilename("apsl", df) }
       assert(e.getMessage.contains("\"Day\""), e.getMessage)
     }
+  }
+
+  /** The writer before parallel parts, kept as the reference: the sorted
+    * frame coalesced to one partition, written with Spark's own header,
+    * the BOM prepended.
+    */
+  private def referenceCsv(df: DataFrame, orderBy: Seq[Column]): Array[Byte] = {
+    val dir = Files.createTempDirectory("graft-sink-ref").resolve("out")
+    val ordered = if (orderBy.nonEmpty) df.orderBy(orderBy: _*) else df
+    ordered.coalesce(1).write.option("header", "true").option("escape", "\"").csv(dir.toString)
+    val part = Using.resource(Files.list(dir))(
+      _.iterator().asScala.find(_.getFileName.toString.startsWith("part-")).get)
+    Array(0xEF, 0xBB, 0xBF).map(_.toByte) ++ Files.readAllBytes(part)
+  }
+
+  private def assertSameAsReference(df: DataFrame, orderBy: Seq[Column] = Nil): Unit = {
+    val out = Files.createTempDirectory("graft-sink-par").resolve("out.csv")
+    Sinks.writeCsvWithBom(df, out.toString, orderBy)
+    val got = Files.readAllBytes(out)
+    val want = referenceCsv(df, orderBy)
+    assert(new String(got, UTF_8) == new String(want, UTF_8))
+    assert(got.sameElements(want))
+  }
+
+  /** Run `body` with `n` shuffle partitions that AQE keeps apart, so a sort
+    * over a few hundred rows still writes `n` parts.
+    */
+  private def withSortPartitions[T](n: Int)(body: => T): T = {
+    val set = Seq("spark.sql.shuffle.partitions" -> n.toString,
+      "spark.sql.adaptive.coalescePartitions.enabled" -> "false")
+    val before = set.map { case (k, _) => k -> spark.conf.getOption(k) }
+    set.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body
+    finally before.foreach { case (k, v) => v.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
+  }
+
+  private def stageDirs(dir: Path): Seq[String] =
+    Using.resource(Files.list(dir))(_.iterator().asScala.map(_.getFileName.toString)
+      .filter(_.startsWith(".csv-stage-")).toSeq)
+
+  test("writeCsvWithBom: a repartitioned frame sorted over 16 partitions matches the 1-partition writer") {
+    val df = spark.range(0, 400).repartition(8)
+      .select(((col("id") * 7919) % 400).as("k"), concat(lit("row "), col("id")).as("v"))
+    withSortPartitions(16) {
+      assert(df.orderBy(col("k")).rdd.getNumPartitions > 10)
+      assertSameAsReference(df, Seq(col("k")))
+    }
+  }
+
+  test("writeCsvWithBom: parts past partition 9 and mostly empty partitions add rows in partition order") {
+    // 12 partitions of 100 ids each; the filter leaves rows in 3 of them
+    val df = spark.range(0, 1200, 1, 12).filter(col("id") % 100 < 2 && col("id") < 1000 && col("id") > 600)
+      .select(col("id"), (col("id") * 3).as("x"))
+    assert(df.rdd.getNumPartitions == 12)
+    assertSameAsReference(df)
+    withSortPartitions(16)(assertSameAsReference(df, Seq(desc("id"))))
+  }
+
+  test("writeCsvWithBom: a 0-row frame is the BOM and the header alone") {
+    val df = Seq((1, "a")).toDF("n", "지출 금액 (KRW)").filter(lit(false))
+    assertSameAsReference(df)
+    assertSameAsReference(df, Seq(col("n")))
+    val out = Files.createTempDirectory("graft-sink-empty").resolve("e.csv")
+    Sinks.writeCsvWithBom(df, out.toString, Seq(col("n")))
+    assert(new String(Files.readAllBytes(out), UTF_8) == "\uFEFFn,지출 금액 (KRW)\n")
+  }
+
+  test("writeCsvWithBom: quoted header names and awkward values match the 1-partition writer") {
+    val df = Seq(
+      (1, "say \"hi\"", "a,b", "line1\nline2", "2025-08-01", "12.50"),
+      (2, "", null, " padded ", null, "-0.01"),
+      (3, null, "", "tab\there", "1999-12-31", null),
+      (4, "한글 \"인용\"", "x\r\ny", "plain", "2025-01-09", "100000.00")
+    ).toDF("k", "q", "c", "nl", "d", "m")
+      .select(col("k").as("지출 금액 (KRW)"), col("q").as("a,b"), col("c").as("say \"hi\""),
+        col("nl").as("with space"), col("d").cast(DateType).as("rate (%)"),
+        col("m").cast("decimal(12,2)").as("Amount"))
+    withSortPartitions(3)(assertSameAsReference(df.repartition(2), Seq(col("`지출 금액 (KRW)`"))))
+    assertSameAsReference(df, Seq(desc("`지출 금액 (KRW)`")))
+  }
+
+  test("writeCsvWithBom orders parts by partition number, not file-name string order") {
+    val names = Seq("part-100000-j-c000.csv", "part-99999-j-c000.csv", "part-00002-j-c000.csv")
+    assert(names.sortBy(Sinks.partIndex) ==
+      Seq("part-00002-j-c000.csv", "part-99999-j-c000.csv", "part-100000-j-c000.csv"))
+  }
+
+  test("writeCsvWithBom replaces an existing file and leaves no stage dir, even when the write fails") {
+    val dir = Files.createTempDirectory("graft-sink-publish")
+    val out = dir.resolve("out.csv")
+    Files.write(out, "stale".getBytes(UTF_8))
+    Sinks.writeCsvWithBom(Seq((2, "b"), (1, "a")).toDF("n", "s"), out.toString, Seq(col("n")))
+    assert(new String(Files.readAllBytes(out), UTF_8) == "\uFEFFn,s\n1,a\n2,b\n")
+    assert(stageDirs(dir).isEmpty)
+
+    // under ANSI the cast of "x" raises while the parts are written
+    val failing = Seq("1", "x").toDF("s").select(col("s").cast("int").as("n"))
+    intercept[Exception](Sinks.writeCsvWithBom(failing, out.toString, Seq(col("n"))))
+    assert(new String(Files.readAllBytes(out), UTF_8) == "\uFEFFn,s\n1,a\n2,b\n")
+    assert(stageDirs(dir).isEmpty)
   }
 }
