@@ -4,7 +4,7 @@ import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, IntegerType}
+import org.apache.spark.sql.types.{DataType, IntegerType}
 
 /** Native frozen-quantizer argmax: the id of the candidate row of a
   * LITERAL matrix maximizing `round(metric(v[offset..offset+len)), 9)`,
@@ -37,21 +37,14 @@ case class ArgmaxSim(child: Expression, cosine: Boolean, offset: Int,
   require(mat.forall(_.length == mat.head.length),
     "argmax_sim: ragged candidate matrix")
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(FloatType, _) | ArrayType(DoubleType, _) =>
-      TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires an array<float|double> vector, got ${other.catalogString}")
-  }
+  override def checkInputDataTypes(): TypeCheckResult =
+    VectorPair.checkVectors(prettyName, child)
 
   override def dataType: DataType = IntegerType
   override def nullable: Boolean = child.nullable
   override def prettyName: String = "argmax_sim"
 
-  @transient private lazy val childIsFloat = child.dataType match {
-    case ArrayType(FloatType, _) => true
-    case _ => false
-  }
+  @transient private lazy val childIsFloat = VectorPair.isFloat(child)
 
   // per-candidate norm accumulators (ascending index — the same add
   // order the fused loop used, so sqrt sees the identical double)

@@ -1,5 +1,6 @@
 package graft.functions
 
+import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
@@ -138,6 +139,22 @@ object Sketches {
   private def md5GramHashes(text: UTF8String, k: Int,
       numChars: Int, numGrams: Int): Array[Long] = {
     val bytes = text.getBytes
+    val off = charOffsets(bytes, numChars)
+    val md = md5Local.get()
+    val d = digestBuf.get()
+    val gh = new Array[Long](numGrams)
+    var i = 0
+    while (i < numGrams) {
+      gh(i) = md5Bits48(md, d, bytes, off(i), off(math.min(i + k, numChars)) - off(i))
+      i += 1
+    }
+    gh
+  }
+
+  /** The byte offset of each of the `numChars` chars of UTF-8 `bytes`,
+    * then `bytes.length` at index `numChars`.
+    */
+  private def charOffsets(bytes: Array[Byte], numChars: Int): Array[Int] = {
     val off = new Array[Int](numChars + 1)
     var c = 0
     var b = 0
@@ -147,22 +164,22 @@ object Sketches {
       c += 1
     }
     off(numChars) = bytes.length
-    val md = md5Local.get()
-    val d = digestBuf.get()
-    val gh = new Array[Long](numGrams)
-    var i = 0
-    while (i < numGrams) {
-      md.reset()
-      md.update(bytes, off(i), off(math.min(i + k, numChars)) - off(i))
-      // digest into the reused buffer — digest() would allocate a fresh
-      // 16-byte array PER GRAM (one per corpus character in span dedup)
-      md.digest(d, 0, 16)
-      gh(i) = ((d(0) & 0xffL) << 40) | ((d(1) & 0xffL) << 32) |
-        ((d(2) & 0xffL) << 24) | ((d(3) & 0xffL) << 16) |
-        ((d(4) & 0xffL) << 8) | (d(5) & 0xffL)
-      i += 1
-    }
-    gh
+    off
+  }
+
+  /** The md5-48 draw of `bytes[start, start + len)`: the first 6 digest
+    * bytes big-endian. The digest goes into the reused buffer `d` —
+    * `digest()` would allocate a fresh 16-byte array PER GRAM (one per
+    * corpus character in span dedup).
+    */
+  private def md5Bits48(md: java.security.MessageDigest, d: Array[Byte],
+      bytes: Array[Byte], start: Int, len: Int): Long = {
+    md.reset()
+    md.update(bytes, start, len)
+    md.digest(d, 0, 16)
+    ((d(0) & 0xffL) << 40) | ((d(1) & 0xffL) << 32) |
+      ((d(2) & 0xffL) << 24) | ((d(3) & 0xffL) << 16) |
+      ((d(4) & 0xffL) << 8) | (d(5) & 0xffL)
   }
 
   private val digestBuf: ThreadLocal[Array[Byte]] =
@@ -195,15 +212,7 @@ object Sketches {
     val numChars = text.numChars()
     val numGrams = numChars - n + 1
     if (numGrams <= 0) return new GenericArrayData(Array.empty[Any])
-    val off = new Array[Int](numChars + 1)
-    var c = 0
-    var b = 0
-    while (c < numChars) {
-      off(c) = b
-      b += UTF8String.numBytesForFirstByte(bytes(b))
-      c += 1
-    }
-    off(numChars) = bytes.length
+    val off = charOffsets(bytes, numChars)
     val out = new Array[Any](numGrams)
     var i = 0
     while (i < numGrams) {
@@ -236,12 +245,7 @@ object Sketches {
     while (i <= len) {
       if (i == len || bytes(i) == ' '.toByte) {
         if (i > start) {
-          md.reset()
-          md.update(bytes, start, i - start)
-          md.digest(d, 0, 16)
-          val h = ((d(0) & 0xffL) << 40) | ((d(1) & 0xffL) << 32) |
-            ((d(2) & 0xffL) << 24) | ((d(3) & 0xffL) << 16) |
-            ((d(4) & 0xffL) << 8) | (d(5) & 0xffL)
+          val h = md5Bits48(md, d, bytes, start, i - start)
           var bit = 0
           while (bit < SimHashBits) {
             if (((h >>> bit) & 1L) == 1L) counts(bit) += 1 else counts(bit) -= 1
@@ -262,49 +266,56 @@ object Sketches {
   }
 }
 
-/** `minhash_sigs(text)` → array<bigint> of the n minhash family members. */
-case class MinHashSigs(child: Expression, k: Int, n: Int, seed: Long)
-    extends UnaryExpression {
+/** The five sketch expressions over one string column: they share the
+  * input check, and evaluate through one `Sketches` method — `sketch`
+  * interpreted, a static call to `Sketches.<method>(text, params...)`
+  * from generated code (so the loop stays inside whole-stage codegen, no
+  * interpreted expression-tree fallback).
+  */
+abstract class StringSketch extends UnaryExpression {
 
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def checkInputDataTypes() =
-    if (child.dataType == StringType)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
+  /** The `Sketches` method generated code calls. */
+  protected def method: String
+
+  /** The literal parameters after the text, as Java source. */
+  protected def params: Seq[String]
+
+  protected def sketch(text: UTF8String): Any
+
+  override def checkInputDataTypes(): TypeCheckResult =
+    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
+    else TypeCheckResult.TypeCheckFailure(
       s"$prettyName requires a string argument, got ${child.dataType.catalogString}")
-  override def prettyName: String = "minhash_sigs"
 
-  override def nullSafeEval(input: Any): Any =
-    Sketches.minhash(input.asInstanceOf[UTF8String], k, n, seed)
+  override def nullSafeEval(input: Any): Any = sketch(input.asInstanceOf[UTF8String])
 
-  // delegating codegen: the loop lives in Sketches.minhash (a static call
-  // from generated code — stays inside whole-stage codegen, no interpreted
-  // expression-tree fallback)
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     defineCodeGen(ctx, ev, c =>
-      s"graft.functions.Sketches.minhash($c, $k, $n, ${seed}L)")
+      s"graft.functions.Sketches.$method(${(c +: params).mkString(", ")})")
+}
+
+/** `minhash_sigs(text)` → array<bigint> of the n minhash family members. */
+case class MinHashSigs(child: Expression, k: Int, n: Int, seed: Long)
+    extends StringSketch {
+
+  override def dataType: DataType = ArrayType(LongType, containsNull = false)
+  override def prettyName: String = "minhash_sigs"
+  override protected def method: String = "minhash"
+  override protected def params: Seq[String] = Seq(s"$k", s"$n", s"${seed}L")
+  override protected def sketch(text: UTF8String): Any = Sketches.minhash(text, k, n, seed)
 
   override protected def withNewChildInternal(newChild: Expression): MinHashSigs =
     copy(child = newChild)
 }
 
 /** `winnow_fps(text)` → array<bigint> of distinct winnowed k-gram mins. */
-case class WinnowFps(child: Expression, k: Int, w: Int)
-    extends UnaryExpression {
+case class WinnowFps(child: Expression, k: Int, w: Int) extends StringSketch {
 
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def checkInputDataTypes() =
-    if (child.dataType == StringType)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires a string argument, got ${child.dataType.catalogString}")
   override def prettyName: String = "winnow_fps"
-
-  override def nullSafeEval(input: Any): Any =
-    Sketches.winnow(input.asInstanceOf[UTF8String], k, w)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.Sketches.winnow($c, $k, $w)")
+  override protected def method: String = "winnow"
+  override protected def params: Seq[String] = Seq(s"$k", s"$w")
+  override protected def sketch(text: UTF8String): Any = Sketches.winnow(text, k, w)
 
   override protected def withNewChildInternal(newChild: Expression): WinnowFps =
     copy(child = newChild)
@@ -313,42 +324,26 @@ case class WinnowFps(child: Expression, k: Int, w: Int)
 /** `gram_fps(text, k)` → array<bigint> of all k-gram md5-48 hashes, array
   * index = 0-based gram start position.
   */
-case class GramFps(child: Expression, k: Int) extends UnaryExpression {
+case class GramFps(child: Expression, k: Int) extends StringSketch {
 
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def checkInputDataTypes() =
-    if (child.dataType == StringType)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires a string argument, got ${child.dataType.catalogString}")
   override def prettyName: String = "gram_fps"
-
-  override def nullSafeEval(input: Any): Any =
-    Sketches.gramFps(input.asInstanceOf[UTF8String], k)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.Sketches.gramFps($c, $k)")
+  override protected def method: String = "gramFps"
+  override protected def params: Seq[String] = Seq(s"$k")
+  override protected def sketch(text: UTF8String): Any = Sketches.gramFps(text, k)
 
   override protected def withNewChildInternal(newChild: Expression): GramFps =
     copy(child = newChild)
 }
 
 /** `char_ngrams(text)` → array<string> of all char-n-grams in order. */
-case class CharNgrams(child: Expression, n: Int) extends UnaryExpression {
+case class CharNgrams(child: Expression, n: Int) extends StringSketch {
 
   override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override def checkInputDataTypes() =
-    if (child.dataType == StringType)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires a string argument, got ${child.dataType.catalogString}")
   override def prettyName: String = "char_ngrams"
-
-  override def nullSafeEval(input: Any): Any =
-    Sketches.charNgrams(input.asInstanceOf[UTF8String], n)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.Sketches.charNgrams($c, $n)")
+  override protected def method: String = "charNgrams"
+  override protected def params: Seq[String] = Seq(s"$n")
+  override protected def sketch(text: UTF8String): Any = Sketches.charNgrams(text, n)
 
   override protected def withNewChildInternal(newChild: Expression): CharNgrams =
     copy(child = newChild)
@@ -357,21 +352,13 @@ case class CharNgrams(child: Expression, n: Int) extends UnaryExpression {
 /** `simhash64(text)` → bigint signature (48 significant bits — see
   * [[Sketches.simhash]]).
   */
-case class SimHash64(child: Expression) extends UnaryExpression {
+case class SimHash64(child: Expression) extends StringSketch {
 
   override def dataType: DataType = LongType
-  override def checkInputDataTypes() =
-    if (child.dataType == StringType)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires a string argument, got ${child.dataType.catalogString}")
   override def prettyName: String = "simhash64"
-
-  override def nullSafeEval(input: Any): Any =
-    Sketches.simhash(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.Sketches.simhash($c)")
+  override protected def method: String = "simhash"
+  override protected def params: Seq[String] = Nil
+  override protected def sketch(text: UTF8String): Any = Sketches.simhash(text)
 
   override protected def withNewChildInternal(newChild: Expression): SimHash64 =
     copy(child = newChild)

@@ -19,17 +19,15 @@ object EtlSurface {
     * standardize → merge) over the deterministic fixture CSVs, one entry
     * `etl_pipeline_<name>` per shipped config in Configs.all (which also
     * says whether the pipeline capitalizes). Rows are ordered by Source,
-    * then the first DateType column of the standard schema — the column
-    * A1.makeDateFilename reads. All five are hash-checked cross-engine:
+    * then `A1.dateColumn` of the standard schema — the column the exported
+    * file name's date range reads. All five are hash-checked cross-engine:
     * the oracles below replay the same CSVs through DuckDB read_csv + the
     * same clean/rename/conform/union (the fixtures are pure CSV, and
     * Verify materializes them before the DuckDB oracle pass runs).
     */
   private val pipelines: Map[String, Q] = graft.etl.Configs.all.map {
     case (name, (cfg, capitalize)) =>
-      val day = cfg.standardSchema.fields
-        .collectFirst { case f if f.dataType == DateType => f.name }
-        .getOrElse(throw new IllegalStateException(s"$name has no DateType column"))
+      val day = graft.util.A1.dateColumn(cfg.standardSchema)
       s"etl_pipeline_$name" -> ((s: org.apache.spark.sql.SparkSession, _: String) =>
         new MultiSourceAdEtl(cfg)
           .run(s, graft.etl.Fixtures.materialize(name), capitalize)

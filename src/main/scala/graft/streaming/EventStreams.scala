@@ -127,14 +127,6 @@ object EventStreams {
       .agg(count(lit(1)).as("cnt"), round(sum("value"), 2).as("sum_value"))
       .select(col("w.start").as("hour_ts"), col("event_type"), col("cnt"), col("sum_value"))
 
-  /** Sliding 1h window, 15m slide — same state model, 4× key fan-out. */
-  def slidingCounts(events: DataFrame): DataFrame =
-    events
-      .withWatermark("ts", "2 hours")
-      .groupBy(window(col("ts"), "1 hour", "15 minutes").as("w"), col("event_type"))
-      .agg(count(lit(1)).as("cnt"))
-      .select(col("w.start").as("win_start"), col("event_type"), col("cnt"))
-
   /** Built-in session windows: gap-based sessions per user. */
   def sessionWindows(events: DataFrame, gap: String = "30 minutes"): DataFrame =
     events
