@@ -15,6 +15,9 @@ object Bench {
     // gate below): a drifted literal would silently stop history appends
     val defaultSfDir = "/root/testdata/sf0.1"
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", defaultSfDir)
+    // the warm pass's SF, next to the default bench SF
+    val warmSfDir =
+      java.nio.file.Paths.get(defaultSfDir).resolveSibling("sf0.001").toString
     val spark = GraftSession.build(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
 
     // Warm every query once at the smallest SF so measurements capture
@@ -30,7 +33,7 @@ object Bench {
     // A warm failure is reported, never swallowed: an entry that fails
     // only at sf0.001 would otherwise be invisible.
     bench.foreach { case (name, fn) =>
-      try fn(spark, "/root/testdata/sf0.001").write.format("noop").mode("overwrite").save()
+      try fn(spark, warmSfDir).write.format("noop").mode("overwrite").save()
       catch { case e: Throwable =>
         System.err.println(s"[bench] warm $name failed: ${e.getMessage}")
       }
@@ -49,24 +52,33 @@ object Bench {
     // instead of emitting a nonsense artifact
     require(reps >= 1, s"SPARK_GRAFT_BENCH_REPS must be >= 1, got $reps")
 
-    // One timed min-of-`reps` measurement of `name` against sfDir — the
-    // SAME estimator as the main sweep, so the start/end canary passes
-    // are comparable to the history medians (a single-shot pass reads
-    // 1.3-2x high against min-of-2 references: the first rep at the
-    // bench SF pays cold page-cache/codegen, the post-sweep rep pays
-    // accumulated JVM state — measured as a false drift flag on an
-    // otherwise-quiet run).
+    // One timed min-of-`reps` measurement of `name` against sfDir, shared
+    // by the start canaries, the sweep and the end canaries, so the
+    // three passes are comparable to each other and to the history
+    // medians (a single-shot pass reads 1.3-2x high against min-of-2
+    // references: the first rep at the bench SF pays cold
+    // page-cache/codegen, the post-sweep rep pays accumulated JVM state
+    // — measured as a false drift flag on an otherwise-quiet run). A
+    // failed rep is logged to stderr, ends the measurement and leaves
+    // the entry with no time. The noop save is the final consumer of any
+    // intra-query persist(): caches are dropped after every rep so one
+    // query's cache blocks don't GC-pressure every later query
+    // (measured: accumulated caches inflated late-alphabet queries
+    // 10-30x in a full-corpus run).
     def timeOne(name: String): Option[Double] =
       bench.get(name).flatMap { fn =>
-        val times = (1 to reps).flatMap { _ =>
-          val t0 = System.nanoTime()
-          val ok =
-            try { fn(spark, sfDir).write.format("noop").mode("overwrite").save(); true }
-            catch { case _: Throwable => false }
-          spark.catalog.clearCache()
-          if (ok) Some((System.nanoTime() - t0) / 1e9) else None
+        (1 to reps).foldLeft(Option(Double.MaxValue)) { (best, _) =>
+          best.flatMap { b =>
+            val t0 = System.nanoTime()
+            try {
+              fn(spark, sfDir).write.format("noop").mode("overwrite").save()
+              Some(math.min(b, (System.nanoTime() - t0) / 1e9))
+            } catch { case e: Throwable =>
+              System.err.println(s"[bench] $name failed: ${e.getMessage}")
+              None
+            } finally spark.catalog.clearCache()
+          }
         }
-        times.minOption
       }
     val canaryNames =
       Seq("q_topk", "q_distinct", "s_cosine_topk", "d_minhash_lsh",
@@ -89,25 +101,9 @@ object Bench {
     // points — start, in-sweep, end — and any one can flag it.
     val startCanary: Map[String, Double] =
       canaryNames.flatMap(n => timeOne(n).map(n -> _)).toMap
-    val results = bench.toSeq.sortBy(_._1).map { case (name, fn) =>
-      var best = Double.MaxValue
-      var ok = true
-      for (_ <- 1 to reps if ok) {
-        val t0 = System.nanoTime()
-        try { fn(spark, sfDir).write.format("noop").mode("overwrite").save() }
-        catch { case e: Throwable =>
-          System.err.println(s"[bench] $name failed: ${e.getMessage}")
-          ok = false
-        }
-        val elapsed = (System.nanoTime() - t0) / 1e9
-        if (ok) best = math.min(best, elapsed)
-        // the noop save is the final consumer of any intra-query persist():
-        // drop caches before the next measurement so one query's cache
-        // blocks don't GC-pressure every later query (measured: accumulated
-        // caches inflated late-alphabet queries 10-30x in a full-corpus run)
-        spark.catalog.clearCache()
-      }
-      (name, best, ok)
+    val results = bench.keys.toSeq.sorted.map { name =>
+      val t = timeOne(name)
+      (name, t.getOrElse(-1.0), t.isDefined)
     }
     // failed queries report -1 (a failure must not read as a fast run) and
     // are listed explicitly; total sums successes only
@@ -268,13 +264,9 @@ object Bench {
     val compact =
       f"""{"metric":"total","value":$total%.3f,"unit":"sec","n_queries":${results.size},"failed":$failed,"sf":"$sfDir","qv":$qv,"qv_order":"sorted_query_names","full":"${BenchGuard.fullArtifact(hostDrift)}","load1":$load1%.2f,"free_gb":$freeGb,"canaries":$canaryJson,"canaries_start":${cjson(canStart)},"canaries_end":${cjson(canEnd)},"steal_pct":$stealPct%.2f,"canary_fmt":"[sec,ratio_vs_median_last3_of_BENCH_CANARIES.json]","host_drift":$hostDrift}"""
     println(compact)
-    // the layout queries write catalog tables + tmpdir parquet per data
-    // dir (warm pass used sf0.001); drop both sets before exit — same
-    // for the persisted ANN index (s_index_build / s_index_query)
-    graft.queries.Relational.layoutCleanup(spark, sfDir)
-    graft.queries.Relational.layoutCleanup(spark, "/root/testdata/sf0.001")
-    graft.io.AnnIndex.cleanup(sfDir)
-    graft.io.AnnIndex.cleanup("/root/testdata/sf0.001")
+    // the entries leave tmp artifacts per data dir: drop both sets
+    SparkEntry.cleanup(spark, sfDir)
+    SparkEntry.cleanup(spark, warmSfDir)
     spark.stop()
   }
 }

@@ -22,8 +22,7 @@ object Plans {
         java.nio.file.Paths.get(outDir, s"${n}_$tag.txt"), plan)
       spark.catalog.clearCache()
     }
-    graft.queries.Relational.layoutCleanup(spark, sfDir)
-    graft.io.AnnIndex.cleanup(sfDir)
+    SparkEntry.cleanup(spark, sfDir)
     spark.stop()
   }
 }

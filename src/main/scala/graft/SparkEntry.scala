@@ -32,4 +32,14 @@ object SparkEntry {
       Dedup.oracles ++ Similarity.oracles ++ Events.oracles ++
       Curation.oracles ++ graft.multimodal.Multimodal.oracles ++
       graft.streaming.EventStreams.oracles ++ PretrainBuild.oracles
+
+  /** Drop every tmp artifact the entries leave behind for data dir `d`:
+    * the layout tables and files of `q_bucketed_join`/`q_partition_prune`
+    * and the persisted ANN index. Idempotent; call once every result is
+    * materialized (the returned DataFrames read through the artifacts).
+    */
+  def cleanup(spark: SparkSession, d: String): Unit = {
+    Relational.layoutCleanup(spark, d)
+    graft.io.AnnIndex.cleanup(d)
+  }
 }

@@ -34,8 +34,7 @@ object Verify {
     // operator; their DataFrames read through it) — their results are
     // materialized above, so tear the artifacts down here; same for the
     // persisted ANN index (s_index_build / s_index_query)
-    graft.queries.Relational.layoutCleanup(spark, sfDir)
-    graft.io.AnnIndex.cleanup(sfDir)
+    SparkEntry.cleanup(spark, sfDir)
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
     // driver's json.load fail and silently zero the round's correctness.

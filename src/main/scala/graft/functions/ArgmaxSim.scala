@@ -40,6 +40,14 @@ case class ArgmaxSim(child: Expression, cosine: Boolean, offset: Int,
   override def checkInputDataTypes(): TypeCheckResult =
     VectorPair.checkVectors(prettyName, child)
 
+  // plan strings render the literals by content: the ids, and the
+  // matrix as its shape plus a short digest (never 64-wide rows, never
+  // the arrays' JVM identity hashes); equals/hashCode are unchanged
+  override protected def stringArgs: Iterator[Any] =
+    Iterator(child, cosine, offset, ids.mkString("[", ",", "]"), matrixTag)
+
+  @transient private lazy val matrixTag: String = ArgmaxSim.matrixTag(mat)
+
   override def dataType: DataType = IntegerType
   override def nullable: Boolean = child.nullable
   override def prettyName: String = "argmax_sim"
@@ -115,6 +123,16 @@ case class ArgmaxSim(child: Expression, cosine: Boolean, offset: Int,
 }
 
 object ArgmaxSim {
+  /** `<rows>x<cols>:md5=<8 hex>` — the md5 covers every element's
+    * IEEE-754 bits in row order, so equal matrices print equally. */
+  def matrixTag(mat: Array[Array[Double]]): String = {
+    val md = java.security.MessageDigest.getInstance("MD5")
+    val buf = java.nio.ByteBuffer.allocate(8)
+    mat.foreach(_.foreach { x => buf.clear(); md.update(buf.putDouble(x).array()) })
+    s"${mat.length}x${mat.head.length}:md5=" +
+      md.digest().take(4).map("%02x".format(_)).mkString
+  }
+
   /** Spark's Round(x, 9) double semantics, verbatim (RoundBase: NaN and
     * infinities pass through; otherwise scala BigDecimal HALF_UP at
     * scale 9) — the discrete decisions must replay the oracle's

@@ -1,5 +1,7 @@
 package graft.io
 
+import java.nio.file.{Files, Path, Paths}
+
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -35,8 +37,14 @@ import graft.functions.Quantizer.{Cands, Collected, sub}
   *     probe-cost ledgers read instead of rescanning vectors.
   *
   * [[buildKMeans]] writes the same artifact set under a `_km` root with
-  * LEARNED cells (two-round Lloyd) instead of label cells; every query
-  * API works unchanged against either tree.
+  * LEARNED cells (two-round Lloyd) instead of label cells, and
+  * [[buildResidual]] under a `_res` root with residual codes; every query
+  * API works unchanged against each tree.
+  *
+  * Every tree and segment is written through ONE build-once gate
+  * ([[gate]]): key = corpus fingerprint plus the artifact's arguments,
+  * invalidate → write → stamp, so `ensure*` reuses an artifact exactly
+  * while its key still matches and a failed write is never served.
   *
   * Every discrete decision (cell argmax, code argmax) is a
   * 9-dp-rounded max-of-struct, so the DuckDB oracle replays the build
@@ -138,11 +146,6 @@ object AnnIndex {
             col("vec_id"), col("embedding"))
     }
 
-  /** [[Quantizer.subspaces]], kept under this name for the reference
-    * formulation in LiteralQuantizerSpec. */
-  private[graft] def subspaces(v: Column, out: String): Column =
-    Quantizer.subspaces(v, out)
-
   /** The frozen-parameter assignment/coding pass, LITERAL form (r20
     * optimization, guide §2.3/§2.4/§8 "decide with small rows"): the
     * coarse quantizer and PQ codebook are catalog-scale metadata
@@ -161,15 +164,27 @@ object AnnIndex {
   private def litVecD(xs: scala.collection.Seq[Double]): Column =
     array(xs.toSeq.map(lit): _*)
 
-  /** Assign + PQ-code every row in one narrow projection: same output
-    * columns and values as the former broadcast-join pass, zero
-    * exchanges.
+  /** Raw coding: the PQ codes quantize the embedding itself. */
+  private val rawCoding: Cands => Column = _ => col("embedding")
+
+  /** Assign every row to its nearest centroid (`cell`) and add the vector
+    * the PQ codes quantize (`cv`): `coded` of the centroids, evaluated
+    * against the assigned `cell` — the embedding for raw coding, its
+    * residual for residual coding.
+    */
+  private def assign(rows: DataFrame, cents: Cands,
+      coded: Cands => Column): DataFrame =
+    rows.withColumn("cell", Quantizer.cellOf(col("embedding"), cents))
+      .withColumn("cv", coded(cents))
+
+  /** Assign + PQ-code every row in one narrow projection
+    * (cell, vec_id, embedding, c0..c3): same output columns and values as
+    * the former broadcast-join pass, zero exchanges.
     */
   private def assignAndCode(rows: DataFrame, cents: Cands,
-      cb: Map[Int, Cands]): DataFrame =
-    rows.select(Quantizer.cellOf(col("embedding"), cents).as("cell") +:
-      col("vec_id") +: col("embedding") +:
-      Quantizer.codeCols(col("embedding"), cb): _*)
+      cb: Map[Int, Cands], coded: Cands => Column = rawCoding): DataFrame =
+    assign(rows, cents, coded).select(col("cell") +: col("vec_id") +:
+      col("embedding") +: Quantizer.codeCols(col("cv"), cb): _*)
 
   /** Write a collected bounded row set as a single-file parquet artifact
     * with the plan's exact schema — the artifact write no longer
@@ -178,30 +193,102 @@ object AnnIndex {
   private def writeLocal(s: SparkSession, rows: Collected, path: String): Unit =
     rows.local(s).coalesce(1).write.mode("overwrite").parquet(path)
 
-  /** Per-cell row counts of segment `seg`, persisted as `<seg>_stats/`
-    * next to the tree — the catalog metadata a 100 TB index keeps at
-    * write time so cost ledgers (s_index_probe_cost*) read ≤ cells
-    * stats rows instead of re-scanning the vector tree per query (r18
-    * VERDICT ask #7). One partial-agg'd pass over the just-written
-    * segment, amortized over every later ledger read.
+  /** Write `rows` as the cell-partitioned segment `seg` of `root`, then its
+    * per-cell row counts as `<seg>_stats/` — the catalog metadata a
+    * 100 TB index keeps at write time so cost ledgers (s_index_probe_cost*)
+    * read ≤ cells stats rows instead of re-scanning the vector tree per
+    * query (r18 VERDICT ask #7). One partial-agg'd pass over the
+    * just-written segment, amortized over every later ledger read.
     */
-  private def writeCellStats(s: SparkSession, root: String, seg: String): Unit =
+  private def writeTree(s: SparkSession, root: String, seg: String,
+      rows: DataFrame): Unit = {
+    rows.write.mode("overwrite").partitionBy("cell").parquet(s"$root/$seg")
     s.read.parquet(s"$root/$seg")
       .groupBy("cell").agg(count(lit(1)).as("n"))
       .coalesce(1).write.mode("overwrite").parquet(s"$root/${seg}_stats")
-
-  /** Full (re)build of the index for corpus `d` (or its 1-in-`prime`
-    * stratum); returns the root path. Deterministic: rebuilding over the
-    * same corpus writes byte-identical logical content, so build/query
-    * entries may run in any order.
-    */
-  def build(s: SparkSession, d: String,
-      prime: Option[Int] = None): String = synchronized {
-    graft.functions.GraftFunctions.ensureRegistered(s)
-    val emb = embFor(s, d, prime)
-    writeIndex(s, rootFor(d, prime), d, emb, Quantizer.labelCentroids(emb),
-      prime)
   }
+
+  /** Marker of artifact `name` under `root`: it holds the key the
+    * artifact was last written for. */
+  private[graft] def marker(root: String, name: String): Path =
+    Paths.get(root, s"_fingerprint_$name")
+
+  /** The build-once gate every persisted artifact goes through. Artifact
+    * `name` (a Spark output directory under `root`) is keyed by the corpus
+    * [[fingerprint]] plus the arguments it was derived from, `|`-joined —
+    * so tombstones cached for one segment list, or a delta cached for one
+    * stratum, are never reused for another (r17 ADVICE low). With
+    * `reuse`, a FRESH artifact (`<name>/_SUCCESS` present and its
+    * [[marker]] equal to the key) is served as is: the query-many path,
+    * which keeps build/query entries order-independent in Verify's map
+    * iteration while a corpus regenerated in place never serves a stale
+    * artifact. Anything else is rewritten: marker deleted FIRST, then
+    * `write`, then the stamp — a write that throws part-way (say after a
+    * tree's centroids were overwritten, before its vectors) leaves the
+    * artifact stale, so the next gate rewrites it instead of serving the
+    * mixed tree.
+    */
+  private[graft] def gate(d: String, root: String, name: String,
+      args: Seq[String], reuse: Boolean)(write: => Unit): Unit = synchronized {
+    sweepStale
+    val m = marker(root, name)
+    val key = (fingerprint(d) +: args).mkString("|")
+    val fresh = reuse && Files.exists(Paths.get(root, name, "_SUCCESS")) &&
+      Files.exists(m) && Files.readString(m) == key
+    if (!fresh) {
+      Files.deleteIfExists(m)
+      write
+      Files.writeString(m, key)
+    }
+  }
+
+  /** The coarse-quantizer tree of corpus `d` (or its 1-in-`prime`
+    * stratum) under `rootFor(d, prime, variant)`, through the [[gate]];
+    * returns the root path. `cents` derives the centroids from the build
+    * corpus, `coded` picks raw or residual coding. The tree: centroids
+    * materialized ONCE (a bounded ≤ cells collect — the artifact parquet
+    * is written from the collected rows, and the values re-enter the
+    * assignment pass as literals), the ≤ M·codes PQ codebook coded from
+    * the seed rows the same way, then every vector assigned + coded in ONE
+    * narrow zero-shuffle pass against the frozen literal artifacts and
+    * written cell-partitioned with its cell stats. Coding EVERY vector
+    * once is the amortization the one-shot s_ivfpq_topk query
+    * deliberately skipped. Deterministic: rebuilding over the same corpus
+    * writes byte-identical logical content, so build/query entries may run
+    * in any order.
+    */
+  private def tree(s: SparkSession, d: String, prime: Option[Int],
+      variant: Option[String], reuse: Boolean,
+      coded: Cands => Column = rawCoding)(
+      cents: DataFrame => DataFrame): String = {
+    val root = rootFor(d, prime, variant).getAbsolutePath
+    gate(d, root, "vectors", Nil, reuse) {
+      graft.functions.GraftFunctions.ensureRegistered(s)
+      val emb = embFor(s, d, prime)
+      val centRows = Quantizer.collect("AnnIndex centroids", cents(emb))
+      writeLocal(s, centRows, s"$root/centroids")
+      val cl = centRows.cands
+      val cbRows = Quantizer.collect("AnnIndex codebook", Quantizer.codewords(
+        assign(codebookRows(emb, prime), cl, coded), col("code"), col("cv")))
+      writeLocal(s, cbRows, s"$root/codebook")
+      writeTree(s, root, "vectors",
+        assignAndCode(emb, cl, cbRows.codebook, coded))
+    }
+    root
+  }
+
+  /** Full (re)build of the label-cell index for corpus `d` (or its
+    * 1-in-`prime` stratum); returns the root path. */
+  def build(s: SparkSession, d: String, prime: Option[Int] = None): String =
+    labelTree(s, d, prime, reuse = false)
+
+  /** The label-cell tree, rebuilt only when stale (see [[gate]]). */
+  def ensure(s: SparkSession, d: String, prime: Option[Int] = None): String =
+    labelTree(s, d, prime, reuse = true)
+
+  private def labelTree(s: SparkSession, d: String, prime: Option[Int],
+      reuse: Boolean): String =
+    tree(s, d, prime, None, reuse)(Quantizer.labelCentroids)
 
   /** The LEARNED-coarse-quantizer build variant (r18 VERDICT ask #3):
     * cells are k-means centroids instead of the corpus LABEL values —
@@ -222,32 +309,39 @@ object AnnIndex {
     * build time, zero extra query cost.
     */
   def buildKMeans(s: SparkSession, d: String,
-      prime: Option[Int] = None, k: Int = nCodes): String = synchronized {
-    graft.functions.GraftFunctions.ensureRegistered(s)
-    val emb = embFor(s, d, prime)
-    // Each Lloyd round (Quantizer.lloydRound): ONE corpus pass assigning
-    // against LITERAL centroids (the identical 9-dp cosine argmax with
-    // the larger-cell tie-break) + one partial-agg'd mean, COLLECTED at
-    // the round boundary (≤ k 9-dp-rounded vectors — bounded driver
-    // metadata, the probe-extract license). The former lazy chain
-    // mean9(assign(mean9(assign(seeds)))) shuffled the full corpus
-    // payload through a groupBy(vec_id) per round and re-executed the
-    // growing lineage inside each round's broadcast.
-    // Seeds follow the codebook's stratum-safe discipline: unstratified
-    // = the first k vec_ids (cl = vec_id, the s_kmeans seed rule);
-    // stratified = the k smallest stratum ids re-labeled densely. k
-    // defaults to the historical nCodes (the r18 tree); matched-k
-    // training (k = the label-cell count) separates the TRAINING effect
-    // from the cell-count effect in the quantizer A/B (r19 VERDICT
-    // ask #3 — the 8-seed tree partly measured having 8 cells vs 10).
-    val seeds = Quantizer.collect("AnnIndex k-means seeds",
-      codebookRows(emb, prime, k).select(col("code"), col("embedding"))).cands
-    val trained = Quantizer.lloydRound("AnnIndex k-means round 2", emb,
-      Quantizer.lloydRound("AnnIndex k-means round 1", emb, seeds))
-    import s.implicits._
-    val cents = trained.toDF("cell", "centroid")
-    writeIndex(s, rootFor(d, prime, Some(kmVariant(k))), d, emb, cents, prime)
-  }
+      prime: Option[Int] = None, k: Int = nCodes): String =
+    kmTree(s, d, prime, k, reuse = false)
+
+  /** [[ensure]] for the learned-coarse-quantizer tree (per seed count). */
+  def ensureKMeans(s: SparkSession, d: String,
+      prime: Option[Int] = None, k: Int = nCodes): String =
+    kmTree(s, d, prime, k, reuse = true)
+
+  private def kmTree(s: SparkSession, d: String, prime: Option[Int], k: Int,
+      reuse: Boolean): String =
+    tree(s, d, prime, Some(kmVariant(k)), reuse) { emb =>
+      // Each Lloyd round (Quantizer.lloydRound): ONE corpus pass assigning
+      // against LITERAL centroids (the identical 9-dp cosine argmax with
+      // the larger-cell tie-break) + one partial-agg'd mean, COLLECTED at
+      // the round boundary (≤ k 9-dp-rounded vectors — bounded driver
+      // metadata, the probe-extract license). The former lazy chain
+      // mean9(assign(mean9(assign(seeds)))) shuffled the full corpus
+      // payload through a groupBy(vec_id) per round and re-executed the
+      // growing lineage inside each round's broadcast.
+      // Seeds follow the codebook's stratum-safe discipline: unstratified
+      // = the first k vec_ids (cl = vec_id, the s_kmeans seed rule);
+      // stratified = the k smallest stratum ids re-labeled densely. k
+      // defaults to the historical nCodes (the r18 tree); matched-k
+      // training (k = the label-cell count) separates the TRAINING effect
+      // from the cell-count effect in the quantizer A/B (r19 VERDICT
+      // ask #3 — the 8-seed tree partly measured having 8 cells vs 10).
+      val seeds = Quantizer.collect("AnnIndex k-means seeds",
+        codebookRows(emb, prime, k).select(col("code"), col("embedding"))).cands
+      val trained = Quantizer.lloydRound("AnnIndex k-means round 2", emb,
+        Quantizer.lloydRound("AnnIndex k-means round 1", emb, seeds))
+      import s.implicits._
+      trained.toDF("cell", "centroid")
+    }
 
   /** Variant tag for the k-means tree: the historical `km` at the
     * default seed count, `km<k>` otherwise — distinct trees per k, all
@@ -286,116 +380,23 @@ object AnnIndex {
     * both argmaxes bit-for-bit). Query-side ADC needs the query's
     * residual PER PROBED CELL — a bounded batch×nprobe LUT
     * (querySegments(residual = true)). Build cost at 100 TB: identical
-    * passes to the raw build plus one broadcast-centroid subtract
-    * folded into the coding pass; query cost: the qlut grows by the
-    * nprobe factor, still driver-metadata scale.
+    * passes to the raw build plus one literal-centroid subtract folded
+    * into the coding pass; query cost: the qlut grows by the nprobe
+    * factor, still driver-metadata scale.
     */
   def buildResidual(s: SparkSession, d: String,
-      prime: Option[Int] = None): String = synchronized {
-    graft.functions.GraftFunctions.ensureRegistered(s)
-    val emb = embFor(s, d, prime)
-    val rootF = rootFor(d, prime, Some("res"))
-    val root = rootF.getAbsolutePath
-    // one bounded materialization of the centroid plan (see writeIndex);
-    // the former shape re-executed it FOUR times (artifact write + the
-    // assignCells/withResidual broadcasts of both the seed and the full
-    // pass)
-    val centRows = Quantizer.collect("AnnIndex centroids",
-      Quantizer.labelCentroids(emb))
-    writeLocal(s, centRows, s"$root/centroids")
-    val cl = centRows.cands
-    // residual codebook from the SEED rows only (bounded ≤ nCodes rows,
-    // assigned + subtracted over a LOCAL relation): per-row argmax is
-    // independent, so this equals slicing them out of the full
-    // assignment
-    val seedLocal = Quantizer.collect("AnnIndex codebook seeds",
-      codebookRows(emb, prime)).local(s)
-    val rcbRows = Quantizer.collect("AnnIndex residual codebook",
-      Quantizer.codewords(seedLocal
-        .select(col("code"), col("embedding"),
-          Quantizer.cellOf(col("embedding"), cl).as("cell"))
-        .select(col("code"), residualExpr(col("cell"), cl).as("rv")),
-        col("code"), col("rv")))
-    writeLocal(s, rcbRows, s"$root/codebook")
-    // ONE corpus pass: assign, subtract, code — all literal-parameter
-    // per-row expressions (the former shape ran the assignment subtree
-    // TWICE through a vec_id self-join and shuffled the payload 3×)
-    emb.select(col("vec_id"), col("embedding"),
-        Quantizer.cellOf(col("embedding"), cl).as("cell"))
-      .select(col("cell"), col("vec_id"), col("embedding"),
-        residualExpr(col("cell"), cl).as("rv"))
-      .select(col("cell") +: col("vec_id") +: col("embedding") +:
-        Quantizer.codeCols(col("rv"), rcbRows.codebook): _*)
-      .write.mode("overwrite").partitionBy("cell")
-      .parquet(s"$root/vectors")
-    writeCellStats(s, root, "vectors")
-    java.nio.file.Files.write(markerFile(rootF).toPath,
-      fingerprint(d).getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    root
-  }
+      prime: Option[Int] = None): String =
+    residualTree(s, d, prime, reuse = false)
 
   /** [[ensure]] for the residual-coded tree. */
   def ensureResidual(s: SparkSession, d: String,
-      prime: Option[Int] = None): String = synchronized {
-    sweepStale
-    val root = rootFor(d, prime, Some("res"))
-    if (isFresh(root, d)) root.getAbsolutePath else buildResidual(s, d, prime)
-  }
+      prime: Option[Int] = None): String =
+    residualTree(s, d, prime, reuse = true)
 
-  /** Shared tail of both build flavors: materialize `cents` ONCE (a
-    * bounded ≤ cells collect — the artifact parquet is written from the
-    * collected rows, and the values re-enter the assignment pass as
-    * literals; the former shape executed the centroid subplan twice,
-    * once per artifact write and once inside the broadcast), same for
-    * the ≤ M·codes codebook, then assign + code every vector in ONE
-    * narrow zero-shuffle pass against the frozen literal artifacts,
-    * write the cell-partitioned tree + its cell stats, marker LAST (a
-    * crash mid-build leaves no marker, so ensure() rebuilds). Coding
-    * EVERY vector once is the amortization the one-shot s_ivfpq_topk
-    * query deliberately skipped.
-    */
-  private def writeIndex(s: SparkSession, rootF: java.io.File, d: String,
-      emb: DataFrame, cents: DataFrame, prime: Option[Int]): String = {
-    val root = rootF.getAbsolutePath
-    val centRows = Quantizer.collect("AnnIndex centroids", cents)
-    writeLocal(s, centRows, s"$root/centroids")
-    val cbRows = Quantizer.collect("AnnIndex codebook", Quantizer.codewords(
-      codebookRows(emb, prime), col("code"), col("embedding")))
-    writeLocal(s, cbRows, s"$root/codebook")
-    assignAndCode(emb, centRows.cands, cbRows.codebook)
-      .write.mode("overwrite").partitionBy("cell")
-      .parquet(s"$root/vectors")
-    writeCellStats(s, root, "vectors")
-    java.nio.file.Files.write(markerFile(rootF).toPath,
-      fingerprint(d).getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    root
-  }
-
-  /** Write the DELTA segment for corpus `d` against the FROZEN persisted
-    * centroids/codebook at `root` (no retraining — the FAISS-add /
-    * Lucene-segment discipline; the base tree is never mutated). The
-    * synthetic delta is deterministic on both engines: the
-    * vec_id % 7 == 3 subset (of the 1-in-`prime` stratum when given —
-    * the stratum-twin device), re-keyed +1,000,000, embeddings REVERSED.
-    * Overwrites `vectors_delta/`; deterministic, so callers
-    * (s_index_delta, s_index_compact) are order-independent.
-    */
-  def writeDeltaSegment(s: SparkSession, d: String, root: String,
-      prime: Option[Int] = None): Unit = {
-    graft.functions.GraftFunctions.ensureRegistered(s)
-    val (cents, cb) = frozen(s, root)
-    val delta = embFor(s, d, prime)
-      .filter(col("vec_id") % 7 === 3)
-      .select((col("vec_id") + 1000000L).as("vec_id"),
-        reverse(col("embedding")).as("embedding"))
-    assignAndCode(delta, cents, cb)
-      .write.mode("overwrite").partitionBy("cell")
-      .parquet(s"$root/vectors_delta")
-    writeCellStats(s, root, "vectors_delta")
-    java.nio.file.Files.write(deltaMarker(root).toPath,
-      deltaMarkerContent(d, prime)
-        .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-  }
+  private def residualTree(s: SparkSession, d: String, prime: Option[Int],
+      reuse: Boolean): String =
+    tree(s, d, prime, Some("res"), reuse,
+      cl => residualExpr(col("cell"), cl))(Quantizer.labelCentroids)
 
   /** The frozen (centroids, codebook) artifacts of the tree at `root`,
     * collected as literal candidates (bounded catalog metadata: the
@@ -407,38 +408,44 @@ object AnnIndex {
      Quantizer.collect(s"codebook of $root",
       s.read.parquet(s"$root/codebook")).codebook)
 
-  private def deltaMarker(root: String) =
-    new java.io.File(root, "_fingerprint_delta")
-  private def tombMarker(root: String) =
-    new java.io.File(root, "_fingerprint_tombstones")
-  // Marker content carries the ARGUMENTS the cached artifact was derived
-  // from, not just the corpus fingerprint (r17 ADVICE low: tombstones
-  // cached for one segment list must not be silently reused for
-  // another; same for the delta's stratum prime).
-  private def deltaMarkerContent(d: String, prime: Option[Int]): String =
-    fingerprint(d) + prime.map(p => s"|s$p").getOrElse("")
-  private def tombMarkerContent(d: String, segments: Seq[String]): String =
-    fingerprint(d) + "|" + segments.mkString(",")
-
-  /** Build-once gate for the delta segment — the read-path counterpart of
-    * [[ensure]] (VERDICT r15/r16: a QUERY entry must not pay the segment
-    * WRITE inside its measured span every rep). The delta is a pure
-    * deterministic function of the corpus + the frozen artifacts, so the
-    * corpus fingerprint is the correct cache key: same corpus ⇒ same
-    * bytes ⇒ reuse; regenerated corpus ⇒ marker mismatch ⇒ rewrite.
-    * Ingest-cost entries (s_index_delta, s_index_compact) keep calling
-    * [[writeDeltaSegment]] directly — the write IS what they measure.
-    */
-  def ensureDelta(s: SparkSession, d: String, root: String,
-      prime: Option[Int] = None): Unit = synchronized {
-    val fresh =
-      new java.io.File(new java.io.File(root, "vectors_delta"), "_SUCCESS").exists() &&
-        deltaMarker(root).exists() &&
-        new String(java.nio.file.Files.readAllBytes(deltaMarker(root).toPath),
-          java.nio.charset.StandardCharsets.UTF_8) ==
-          deltaMarkerContent(d, prime)
-    if (!fresh) writeDeltaSegment(s, d, root, prime)
+  /** Segment `seg` of the tree at `root`: `rows` (vec_id, embedding) coded
+    * against the FROZEN persisted centroids/codebook (no retraining — the
+    * FAISS-add / Lucene-segment discipline; the base tree is never
+    * mutated). */
+  private def writeSegment(s: SparkSession, root: String, seg: String,
+      rows: DataFrame): Unit = {
+    graft.functions.GraftFunctions.ensureRegistered(s)
+    val (cents, cb) = frozen(s, root)
+    writeTree(s, root, seg, assignAndCode(rows, cents, cb))
   }
+
+  /** Write the DELTA segment `vectors_delta/` for corpus `d`. The
+    * synthetic delta is deterministic on both engines: the
+    * vec_id % 7 == 3 subset (of the 1-in-`prime` stratum when given —
+    * the stratum-twin device), re-keyed +1,000,000, embeddings REVERSED,
+    * so callers (s_index_delta, s_index_compact) are order-independent.
+    * Ingest-cost entries call this writer directly — the write IS what
+    * they measure; query entries go through [[ensureDelta]].
+    */
+  def writeDeltaSegment(s: SparkSession, d: String, root: String,
+      prime: Option[Int] = None): Unit =
+    delta(s, d, root, prime, reuse = false)
+
+  /** The delta segment, rewritten only when stale (see [[gate]]) — a
+    * QUERY entry must not pay the segment WRITE inside its measured span
+    * every rep (VERDICT r15/r16). */
+  def ensureDelta(s: SparkSession, d: String, root: String,
+      prime: Option[Int] = None): Unit =
+    delta(s, d, root, prime, reuse = true)
+
+  private def delta(s: SparkSession, d: String, root: String,
+      prime: Option[Int], reuse: Boolean): Unit =
+    gate(d, root, "vectors_delta", prime.map(p => s"s$p").toSeq, reuse) {
+      writeSegment(s, root, "vectors_delta", embFor(s, d, prime)
+        .filter(col("vec_id") % 7 === 3)
+        .select((col("vec_id") + 1000000L).as("vec_id"),
+          reverse(col("embedding")).as("embedding")))
+    }
 
   /** Write the TOMBSTONE segment: delete-by-id, the one lifecycle verb
     * left after build/delta/compact (the Lucene `.del` / delta-lake
@@ -459,66 +466,49 @@ object AnnIndex {
     * before writing the re-add segment.
     */
   def writeTombstones(s: SparkSession, d: String, root: String,
-      segments: Seq[String]): Unit = {
-    segments.map(seg => s.read.parquet(s"$root/$seg").select(col("vec_id")))
-      .reduce(_ unionByName _)
-      .filter(col("vec_id") % 11 === 5)
-      .distinct()
-      .coalesce(1)
-      .write.mode("overwrite").parquet(s"$root/tombstones")
-    java.nio.file.Files.write(tombMarker(root).toPath,
-      tombMarkerContent(d, segments)
-        .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-  }
+      segments: Seq[String]): Unit =
+    tombstones(s, d, root, segments, reuse = false)
 
-  /** Write the UPDATE segment: a batch of EXISTING ids re-added with new
-    * content — the third mutation verb (add = delta, delete = tombstone,
-    * update = later-segment re-add). Same ids, new embeddings, re-coded
-    * against the FROZEN artifacts; at query time the latest-segment-wins
-    * mask in [[querySegments]] makes these rows shadow the base rows —
-    * an upsert without ever rewriting the base tree. Deterministic on
-    * both engines: the vec_id % 13 == 2 subset, embeddings REVERSED.
+  /** [[ensureDelta]]'s counterpart for the tombstone segment, keyed by
+    * the segment list. */
+  def ensureTombstones(s: SparkSession, d: String, root: String,
+      segments: Seq[String]): Unit =
+    tombstones(s, d, root, segments, reuse = true)
+
+  private def tombstones(s: SparkSession, d: String, root: String,
+      segments: Seq[String], reuse: Boolean): Unit =
+    gate(d, root, "tombstones", segments, reuse) {
+      segments.map(seg => s.read.parquet(s"$root/$seg").select(col("vec_id")))
+        .reduce(_ unionByName _)
+        .filter(col("vec_id") % 11 === 5)
+        .distinct()
+        .coalesce(1)
+        .write.mode("overwrite").parquet(s"$root/tombstones")
+    }
+
+  /** Write the UPDATE segment `vectors_updates/`: a batch of EXISTING ids
+    * re-added with new content — the third mutation verb (add = delta,
+    * delete = tombstone, update = later-segment re-add). Same ids, new
+    * embeddings, re-coded against the FROZEN artifacts; at query time the
+    * latest-segment-wins mask in [[querySegments]] makes these rows
+    * shadow the base rows — an upsert without ever rewriting the base
+    * tree. Deterministic on both engines: the vec_id % 13 == 2 subset,
+    * embeddings REVERSED.
     */
-  def writeUpdateSegment(s: SparkSession, d: String, root: String): Unit = {
-    graft.functions.GraftFunctions.ensureRegistered(s)
-    val (cents, cb) = frozen(s, root)
-    val upd = graft.queries.Tables.t(s, d, "embeddings")
-      .filter(col("vec_id") % 13 === 2)
-      .select(col("vec_id"), reverse(col("embedding")).as("embedding"))
-    assignAndCode(upd, cents, cb)
-      .write.mode("overwrite").partitionBy("cell")
-      .parquet(s"$root/vectors_updates")
-    writeCellStats(s, root, "vectors_updates")
-    java.nio.file.Files.write(updMarker(root).toPath,
-      fingerprint(d).getBytes(java.nio.charset.StandardCharsets.UTF_8))
-  }
-
-  private def updMarker(root: String) =
-    new java.io.File(root, "_fingerprint_updates")
+  def writeUpdateSegment(s: SparkSession, d: String, root: String): Unit =
+    updates(s, d, root, reuse = false)
 
   /** [[ensureDelta]]'s counterpart for the update segment. */
   def ensureUpdates(s: SparkSession, d: String, root: String): Unit =
-    synchronized {
-      val fresh =
-        new java.io.File(new java.io.File(root, "vectors_updates"),
-          "_SUCCESS").exists() &&
-          updMarker(root).exists() &&
-          new String(java.nio.file.Files.readAllBytes(updMarker(root).toPath),
-            java.nio.charset.StandardCharsets.UTF_8) == fingerprint(d)
-      if (!fresh) writeUpdateSegment(s, d, root)
-    }
+    updates(s, d, root, reuse = true)
 
-  /** [[ensureDelta]]'s counterpart for the tombstone segment. */
-  def ensureTombstones(s: SparkSession, d: String, root: String,
-      segments: Seq[String]): Unit = synchronized {
-    val fresh =
-      new java.io.File(new java.io.File(root, "tombstones"), "_SUCCESS").exists() &&
-        tombMarker(root).exists() &&
-        new String(java.nio.file.Files.readAllBytes(tombMarker(root).toPath),
-          java.nio.charset.StandardCharsets.UTF_8) ==
-          tombMarkerContent(d, segments)
-    if (!fresh) writeTombstones(s, d, root, segments)
-  }
+  private def updates(s: SparkSession, d: String, root: String,
+      reuse: Boolean): Unit =
+    gate(d, root, "vectors_updates", Nil, reuse) {
+      writeSegment(s, root, "vectors_updates", embFor(s, d, None)
+        .filter(col("vec_id") % 13 === 2)
+        .select(col("vec_id"), reverse(col("embedding")).as("embedding")))
+    }
 
   /** Union per-segment row sets with LATEST-SEGMENT-WINS shadowing: a
     * row of segment i survives iff NO LATER segment contains its vec_id
@@ -614,10 +604,7 @@ object AnnIndex {
     val live = tombstones.fold(uni)(tseg =>
       uni.join(broadcast(s.read.parquet(s"$root/$tseg")), Seq("vec_id"),
         "left_anti"))
-    live.repartition(col("cell"))
-      .write.mode("overwrite").partitionBy("cell")
-      .parquet(s"$root/$out")
-    writeCellStats(s, root, out)
+    writeTree(s, root, out, live.repartition(col("cell")))
   }
 
   /** Answer the standard 4-query batch FROM the persisted index at
@@ -879,9 +866,9 @@ object AnnIndex {
     * must not serve a stale index — the parquet FOOTER sits in the tail
     * sample and carries row-group statistics, so same-shape different
     * content changes the digest). Bounded: ≤ 8 KiB read per part file,
-    * never a data scan. Validated against the `_fingerprint` marker in
-    * [[ensure]] (the marker also disambiguates two paths that sanitize
-    * to the same root tag).
+    * never a data scan. The head of every artifact key in [[gate]] (the
+    * key also disambiguates two paths that sanitize to the same root
+    * tag).
     */
   private[graft] def fingerprint(d: String): String = {
     def walk(f: java.io.File): Seq[java.io.File] =
@@ -910,8 +897,6 @@ object AnnIndex {
     md.digest().map("%02x".format(_)).mkString
   }
 
-  private def markerFile(root: java.io.File) = new java.io.File(root, "_fingerprint")
-
   /** One-shot JVM-startup sweep: delete `graft_ivfidx_*` tmpdir trees
     * whose pid suffix no longer names a live process — crashed runs
     * otherwise leak them forever (no later process shares the pid key).
@@ -930,36 +915,6 @@ object AnnIndex {
       }
     }
   }
-
-  /** Build-once gate: reuse the persisted artifacts when present AND the
-    * `_fingerprint` marker still matches the source corpus (the
-    * query-many path), rebuild otherwise — so build/query entries are
-    * order-independent in Verify's map iteration and a corpus
-    * regenerated in-place never serves a stale index.
-    */
-  def ensure(s: SparkSession, d: String,
-      prime: Option[Int] = None): String = synchronized {
-    sweepStale
-    val root = rootFor(d, prime)
-    if (isFresh(root, d)) root.getAbsolutePath else build(s, d, prime)
-  }
-
-  /** [[ensure]] for the learned-coarse-quantizer tree (per seed count). */
-  def ensureKMeans(s: SparkSession, d: String,
-      prime: Option[Int] = None, k: Int = nCodes): String = synchronized {
-    sweepStale
-    val root = rootFor(d, prime, Some(kmVariant(k)))
-    if (isFresh(root, d)) root.getAbsolutePath
-    else buildKMeans(s, d, prime, k)
-  }
-
-  private def isFresh(root: java.io.File, d: String): Boolean =
-    new java.io.File(new java.io.File(root, "vectors"), "_SUCCESS").exists() &&
-      markerFile(root).exists() && {
-        val bytes = java.nio.file.Files.readAllBytes(markerFile(root).toPath)
-        new String(bytes, java.nio.charset.StandardCharsets.UTF_8) ==
-          fingerprint(d)
-      }
 
   /** Drop the persisted artifacts for `d` — the full root and EVERY
     * stratum-twin root regardless of prime (r16 ADVICE: the old

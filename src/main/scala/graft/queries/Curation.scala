@@ -808,7 +808,10 @@ object Curation {
           round(col("w").cast("double") / col("n_tok"), 6).as("nw"))
       perDoc.groupBy("lang")
         .agg(count(lit(1)).as("n_docs"),
-          round(avg("nw"), 6).as("avg_nw"),
+          // exact: a double avg of 6-dp values depends on the shuffle's
+          // summation order, so the mean accumulates over decimal(18,6)
+          round(avg(col("nw").cast("decimal(18,6)")), 6).cast("double")
+            .as("avg_nw"),
           sum(when(col("nw") > 0, 1L).otherwise(0L)).cast("bigint").as("n_pos"))
         .select(col("lang"), col("n_docs"), col("avg_nw"), col("n_pos"),
           round(col("n_pos") / col("n_docs"), 4).as("pos_share"))

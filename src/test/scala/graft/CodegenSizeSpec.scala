@@ -77,8 +77,7 @@ class CodegenSizeSpec extends SparkSpec {
       })
       assert(bad.isEmpty, bad.mkString("\n", "\n", ""))
     } finally {
-      graft.queries.Relational.layoutCleanup(spark, sf)
-      graft.io.AnnIndex.cleanup(sf)
+      SparkEntry.cleanup(spark, sf)
     }
   }
 

@@ -100,4 +100,30 @@ class QuantizerSpec extends SparkSpec {
     assert(e.getMessage.contains("'s_kmeans seeds': null vector for candidate 3"),
       e.getMessage)
   }
+
+  private val identityHash = "@[0-9a-f]{6,}".r
+
+  test("argmax_sim plan strings render the literals by content, never identity hashes") {
+    def mk(mat: Array[Array[Double]]) = ArgmaxSim(
+      org.apache.spark.sql.catalyst.expressions.BoundReference(
+        0, ArrayType(DoubleType), nullable = true),
+      cosine = true, offset = 0, Array(3, 7), mat)
+    val a = mk(Array(Array(1.0, 0.5), Array(0.25, 2.0)))
+    val b = mk(Array(Array(1.0, 0.5), Array(0.25, 2.0)))
+    assert(a.toString == b.toString)
+    assert(a.toString.startsWith("argmax_sim(") &&
+      a.toString.contains("[3,7]") && a.toString.contains("2x2:md5="), a.toString)
+    assert(identityHash.findFirstIn(a.toString).isEmpty, a.toString)
+    assert(mk(Array(Array(1.0, 0.5), Array(0.25, 2.5))).toString != a.toString,
+      "the digest must follow the matrix content")
+  }
+
+  test("s_ivfpq_topk's formatted plan carries no JVM identity hash") {
+    val plan = SparkEntry.queries("s_ivfpq_topk")(spark, TestSpark.sf0001)
+      .queryExecution.explainString(
+        org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
+    assert(plan.contains("argmax_sim("), plan)
+    assert(identityHash.findFirstIn(plan).isEmpty,
+      identityHash.findAllIn(plan).take(3).mkString(", "))
+  }
 }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.BeforeAndAfterAll
 
 import graft.{SparkSpec, TestSpark}
+import graft.functions.Quantizer
 import graft.queries.Tables
 
 /** Referee for the r20 literal-quantizer build (AnnIndex.assignAndCode):
@@ -38,7 +39,7 @@ class LiteralQuantizerSpec extends SparkSpec with BeforeAndAfterAll {
       .agg(max(struct(col("c2c"), col("cell"))).getField("cell").as("cell"))
     // the pre-r20 coding pass, verbatim
     val refCodes = emb
-      .select(col("vec_id"), AnnIndex.subspaces(col("embedding"), "sv").as("x"))
+      .select(col("vec_id"), Quantizer.subspaces(col("embedding"), "sv").as("x"))
       .select(col("vec_id"), col("x.m").as("m"), col("x.sv").as("sv"))
       .join(broadcast(cb), "m")
       .select(col("vec_id"), col("m"), col("code"),
@@ -83,7 +84,7 @@ class LiteralQuantizerSpec extends SparkSpec with BeforeAndAfterAll {
         zip_with(col("embedding").cast("array<double>"), col("centroid"),
           (x, c) => round(x - c, 9)).as("rv"))
     val refCodes = resid
-      .select(col("vec_id"), AnnIndex.subspaces(col("rv"), "sv").as("x"))
+      .select(col("vec_id"), Quantizer.subspaces(col("rv"), "sv").as("x"))
       .select(col("vec_id"), col("x.m").as("m"), col("x.sv").as("sv"))
       .join(broadcast(rcb), "m")
       .select(col("vec_id"), col("m"), col("code"),
