@@ -33,13 +33,14 @@ object SparkEntry {
       Curation.oracles ++ graft.multimodal.Multimodal.oracles ++
       graft.streaming.EventStreams.oracles ++ PretrainBuild.oracles
 
-  /** Drop every tmp artifact the entries leave behind for data dir `d`:
-    * the layout tables and files of `q_bucketed_join`/`q_partition_prune`
-    * and the persisted ANN index. Idempotent; call once every result is
-    * materialized (the returned DataFrames read through the artifacts).
+  /** Drop every artifact the entries leave behind for data dir `d`: the
+    * catalog tables of `q_bucketed_join`, then the corpus dir
+    * (`graft.util.Dirs.cleanup`: ANN index, staged stream inputs, layout
+    * parquet). Idempotent; call once every result is materialized (the
+    * returned DataFrames read through the artifacts).
     */
   def cleanup(spark: SparkSession, d: String): Unit = {
-    Relational.layoutCleanup(spark, d)
-    graft.io.AnnIndex.cleanup(d)
+    Relational.dropLayoutTables(spark, d)
+    graft.util.Dirs.cleanup(d)
   }
 }

@@ -29,11 +29,9 @@ object Verify {
       // every later query in the full-corpus run
       finally spark.catalog.clearCache()
     }
-    // the two layout queries (q_bucketed_join / q_partition_prune) leave
-    // catalog tables + tmpdir parquet behind by design (the layout IS the
-    // operator; their DataFrames read through it) — their results are
-    // materialized above, so tear the artifacts down here; same for the
-    // persisted ANN index (s_index_build / s_index_query)
+    // the layout queries, the persisted ANN index and the staged stream
+    // inputs leave artifacts behind by design (later reads go through
+    // them) — every result is materialized above, so tear them down here
     SparkEntry.cleanup(spark, sfDir)
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the

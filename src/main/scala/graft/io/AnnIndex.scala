@@ -17,7 +17,7 @@ import graft.functions.Quantizer.{Cands, Collected, sub}
   * in-span. This is the shape a 100 TB retrieval deployment actually
   * runs — the index is built at ingest, queries amortize it.
   *
-  * Artifacts under one root (tmpdir, process-keyed — see [[rootFor]]):
+  * Artifacts under one root per corpus (see [[rootFor]]):
   *   - `centroids/`  (cell INT, centroid DOUBLE[64]) — the coarse
   *     quantizer: per-label 9-dp-rounded mean vectors (the s_ivf_topk
   *     codebook discipline; label count is bounded, so this side is
@@ -36,9 +36,9 @@ import graft.functions.Quantizer.{Cands, Collected, sub}
   *     written at every segment write: the catalog metadata the
   *     probe-cost ledgers read instead of rescanning vectors.
   *
-  * [[buildKMeans]] writes the same artifact set under a `_km` root with
+  * [[buildKMeans]] writes the same artifact set under a `-km` root with
   * LEARNED cells (two-round Lloyd) instead of label cells, and
-  * [[buildResidual]] under a `_res` root with residual codes; every query
+  * [[buildResidual]] under a `-res` root with residual codes; every query
   * API works unchanged against each tree.
   *
   * Every tree and segment is written through ONE build-once gate
@@ -81,32 +81,17 @@ object AnnIndex {
     */
   val maxShadowRows = 10000000L
 
-  /** Index root for corpus `d`. Process-keyed (pid suffix) so two driver
-    * rounds benching the same corpus concurrently never read each
-    * other's half-written artifacts (the nonce-dir discipline from the
-    * streaming entries); within one JVM the key is stable, which is what
-    * build-once/query-many needs. A production deployment would use a
-    * content-addressed lake path instead. `variant` distinguishes
+  /** Index root for corpus `d` (or its 1-in-`prime` stratum), inside
+    * the corpus dir [[graft.util.Dirs]] owns — it also owns the root's
+    * process keying, sweep and cleanup. `variant` distinguishes
     * alternative-quantizer builds of the SAME corpus (the "km" learned-
-    * coarse-quantizer tree) from the label-cell default.
+    * coarse-quantizer tree) from the label-cell default. The stratum
+    * follows `_` and the variant `-`, so no two arguments share a root.
     */
   def rootFor(d: String, prime: Option[Int] = None,
-      variant: Option[String] = None): java.io.File = {
-    // variants share one naming rule with cleanup()'s sweep regex (r19
-    // ADVICE: a variant outside the swept alphabet would leak its root
-    // in tmp, and one shaped like `s<digits>` would collide with the
-    // stratum `_sN` naming) — enforce both here, at the single place
-    // every variant string enters
-    variant.foreach(v => require(
-      v.matches("[a-z][a-z0-9]*") && !v.matches("s\\d+"),
-      s"index variant '$v' must be lowercase alphanumeric (not _sN-shaped)" +
-        " so cleanup()'s sweep can find its root"))
-    val tag = d.replaceAll("[^A-Za-z0-9]", "_") +
-      prime.map(p => s"_s$p").getOrElse("") +
-      variant.map(v => s"_$v").getOrElse("")
-    val pid = ProcessHandle.current().pid()
-    new java.io.File(sys.props("java.io.tmpdir"), s"graft_ivfidx_${tag}_p$pid")
-  }
+      variant: Option[String] = None): java.io.File =
+    new java.io.File(graft.util.Dirs.corpus(d), "index" +
+      prime.fold("")(p => s"_s$p") + variant.fold("")(v => s"-$v"))
 
   /** The build corpus: the full embeddings table, or its 1-in-`prime`
     * md5 stratum (the Tables.stratum twin device — both engines filter
@@ -226,21 +211,22 @@ object AnnIndex {
     * `write`, then the stamp — a write that throws part-way (say after a
     * tree's centroids were overwritten, before its vectors) leaves the
     * artifact stale, so the next gate rewrites it instead of serving the
-    * mixed tree.
+    * mixed tree. It runs under `Dirs.locked`, the lock `Dirs.cleanup`
+    * takes, so a teardown never lands mid-write.
     */
   private[graft] def gate(d: String, root: String, name: String,
-      args: Seq[String], reuse: Boolean)(write: => Unit): Unit = synchronized {
-    sweepStale
-    val m = marker(root, name)
-    val key = (fingerprint(d) +: args).mkString("|")
-    val fresh = reuse && Files.exists(Paths.get(root, name, "_SUCCESS")) &&
-      Files.exists(m) && Files.readString(m) == key
-    if (!fresh) {
-      Files.deleteIfExists(m)
-      write
-      Files.writeString(m, key)
+      args: Seq[String], reuse: Boolean)(write: => Unit): Unit =
+    graft.util.Dirs.locked {
+      val m = marker(root, name)
+      val key = (fingerprint(d) +: args).mkString("|")
+      val fresh = reuse && Files.exists(Paths.get(root, name, "_SUCCESS")) &&
+        Files.exists(m) && Files.readString(m) == key
+      if (!fresh) {
+        Files.deleteIfExists(m)
+        write
+        Files.writeString(m, key)
+      }
     }
-  }
 
   /** The coarse-quantizer tree of corpus `d` (or its 1-in-`prime`
     * stratum) under `rootFor(d, prime, variant)`, through the [[gate]];
@@ -344,8 +330,7 @@ object AnnIndex {
     }
 
   /** Variant tag for the k-means tree: the historical `km` at the
-    * default seed count, `km<k>` otherwise — distinct trees per k, all
-    * swept by cleanup()'s generic variant pattern.
+    * default seed count, `km<k>` otherwise — one tree per k.
     */
   private[graft] def kmVariant(k: Int): String =
     if (k == nCodes) "km" else s"km$k"
@@ -866,9 +851,7 @@ object AnnIndex {
     * must not serve a stale index — the parquet FOOTER sits in the tail
     * sample and carries row-group statistics, so same-shape different
     * content changes the digest). Bounded: ≤ 8 KiB read per part file,
-    * never a data scan. The head of every artifact key in [[gate]] (the
-    * key also disambiguates two paths that sanitize to the same root
-    * tag).
+    * never a data scan. The head of every artifact key in [[gate]].
     */
   private[graft] def fingerprint(d: String): String = {
     def walk(f: java.io.File): Seq[java.io.File] =
@@ -895,48 +878,5 @@ object AnnIndex {
       }
     }
     md.digest().map("%02x".format(_)).mkString
-  }
-
-  /** One-shot JVM-startup sweep: delete `graft_ivfidx_*` tmpdir trees
-    * whose pid suffix no longer names a live process — crashed runs
-    * otherwise leak them forever (no later process shares the pid key).
-    */
-  private lazy val sweepStale: Unit = {
-    val tmp = new java.io.File(sys.props("java.io.tmpdir"))
-    val mine = ProcessHandle.current().pid()
-    Option(tmp.listFiles()).getOrElse(Array.empty).foreach { f =>
-      if (f.getName.startsWith("graft_ivfidx_")) {
-        val pid = f.getName.reverse.takeWhile(_.isDigit).reverse
-        if (pid.nonEmpty && pid.length < 18 && pid.toLong != mine) {
-          val h = ProcessHandle.of(pid.toLong)
-          if (!h.isPresent || !h.get().isAlive)
-            graft.util.Dirs.deleteRecursively(f)
-        }
-      }
-    }
-  }
-
-  /** Drop the persisted artifacts for `d` — the full root and EVERY
-    * stratum-twin root regardless of prime (r16 ADVICE: the old
-    * hardcoded Seq(None, Some(41)) silently leaked any other-prime
-    * index). Matches this process's roots only (`_p<pid>` suffix), with
-    * an exact-tag guard so a corpus whose sanitized tag is a PREFIX of
-    * another's (sf1 vs sf1h) never deletes its neighbor. Idempotent.
-    */
-  def cleanup(d: String): Unit = synchronized {
-    val tag = d.replaceAll("[^A-Za-z0-9]", "_")
-    val pid = ProcessHandle.current().pid()
-    val plain = s"graft_ivfidx_${tag}_p$pid"
-    // optional stratum suffix, then optional variant suffix matching the
-    // GENERIC alphabet rootFor enforces (r19 ADVICE: the old `_km`
-    // literal left any future variant un-swept), then this process's pid
-    val strat = (java.util.regex.Pattern.quote(s"graft_ivfidx_$tag") +
-      "(_s\\d+)?(_[a-z][a-z0-9]*)?_p" + pid).r
-    val tmp = new java.io.File(sys.props("java.io.tmpdir"))
-    Option(tmp.listFiles()).getOrElse(Array.empty).foreach { f =>
-      val n = f.getName
-      if (n == plain || strat.matches(n))
-        graft.util.Dirs.deleteRecursively(f)
-    }
   }
 }

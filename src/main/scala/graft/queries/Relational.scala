@@ -38,30 +38,22 @@ object Relational {
       s"((($x >> $b) & 1) << ${2 * b}) + ((($y >> $b) & 1) << ${2 * b + 1})"
     }.mkString(" + ")
 
-  /** Collision-free per-data-dir tag for the layout queries' table and
-    * tmpdir names: the sanitized path itself, NOT a 32-bit hash — two
-    * different data dirs colliding on `hashCode` would silently overwrite
-    * each other's bucketed tables mid-suite.
+  /** Catalog name of the layout table `name` that `q_bucketed_join`
+    * writes for corpus `d`; its parquet lives in the corpus dir
+    * [[graft.util.Dirs]] owns and removes.
     */
-  private[graft] def layoutTag(d: String): String =
-    d.replaceAll("[^A-Za-z0-9]", "_")
+  private[graft] def layoutTable(d: String, name: String): String =
+    s"graft_bkt_${name}_${graft.util.Dirs.corpusKey(d)}"
 
-  /** Drop the layout artifacts `q_bucketed_join` / `q_partition_prune`
-    * leave behind for `d` (catalog tables + tmpdir parquet). Idempotent;
-    * call after their results are MATERIALIZED (the returned DataFrames
-    * read through the catalog, so dropping earlier would break them).
+  /** Drop the catalog tables `q_bucketed_join` registers for `d`.
+    * Idempotent; call after its results are MATERIALIZED (the returned
+    * DataFrames read through the catalog, so dropping earlier would break
+    * them).
     */
-  private[graft] def layoutCleanup(s: org.apache.spark.sql.SparkSession,
-      d: String): Unit = {
-    val tag = layoutTag(d)
-    s.sql(s"DROP TABLE IF EXISTS graft_bkt_orders_$tag")
-    s.sql(s"DROP TABLE IF EXISTS graft_bkt_customer_$tag")
-    val rm = graft.util.Dirs.deleteRecursively _
-    Seq(s"graft_bucketed_$tag", s"graft_part_$tag").foreach { n =>
-      val f = new java.io.File(sys.props("java.io.tmpdir"), n)
-      if (f.exists()) rm(f)
-    }
-  }
+  private[graft] def dropLayoutTables(s: org.apache.spark.sql.SparkSession,
+      d: String): Unit =
+    Seq("orders", "customer").foreach(n =>
+      s.sql(s"DROP TABLE IF EXISTS ${layoutTable(d, n)}"))
 
   val queries: Map[String, Q] = Map(
     // TPC-H-Q1-shaped pricing summary: scan → filter → partial+final agg.
@@ -946,10 +938,10 @@ object Relational {
     // Money sums go through decimal(18,4) (order-independent — the
     // q_star_join discipline).
     "q_bucketed_join" -> ((s, d) => {
-      val tag = layoutTag(d)
-      val base = s"${sys.props("java.io.tmpdir")}/graft_bucketed_$tag"
-      val ot = s"graft_bkt_orders_$tag"
-      val ct = s"graft_bkt_customer_$tag"
+      val base = new java.io.File(graft.util.Dirs.corpus(d), "bucketed")
+        .getAbsolutePath
+      val ot = layoutTable(d, "orders")
+      val ct = layoutTable(d, "customer")
       s.sql(s"DROP TABLE IF EXISTS $ot")
       s.sql(s"DROP TABLE IF EXISTS $ct")
       t(s, d, "orders").select("o_custkey", "o_totalprice")
@@ -977,8 +969,8 @@ object Relational {
     // pruning (selectedPartitions == 2 of 5); the oracle checks the same
     // aggregate as a WHERE over the unpartitioned table.
     "q_partition_prune" -> ((s, d) => {
-      val tag = layoutTag(d)
-      val base = s"${sys.props("java.io.tmpdir")}/graft_part_$tag/orders"
+      val base = new java.io.File(graft.util.Dirs.corpus(d), "part/orders")
+        .getAbsolutePath
       t(s, d, "orders").write.mode("overwrite")
         .partitionBy("o_orderpriority").parquet(base)
       s.read.parquet(base)

@@ -20,102 +20,39 @@ import graft.queries.Tables.{dupsSql, minhashPairCtesSql, normTextSql}
   * (window×type, session_window×user) shuffle once; state lives in the
   * state store partitioned by key — the same layout a 1000-executor
   * cluster uses.
+  *
+  * The `st_*` corpus entries stage their input tree once per corpus per
+  * JVM through `graft.util.Dirs.staged` (the tree is a pure function of
+  * corpus and entry, so every rep reuses it), and run the stream's
+  * checkpoint and output in nonce dirs, so each invocation still measures
+  * a full re-ingest. `Dirs` owns where those trees live and when they die.
   */
 object EventStreams {
 
-  /** Process-level cache of STAGED INPUT trees for the `st_*` corpus
-    * entries (VERDICT r13 ask #7): the three ledgers re-staged their
-    * input corpora on every invocation, so a bench run (warm pass + 2
-    * reps) paid each corpus write three times. The staged tree is a pure
-    * function of (entry kind, corpus dir, stratification) over immutable
-    * testdata, so one tree per key per JVM serves every rep — only the
-    * checkpoint/output dirs stay nonce-fresh (each invocation still
-    * measures a FULL re-ingest of the stream, which is the declared
-    * semantics). Keys are pid-suffixed so two driver rounds benching the
-    * same corpus concurrently (separate JVMs) never share half-written
-    * trees; a JVM shutdown hook removes the cached dirs.
+  /** State-partition count of the three corpus ledger streams
+    * (`st_ingest_shards`, `st_neardup_ingest`, `st_sessionize`), fixed at
+    * query start from `spark.sql.shuffle.partitions`. Their state is
+    * KB-scale (bounded by the watermark horizon, not the corpus), and every
+    * micro-batch commits one state-store delta + WAL entry PER PARTITION —
+    * pure fixed cost at this state volume (probe: ~55-70 ms commit per
+    * instance per batch at 8). A real deployment sizes state partitions to
+    * its own state VOLUME; the public stream builders take the session's
+    * width and never see this one.
     */
-  private object StagedInputs {
-    // per-key LATCH map, not a coarse lock around the staging job: the
-    // Spark staging write runs OUTSIDE any monitor (holding a lock
-    // through a Spark action would serialize staging of UNRELATED keys
-    // and could deadlock if a stage callback re-entered dirFor), and
-    // the completed dir is published via the future. The brief
-    // synchronized sections only install/read the promise.
-    private val cache = scala.collection.mutable.HashMap
-      .empty[String, scala.concurrent.Promise[java.io.File]]
-    private val pid = ProcessHandle.current().pid()
-    Runtime.getRuntime.addShutdownHook(new Thread(() => {
-      val done = cache.synchronized {
-        cache.values.flatMap(_.future.value).collect {
-          case scala.util.Success(d) => d
-        }.toList
-      }
-      done.foreach(graft.util.Dirs.deleteRecursively)
-    }))
-    /** Staged dir for `key`; `stage` runs exactly once per key per JVM
-      * (concurrent callers of the same key block on the first caller's
-      * future; different keys stage in parallel).
-      */
-    def dirFor(key: String)(stage: java.io.File => Unit): java.io.File = {
-      val (p, mine) = cache.synchronized {
-        cache.get(key) match {
-          case Some(existing) => (existing, false)
-          case None =>
-            val fresh = scala.concurrent.Promise[java.io.File]()
-            cache.put(key, fresh)
-            (fresh, true)
-        }
-      }
-      if (mine) {
-        try {
-          val dir = new java.io.File(sys.props("java.io.tmpdir"),
-            s"graft_stage_${key}_p$pid")
-          // a stale tree from a crashed previous staging attempt in THIS
-          // dir name can only come from this pid — wipe and re-stage
-          graft.util.Dirs.deleteRecursively(dir)
-          dir.mkdirs()
-          stage(dir)
-          p.success(dir)
-        } catch {
-          case e: Throwable =>
-            // failed staging must not poison the key for the JVM's
-            // lifetime — drop the promise so a later caller retries
-            cache.synchronized { cache.remove(key) }
-            p.failure(e)
-            throw e
-        }
-      }
-      scala.concurrent.Await.result(p.future,
-        scala.concurrent.duration.Duration(10, "min"))
-    }
-    def keyTag(d: String): String = d.replaceAll("[^A-Za-z0-9]", "_")
-  }
-
-  /** State-partition count for the ledger streams (fixed at query start
-    * from `spark.sql.shuffle.partitions`). The state here is KB-scale
-    * (bounded by the watermark horizon, not the corpus), and every
-    * micro-batch commits one state-store delta + WAL entry PER PARTITION
-    * — pure fixed cost at this state volume (probe: ~55-70 ms commit per
-    * instance per batch at 8). A real deployment sizes state partitions
-    * to state VOLUME (the r13 scoping rationale, taken to its measured
-    * floor); this stays a session conf so that deployment sets it to its
-    * own volume — `spark.graft.stream.statePartitions`, default 2.
-    */
-  private def statePartitions(s: org.apache.spark.sql.SparkSession): String =
-    s.conf.getOption("spark.graft.stream.statePartitions").getOrElse("2")
+  private val StatePartitions = 2
 
   /** Runs `body` with `spark.sql.shuffle.partitions` set to
-    * [[statePartitions]] — the state-partition count a stream fixes at
+    * [[StatePartitions]] — the state-partition count a stream fixes at
     * query start — and restores the previous value on every exit path,
-    * including a throw. The scope is intra-process only: queries in one
-    * Verify/Bench session run sequentially, and a concurrent run is a
-    * separate JVM with its own SparkSession (no shared conf to race).
+    * including a throw. Only the corpus ledger entries run inside it. The
+    * scope is intra-process only: queries in one Verify/Bench session run
+    * sequentially, and a concurrent run is a separate JVM with its own
+    * SparkSession (no shared conf to race).
     */
   private def withStatePartitions[T](s: org.apache.spark.sql.SparkSession)(
       body: => T): T = {
     val prev = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", statePartitions(s))
+    s.conf.set("spark.sql.shuffle.partitions", StatePartitions.toString)
     try body finally s.conf.set("spark.sql.shuffle.partitions", prev)
   }
 
@@ -587,7 +524,7 @@ object EventStreams {
     * xxhash64. Ingest ts is a constant — every row inside one watermark
     * horizon, so no file-arrival order can make a row "late" and drop it
     * (determinism across reruns). The staged INPUT tree is cached per
-    * corpus per JVM (StagedInputs); checkpoint/output dirs are wiped per
+    * corpus per JVM (Dirs.staged); checkpoint/output dirs are wiped per
     * invocation, so the query measures a FULL re-ingest, not checkpoint
     * recovery (that path is IngestPipelineSpec's kill/restart proof).
     */
@@ -602,10 +539,9 @@ object EventStreams {
     // re-ingest
     // (checkpoint recovery is IngestPipelineSpec's kill/restart proof).
     graft.util.Dirs.withNonceDir("graft_ingest_") { root =>
-      // staged input reused across invocations (StagedInputs); out/ck
+      // staged input reused across invocations (Dirs.staged); out/ck
       // stay nonce-fresh so every invocation measures a full re-ingest
-      val srcDir = StagedInputs.dirFor(
-          s"ingest_${StagedInputs.keyTag(d)}") { dir =>
+      val srcDir = graft.util.Dirs.staged(d, "ingest") { dir =>
         graft.queries.Dedup.corpusWithDups(s, d)
           .select(col("doc_id"),
             timestamp_seconds(lit(1700000000L)).as("ts"), col("text"))
@@ -663,14 +599,23 @@ object EventStreams {
       Seq((-1L - i, new Timestamp((t0 + off) * 1000L), "", ""))
         .toDF("doc_id", "ts", "text", "lang")
         .coalesce(1).write.mode("overwrite").parquet(stage.getAbsolutePath)
-      val part = Option(stage.listFiles()).getOrElse(Array.empty[java.io.File])
-        .find(_.getName.startsWith("part-"))
-        .getOrElse(throw new IllegalStateException("no sentinel part file"))
-      val dst = new java.io.File(srcDir, s"zz_sentinel_$i.parquet")
-      java.nio.file.Files.move(part.toPath, dst.toPath)
-      dst.setLastModified(System.currentTimeMillis() + (i + 1) * 60000L)
-      graft.util.Dirs.deleteRecursively(stage)
+      moveIn(stage, new java.io.File(srcDir, s"zz_sentinel_$i.parquet"),
+        System.currentTimeMillis() + (i + 1) * 60000L)
     }
+  }
+
+  /** Moves the one part file of the single-partition Spark write `stage`
+    * to `dst`, sets its mtime (the file source replays files in mtime
+    * order) and deletes the stage dir.
+    */
+  private def moveIn(stage: java.io.File, dst: java.io.File,
+      mtime: Long): Unit = {
+    val part = Option(stage.listFiles()).getOrElse(Array.empty[java.io.File])
+      .find(_.getName.startsWith("part-"))
+      .getOrElse(throw new IllegalStateException(s"no part file in $stage"))
+    java.nio.file.Files.move(part.toPath, dst.toPath)
+    dst.setLastModified(mtime)
+    graft.util.Dirs.deleteRecursively(stage)
   }
 
   /** `st_neardup_ingest`: the streaming NEAR-dup pipeline as a corpus
@@ -684,7 +629,7 @@ object EventStreams {
     * makes the output exactly DuckDB-replayable: dropped = the distinct
     * greater-side ids of the SAME pair listing `d_minhash_lsh`
     * hash-oracles. The staged input tree is cached per (corpus, stratum)
-    * per JVM (StagedInputs); checkpoint/drop dirs are nonce-keyed and
+    * per JVM (Dirs.staged); checkpoint/drop dirs are nonce-keyed and
     * removed after the bounded per-lang extract (the st_ingest_shards
     * discipline).
     */
@@ -696,15 +641,15 @@ object EventStreams {
       val ckDir = s"${root.getAbsolutePath}/ck"
       val t0 = 1700000000L
       // staged input (corpus + late sentinels) reused across invocations
-      // (StagedInputs — relative mtime order is what the file source
+      // (Dirs.staged — relative mtime order is what the file source
       // sorts by, preserved in reuse); out/ck stay nonce-fresh.
       // Batch count is the fixed-overhead knob (one state-store delta
       // commit per partition per micro-batch): 2 corpus files +
       // maxFilesPerTrigger=2 → one corpus batch + one sentinel batch,
       // ~2× cheaper than 1-file-per-trigger while still exercising
       // cross-batch state accumulation
-      val srcDir = StagedInputs.dirFor(
-          s"neardup_${StagedInputs.keyTag(d)}_${stratum.getOrElse(0)}") { dir =>
+      val srcDir = graft.util.Dirs.staged(
+          d, s"neardup_${stratum.getOrElse(0)}") { dir =>
         graft.queries.Dedup.corpusWithDups(s, d, stratum)
           .select(col("doc_id"), timestamp_seconds(lit(t0)).as("ts"),
             col("text"), col("lang"))
@@ -769,7 +714,7 @@ object EventStreams {
     * over `epoch_us(ts) // 1000` with the identical > gap rule, and
     * durations stay exact integers at any volume. Gap = 12 h (the corpus
     * event density makes 30-min sessions all singletons). The staged
-    * slice tree is cached per corpus per JVM (StagedInputs); checkpoint/
+    * slice tree is cached per corpus per JVM (Dirs.staged); checkpoint/
     * output dirs are nonce-keyed and removed after the bounded extract.
     */
   /** Chronological slice staging for the session stream: the corpus cut
@@ -794,22 +739,14 @@ object EventStreams {
     val (t0us, t1us) = (b.getLong(0), b.getLong(1))
     val slices = 4
     val width = (t1us - t0us) / slices + 1
-    def moveIn(stage: java.io.File, name: String, mtime: Long): Unit = {
-      val part = Option(stage.listFiles()).getOrElse(Array.empty[java.io.File])
-        .find(_.getName.startsWith("part-"))
-        .getOrElse(throw new IllegalStateException("no staged part file"))
-      val dst = new java.io.File(srcDir, name)
-      java.nio.file.Files.move(part.toPath, dst.toPath)
-      dst.setLastModified(mtime)
-      graft.util.Dirs.deleteRecursively(stage)
-    }
     val now = System.currentTimeMillis()
     for (i <- 0 until slices) {
       val stage = new java.io.File(root, s"stage_$i")
       ev.filter(unix_micros(col("ts")) >= t0us + i * width &&
           unix_micros(col("ts")) < t0us + (i + 1) * width)
         .coalesce(1).write.mode("overwrite").parquet(stage.getAbsolutePath)
-      moveIn(stage, f"slice_$i%02d.parquet", now + (i + 1) * 1000L)
+      moveIn(stage, new java.io.File(srcDir, f"slice_$i%02d.parquet"),
+        now + (i + 1) * 1000L)
     }
     for (i <- 0 until 2) {
       val stage = new java.io.File(root, s"sent_$i")
@@ -817,7 +754,8 @@ object EventStreams {
       Seq((-1L - i, new Timestamp(sentUs / 1000L), -1L - i, "", 0.0))
         .toDF("event_id", "ts", "user_id", "event_type", "value")
         .coalesce(1).write.mode("overwrite").parquet(stage.getAbsolutePath)
-      moveIn(stage, s"zz_sentinel_$i.parquet", now + 100000L + i * 60000L)
+      moveIn(stage, new java.io.File(srcDir, s"zz_sentinel_$i.parquet"),
+        now + 100000L + i * 60000L)
     }
   }
 
@@ -826,11 +764,10 @@ object EventStreams {
     val gapMs = 12L * 3600 * 1000
     graft.util.Dirs.withNonceDir("graft_sess_") { root =>
       import s.implicits._
-      // staged slice tree reused across invocations (StagedInputs — the
+      // staged slice tree reused across invocations (Dirs.staged — the
       // chronological mtime order the slice replay depends on is
       // relative, so reuse preserves it); out/ck stay nonce-fresh
-      val srcDir = StagedInputs.dirFor(
-          s"sess_${StagedInputs.keyTag(d)}") { dir =>
+      val srcDir = graft.util.Dirs.staged(d, "sess") { dir =>
         graft.util.Dirs.withNonceDir("graft_sess_stage_") { scratch =>
           stageEventSlices(s, scratch, dir, d, gapMs)
         }

@@ -1,8 +1,8 @@
 package graft
 
-/** Shared tmpdir bookkeeping for the specs that assert nonce-work-dir
-  * cleanup (the Dirs.withNonceDir sites): snapshot the matching dir
-  * names before the exercise, diff after. One body, one prefix
+/** Shared bookkeeping for the specs that assert nonce-work-dir cleanup
+  * (the Dirs.withNonceDir sites): snapshot the matching dir names under
+  * the process root before the exercise, diff after. One body, one prefix
   * parameter — the PretrainBuild/NearDupStream copies had already
   * started to drift.
   *
@@ -14,7 +14,7 @@ package graft
   */
 object TestDirs {
   def nonceDirs(prefix: String): Set[String] =
-    Option(new java.io.File(sys.props("java.io.tmpdir")).listFiles())
+    Option(graft.util.Dirs.root.listFiles())
       .getOrElse(Array.empty)
       .collect { case f if f.getName.startsWith(prefix) => f.getName }
       .toSet

@@ -19,7 +19,7 @@ class AnnIndexGateSpec extends SparkSpec with BeforeAndAfterAll {
 
   private val sf = TestSpark.sf0001
 
-  override def afterAll(): Unit = AnnIndex.cleanup(sf)
+  override def afterAll(): Unit = graft.util.Dirs.cleanup(sf)
 
   private val merged = Seq("vectors", "vectors_delta")
 

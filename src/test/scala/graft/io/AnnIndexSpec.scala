@@ -19,8 +19,8 @@ class AnnIndexSpec extends SparkSpec with BeforeAndAfterAll {
   private val sf = TestSpark.sf0001
 
   override def afterAll(): Unit = {
-    AnnIndex.cleanup(sf)
-    AnnIndex.cleanup(TestSpark.sf001)
+    graft.util.Dirs.cleanup(sf)
+    graft.util.Dirs.cleanup(TestSpark.sf001)
   }
 
   private def scans(p: org.apache.spark.sql.execution.SparkPlan):
@@ -65,7 +65,8 @@ class AnnIndexSpec extends SparkSpec with BeforeAndAfterAll {
     // values re-enter here as local relations, so a base-table scan in
     // this span would be a regression.
     val locs = all.map(_.metadata("Location"))
-    assert(locs.forall(_.contains("graft_ivfidx")), locs.mkString("; "))
+    val root = AnnIndex.rootFor(sf).getAbsolutePath + "/"
+    assert(locs.forall(_.contains(root)), locs.mkString("; "))
     assert(!locs.exists(_.contains("embeddings")),
       "query span re-scans the base table; the batch is probe-extract-local")
     val vecScans = all.filter(_.metadata("Location").contains("vectors"))
@@ -139,7 +140,8 @@ class AnnIndexSpec extends SparkSpec with BeforeAndAfterAll {
     assert(out.length == AnnIndex.batch * AnnIndex.topK)
     val all = scans(df.queryExecution.executedPlan)
     val locs = all.map(_.metadata("Location"))
-    assert(locs.forall(l => l.contains("graft_ivfidx") ||
+    val root = AnnIndex.rootFor(sf).getAbsolutePath + "/"
+    assert(locs.forall(l => l.contains(root) ||
       l.contains("embeddings")), locs.mkString("; "))
     // the probe list lands as a literal partition filter on EVERY
     // segment scan — base and delta alike (per-probe cost = one

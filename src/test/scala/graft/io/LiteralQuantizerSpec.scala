@@ -20,7 +20,7 @@ class LiteralQuantizerSpec extends SparkSpec with BeforeAndAfterAll {
 
   private val sf = TestSpark.sf0001
 
-  override def afterAll(): Unit = AnnIndex.cleanup(sf)
+  override def afterAll(): Unit = graft.util.Dirs.cleanup(sf)
 
   test("literal-form build == broadcast-join argmax formulation, every row") {
     val s = spark

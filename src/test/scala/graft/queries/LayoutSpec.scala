@@ -25,10 +25,10 @@ class LayoutSpec extends SparkSpec
 
   private val sf = TestSpark.sf0001
 
-  // the layout queries leave catalog tables + tmpdir parquet behind by
-  // design; tear them down once the suite's plan assertions are done
+  // the layout queries leave catalog tables + corpus-dir parquet behind
+  // by design; tear them down once the suite's plan assertions are done
   override def afterAll(): Unit = {
-    try Relational.layoutCleanup(spark, sf)
+    try graft.SparkEntry.cleanup(spark, sf)
     finally super.afterAll()
   }
 
@@ -36,12 +36,11 @@ class LayoutSpec extends SparkSpec
     // running the corpus query writes both bucketed tables (and checks rows)
     val corpus = Relational.queries("q_bucketed_join")(spark, sf).collect()
     assert(corpus.nonEmpty)
-    val tag = Relational.layoutTag(sf)
     val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try {
-      val o = spark.table(s"graft_bkt_orders_$tag")
-      val c = spark.table(s"graft_bkt_customer_$tag")
+      val o = spark.table(Relational.layoutTable(sf, "orders"))
+      val c = spark.table(Relational.layoutTable(sf, "customer"))
       val joined = o.join(c, o("o_custkey") === c("c_custkey"))
       val plan = joined.queryExecution.sparkPlan.toString
       assert(plan.contains("SortMergeJoin"), plan)
@@ -63,8 +62,8 @@ class LayoutSpec extends SparkSpec
   test("q_partition_prune: scan selects only the 2 matching partition dirs of 5") {
     // running the corpus query writes the partitioned layout
     assert(Relational.queries("q_partition_prune")(spark, sf).collect().length == 2)
-    val tag = Relational.layoutTag(sf)
-    val base = s"${sys.props("java.io.tmpdir")}/graft_part_$tag/orders"
+    val base = new java.io.File(graft.util.Dirs.corpus(sf), "part/orders")
+      .getAbsolutePath
     val filtered = spark.read.parquet(base)
       .filter(col("o_orderpriority").isin("1-URGENT", "2-HIGH"))
       .select("o_totalprice")

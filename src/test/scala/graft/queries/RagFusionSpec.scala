@@ -62,7 +62,7 @@ class RagFusionSpec extends SparkSpec {
       assert(doc1Row.getAs[Double]("rrf") == expected,
         s"expected fused rrf $expected, got ${doc1Row.getAs[Double]("rrf")}")
     } finally {
-      graft.io.AnnIndex.cleanup(dir)
+      graft.util.Dirs.cleanup(dir)
       graft.util.Dirs.deleteRecursively(new java.io.File(dir))
     }
   }
