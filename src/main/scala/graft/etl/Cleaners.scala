@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StringType
 
+import graft.util.Columns
+
 /** The reference's cleaning-function library re-expressed as pure built-in
   * `Column` expressions over lazy plans
   * (`/root/reference/src/multi_source_ad_etl/data_clean_lib.py`). Cleaners
@@ -35,7 +37,7 @@ object Cleaners {
       s"""cleaner clean_x_avg_frequency: column "$c" not found """ +
         s"(columns: ${df.columns.mkString(", ")})")
     if (df.schema(c).dataType == StringType)
-      df.withColumn(c, when(col(s"`$c`") === "-", lit("0")).otherwise(col(s"`$c`")))
+      df.withColumn(c, when(Columns.named(c) === "-", lit("0")).otherwise(Columns.named(c)))
     else df
   }
 
@@ -45,7 +47,7 @@ object Cleaners {
     */
   val removeTiktokTotalRow: DataFrame => DataFrame = { df =>
     val totalCol = df.columns(1)
-    MultiSourceAdEtl.removeRows(df, df(totalCol).cast(StringType).startsWith("Total"))
+    MultiSourceAdEtl.removeRows(df, Columns.named(totalCol).cast(StringType).startsWith("Total"))
   }
 
   /** Strip a literal `.mp4` suffix from ad names (only when present).
@@ -53,7 +55,7 @@ object Cleaners {
     * anchored, escaped regex is the equivalent (SURVEY E2).
     */
   val stripTiktokMp4Suffix: DataFrame => DataFrame = { df =>
-    df.withColumn("Ad name", regexp_replace(col("`Ad name`"), "\\.mp4$", ""))
+    df.withColumn("Ad name", regexp_replace(Columns.named("Ad name"), "\\.mp4$", ""))
   }
 
   private val AgeGenderCol = "연령 및 성별"
@@ -95,7 +97,7 @@ object Cleaners {
       .otherwise(lit("unknown"))
 
     df.withColumn(NormCol,
-        trim(regexp_replace(col(s"`$AgeGenderCol`").cast(StringType), "\\s+", " ")))
+        trim(regexp_replace(Columns.named(AgeGenderCol).cast(StringType), "\\s+", " ")))
       .withColumn(AgeStrCol, regexp_replace(regexp_replace(s, "[~–—]", "-"), "\\s*세\\s*", ""))
       .withColumn("연령", age).withColumn("성", gender)
       .drop(NormCol, AgeStrCol, AgeGenderCol)

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.io.Sources
+import graft.util.Columns
 
 /** A raw frame (one group of same-shaped files, or one XLSX file) tagged
   * with its detected source. The engine carries the
@@ -67,7 +68,7 @@ final class MultiSourceAdEtl(val config: EtlConfig) {
   def assignSource(dfs: Seq[DataFrame]): Seq[Sourced] =
     dfs.map { df =>
       val src = detectSource(df)
-      val rest = df.columns.filter(_ != "Source").map(c => df(c))
+      val rest = df.columns.filter(_ != "Source").map(Columns.named)
       Sourced(src, df.withColumn("Source", lit(src)).select(col("Source") +: rest.toIndexedSeq: _*))
     }
 
@@ -134,7 +135,7 @@ object MultiSourceAdEtl {
   def conformTo(df: DataFrame, schema: org.apache.spark.sql.types.StructType): DataFrame = {
     val present = df.columns.toSet
     df.select(schema.fields.toIndexedSeq.map { f =>
-      val base = if (present.contains(f.name)) df(f.name) else lit(null)
+      val base = if (present.contains(f.name)) Columns.named(f.name) else lit(null)
       base.cast(f.dataType).as(f.name)
     }: _*)
   }

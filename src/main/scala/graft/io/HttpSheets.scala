@@ -6,7 +6,11 @@ import java.nio.charset.StandardCharsets.UTF_8
 import java.time.Duration
 
 import scala.jdk.CollectionConverters._
+import scala.util.Using
 
+import com.fasterxml.jackson.core.{JsonEncoding, JsonGenerator}
+import com.fasterxml.jackson.core.json.JsonWriteFeature
+import com.fasterxml.jackson.core.util.ByteArrayBuilder
 import com.fasterxml.jackson.databind.ObjectMapper
 
 /** HTTP transport for [[Sinks.SheetService]] over the public Google Sheets
@@ -36,6 +40,10 @@ final class HttpSheetService(
     retryBaseMs: Long = 200L) extends Sinks.SheetService {
 
   private val mapper = new ObjectMapper()
+  // the upload body's writer: a character outside the BMP as its 4 UTF-8
+  // bytes, as the JSON string's `getBytes(UTF_8)` encoded it (Jackson's
+  // byte writer escapes it as a surrogate pair by default)
+  private val bodyWriter = mapper.writer().`with`(JsonWriteFeature.COMBINE_UNICODE_SURROGATES_IN_UTF8)
 
   private def enc(s: String): String =
     URLEncoder.encode(s, UTF_8).replace("+", "%20")
@@ -80,28 +88,41 @@ final class HttpSheetService(
     * booleans as native JSON scalars, everything else as its string form —
     * mirroring the reference upload (`google_cloud_client.py:168-188`, where
     * dates are already Excel serials by the time rows reach the API).
+    * The body is streamed cell by cell into one UTF-8 byte array; no tree
+    * or `String` copy of the table is built. A decimal is written as the
+    * Jackson tree writes it: through the mapper's node factory, which drops
+    * trailing zeros.
     */
-  private def valuesJson(rows: Seq[Seq[Any]]): String = {
-    val root = mapper.createObjectNode()
-    val values = root.putArray("values")
-    rows.foreach { r =>
-      val row = values.addArray()
-      r.foreach {
-        case null                     => row.add("")
-        case v: Int                   => row.add(v)
-        case v: Long                  => row.add(v)
-        case v: Double                => row.add(v)
-        case v: Float                 => row.add(v)
-        case v: Short                 => row.add(v.toInt)
-        case v: Byte                  => row.add(v.toInt)
-        case v: java.math.BigDecimal  => row.add(v) // DecimalType collects as this
-        case v: scala.math.BigDecimal => row.add(v.bigDecimal)
-        case v: Boolean               => row.add(v)
-        case v                        => row.add(v.toString)
+  private[io] def valuesBody(rows: Seq[Seq[Any]]): Array[Byte] = {
+    val out = new ByteArrayBuilder()
+    Using.resource(bodyWriter.createGenerator(out, JsonEncoding.UTF8)) { g =>
+      g.writeStartObject()
+      g.writeArrayFieldStart("values")
+      rows.foreach { r =>
+        g.writeStartArray()
+        r.foreach {
+          case null                     => g.writeString("")
+          case v: Int                   => g.writeNumber(v)
+          case v: Long                  => g.writeNumber(v)
+          case v: Double                => g.writeNumber(v)
+          case v: Float                 => g.writeNumber(v)
+          case v: Short                 => g.writeNumber(v.toInt)
+          case v: Byte                  => g.writeNumber(v.toInt)
+          case v: java.math.BigDecimal  => writeDecimal(g, v) // DecimalType collects as this
+          case v: scala.math.BigDecimal => writeDecimal(g, v.bigDecimal)
+          case v: Boolean               => g.writeBoolean(v)
+          case v                        => g.writeString(v.toString)
+        }
+        g.writeEndArray()
       }
+      g.writeEndArray()
+      g.writeEndObject()
     }
-    mapper.writeValueAsString(root)
+    out.toByteArray
   }
+
+  private def writeDecimal(g: JsonGenerator, v: java.math.BigDecimal): Unit =
+    g.writeNumber(mapper.getNodeFactory.numberNode(v).decimalValue())
 
   override def clearRange(sheetKey: String, sheetName: String, a1Range: String): Unit =
     send(HttpRequest.newBuilder()
@@ -113,7 +134,7 @@ final class HttpSheetService(
     send(HttpRequest.newBuilder()
       .uri(java.net.URI.create(
         valuesUrl(sheetKey, sheetName, a1Range) + "?valueInputOption=RAW"))
-      .PUT(HttpRequest.BodyPublishers.ofString(valuesJson(rows))))
+      .PUT(HttpRequest.BodyPublishers.ofByteArray(valuesBody(rows))))
 
   override def get(sheetKey: String, sheetName: String, a1Range: String): Seq[Seq[String]] = {
     val body = send(HttpRequest.newBuilder()

@@ -2,6 +2,7 @@ package graft.io
 
 import java.io.StringWriter
 import java.nio.file.{Files, Paths, StandardCopyOption}
+import scala.collection.immutable.ArraySeq
 import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 import scala.util.Using
@@ -10,9 +11,9 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.catalyst.csv.{CSVOptions, UnivocityGenerator}
 import org.apache.spark.sql.classic.ClassicConversions.castToImpl
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DateType
+import org.apache.spark.sql.types.{DateType, StringType}
 
-import graft.util.A1
+import graft.util.{A1, Columns}
 
 /** Output connectors (reference S5/S6 + E13 — SURVEY §2.1). */
 object Sinks {
@@ -93,8 +94,8 @@ object Sinks {
     val dateCols = df.schema.fields.filter(_.dataType == DateType).map(_.name).toSet
     if (dateCols.isEmpty) df
     else df.select(df.columns.toIndexedSeq.map { c =>
-      if (dateCols.contains(c)) datediff(df(c), to_date(lit("1899-12-30"))).cast("long").as(c)
-      else df(c)
+      if (dateCols.contains(c)) datediff(Columns.named(c), to_date(lit("1899-12-30"))).cast("long").as(c)
+      else Columns.named(c)
     }: _*)
   }
 
@@ -143,10 +144,35 @@ object Sinks {
     * (the reference relied on eager concat order; Spark guarantees none
     * without a sort — SURVEY §7.6). Callers with several sheet targets
     * collect once and fan the payload out via [[uploadPayload]].
+    *
+    * An ad report repeats a few dimension values on every row, so within
+    * each String column and each serial-day column every value is the first
+    * equal instance collected in that column: the payload holds one copy
+    * per distinct value instead of one per cell. Measure columns are nearly
+    * unique per row and are kept as collected.
     */
   def collectSheetPayload(df: DataFrame, orderBy: Seq[Column]): (Seq[Any], Seq[Seq[Any]]) = {
-    val serial = withExcelSerialDates(if (orderBy.nonEmpty) df.orderBy(orderBy: _*) else df)
-    (serial.columns.toSeq, serial.collect().map(_.toSeq).toSeq)
+    val ordered = if (orderBy.nonEmpty) df.orderBy(orderBy: _*) else df
+    // withExcelSerialDates keeps every column at its position
+    val pools = ordered.schema.fields.map { f =>
+      if (f.dataType == StringType || f.dataType == DateType) new java.util.HashMap[Any, Any] else null
+    }
+    val serial = withExcelSerialDates(ordered)
+    val rows = serial.collect().map { r =>
+      val cells = new Array[Any](pools.length)
+      var i = 0
+      while (i < cells.length) {
+        val v = r.get(i)
+        val pool = pools(i)
+        cells(i) = if (v == null || pool == null) v else {
+          val first = pool.putIfAbsent(v, v)
+          if (first == null) v else first
+        }
+        i += 1
+      }
+      ArraySeq.unsafeWrapArray(cells)
+    }
+    (serial.columns.toSeq, ArraySeq.unsafeWrapArray(rows))
   }
 
   /** Clear the column range then upload header + rows (driver-side only). */

@@ -11,7 +11,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.util.A1
+import graft.util.{A1, Columns}
 
 /** Minimal XLSX source (reference S2, `multi_source_ad_etl.py:102`) built on
   * the JDK only — zip + StAX — since no spreadsheet connector resolves
@@ -79,7 +79,7 @@ object Xlsx {
     val casts = header.zipWithIndex.map { case (name, i) =>
       val values = rows.flatMap(r => Option(r(i))).filter(_.nonEmpty)
       val dt = inferType(values)
-      val c0 = asStrings(s"`$name`")
+      val c0 = Columns.named(name)
       // empty-string cells survive as "" in string columns, but must become
       // null before a strict (ANSI) cast to a typed column
       val c = if (dt == StringType) c0 else when(c0 === "", lit(null)).otherwise(c0)

@@ -1,7 +1,7 @@
 package graft.util
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.functions.{col, date_format, max, min}
+import org.apache.spark.sql.functions.{date_format, max, min}
 import org.apache.spark.sql.types.{DateType, StructType}
 
 /** Spreadsheet A1-range math and date-range filenames (reference M4–M6,
@@ -82,8 +82,8 @@ object A1 {
     * other aggregates it wants from the same job.
     */
   def dateBounds(dateCol: String): Seq[Column] = Seq(
-    date_format(min(col(s"`$dateCol`")), "yyyy-MM-dd"),
-    date_format(max(col(s"`$dateCol`")), "yyyy-MM-dd"))
+    date_format(min(Columns.named(dateCol)), "yyyy-MM-dd"),
+    date_format(max(Columns.named(dateCol)), "yyyy-MM-dd"))
 
   /** `"{prefix}_{min}–{max}.csv"` (EN-DASH separator, ref `utils.py:26`)
     * from the [[dateBounds]] values; errors when `dateCol` held no non-null

@@ -1,9 +1,17 @@
 package graft.etl
 
-import java.nio.file.Files
+import java.nio.charset.StandardCharsets.UTF_8
+import java.nio.file.{Files, Paths}
 import java.sql.Date
 
+import scala.jdk.CollectionConverters._
+import scala.util.Using
+
 import graft.SparkSpec
+import graft.io.Sinks
+import graft.util.Columns
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types._
 
 /** End-to-end pipeline goldens over the synthetic fixture CSVs
@@ -169,5 +177,60 @@ class MultiSourceAdEtlSpec extends SparkSpec {
     val e = intercept[IllegalArgumentException] { engine.readTabularFiles(spark, empty.toString) }
     assert(e.getMessage.contains("No CSV or XLSX"))
     assert(e.getMessage.contains("notes.txt"))
+  }
+
+  private def sortedRows(df: DataFrame): Seq[String] =
+    df.collect().map(_.toSeq.mkString("|")).toSeq.sorted
+
+  test("an apsl Meta export with an extra dotted column (Avg. CPC) gives the same rows as without it") {
+    val src = Paths.get(Fixtures.materialize("apsl"))
+    val dir = Files.createTempDirectory("graft-dotted")
+    Using.resource(Files.list(src))(_.iterator().asScala.toSeq).foreach { f =>
+      val lines = Files.readAllLines(f, UTF_8).asScala.toSeq
+      val out =
+        if (f.getFileName.toString != "meta.csv") lines
+        else (lines.head + ",Avg. CPC") +: lines.tail.map(_ + ",0.34")
+      Files.write(dir.resolve(f.getFileName), out.mkString("\n").getBytes(UTF_8))
+    }
+    val engine = new MultiSourceAdEtl(Configs.apsl)
+    val plain = engine.run(spark, src.toString, capitalize = true)
+    val dotted = engine.run(spark, dir.toString, capitalize = true)
+    assert(dotted.columns.toSeq == plain.columns.toSeq)
+    assert(sortedRows(dotted) == sortedRows(plain))
+    assert(sortedRows(plain).length == 8)
+  }
+
+  test("standard-schema names holding a dot or a backtick get through clean, conform, CSV, file name and sheet payload") {
+    val config = EtlConfig(
+      sourceCriteria = Seq("Shop" -> Set("Report.day", "Ad `name`")),
+      renameMappings = Map("Shop" -> Map(
+        "Report.day" -> "Report.day", "Ad `name`" -> "Ad `name`", "Spend" -> "Spend.total (`KRW`)")),
+      standardSchema = StructType(Seq(
+        "Source" -> StringType, "Report.day" -> DateType, "Ad `name`" -> StringType,
+        "Avg. CPC" -> DoubleType, "Spend.total (`KRW`)" -> DoubleType)
+        .map { case (n, t) => StructField(n, t, nullable = true) }),
+      // keys on the stamped frame's 2nd column, here the dotted "Report.day"
+      cleaners = Map("Shop" -> Seq(Cleaners.removeTiktokTotalRow)))
+    val raw = Files.createTempDirectory("graft-quoted-raw")
+    Files.write(raw.resolve("shop.csv"), Seq(
+      "Report.day,Ad `name`,Spend,Avg. CPC",
+      "Total of 2 ads,,30.5,",
+      "2025-08-02,b `2`,20.0,0.5",
+      "2025-08-01,a.1,10.5,0.25").mkString("\n").getBytes(UTF_8))
+    val processed = Files.createTempDirectory("graft-quoted-out")
+    val svc = new Sinks.InMemorySheetService
+    val res = PipelineRunner.runAndExport(spark, config, raw.toString, capitalize = false,
+      processed.toString, "shop", Seq(col("Source"), Columns.named("Report.day")), svc,
+      Seq(PipelineRunner.SheetTarget("k", "s")))
+
+    assert(res.rowCount == 2)
+    assert(Paths.get(res.csvPath).getFileName.toString == "shop_2025-08-01–2025-08-02.csv")
+    assert(new String(Files.readAllBytes(Paths.get(res.csvPath)), UTF_8) ==
+      "\uFEFFSource,Report.day,Ad `name`,Avg. CPC,Spend.total (`KRW`)\n" +
+        "Shop,2025-08-01,a.1,0.25,10.5\nShop,2025-08-02,b `2`,0.5,20.0\n")
+    assert(svc.get("k", "s", "A1:E3") == Seq(
+      Seq("Source", "Report.day", "Ad `name`", "Avg. CPC", "Spend.total (`KRW`)"),
+      Seq("Shop", "45870", "a.1", "0.25", "10.5"),
+      Seq("Shop", "45871", "b `2`", "0.5", "20.0")))
   }
 }

@@ -173,4 +173,46 @@ class HttpSheetsSpec extends AnyFunSuite {
         Seq("Day", "Spend"), Seq("45870", "12.5"), Seq("45871", "9.0")))
     }
   }
+
+  /** The tree encoder the upload body was built with before it was
+    * streamed, kept as the reference for the streamed bytes.
+    */
+  private def treeBody(rows: Seq[Seq[Any]]): Array[Byte] = {
+    val root = mapper.createObjectNode()
+    val values = root.putArray("values")
+    rows.foreach { r =>
+      val row = values.addArray()
+      r.foreach {
+        case null                     => row.add("")
+        case v: Int                   => row.add(v)
+        case v: Long                  => row.add(v)
+        case v: Double                => row.add(v)
+        case v: Float                 => row.add(v)
+        case v: Short                 => row.add(v.toInt)
+        case v: Byte                  => row.add(v.toInt)
+        case v: java.math.BigDecimal  => row.add(v)
+        case v: scala.math.BigDecimal => row.add(v.bigDecimal)
+        case v: Boolean               => row.add(v)
+        case v                        => row.add(v.toString)
+      }
+    }
+    mapper.writeValueAsString(root).getBytes(UTF_8)
+  }
+
+  test("the streamed upload body is byte-identical to the tree encoder's") {
+    val svc = new HttpSheetService("http://127.0.0.1:1", () => "t")
+    val rows = Seq(
+      Seq[Any]("Day", "지출 금액 (KRW)", "say \"hi\"", "a,b"),
+      Seq[Any](null, 7, -2147483648, 45870L, Long.MaxValue, 1.5, -0.0, 1e20, Double.NaN,
+        2.25f, 3.toShort, (-4).toByte, true, false),
+      Seq[Any](new java.math.BigDecimal("10.00"), new java.math.BigDecimal("0.000"),
+        new java.math.BigDecimal("123.4500"), new java.math.BigDecimal("-1E+3"),
+        BigDecimal("2.50"), BigDecimal("100"), BigDecimal("0.10")),
+      Seq[Any]("한글 \"인용\", 쉼표", "line\nbreak\ttab \\ slash", "😀", java.sql.Date.valueOf("2025-08-01")),
+      Seq.empty[Any])
+    val body = svc.valuesBody(rows)
+    assert(new String(body, UTF_8) == new String(treeBody(rows), UTF_8))
+    assert(body.sameElements(treeBody(rows)))
+    assert(svc.valuesBody(Nil).sameElements(treeBody(Nil)))
+  }
 }

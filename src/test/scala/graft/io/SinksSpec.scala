@@ -57,6 +57,33 @@ class SinksSpec extends SparkSpec {
     assert(rows == Seq(Seq("Day", "Clicks"), Seq("45870", "10"), Seq("45871", "20")))
   }
 
+  test("collectSheetPayload is the plain sorted serial-dated collect, one instance per distinct string and serial day per column") {
+    val df = (0 until 240).map { i =>
+      (if (i % 7 == 0) null else s"campaign ${i % 3}", s"ad $i",
+        if (i % 11 == 0) null else s"2025-08-0${i % 5 + 1}",
+        if (i % 13 == 0) None else Some(i * 1.25), (i * 37 % 240).toLong)
+    }.toDF("campaign", "ad", "day", "spend", "n")
+      .select(col("campaign"), col("ad"), col("day").cast(DateType).as("day"), col("spend"), col("n"))
+      .repartition(3)
+    val orderBy = Seq(col("n"))
+    val (header, payload) = Sinks.collectSheetPayload(df, orderBy)
+    val plain = Sinks.withExcelSerialDates(df.orderBy(orderBy: _*)).collect()
+
+    assert(header == Seq("campaign", "ad", "day", "spend", "n"))
+    assert(payload.length == 240 && payload.length == plain.length)
+    payload.zip(plain).foreach { case (got, want) => assert(got == want.toSeq) }
+    assert(payload.map(_(4)) == (0 until 240).map(_.toLong))
+    assert(payload.map(_(2)).collect { case d: java.lang.Long => d.longValue }.toSet ==
+      (45870L to 45874L).toSet)
+
+    // columns campaign, ad and day hold 3, 240 and 5 distinct non-null values
+    for ((c, distinct) <- Seq(0 -> 3, 1 -> 240, 2 -> 5)) {
+      val byValue = payload.map(_(c)).filter(_ != null).map(_.asInstanceOf[AnyRef]).groupBy(identity)
+      assert(byValue.size == distinct)
+      byValue.values.foreach(same => assert(same.forall(_ eq same.head), s"column $c: ${same.head}"))
+    }
+  }
+
   test("getDataFrame round-trips rows as an all-String frame (S4/S7)") {
     val svc = new Sinks.InMemorySheetService
     svc.update("k", "s", "A1:B3", Seq(Seq("h1", "h2"), Seq("a", "1"), Seq("b", "2")))
