@@ -11,24 +11,20 @@ object Bench {
   def main(args: Array[String]): Unit = {
     // the emitted JSON must be locale-independent (decimal point, not comma)
     java.util.Locale.setDefault(java.util.Locale.ROOT)
-    // one constant, two consumers (session input + the canary-append
-    // gate below): a drifted literal would silently stop history appends
-    val defaultSfDir = "/root/testdata/sf0.1"
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", defaultSfDir)
+    // the session's SF and the canary-append gate below read one
+    // constant: a drifted literal would silently stop history appends
+    import GraftSession.{defaultSfDir, keep, only, sfDir}
     // the warm pass's SF, next to the default bench SF
     val warmSfDir =
       java.nio.file.Paths.get(defaultSfDir).resolveSibling("sf0.001").toString
-    val spark = GraftSession.build(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
+    val spark = GraftSession.build()
 
     // Warm every query once at the smallest SF so measurements capture
     // steady-state plan cost (the number that scales to a real cluster),
     // not first-use JIT/codegen compilation — cold-vs-warm profiling showed
     // fixed ~2-5 s first-run overhead per query dwarfing actual plan time.
     // local-iteration filter, mirroring Verify: SPARK_GRAFT_ONLY=a,b times
-    // just those queries (driver never sets it)
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).toSet)
-    def keep(name: String) = only.forall(_.contains(name))
+    // just those queries
     val bench = SparkEntry.queries.filter(q => keep(q._1))
     // A warm failure is reported, never swallowed: an entry that fails
     // only at sf0.001 would otherwise be invisible.

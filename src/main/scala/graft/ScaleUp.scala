@@ -92,7 +92,7 @@ object ScaleUp {
     "embeddings" -> Seq("vec_id"))
 
   def main(args: Array[String]): Unit = {
-    val src = args.lift(0).getOrElse("/root/testdata/sf0.1")
+    val src = args.lift(0).getOrElse(GraftSession.defaultSfDir)
     val dst = args.lift(1).getOrElse("/tmp/sf1")
     val copies = args.lift(2).map(_.toInt).getOrElse(10)
     val files = args.lift(3).map(_.toInt).getOrElse(1)
@@ -103,7 +103,7 @@ object ScaleUp {
     val perturb = flags("perturb")
 
     val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
+      .master(s"local[${GraftSession.cpus}]")
       .appName("graft-scaleup")
       .config("spark.sql.shuffle.partitions", "32")
       .config("spark.sql.session.timeZone", "UTC")

@@ -6,15 +6,12 @@ import java.nio.file.{Files, Paths}
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val spark = GraftSession.build(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
+    val spark = GraftSession.build()
     new java.io.File(outDir).mkdirs()
     // local-iteration filter: SPARK_GRAFT_ONLY=a,b,c dumps just those
-    // queries (the driver never sets it, so its full-corpus run is
-    // unaffected); oracle_sql.json below is filtered the same way so
+    // queries; oracle_sql.json below is filtered the same way so
     // tools/check_oracle.py checks exactly the dumped subset
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).toSet)
-    def keep(name: String) = only.forall(_.contains(name))
+    import GraftSession.keep
     val failures = scala.collection.mutable.LinkedHashMap.empty[String, String]
     SparkEntry.queries.filter(q => keep(q._1)).foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")

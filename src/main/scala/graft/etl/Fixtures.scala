@@ -1,170 +1,30 @@
 package graft.etl
 
-import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Path, Paths}
+import java.nio.file.{Files, Paths}
 
-/** Deterministic synthetic raw ad-report CSVs reconstructed from the
-  * reference configs (FIXTURES.md — the reference ships no test data).
-  * Every platform quirk a cleaner exists for is represented: TikTok "Total"
-  * summary row + null second column, X `-` placeholder, `.mp4` ad names,
-  * Korean age/gender strings (incl. en-dash and spaced variants), dotted
-  * Naver dates.
+/** The checked-in raw ad-report CSV corpus under `fixtures/`, one directory
+  * per shipped pipeline in [[Configs.all]] (FIXTURES.md — the reference
+  * ships no test data). The directory is the only copy and is read-only:
+  * nothing here writes to it, and `FixturePinSpec` pins every byte.
   */
 object Fixtures {
 
-  private def write(dir: Path, name: String, lines: Seq[String]): Unit = {
-    val bytes = lines.mkString("\n").getBytes(StandardCharsets.UTF_8)
-    val target = dir.resolve(name)
-    // the fixtures are checked in: skip the write when the bytes already
-    // match, so a read-only checkout (or a pristine working tree) is fine
-    if (!(Files.exists(target) &&
-        java.util.Arrays.equals(Files.readAllBytes(target), bytes))) {
-      Files.createDirectories(dir)
-      Files.write(target, bytes)
-    }
-  }
-
-  /** apsl pipeline raw dir: 5 sources (FIXTURES.md §1.1). Headers are raw
-    * (mixed-case) — the pipeline's capitalize step normalizes them.
+  /** Root of the fixture sets. Repo-resident rather than tmpdir-resident:
+    * the pipeline oracles replay these CSVs through DuckDB `read_csv` by
+    * ABSOLUTE PATH, so the files must be visible to the oracle process even
+    * if it never ran the Spark side. It derives from the runtime working
+    * directory (sbt runs from the checkout root), so a checkout anywhere on
+    * disk reads ITS OWN `fixtures/` and bakes matching absolute paths into
+    * the oracle SQL.
     */
-  def writeApslRaw(dir: Path): Path = {
-    write(dir, "meta.csv", Seq(
-      "Day,Account Name,Campaign Name,Ad Set Name,Ad Name,Amount Spent (USD),Impressions,Reach,Frequency,Link Clicks,Registrations Completed,Adds To Cart,Checkouts Initiated,Purchases,Purchases Conversion Value",
-      "2025-08-01,acct_a,camp_m1,set_m1,ad_m1,120.5,12000,9000,1.33,350,12,40,25,9,901.25",
-      "2025-08-02,acct_a,camp_m1,set_m1,ad_m2,98.25,9800,7100,1.38,290,8,33,19,7,640.1"
-    ))
-    write(dir, "meta_olive.csv", Seq(
-      "Day,Campaign Name,Ad Set Name,Ad Name,Amount Spent (USD),Impressions,Frequency,Reach,Link Clicks,Adds To Cart With Shared Items,Purchases With Shared Items,Purchases Conversion Value For Shared Items Only",
-      "2025-08-01,camp_o1,set_o1,ad_o1,75.0,8000,1.21,6600,210,18,5,410.0"
-    ))
-    write(dir, "meta_lead.csv", Seq(
-      "Day,Campaign Name,Ad Set Name,Ad Name,Amount Spent (USD),Impressions,Frequency,Reach,Link Clicks,Leads,Leads Conversion Value",
-      "2025-08-01,camp_l1,set_l1,ad_l1,55.5,6000,1.1,5400,160,22,0.0"
-    ))
-    // "Average frequency" holds a "-" placeholder → column infers as String;
-    // exercises the schema-gated X cleaner.
-    write(dir, "x.csv", Seq(
-      "Time Period,Funding Source Name,Ad Group Name,Campaign Name,Spend,Impressions,Link Clicks,Leads,Cart Additions,Checkouts Initiated,Purchases,Purchases - Sale Amount,Average Frequency",
-      "2025-08-01,fund_x,grp_x1,camp_x1,60.0,5000,120,15,11,8,3,210.75,1.4",
-      "2025-08-02,fund_x,grp_x1,camp_x2,41.0,3900,95,9,7,5,2,133.5,-"
-    ))
-    // The cleaner keys on the post-Source-stamp 2nd column = the raw FIRST
-    // column "By Day" (reference cleans after assign_source; see
-    // data_clean_lib.py:16 + multi_source_ad_etl.py:144-151). Row 2 is the
-    // "Total" summary → removed; the row with EMPTY "By Day" → null
-    // predicate → KEPT (null-keep semantics).
-    write(dir, "tiktok.csv", Seq(
-      "By Day,Account Name,Campaign Name,Ad Group Name,Ad Name,Cost,Impressions,Frequency,Reach,Clicks (Destination),Adds To Cart (Website),Checkouts Initiated (Website),Purchases (Website),Purchase Value (Website)",
-      "Total of 2 campaigns,,,,,161.0,15500,1.3,11900,400,41,24,10,782.0",
-      "2025-08-01,acct_t,camp_t1,grp_t1,summer_promo.mp4,101.0,9500,1.25,7600,250,26,15,6,455.0",
-      ",acct_t,camp_t2,grp_t2,fall_teaser,60.0,6000,1.4,4300,150,15,9,4,327.0"
-    ))
-    dir
-  }
+  val root: String = Paths.get(sys.props("user.dir"), "fixtures").toAbsolutePath.toString
 
-  /** like_eat pipeline raw dir: Korean Meta export + Naver GFA export with
-    * every age/gender quirk variant (FIXTURES.md §1.4, §3).
-    */
-  def writeLikeEatRaw(dir: Path): Path = {
-    write(dir, "meta_naver.csv", Seq(
-      "일,캠페인 이름,광고 세트 이름,광고 이름,웹사이트 URL,지출 금액 (KRW),노출,빈도,도달,링크 클릭,공유 항목이 포함된 장바구니에 담기,공유 항목이 포함된 구매,공유 항목의 구매 전환값,동영상 25% 재생,동영상 50% 재생,동영상 75% 재생,동영상 95% 재생,동영상 100% 재생,동영상 재생,ThruPlay",
-      "2026-02-09,캠페인A,세트A,광고A,https://ex.kr/a,150000.0,42000,1.5,28000,900,120,31,930000.5,5200,3900,2600,1800,1500,6800,2100",
-      "2026-02-10,캠페인A,세트A,광고B,https://ex.kr/b,98000.0,30500,1.4,21800,640,85,20,600000.0,3900,2700,1900,1300,1100,5100,1600"
-    ))
-    write(dir, "naver_gfa.csv", Seq(
-      "기간,애셋 그룹 이름,캠페인 이름,총 비용,노출,클릭,구매완료수,장바구니 담기수,구매완료 전환 매출액,연령 및 성별",
-      "2026.02.09.,애셋A,캠페인N,52000.0,16000,210,6,28,180000.0,25세~34세 남성",
-      "2026.02.09.,애셋A,캠페인N,43000.0,13800,180,4,22,120000.0,45세 이상 여자",
-      "2026.02.10.,애셋B,캠페인N,31000.0,9800,120,2,14,60000.0,연령모름 성별모름",
-      "2026.02.10.,애셋B,캠페인N,27500.0,9100,105,3,12,90000.0,18세–24세 여성",
-      "2026.02.10.,애셋C,캠페인N,19000.0,7200,80,1,9,30000.0,35 세 ~ 44 세 남자"
-    ))
-    dir
-  }
-
-  /** podl pipeline raw dir (FIXTURES.md §1.2): raw headers, NO capitalize
-    * step — exact mixed case matters ("Ad Set Name", "Checkouts Initiated").
-    */
-  def writePodlRaw(dir: Path): Path = {
-    write(dir, "meta.csv", Seq(
-      "Day,Campaign name,Ad Set Name,Ad name,Gender,Age,Amount spent (USD),Impressions,Frequency,Reach,Unique outbound clicks,Link clicks,Video plays,Video plays at 25%,Video plays at 50%,Video plays at 75%,Video plays at 100%,Adds to cart,Checkouts Initiated,Purchases,Purchases conversion value",
-      "2025-08-01,camp_p1,set_p1,ad_p1,female,25-34,80.0,9000,1.2,7500,140,210,3000,2200,1500,900,600,30,18,7,512.5",
-      "2025-08-02,camp_p1,set_p1,ad_p2,male,35-44,66.5,7400,1.3,5700,120,180,2500,1800,1200,700,450,22,12,5,388.0"
-    ))
-    // row 2 is the "Total" summary in the raw FIRST column (post-Source
-    // stamp it is columns[1], the cleaner's key)
-    write(dir, "tiktok.csv", Seq(
-      "By Day,Campaign name,Ad group name,Ad name,Cost,Impressions,Frequency,Reach,Clicks (destination),Video views,Video views at 25%,Video views at 50%,Video views at 75%,Video views at 100%,Adds to cart (website),Checkouts initiated (website),Purchases (website),Purchase value (website)",
-      "Total of 1 campaigns,,,,55.0,6100,1.1,5200,130,2100,1500,1000,600,380,19,11,4,298.0",
-      "2025-08-01,camp_pt1,grp_pt1,ad_pt1,55.0,6100,1.1,5200,130,2100,1500,1000,600,380,19,11,4,298.0"
-    ))
-    dir
-  }
-
-  /** mnb pipeline raw dir (FIXTURES.md §1.3): exercises the WIRED X cleaner
-    * path — "Average frequency" maps to the standard "Frequency", so the
-    * `-` placeholder must flow clean("-"→"0") → cast → 0.0. "Objective" is
-    * detection-only (unmapped, dropped by conform).
-    */
-  def writeMnbRaw(dir: Path): Path = {
-    write(dir, "meta.csv", Seq(
-      "Day,Campaign name,Ad Set Name,Ad name,Gender,Age,Link (ad settings),Amount spent (USD),Impressions,Frequency,Reach,Clicks (all),ThruPlays,3-second video plays,Registrations Completed,Purchases,Purchases conversion value,Video plays",
-      "2025-08-01,camp_n1,set_n1,ad_n1,female,18-24,https://m.ex/a,92.0,10500,1.4,7600,260,800,1900,14,6,610.0,2600"
-    ))
-    write(dir, "x.csv", Seq(
-      "Time period,Campaign name,Spend,Impressions,Average frequency,Total audience reach,Clicks,Video completions,3s/100% video views,Leads,Purchases,Purchases - sale amount,Video views,Objective",
-      "2025-08-01,camp_nx1,45.0,5200,1.5,4100,110,300,900,12,3,240.0,1500,ENGAGEMENT",
-      "2025-08-02,camp_nx2,38.0,4600,-,3800,95,260,800,9,2,180.0,1300,ENGAGEMENT"
-    ))
-    dir
-  }
-
-  /** kcon demo config raw dir (FIXTURES.md §1.5): currency-agnostic —
-    * `Amount spent (Raw)` stays String, `Currency` carried through.
-    */
-  def writeKconRaw(dir: Path): Path = {
-    write(dir, "meta.csv", Seq(
-      "Day,Campaign name,Ad Set Name,Ad name,Gender,Age,Amount spent (KRW),Currency,Impressions,Clicks (all),Link clicks",
-      "2025-08-01,camp_k1,set_k1,ad_k1,female,25-34,120000,KRW,15000,420,300"
-    ))
-    write(dir, "tiktok.csv", Seq(
-      "By Day,Campaign name,Ad group name,Ad name,Gender,Age,Cost,Currency,Impressions,Clicks (all),Clicks (destination)",
-      "2025-08-01,camp_kt1,grp_kt1,ad_kt1,male,18-24,98000,KRW,12000,350,250"
-    ))
-    write(dir, "x.csv", Seq(
-      "Time period,Campaign name,Ad Group name,Ad name,Spend,Currency,Impressions,Clicks,Link clicks",
-      "2025-08-01,camp_kx1,grp_kx1,ad_kx1,75.5,USD,8000,210,160"
-    ))
-    dir
-  }
-
-  /** Root for materialized fixture sets. Repo-resident (checked in) rather
-    * than tmpdir-resident: the pipeline oracles replay these CSVs through
-    * DuckDB `read_csv` by ABSOLUTE PATH, so the files must survive tmp
-    * cleanup and be visible to the oracle process even if it never ran the
-    * Spark side. Overridable for deployments via GRAFT_FIXTURES_DIR; the
-    * default derives from the runtime working directory (sbt runs from the
-    * checkout root), so a checkout anywhere on disk materializes into ITS
-    * OWN `fixtures/` and bakes matching absolute paths into the oracle SQL
-    * — never another machine's hardcoded path.
-    */
-  val root: String = sys.env.getOrElse("GRAFT_FIXTURES_DIR",
-    Paths.get(sys.props("user.dir"), "fixtures").toAbsolutePath.toString)
-
-  /** Materialize a named fixture set under [[root]] (idempotent — rewrites
-    * the same deterministic bytes over the checked-in copies) and return
-    * its path.
-    */
-  def materialize(name: String): String = {
-    val dir = Paths.get(root, name)
-    name match {
-      case "apsl"     => writeApslRaw(dir)
-      case "like_eat" => writeLikeEatRaw(dir)
-      case "podl"     => writePodlRaw(dir)
-      case "mnb"      => writeMnbRaw(dir)
-      case "kcon"     => writeKconRaw(dir)
-      case other      => throw new IllegalArgumentException(s"unknown fixture set: $other")
-    }
-    dir.toString
+  /** The directory of fixture set `name`; fails naming the path when `name`
+    * is not a shipped pipeline or its directory is missing. */
+  def dir(name: String): String = {
+    val d = Paths.get(root, name)
+    require(Configs.all.contains(name) && Files.isDirectory(d),
+      s"no fixture set '$name' at $d")
+    d.toString
   }
 }

@@ -471,25 +471,17 @@ object AnnIndex {
         .write.mode("overwrite").parquet(s"$root/tombstones")
     }
 
-  /** Write the UPDATE segment `vectors_updates/`: a batch of EXISTING ids
-    * re-added with new content — the third mutation verb (add = delta,
-    * delete = tombstone, update = later-segment re-add). Same ids, new
-    * embeddings, re-coded against the FROZEN artifacts; at query time the
-    * latest-segment-wins mask in [[querySegments]] makes these rows
-    * shadow the base rows — an upsert without ever rewriting the base
-    * tree. Deterministic on both engines: the vec_id % 13 == 2 subset,
-    * embeddings REVERSED.
+  /** The UPDATE segment `vectors_updates/`, rebuilt only when stale (see
+    * [[gate]]): a batch of EXISTING ids re-added with new content — the
+    * third mutation verb (add = delta, delete = tombstone, update =
+    * later-segment re-add). Same ids, new embeddings, re-coded against
+    * the FROZEN artifacts; at query time the latest-segment-wins mask in
+    * [[querySegments]] makes these rows shadow the base rows — an upsert
+    * without ever rewriting the base tree. Deterministic on both engines:
+    * the vec_id % 13 == 2 subset, embeddings REVERSED.
     */
-  def writeUpdateSegment(s: SparkSession, d: String, root: String): Unit =
-    updates(s, d, root, reuse = false)
-
-  /** [[ensureDelta]]'s counterpart for the update segment. */
   def ensureUpdates(s: SparkSession, d: String, root: String): Unit =
-    updates(s, d, root, reuse = true)
-
-  private def updates(s: SparkSession, d: String, root: String,
-      reuse: Boolean): Unit =
-    gate(d, root, "vectors_updates", Nil, reuse) {
+    gate(d, root, "vectors_updates", Nil, reuse = true) {
       writeSegment(s, root, "vectors_updates", embFor(s, d, None)
         .filter(col("vec_id") % 13 === 2)
         .select(col("vec_id"), reverse(col("embedding")).as("embedding")))

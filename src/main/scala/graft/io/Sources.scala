@@ -115,11 +115,20 @@ object Sources {
 
   /** Build an all-String, row-oriented DataFrame from an in-memory
     * header + rows payload — the Sheets-ingest shape (reference S4/S7,
-    * `google_cloud_client.py:87-89`).
+    * `google_cloud_client.py:87-89`). The Sheets values API leaves out a
+    * row's trailing empty cells, so a short row is padded with `""`, the
+    * empty cell both `SheetService`s return. A row wider than the header
+    * fails naming the row: its extra cells have no column, and data is
+    * never dropped silently.
     */
   def fromRows(spark: SparkSession, header: Seq[String], rows: Seq[Seq[String]]): DataFrame = {
     val schema = StructType(header.map(StructField(_, StringType, nullable = true)))
-    val data = rows.map(r => Row.fromSeq(r)).asJava
+    val data = rows.zipWithIndex.map { case (r, i) =>
+      require(r.length <= header.length,
+        s"row ${i + 2} (the header is row 1) has ${r.length} cells, more than " +
+          s"the ${header.length}-column header — refusing to drop data silently")
+      Row.fromSeq(r.padTo(header.length, ""))
+    }.asJava
     spark.createDataFrame(data, schema)
   }
 }

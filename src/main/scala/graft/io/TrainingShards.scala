@@ -1,61 +1,28 @@
 package graft.io
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.functions.{col, conv, lit, md5, pmod, substring, xxhash64}
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.functions.{col, conv, lit, md5, pmod, substring}
 
-/** JSONL training-shard layout: the interchange format LLM data pipelines
-  * feed to tokenizers — one JSON object per line, sharded into directories
-  * by a deterministic shard key (see `graft.queries.Curation` c_shard_assign
-  * for the key derivation).
+/** Training-shard layout: rows sharded into Hive-style `shard=<k>/`
+  * parquet directories by a deterministic shard key (see
+  * `graft.queries.Curation` c_shard_assign for the key derivation).
   *
   * Scale notes:
-  * - `repartition(shardCol)` first, so each shard's rows co-locate and the
+  * - `repartition(shard)` first, so each shard's rows co-locate and the
   *   writer emits one file set per shard directory instead of
   *   numPartitions × numShards fragments (the classic small-files explosion
   *   at 1000 executors);
   * - `partitionBy` gives Hive-style `shard=<v>/` directories, so a reader
-  *   that wants shards 0-3 of 256 partition-prunes the rest at the source;
-  * - compression is codec-pluggable (gzip for interchange, none for
-  *   tokenizer-local reads); JSONL+gzip is splittable per FILE (not per
-  *   block) which is exactly right when each shard directory holds many
-  *   medium files — file-granular parallelism without giant-file stragglers;
-  * - `readJsonl` takes an explicit schema: at 100 TB schema inference is a
-  *   full extra pass over the data, so it is never implicit here.
+  *   that wants shards 0-3 of 256 partition-prunes the rest at the source.
   */
 object TrainingShards {
 
-  /** Write one JSONL directory per value of `shardCol` under `path`. */
-  def writeJsonl(df: DataFrame, path: String, shardCol: String,
-      compression: String = "none"): Unit =
-    df.repartition(col(shardCol))
-      .write
-      .mode("overwrite")
-      .option("compression", compression)
-      .partitionBy(shardCol)
-      .json(path)
-
-  /** Read a JSONL shard tree with a REQUIRED schema (no inference pass).
-    * The shard partition column comes back from the directory names.
-    */
-  def readJsonl(spark: SparkSession, path: String, schema: StructType): DataFrame =
-    spark.read.schema(schema).json(path)
-
-  /** Deterministic shard id in [0, nShards) from any key column —
-    * xxhash64, never an RNG, so re-runs and incremental backfills place
-    * every row identically.
-    */
-  def assignShard(key: Column, nShards: Int): Column = {
-    require(nShards > 0, s"nShards must be positive, got $nShards")
-    pmod(xxhash64(key), lit(nShards.toLong)).cast("int")
-  }
-
-  /** The DuckDB-replayable twin of [[assignShard]]: the repo-standard
-    * md5-48 draw (first 12 hex chars of md5 of the key string) mod
-    * nShards. Same determinism and uniformity contract; a few ns/row
-    * slower than xxhash64, so production placement keeps xxhash64 and
-    * THIS one backs the oracle-checked ingest corpus entry
-    * (`st_ingest_shards`), where cross-engine replay is the point.
+  /** Deterministic shard id in [0, nShards) from any key column: the
+    * repo-standard md5-48 draw (first 12 hex chars of md5 of the key
+    * string) mod nShards — never an RNG, so re-runs and incremental
+    * backfills place every row identically, and DuckDB replays the same
+    * placement for the oracle-checked `st_ingest_shards` and
+    * `c_pretrain_build` entries.
     */
   def assignShardReplayable(key: Column, nShards: Int): Column = {
     require(nShards > 0, s"nShards must be positive, got $nShards")
@@ -64,32 +31,23 @@ object TrainingShards {
   }
 
   /** Write `df` as `path/shard=<k>/part-*.parquet`, sharded by
-    * `xxhash64(keyCol) % nShards`, optionally ordered within each shard
-    * (sequence packing and curriculum sampling both want stable order —
-    * `sortWithinPartitions` sorts each shard's co-located rows with NO
-    * extra shuffle beyond the placement repartition). At 100 TB, cap file
-    * sizes with `spark.sql.files.maxRecordsPerFile` rather than more
-    * shards: shard count should track the downstream LOADER's
-    * parallelism, not the writer's.
+    * [[assignShardReplayable]] of `keyCol`. At 100 TB, cap file sizes
+    * with `spark.sql.files.maxRecordsPerFile` rather than more shards:
+    * shard count should track the downstream LOADER's parallelism, not
+    * the writer's.
     */
   def writeParquetShards(
       df: DataFrame,
       keyCol: String,
       path: String,
-      nShards: Int,
-      orderWithinShard: Seq[Column] = Nil,
-      shardFn: (Column, Int) => Column = assignShard): Unit = {
-    val sharded = df.withColumn("shard", shardFn(col(keyCol), nShards))
+      nShards: Int): Unit =
+    df.withColumn("shard", assignShardReplayable(col(keyCol), nShards))
       .repartition(col("shard"))
-    val placed =
-      if (orderWithinShard.isEmpty) sharded
-      else sharded.sortWithinPartitions(col("shard") +: orderWithinShard: _*)
-    placed.write.mode("overwrite")
+      .write.mode("overwrite")
       // dynamic partition overwrite: an incremental batch whose rows hash
       // into only some shards replaces exactly THOSE shard directories —
       // static mode (the Spark default) would delete every other shard's
       // historical data on a backfill
       .option("partitionOverwriteMode", "dynamic")
       .partitionBy("shard").parquet(path)
-  }
 }

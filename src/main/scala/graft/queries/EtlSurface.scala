@@ -22,15 +22,15 @@ object EtlSurface {
     * then `A1.dateColumn` of the standard schema — the column the exported
     * file name's date range reads. All five are hash-checked cross-engine:
     * the oracles below replay the same CSVs through DuckDB read_csv + the
-    * same clean/rename/conform/union (the fixtures are pure CSV, and
-    * Verify materializes them before the DuckDB oracle pass runs).
+    * same clean/rename/conform/union (the fixtures are pure CSV, checked
+    * in under `fixtures/`).
     */
   private val pipelines: Map[String, Q] = graft.etl.Configs.all.map {
     case (name, (cfg, capitalize)) =>
       val day = graft.util.A1.dateColumn(cfg.standardSchema)
       s"etl_pipeline_$name" -> ((s: org.apache.spark.sql.SparkSession, _: String) =>
         new MultiSourceAdEtl(cfg)
-          .run(s, graft.etl.Fixtures.materialize(name), capitalize)
+          .run(s, graft.etl.Fixtures.dir(name), capitalize)
           .orderBy("Source", day))
   }
 
@@ -133,12 +133,11 @@ object EtlSurface {
         .orderBy("kind"))
   )
 
-  // The pipeline fixtures live at the SAME repo-resident path
-  // Fixtures.materialize writes (and which is checked in), so the pure-CSV
-  // pipelines can be replayed cross-engine via read_csv — the flagship
-  // read → detect → clean → standardize → merge contract hash-checked
-  // end-to-end, not just row-counted — without depending on tmpdir
-  // lifetime or on the Spark side having run in the same container.
+  // The pipeline fixtures are the checked-in CSVs Fixtures.dir reads, so
+  // the pure-CSV pipelines can be replayed cross-engine via read_csv — the
+  // flagship read → detect → clean → standardize → merge contract
+  // hash-checked end-to-end, not just row-counted — without depending on
+  // tmpdir lifetime or on the Spark side having run in the same container.
   private val fixDir = graft.etl.Fixtures.root
 
   val oracles: Map[String, String] = Map(

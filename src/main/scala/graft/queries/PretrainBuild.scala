@@ -109,8 +109,8 @@ object PretrainBuild {
       .select(col("doc_id"), col("lang"), col("fp"), col("n_words"))
 
     // Stage 5: shard the selection by content fingerprint (md5-48
-    // replayable placement — the st_ingest_shards twin of the production
-    // xxhash64 path) and write the Hive shard tree; repartition(shard)
+    // replayable placement, as in st_ingest_shards) and write the Hive
+    // shard tree; repartition(shard)
     // inside writeParquetShards keeps it one file set per shard at any
     // executor count. The work dir is keyed by a per-invocation nonce so
     // concurrent driver rounds on the same corpus can never clobber each
@@ -118,8 +118,7 @@ object PretrainBuild {
     graft.util.Dirs.withNonceDir("graft_pretrain_") { root =>
       val outDir = new java.io.File(root, "shards").getAbsolutePath
       graft.io.TrainingShards.writeParquetShards(
-        mixed, keyCol = "fp", path = outDir, nShards = nShards,
-        shardFn = graft.io.TrainingShards.assignShardReplayable)
+        mixed, keyCol = "fp", path = outDir, nShards = nShards)
       // Read the tree back and histogram it — the deliverable a build run
       // reports (docs + tokens per shard, min fp pinning the placement).
       // The histogram is ≤ nShards rows: a bounded scalar extract (the

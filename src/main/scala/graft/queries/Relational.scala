@@ -925,9 +925,9 @@ object Relational {
         .orderBy("digit")
     }),
 
-    // Bucketed co-located join — the write-once/join-many layout that
-    // removes the fact-side shuffle entirely at 100 TB: both sides are
-    // written `bucketBy(16, join_key).sortBy(join_key)`, so a later
+    // Co-located join over bucketed tables — the write-once/join-many
+    // layout that removes the fact-side shuffle entirely at 100 TB: both
+    // sides are written `bucketBy(16, join_key).sortBy(join_key)`, so a later
     // sort-merge join needs NO exchange and NO sort on either side (each
     // bucket pair streams merged directly). The query performs the full
     // cycle — write both bucketed tables, then join through the catalog —

@@ -1049,7 +1049,7 @@ object Similarity {
     // UPSERT — the third mutation verb, oracled: a batch of EXISTING ids
     // re-added as a LATER segment with new content (vec_id % 13 == 2,
     // embeddings reversed, re-coded against the frozen artifacts — the
-    // writeUpdateSegment discipline). querySegments' latest-segment-wins
+    // ensureUpdates discipline). querySegments' latest-segment-wins
     // mask makes the update rows SHADOW the base rows, so this entry
     // oracle-pins the duplicate-id masking semantics on a REAL overlap
     // (the r16 advisory class — previously only spec-pinned): the

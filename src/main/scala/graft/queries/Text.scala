@@ -1,8 +1,9 @@
 package graft.queries
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, IntegerType, LongType, StringType, StructField, StructType}
 
 import Tables._
 
@@ -49,39 +50,54 @@ object Text {
     */
   private[queries] val deepK = 1000
 
-  /** The shared BPE training chain (see the t_bpe_merges comment): word
-    * counts → shared-separator symbol strings → K unrolled (pair-count,
-    * argmax, greedy replace-twice) rounds. Returns the per-iteration
-    * merge rows and the final segmented vocabulary (w, sym) — one chain,
-    * two consumers (t_bpe_merges and t_bpe_encode).
-    */
-  /** The whitespace-word unit vocabulary (t_bpe_merges / t_bpe_encode). */
-  private def wordUnits(s: org.apache.spark.sql.SparkSession, d: String): DataFrame =
-    t(s, d, "documents")
-      .select(explode(tokens(col("text"))).as("w"))
+  /** The whitespace-word unit vocabulary (w, n) of `docs` (t_bpe_merges,
+    * and collected by the k = 5 encode entries). */
+  private[queries] def wordUnitsOf(docs: DataFrame): DataFrame =
+    docs.select(explode(tokens(col("text"))).as("w"))
       .filter(col("w") =!= "")
       .groupBy("w").agg(count(lit(1)).as("n"))
 
-  /** The adjacent-word BIGRAM unit vocabulary (t_bpe_merges_deep):
-    * consecutive whitespace tokens joined by '_' — phrase-level units in
-    * the SentencePiece style, whose richer pair inventory sustains the
-    * DEEP merge schedule (the 31-word corpus vocabulary saturates plain
-    * word units after 89 merges; bigram units measured > 300 at every
-    * testdata SF). Still Heaps-bounded: one distributed corpus pass, the
-    * unit table never re-scans the corpus.
+  /** The adjacent-word BIGRAM stream `w` of `docs`, carrying the `keep`
+    * columns: consecutive whitespace tokens joined by '_'. */
+  private def bigramsOf(docs: DataFrame, keep: String*): DataFrame =
+    docs.select(keep.map(col) :+ tokens(col("text")).as("sp"): _*)
+      .select(keep.map(col) :+ explode(expr(
+        "zip_with(slice(sp, 1, size(sp) - 1), slice(sp, 2, size(sp) - 1), " +
+          "(a, b) -> concat(a, '_', b))")).as("w"): _*)
+      .filter(col("w") =!= "_")
+
+  /** The adjacent-word BIGRAM unit vocabulary (t_bpe_merges_deep) —
+    * phrase-level units in the SentencePiece style, whose richer pair
+    * inventory sustains the DEEP merge schedule (the 31-word corpus
+    * vocabulary saturates plain word units after 89 merges; bigram units
+    * measured > 300 at every testdata SF). Still Heaps-bounded: one
+    * distributed corpus pass, the unit table never re-scans the corpus.
     */
   private[queries] def bigramUnits(s: org.apache.spark.sql.SparkSession, d: String): DataFrame =
-    t(s, d, "documents")
-      .select(tokens(col("text")).as("sp"))
-      .select(explode(expr(
-        "zip_with(slice(sp, 1, size(sp) - 1), slice(sp, 2, size(sp) - 1), " +
-          "(a, b) -> concat(a, '_', b))")).as("w"))
-      .filter(col("w") =!= "_")
+    bigramsOf(t(s, d, "documents"))
       .groupBy("w").agg(count(lit(1)).as("n"))
 
+  /** A driver-built frame of `rows` with the nullable columns `fields`. */
+  private def localFrame(s: org.apache.spark.sql.SparkSession,
+      rows: Seq[Row], fields: (String, DataType)*): DataFrame =
+    s.createDataFrame(java.util.Arrays.asList(rows: _*),
+      StructType(fields.map { case (n, dt) => StructField(n, dt, nullable = true) }))
+
+  /** The (w, n_sym) symbol count of every unit of a trained vocabulary. */
+  private def symbolCounts(s: org.apache.spark.sql.SparkSession,
+      finalSyms: Seq[(String, String)]): DataFrame =
+    localFrame(s, finalSyms.map { case (w, sym) =>
+      Row(w, sym.trim.split(" ").length.toLong)
+    }, "w" -> StringType, "n_sym" -> LongType)
+
+  /** The shared BPE training chain (see the t_bpe_merges comment): word
+    * counts → shared-separator symbol strings → K unrolled (pair-count,
+    * argmax, greedy replace-twice) rounds. Returns the per-iteration
+    * merge rows and the final segmented vocabulary (w, sym).
+    */
   private def bpeChain(s: org.apache.spark.sql.SparkSession, d: String,
       k: Int = 5): (Seq[DataFrame], DataFrame) =
-    bpeChainFrom(wordUnits(s, d), k)
+    bpeChainFrom(wordUnitsOf(t(s, d, "documents")), k)
 
   /** The distributed merge chain over an arbitrary (w, n) unit table —
     * word units for the corpus entries; BpeDeepSpec drives it over the
@@ -172,9 +188,7 @@ object Text {
     // order — the trainer's exact replace-twice rule, then costed: 1
     // token in-vocabulary, UTF-8 octets on fallback
     val utf8 = java.nio.charset.StandardCharsets.UTF_8
-    val costedRows: java.util.List[org.apache.spark.sql.Row] =
-      new java.util.ArrayList()
-    units.iterator.map(u => variantLocal(u._1)).toSeq.distinct.foreach { w =>
+    val costedRows = units.map(u => variantLocal(u._1)).distinct.map { w =>
       var sym = codePointTokens(w).mkString(" ", " ", " ")
       merges.foreach { case (_, pair, merged, _) =>
         val from = " " + pair + " "
@@ -191,13 +205,10 @@ object Text {
           nFb += b
         }
       }
-      costedRows.add(org.apache.spark.sql.Row(w, nTok, nFb))
+      Row(w, nTok, nFb)
     }
-    import org.apache.spark.sql.types._
-    val costed = s.createDataFrame(costedRows, StructType(Seq(
-      StructField("w", StringType, nullable = true),
-      StructField("n_tok", LongType, nullable = true),
-      StructField("n_fb", LongType, nullable = true))))
+    val costed = localFrame(s, costedRows,
+      "w" -> StringType, "n_tok" -> LongType, "n_fb" -> LongType)
     docs
       .select(col("lang"), explode(tokens(col("text"))).as("w0"))
       .filter(col("w0") =!= "")
@@ -211,31 +222,6 @@ object Text {
       .orderBy("lang")
   }
 
-  /** Driver-side Sennrich merge loop over a BOUNDED unit vocabulary —
-    * how production BPE trainers actually run deep schedules: the ONE
-    * corpus-sized pass (the unit count) stays distributed; the K merge
-    * rounds then iterate on the Heaps-bounded unit table, where a
-    * distributed round would cost more in job scheduling than compute
-    * (measured: the k=5 distributed chain spends its time in per-round
-    * localCheckpoint jobs, not arithmetic). The e_pagerank/e_markov
-    * bounded-scalar-extract license, guarded the same way at the call
-    * site. The merge rule is byte-identical to the distributed chain and
-    * both engines' replace(): literal, non-overlapping, left-to-right,
-    * applied twice (BpeSpec pins the equivalence class); the argmax is
-    * (count desc, lexicographically smallest pair) — ASCII units, so
-    * JVM UTF-16 order == DuckDB byte order.
-    */
-  private[queries] def trainMergesLocal(
-      unitCounts: Seq[(String, Long)], k: Int): Seq[(Int, String, String, Long)] =
-    trainLocal(unitCounts, k)._1
-
-  /** UTF-8 byte-order comparison — the tie-break order the distributed
-    * chain's `min(pair)` and the DuckDB replay both use. String's natural
-    * order (UTF-16 code units) diverges for supplementary-plane
-    * characters: surrogates (0xD800–0xDFFF) sort BELOW 0xE000+ BMP chars
-    * in UTF-16 but their 4-byte UTF-8 sequences (0xF0…) sort ABOVE the
-    * 3-byte ones (0xE…), so the driver loop must compare bytes.
-    */
   /** Code-point segmentation of a unit — the initial BPE symbol table.
     * One token per Unicode CODE POINT, not per UTF-16 char: Spark's
     * `substring`/`length` and DuckDB's `substr`/`length` both count code
@@ -257,6 +243,13 @@ object Text {
     out.result()
   }
 
+  /** UTF-8 byte-order comparison — the tie-break order the distributed
+    * chain's `min(pair)` and the DuckDB replay both use. String's natural
+    * order (UTF-16 code units) diverges for supplementary-plane
+    * characters: surrogates (0xD800–0xDFFF) sort BELOW 0xE000+ BMP chars
+    * in UTF-16 but their 4-byte UTF-8 sequences (0xF0…) sort ABOVE the
+    * 3-byte ones (0xE…), so the driver loop must compare bytes.
+    */
   private[queries] def utf8Less(a: String, b: String): Boolean = {
     val x = a.getBytes(java.nio.charset.StandardCharsets.UTF_8)
     val y = b.getBytes(java.nio.charset.StandardCharsets.UTF_8)
@@ -270,9 +263,20 @@ object Text {
     x.length < y.length
   }
 
-  /** The full driver-side trainer: merge rows AND the final (unit →
-    * symbol-string) vocabulary — one loop, two consumers
-    * (t_bpe_merges_deep and t_bpe_encode_deep), the bpeChain shape.
+  /** The driver-side Sennrich merge loop over a BOUNDED unit vocabulary:
+    * merge rows AND the final (unit → symbol-string) vocabulary — one
+    * loop, every entry but t_bpe_merges as consumer, the bpeChain shape.
+    * This is how production BPE trainers run deep schedules: the ONE
+    * corpus-sized pass (the unit count) stays distributed; the K merge
+    * rounds then iterate on the Heaps-bounded unit table, where a
+    * distributed round would cost more in job scheduling than compute
+    * (measured: the k=5 distributed chain spends its time in per-round
+    * localCheckpoint jobs, not arithmetic). The e_pagerank/e_markov
+    * bounded-scalar-extract license, guarded the same way at the call
+    * site. The merge rule is byte-identical to the distributed chain and
+    * both engines' replace(): literal, non-overlapping, left-to-right,
+    * applied twice (BpeSpec pins the equivalence class); the argmax is
+    * (count desc, UTF-8-smallest pair, see [[utf8Less]]).
     *
     * INCREMENTAL pair counts (VERDICT r14 ask #3, the Sennrich-trainer
     * update rule): a merge only changes the pair inventory of units that
@@ -377,10 +381,7 @@ object Text {
     */
   private[queries] def collectWordUnits(docs: DataFrame,
       caller: String): Seq[(String, Long)] = {
-    val rows = docs.select(explode(tokens(col("text"))).as("w"))
-      .filter(col("w") =!= "")
-      .groupBy("w").agg(count(lit(1)).as("n"))
-      .limit(200001).collect()
+    val rows = wordUnitsOf(docs).limit(200001).collect()
     require(rows.length <= 200000,
       s"$caller: word units exceed the bounded-scalar-extract license " +
         "(200000); a vocabulary this large needs the distributed " +
@@ -504,7 +505,7 @@ object Text {
     // MB; past that bound the entry fails fast and the distributed
     // per-round chain (t_bpe_merges' shape) is the correct tool). Rule,
     // argmax and tie-break are byte-identical to the distributed chain
-    // (trainMergesLocal; BpeDeepSpec asserts the two paths produce the
+    // (trainLocal; BpeDeepSpec asserts the two paths produce the
     // SAME merges on the same units), and DuckDB replays all K rounds
     // as ONE RECURSIVE CTE (bpeDeepRecursiveCtes — linear in K, unlike
     // the unrolled chain whose bind cost grows ~K²·³). At 100 TB the
@@ -512,19 +513,12 @@ object Text {
     // sub-second — iteration wall-time is merge-touched-units-bound,
     // not corpus-bound (SCALE_SF3.md round-15 note).
     "t_bpe_merges_deep" -> ((s, d) => {
-      val merges = trainMergesLocal(
+      val (merges, _) = trainLocal(
         collectBigramUnits(s, d, "t_bpe_merges_deep"), deepK)
-      val rows: java.util.List[org.apache.spark.sql.Row] =
-        new java.util.ArrayList()
-      merges.foreach { case (it, pair, ns, cnt) =>
-        rows.add(org.apache.spark.sql.Row(it, pair, ns, cnt))
-      }
-      import org.apache.spark.sql.types._
-      s.createDataFrame(rows, StructType(Seq(
-        StructField("it", IntegerType, nullable = true),
-        StructField("pair", StringType, nullable = true),
-        StructField("new_symbol", StringType, nullable = true),
-        StructField("cnt", LongType, nullable = true))))
+      localFrame(s, merges.map { case (it, pair, ns, cnt) =>
+        Row(it, pair, ns, cnt)
+      }, "it" -> IntegerType, "pair" -> StringType,
+        "new_symbol" -> StringType, "cnt" -> LongType)
     }),
 
     // The DEEP vocabulary APPLIED (the t_bpe_encode shape at K = deepK):
@@ -538,22 +532,8 @@ object Text {
     "t_bpe_encode_deep" -> ((s, d) => {
       val (_, finalSyms) = trainLocal(
         collectBigramUnits(s, d, "t_bpe_encode_deep"), deepK)
-      val rows: java.util.List[org.apache.spark.sql.Row] =
-        new java.util.ArrayList()
-      finalSyms.foreach { case (w, sym) =>
-        rows.add(org.apache.spark.sql.Row(w,
-          sym.trim.split(" ").length.toLong))
-      }
-      import org.apache.spark.sql.types._
-      val sized = s.createDataFrame(rows, StructType(Seq(
-        StructField("w", StringType, nullable = true),
-        StructField("n_sym", LongType, nullable = true))))
-      t(s, d, "documents")
-        .select(col("lang"), tokens(col("text")).as("sp"))
-        .select(col("lang"), explode(expr(
-          "zip_with(slice(sp, 1, size(sp) - 1), slice(sp, 2, size(sp) - 1), " +
-            "(a, b) -> concat(a, '_', b))")).as("w"))
-        .filter(col("w") =!= "_")
+      val sized = symbolCounts(s, finalSyms)
+      bigramsOf(t(s, d, "documents"), "lang")
         .join(sized, "w")
         .groupBy("lang")
         .agg(count(lit(1)).as("n_units"),
@@ -582,16 +562,7 @@ object Text {
       // partial-agg'd groupBy — the 100 TB cost is the corpus pass).
       val (_, finalSyms) = trainLocal(
         collectWordUnits(t(s, d, "documents"), "t_bpe_encode"), 5)
-      val sizedRows: java.util.List[org.apache.spark.sql.Row] =
-        new java.util.ArrayList()
-      finalSyms.foreach { case (w, sym) =>
-        sizedRows.add(org.apache.spark.sql.Row(w,
-          sym.trim.split(" ").length.toLong))
-      }
-      import org.apache.spark.sql.types._
-      val sized = s.createDataFrame(sizedRows, StructType(Seq(
-        StructField("w", StringType, nullable = true),
-        StructField("n_sym", LongType, nullable = true))))
+      val sized = symbolCounts(s, finalSyms)
       t(s, d, "documents")
         .select(col("lang"), explode(tokens(col("text"))).as("w"))
         .filter(col("w") =!= "")

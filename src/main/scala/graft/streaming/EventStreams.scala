@@ -7,19 +7,26 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import graft.queries.Tables.{dupsSql, minhashPairCtesSql, normTextSql}
 
-/** Structured-Streaming forms of the `graft.queries.Events` batch operators.
-  * Each takes a (possibly streaming) DataFrame of the `events` schema
-  * (event_id long, ts timestamp, user_id long, event_type string,
-  * value double, props string). The windowed aggregations and dedup work
-  * identically under `readStream` (incremental, watermarked state) and
-  * `read` (batch) — the batch oracle checks in `queries.Events` validate
-  * those plans. [[sessionizeStateful]] is the exception: streaming-only
-  * (see its doc); its batch counterpart is [[sessionWindows]].
+/** Structured-Streaming forms of the `graft.queries.Events` and document
+  * dedup operators, each working under `readStream` (incremental,
+  * watermarked state) and `read` (batch):
+  * - [[sessionWindows]]: built-in gap sessions per user — the batch
+  *   referee of [[sessionizeStateful]], the custom-state sessionizer
+  *   (streaming-only, see its doc);
+  * - [[clickToPurchase]]: the watermarked stream-stream interval join
+  *   (its batch form backs the `e_*` attribution entries);
+  * - [[docDedupStream]] and [[ingestDocsToShards]]: content dedup and the
+  *   exactly-once ingest into the TrainingShards layout;
+  * - [[nearDupDropStream]]: LSH near-dup dedup over closing band buckets;
+  * - the oracled `st_*` ledger entries over those streams.
+  * The events inputs have the `events` schema (event_id long,
+  * ts timestamp, user_id long, event_type string, value double,
+  * props string).
   *
-  * Scale notes: watermarks bound the aggregation state; the grouping keys
-  * (window×type, session_window×user) shuffle once; state lives in the
-  * state store partitioned by key — the same layout a 1000-executor
-  * cluster uses.
+  * Scale notes: watermarks bound the state; the grouping keys
+  * (session_window×user, fingerprint, band bucket) shuffle once; state
+  * lives in the state store partitioned by key — the same layout a
+  * 1000-executor cluster uses.
   *
   * The `st_*` corpus entries stage their input tree once per corpus per
   * JVM through `graft.util.Dirs.staged` (the tree is a pure function of
@@ -56,14 +63,6 @@ object EventStreams {
     try body finally s.conf.set("spark.sql.shuffle.partitions", prev)
   }
 
-  /** Event-time tumbling hourly counts; 2h watermark bounds state. */
-  def hourlyCounts(events: DataFrame): DataFrame =
-    events
-      .withWatermark("ts", "2 hours")
-      .groupBy(window(col("ts"), "1 hour").as("w"), col("event_type"))
-      .agg(count(lit(1)).as("cnt"), round(sum("value"), 2).as("sum_value"))
-      .select(col("w.start").as("hour_ts"), col("event_type"), col("cnt"), col("sum_value"))
-
   /** Built-in session windows: gap-based sessions per user. */
   def sessionWindows(events: DataFrame, gap: String = "30 minutes"): DataFrame =
     events
@@ -95,16 +94,6 @@ object EventStreams {
         col("purchase_ts"), col("click_ts"), col("value"))
   }
 
-  /** Exact dedup on event_id: in streaming, state is bounded by the
-    * watermark (late duplicates beyond 2h are outside the guarantee — the
-    * training-data ingestion contract); in batch, a plain dropDuplicates
-    * (dropDuplicatesWithinWatermark analyzes only on streams).
-    */
-  def dedupStream(events: DataFrame): DataFrame =
-    if (events.isStreaming)
-      events.withWatermark("ts", "2 hours").dropDuplicatesWithinWatermark("event_id")
-    else events.dropDuplicates("event_id")
-
   /** Streaming mirror of the DOCUMENT exact-dedup family (d_exact_dedup):
     * live-ingest content dedup. Each arriving doc is fingerprinted with the
     * SAME draw the batch query and its DuckDB oracle share (md5 of the
@@ -132,20 +121,20 @@ object EventStreams {
   /** End-to-end exactly-once ingest: watched-directory file source →
     * content dedup ([[docDedupStream]], watermark-bounded fingerprint
     * state) → deterministic shard assignment
-    * ([[graft.io.TrainingShards.assignShard]] — xxhash64, never an RNG) →
-    * the TrainingShards Hive layout (`shard=<k>/part-*.parquet`) under a
-    * checkpointed `DataStreamWriter`. Exactly-once across kill/restart
+    * ([[graft.io.TrainingShards.assignShardReplayable]] — md5-48, never an
+    * RNG) → the TrainingShards Hive layout (`shard=<k>/part-*.parquet`)
+    * under a checkpointed `DataStreamWriter`. Exactly-once across kill/restart
     * comes from the two standard mechanisms composed: the checkpoint
     * replays the source offsets + dedup state, and the parquet file
     * sink's `_spark_metadata` manifest makes replayed batches idempotent
     * (a reader going through Spark sees only committed files). The schema
     * is REQUIRED — at 100 TB inference is a full extra pass, so it is
-    * never implicit (the TrainingShards.readJsonl discipline).
+    * never implicit.
     *
     * Scale notes: the only shuffle-free narrow chain is per-file map work
     * (fingerprint, shard id); dedup state shuffles once on `fp` and is
     * evicted by the 2 h watermark, so state tracks the ingest HORIZON,
-    * not the corpus. `maxFilesPerTrigger` is the ingest rate knob.
+    * not the corpus. Each micro-batch reads one file.
     */
   def ingestDocsToShards(
       spark: org.apache.spark.sql.SparkSession,
@@ -154,93 +143,25 @@ object EventStreams {
       outDir: String,
       checkpointDir: String,
       nShards: Int,
-      maxFilesPerTrigger: Int = 1,
-      availableNow: Boolean = false,
-      shardFn: (org.apache.spark.sql.Column, Int) => org.apache.spark.sql.Column =
-        graft.io.TrainingShards.assignShard): org.apache.spark.sql.streaming.StreamingQuery = {
+      availableNow: Boolean = false): org.apache.spark.sql.streaming.StreamingQuery = {
     val src = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
+      .option("maxFilesPerTrigger", 1)
       .parquet(srcDir)
     val w = docDedupStream(src)
-      .withColumn("shard", shardFn(col("fp"), nShards))
+      .withColumn("shard",
+        graft.io.TrainingShards.assignShardReplayable(col("fp"), nShards))
       .writeStream
       .format("parquet")
       .option("path", outDir)
       .option("checkpointLocation", checkpointDir)
       .partitionBy("shard")
       .outputMode(OutputMode.Append)
-    // AvailableNow: drain everything present (still rate-limited into
-    // micro-batches by maxFilesPerTrigger) and terminate — the batch-mode
+    // AvailableNow: drain everything present (still one file per
+    // micro-batch) and terminate — the batch-mode
     // invocation the oracled corpus entry uses
     (if (availableNow)
        w.trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
      else w).start()
-  }
-
-  /** Stream-static SCD enrichment — each event looks up the dimension row
-    * VALID AT ITS EVENT TIME (`valid_from <= ts < valid_to`), the standard
-    * slowly-changing-dimension join a pipeline needs the moment a weight
-    * or category table has history. The static side is broadcast (a
-    * dimension, bounded by business reality, not data volume) and re-read
-    * per micro-batch, so a dim update between batches is picked up without
-    * restarting the query; the stream side needs NO watermark — stream-
-    * static joins keep no stream state. Left join: an event outside every
-    * validity window survives with a NULL weight rather than vanishing.
-    * `dim` schema: (event_type, valid_from timestamp, valid_to timestamp,
-    * weight double).
-    */
-  def enrichScd(events: DataFrame, dim: DataFrame): DataFrame = {
-    val d = broadcast(dim).select(
-      col("event_type").as("d_type"), col("valid_from"), col("valid_to"),
-      col("weight"))
-    events.join(d,
-      events("event_type") === d("d_type") &&
-        events("ts") >= d("valid_from") && events("ts") < d("valid_to"),
-      "left")
-      .select(events("event_id"), events("ts"), events("user_id"),
-        events("event_type"), events("value"), d("weight"),
-        (events("value") * d("weight")).as("weighted_value"))
-  }
-
-  // ---- custom state: streaming CDC compaction ----
-
-  final case class CdcChange(k: Long, seq: Long, op: String, price: Double,
-      status: String)
-
-  /** Streaming form of the `q_cdc_apply` changelog compaction: per key,
-    * remember the highest-seq change seen and emit the key's CURRENT row
-    * whenever a micro-batch advances it — stale out-of-order changes
-    * (seq below the high-water mark) are swallowed, deletes flow through
-    * with op='D' so a downstream sink can tombstone. State is ONE record
-    * per live key with NoTimeout: CDC state cannot be watermark-evicted
-    * (a key's high-water mark must outlive any lateness bound to reject
-    * stale replays), so its size is the snapshot's key cardinality — the
-    * inherent floor for exactly-once upsert, same as any MERGE target.
-    * In batch, falls back to the single-pass max_by compaction.
-    */
-  def compactCdc(changes: Dataset[CdcChange]): Dataset[CdcChange] = {
-    import changes.sparkSession.implicits._
-    if (!changes.isStreaming) {
-      changes.groupByKey(_.k).reduceGroups((a, b) =>
-        if (a.seq >= b.seq) a else b).map(_._2)
-    } else {
-      def fn(key: Long, batch: Iterator[CdcChange],
-          state: GroupState[CdcChange]): Iterator[CdcChange] = {
-        val incoming = batch.foldLeft(Option.empty[CdcChange]) { (best, c) =>
-          if (best.forall(_.seq < c.seq)) Some(c) else best
-        }
-        val prior = state.getOption
-        incoming match {
-          case Some(c) if prior.forall(_.seq < c.seq) =>
-            state.update(c)
-            Iterator.single(c)
-          case _ => Iterator.empty // stale or empty: no emission
-        }
-      }
-      changes.groupByKey(_.k)
-        .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(fn)(
-          Encoders.product[CdcChange], Encoders.product[CdcChange])
-    }
   }
 
   // ---- custom state: flatMapGroupsWithState sessionization ----
@@ -314,67 +235,6 @@ object EventStreams {
       .groupByKey(_.user_id)
       .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.EventTimeTimeout)(fn)(
         Encoders.product[SessionState], Encoders.product[Session])
-  }
-
-  // ---- custom state: flatMapGroupsWithState rate limiting ----
-
-  final case class RateState(recent: Seq[Long])
-  final case class RateAlert(user_id: Long, alert_ts: Timestamp, n_in_window: Int)
-
-  /** Stateful sliding-rate limiter — the streaming form of the batch
-    * `e_rate_window` RANGE frame: emits an alert whenever a user's count of
-    * events in the trailing `windowMs` reaches `threshold`. Per-user state
-    * is ONLY the timestamps still inside the trailing window (pruned on
-    * every event), so state size is bounded by the highest in-window burst,
-    * not the stream; idle users evict by event-time timeout one window
-    * after their last event. In-batch processing sorts by event time, so a
-    * micro-batch containing a whole burst still alerts at the exact event
-    * that crosses the threshold.
-    */
-  def rateAlerts(events: Dataset[Event], windowMs: Long, threshold: Int): Dataset[RateAlert] = {
-    import events.sparkSession.implicits._
-
-    def fn(userId: Long, batch: Iterator[Event],
-        state: GroupState[RateState]): Iterator[RateAlert] = {
-      if (!batch.hasNext) {
-        if (state.hasTimedOut) state.remove()
-        Iterator.empty
-      } else {
-        val sorted = batch.toSeq.sortBy(e => (e.ts.getTime, e.event_id))
-        var recent = state.getOption.map(_.recent).getOrElse(Seq.empty)
-        var out = Vector.empty[RateAlert]
-        for (e <- sorted) {
-          val t = e.ts.getTime
-          recent = recent :+ t
-          // prune relative to the NEWEST timestamp in state, not the current
-          // event: a cross-batch late event (allowed by the 2h watermark)
-          // must not evict timestamps still inside the window of future
-          // events. A late event whose own window reaches below
-          // newest - windowMs may undercount (those timestamps were already
-          // pruned) — the price of bounded state, bounded by the watermark.
-          val newest = recent.max
-          recent = recent.filter(_ >= newest - windowMs)
-          // count only THIS event's trailing window (t - windowMs, t]: a
-          // late event must not count events that happened after it
-          val n = recent.count(x => x >= t - windowMs && x <= t)
-          if (n >= threshold) out :+= RateAlert(userId, e.ts, n)
-        }
-        state.update(RateState(recent))
-        // evict one window after the newest KEPT timestamp — recent.last is
-        // append order, which under cross-batch disorder is not the newest
-        // event; clamp above the current watermark (setTimeoutTimestamp
-        // below it throws — the sessionizeStateful straggler lesson)
-        state.setTimeoutTimestamp(
-          math.max(recent.max + windowMs, state.getCurrentWatermarkMs + 1))
-        out.iterator
-      }
-    }
-
-    events
-      .withWatermark("ts", "2 hours")
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.EventTimeTimeout)(fn)(
-        Encoders.product[RateState], Encoders.product[RateAlert])
   }
 
   // ---- custom state: streaming NEAR-dup dedup (LSH band buckets) ----
@@ -520,10 +380,9 @@ object EventStreams {
     * cannot move a count), which is what makes a streaming pipeline with
     * nondeterministic micro-batch arrival exactly DuckDB-oracle-checkable.
     * Placement uses [[graft.io.TrainingShards.assignShardReplayable]]
-    * (md5-48) so the oracle replays it; production placement stays
-    * xxhash64. Ingest ts is a constant — every row inside one watermark
-    * horizon, so no file-arrival order can make a row "late" and drop it
-    * (determinism across reruns). The staged INPUT tree is cached per
+    * (md5-48) so the oracle replays it. Ingest ts is a constant — every
+    * row inside one watermark horizon, so no file-arrival order can make a
+    * row "late" and drop it (determinism across reruns). The staged INPUT tree is cached per
     * corpus per JVM (Dirs.staged); checkpoint/output dirs are wiped per
     * invocation, so the query measures a FULL re-ingest, not checkpoint
     * recovery (that path is IngestPipelineSpec's kill/restart proof).
@@ -555,13 +414,12 @@ object EventStreams {
       // partition — at 32 that is 4 batches x 32 commits of per-partition
       // KB-scale state, pure fixed overhead. The histogram is
       // partition-count-invariant, and a real deployment sizes state
-      // partitions to state volume anyway (this is the ingest-rate knob's
-      // sibling, not a test shortcut). The checkpoint dir is nonce-fresh,
-      // so the persisted count can never clash.
+      // partitions to state volume anyway (not a test shortcut). The
+      // checkpoint dir is nonce-fresh, so the persisted count can never
+      // clash.
       withStatePartitions(s) {
         ingestDocsToShards(s, srcDir, schema, outDir, ckDir, nShards,
-          availableNow = true,
-          shardFn = graft.io.TrainingShards.assignShardReplayable)
+          availableNow = true)
           .awaitTermination()
       }
       // bounded extract (≤ nShards rows) so the nonce dir can be removed

@@ -83,7 +83,7 @@ class CodegenSizeSpec extends SparkSpec {
 
   test("the five shipped pipelines' codegen stages compile under 8,000 bytes") {
     val bad = oversized(Configs.all.toSeq.sortBy(_._1).map { case (name, (cfg, capitalize)) =>
-      name -> (() => new MultiSourceAdEtl(cfg).run(spark, Fixtures.materialize(name), capitalize))
+      name -> (() => new MultiSourceAdEtl(cfg).run(spark, Fixtures.dir(name), capitalize))
     })
     assert(bad.isEmpty, bad.mkString("\n", "\n", ""))
   }

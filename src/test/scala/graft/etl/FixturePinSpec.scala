@@ -9,7 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * tripwire — any content change must arrive as a deliberate edit of the
   * pinned MD5 table below, reviewed next to the transcription it claims
   * to preserve (fixtures transcribe the reference pipelines' input
-  * shapes; see etl/Fixtures.scala).
+  * shapes; see FIXTURES.md).
   */
 class FixturePinSpec extends AnyFunSuite {
 

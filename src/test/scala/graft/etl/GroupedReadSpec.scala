@@ -66,7 +66,7 @@ class GroupedReadSpec extends SparkSpec {
   private def rawDir(base: String, extra: (String, Seq[String])*): String = {
     val dir = Files.createTempDirectory("graft-grouped-read")
     if (base.nonEmpty)
-      csvFiles(Fixtures.materialize(base)).foreach(f => Files.copy(f, dir.resolve(f.getFileName)))
+      csvFiles(Fixtures.dir(base)).foreach(f => Files.copy(f, dir.resolve(f.getFileName)))
     extra.foreach { case (name, lines) =>
       Files.write(dir.resolve(name), lines.mkString("\n").getBytes(StandardCharsets.UTF_8))
     }
@@ -74,11 +74,11 @@ class GroupedReadSpec extends SparkSpec {
   }
 
   private def fixtureLines(set: String, file: String): Seq[String] =
-    Files.readAllLines(Paths.get(Fixtures.materialize(set), file), StandardCharsets.UTF_8).asScala.toSeq
+    Files.readAllLines(Paths.get(Fixtures.dir(set), file), StandardCharsets.UTF_8).asScala.toSeq
 
   test("every fixture CSV keeps its per-file schema; every shipped pipeline is unchanged") {
     Configs.all.toSeq.sortBy(_._1).foreach { case (name, (config, capitalize)) =>
-      val dir = Fixtures.materialize(name)
+      val dir = Fixtures.dir(name)
       assertPerFileSchemas(dir)
       assertSamePipeline(config, dir, capitalize)
     }

@@ -28,7 +28,7 @@ class MultiSourceAdEtlSpec extends SparkSpec {
       declared.fields.map(f => (f.name, f.dataType)).toSeq)
 
   test("apsl e2e: 5 sources detected, cleaned, conformed, merged") {
-    val dir = Fixtures.materialize("apsl")
+    val dir = Fixtures.dir("apsl")
     val engine = new MultiSourceAdEtl(Configs.apsl)
     val out = engine.run(spark, dir, capitalize = true).cache()
 
@@ -60,7 +60,7 @@ class MultiSourceAdEtlSpec extends SparkSpec {
   }
 
   test("like_eat e2e: Korean pipeline with chained Naver cleaners") {
-    val dir = Fixtures.materialize("like_eat")
+    val dir = Fixtures.dir("like_eat")
     val engine = new MultiSourceAdEtl(Configs.likeEat)
     val out = engine.run(spark, dir, capitalize = true).cache()
 
@@ -118,7 +118,7 @@ class MultiSourceAdEtlSpec extends SparkSpec {
 
   test("podl e2e: no-capitalize pipeline, Total row removed, never-mapped column is null") {
     val out = new MultiSourceAdEtl(Configs.podl)
-      .run(spark, Fixtures.materialize("podl"), capitalize = false).cache()
+      .run(spark, Fixtures.dir("podl"), capitalize = false).cache()
     assertConforms(out.schema, Configs.podl.standardSchema)
     val bySource = out.groupBy("Source").count().collect()
       .map(r => r.getString(0) -> r.getLong(1)).toMap
@@ -129,7 +129,7 @@ class MultiSourceAdEtlSpec extends SparkSpec {
 
   test("mnb e2e: wired X cleaner turns '-' Average frequency into Frequency 0.0") {
     val out = new MultiSourceAdEtl(Configs.mnb)
-      .run(spark, Fixtures.materialize("mnb"), capitalize = false).cache()
+      .run(spark, Fixtures.dir("mnb"), capitalize = false).cache()
     assertConforms(out.schema, Configs.mnb.standardSchema)
     assert(out.count() == 3)
     // the placeholder row: cleaner "-"→"0", standardize casts to 0.0
@@ -146,7 +146,7 @@ class MultiSourceAdEtlSpec extends SparkSpec {
 
   test("kcon e2e: currency-agnostic config keeps Amount spent (Raw) as String") {
     val out = new MultiSourceAdEtl(Configs.kcon)
-      .run(spark, Fixtures.materialize("kcon"), capitalize = false).cache()
+      .run(spark, Fixtures.dir("kcon"), capitalize = false).cache()
     assertConforms(out.schema, Configs.kcon.standardSchema)
     assert(out.count() == 3)
     val amounts = out.select("Source", "Amount spent (Raw)", "Currency").collect()
@@ -183,7 +183,7 @@ class MultiSourceAdEtlSpec extends SparkSpec {
     df.collect().map(_.toSeq.mkString("|")).toSeq.sorted
 
   test("an apsl Meta export with an extra dotted column (Avg. CPC) gives the same rows as without it") {
-    val src = Paths.get(Fixtures.materialize("apsl"))
+    val src = Paths.get(Fixtures.dir("apsl"))
     val dir = Files.createTempDirectory("graft-dotted")
     Using.resource(Files.list(src))(_.iterator().asScala.toSeq).foreach { f =>
       val lines = Files.readAllLines(f, UTF_8).asScala.toSeq
@@ -232,5 +232,13 @@ class MultiSourceAdEtlSpec extends SparkSpec {
       Seq("Source", "Report.day", "Ad `name`", "Avg. CPC", "Spend.total (`KRW`)"),
       Seq("Shop", "45870", "a.1", "0.25", "10.5"),
       Seq("Shop", "45871", "b `2`", "0.5", "20.0")))
+  }
+
+  test("Fixtures.dir reads every shipped set in place and rejects an unknown one naming its path") {
+    Configs.all.keys.foreach { name =>
+      assert(Fixtures.dir(name) == Paths.get(Fixtures.root, name).toString)
+    }
+    val e = intercept[IllegalArgumentException](Fixtures.dir("nosuch"))
+    assert(e.getMessage.contains(Paths.get(Fixtures.root, "nosuch").toString), e.getMessage)
   }
 }

@@ -19,7 +19,7 @@ class PipelineRunnerSpec extends SparkSpec {
     val result = PipelineRunner.runAndExport(
       spark,
       Configs.apsl,
-      Fixtures.materialize("apsl"),
+      Fixtures.dir("apsl"),
       capitalize = true,
       processedDir = processed,
       filenamePrefix = "apsl_daily",
@@ -47,7 +47,7 @@ class PipelineRunnerSpec extends SparkSpec {
 
   /** A raw dir holding one apsl TikTok export with these data rows. */
   private def tiktokRaw(rows: String*): String = {
-    val header = Files.readAllLines(Paths.get(Fixtures.materialize("apsl"), "tiktok.csv"), UTF_8).get(0)
+    val header = Files.readAllLines(Paths.get(Fixtures.dir("apsl"), "tiktok.csv"), UTF_8).get(0)
     val dir = Files.createTempDirectory("graft-runner-raw")
     Files.write(dir.resolve("tiktok.csv"), (header +: rows).mkString("\n").getBytes(UTF_8))
     dir.toString

@@ -265,7 +265,7 @@ class AnnIndexSpec extends SparkSpec with BeforeAndAfterAll {
   }
 
   test("update moving ids to DIFFERENT cells still shadows the stale base rows") {
-    // the r17 ADVICE-high class: writeUpdateSegment re-assigns each
+    // the r17 ADVICE-high class: ensureUpdates re-assigns each
     // re-added row to the cell nearest its NEW embedding, so the update
     // row can land OUTSIDE the probe list while the stale base row sits
     // inside it. A dedup computed after probe pruning never sees the

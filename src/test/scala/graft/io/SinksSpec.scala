@@ -94,6 +94,25 @@ class SinksSpec extends SparkSpec {
       Seq(("a", "1"), ("b", "2")))
   }
 
+  test("getDataFrame pads rows whose trailing cells are blank with \"\"") {
+    val svc = new Sinks.InMemorySheetService
+    // the Sheets values API leaves out a row's trailing empty cells
+    svc.update("k", "s", "A1:C4", Seq(
+      Seq("a", "b", "c"), Seq("1", "2", "3"), Seq("4"), Seq("5", "6")))
+    val df = Sinks.getDataFrame(spark, svc, "k", "s", "A1:C4")
+    assert(df.columns.toSeq == Seq("a", "b", "c"))
+    assert(df.orderBy("a").collect().map(_.toSeq).toSeq ==
+      Seq(Seq("1", "2", "3"), Seq("4", "", ""), Seq("5", "6", "")))
+  }
+
+  test("a payload row wider than its header fails naming the row and both widths") {
+    val e = intercept[IllegalArgumentException] {
+      Sources.fromRows(spark, Seq("a", "b"), Seq(Seq("1", "2"), Seq("3", "4", "5")))
+    }
+    assert(e.getMessage.contains("row 3") && e.getMessage.contains("3 cells") &&
+      e.getMessage.contains("2-column header"), e.getMessage)
+  }
+
   test("InMemorySheetService.get crops to the requested A1 rectangle like the real API") {
     val svc = new Sinks.InMemorySheetService
     svc.update("k", "s", "A1:C4", Seq(

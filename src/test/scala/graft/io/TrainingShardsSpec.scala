@@ -3,87 +3,17 @@ package graft.io
 import java.nio.file.Files
 
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
 
 import graft.{SparkSpec, TestSpark}
 
 class TrainingShardsSpec extends SparkSpec {
 
-  private val schema = StructType(Seq(
-    StructField("doc_id", LongType),
-    StructField("text", StringType),
-    StructField("lang", StringType),
-    StructField("shard", StringType)))
-
-  private def docsWithShard = {
-    graft.queries.Tables.t(spark, TestSpark.sf0001, "documents")
-      .select(col("doc_id"), col("text"), col("lang"),
-        substring(md5(col("text")), 1, 1).as("shard"))
-  }
-
-  test("JSONL shard round-trip: identical rows, Hive-style shard dirs, one file set per shard") {
-    val dir = Files.createTempDirectory("jsonl").toFile
-    try {
-      val in = docsWithShard
-      TrainingShards.writeJsonl(in, dir.getAbsolutePath, "shard")
-      // Hive-style layout: shard=<hex>/ directories
-      val shardDirs = dir.listFiles().filter(_.getName.startsWith("shard=")).map(_.getName)
-      assert(shardDirs.nonEmpty && shardDirs.forall(_.matches("shard=[0-9a-f]")))
-      // repartition(shardCol) ⇒ each shard dir holds exactly one data file
-      dir.listFiles().filter(_.getName.startsWith("shard=")).foreach { sd =>
-        assert(sd.listFiles().count(_.getName.endsWith(".json")) == 1,
-          s"${sd.getName} must hold one JSONL file, not a fragment per task")
-      }
-      val back = TrainingShards.readJsonl(spark, dir.getAbsolutePath, schema)
-      val a = in.orderBy("doc_id").collect().map(_.toSeq).toSeq
-      val b = back.select("doc_id", "text", "lang", "shard")
-        .orderBy("doc_id").collect().map(_.toSeq).toSeq
-      assert(a == b)
-    } finally {
-      org.apache.commons.io.FileUtils.deleteDirectory(dir)
-    }
-  }
-
-  test("gzip-compressed shards round-trip and are actually gzip") {
-    val dir = Files.createTempDirectory("jsonlgz").toFile
-    try {
-      TrainingShards.writeJsonl(docsWithShard, dir.getAbsolutePath, "shard", compression = "gzip")
-      val files = dir.listFiles().filter(_.getName.startsWith("shard="))
-        .flatMap(_.listFiles())
-        .filter(f => !f.getName.startsWith(".") && f.getName.contains(".json"))
-      assert(files.nonEmpty && files.forall(_.getName.endsWith(".gz")))
-      val back = TrainingShards.readJsonl(spark, dir.getAbsolutePath, schema)
-      assert(back.count() == docsWithShard.count())
-    } finally {
-      org.apache.commons.io.FileUtils.deleteDirectory(dir)
-    }
-  }
-
-  test("shard pruning: a filter on the partition column prunes at the source") {
-    val dir = Files.createTempDirectory("jsonlprune").toFile
-    try {
-      TrainingShards.writeJsonl(docsWithShard, dir.getAbsolutePath, "shard")
-      val one = TrainingShards.readJsonl(spark, dir.getAbsolutePath, schema)
-        .filter(col("shard") === "a")
-      val expected = docsWithShard.filter(col("shard") === "a").count()
-      assert(one.count() == expected)
-      // partition filter must reach the file index, not a post-scan Filter
-      val scan = one.queryExecution.sparkPlan.collectLeaves().collectFirst {
-        case f: org.apache.spark.sql.execution.FileSourceScanExec => f
-      }.get
-      assert(scan.metadata("PartitionFilters").contains("shard"))
-    } finally {
-      org.apache.commons.io.FileUtils.deleteDirectory(dir)
-    }
-  }
-
-  test("parquet shards: deterministic xxhash placement, one file per shard, stable in-shard order") {
+  test("parquet shards: deterministic md5-48 placement, one file per shard") {
     val dir = Files.createTempDirectory("pqshards").toFile
     try {
       val in = graft.queries.Tables.t(spark, TestSpark.sf0001, "documents")
         .select(col("doc_id"), col("text"), col("lang"))
-      TrainingShards.writeParquetShards(in, "doc_id", dir.getAbsolutePath, 8,
-        orderWithinShard = Seq(col("doc_id")))
+      TrainingShards.writeParquetShards(in, "doc_id", dir.getAbsolutePath, 8)
       val shardDirs = dir.listFiles().filter(_.getName.startsWith("shard="))
       assert(shardDirs.map(_.getName).toSeq.sorted ==
         (0 until 8).map(k => s"shard=$k").sorted,
@@ -97,15 +27,9 @@ class TrainingShardsSpec extends SparkSpec {
       // placement is a pure hash of the key: recomputing it must agree
       // with what was written (re-runs/backfills place rows identically)
       val mismatches = back.withColumn("expect",
-          TrainingShards.assignShard(col("doc_id"), 8))
+          TrainingShards.assignShardReplayable(col("doc_id"), 8))
         .filter(col("shard").cast("int") =!= col("expect")).count()
       assert(mismatches == 0)
-      // in-shard order survived the write: rows within one file are sorted
-      val oneFile = shardDirs.head.listFiles()
-        .filter(_.getName.endsWith(".parquet")).head
-      val ids = spark.read.parquet(oneFile.getAbsolutePath)
-        .select("doc_id").collect().map(_.getLong(0)).toSeq
-      assert(ids == ids.sorted, "sortWithinPartitions order must persist")
     } finally {
       org.apache.commons.io.FileUtils.deleteDirectory(dir)
     }
@@ -120,7 +44,7 @@ class TrainingShardsSpec extends SparkSpec {
       val before = spark.read.parquet(dir.getAbsolutePath).count()
       // a delta batch that hashes into a strict subset of shards
       val delta = in.filter(
-        TrainingShards.assignShard(col("doc_id"), 8) === 3)
+        TrainingShards.assignShardReplayable(col("doc_id"), 8) === 3)
       assert(delta.count() > 0 && delta.count() < before)
       TrainingShards.writeParquetShards(delta, "doc_id", dir.getAbsolutePath, 8)
       // dynamic overwrite: shard=3 replaced, every other shard untouched

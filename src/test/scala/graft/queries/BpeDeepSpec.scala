@@ -4,7 +4,7 @@ import graft.{SparkSpec, TestSpark}
 
 /** t_bpe_merges_deep — the deep (K = Text.deepK = 1000) INCREMENTAL
   * driver-loop trainer's contract:
-  * (1) path equivalence: the bounded driver loop (trainMergesLocal, now
+  * (1) path equivalence: the bounded driver loop (trainLocal, now
   * delta-updating pair counts per merge) and the DISTRIBUTED per-round
   * chain (bpeChainFrom) produce byte-identical merges over the same
   * bigram unit table — the rule/argmax/tie-break are one algorithm in
@@ -22,7 +22,7 @@ class BpeDeepSpec extends SparkSpec {
 
   test("driver loop == distributed chain on the same bigram units (first 5 rounds)") {
     val units = Text.bigramUnits(spark, sf)
-    val local = Text.trainMergesLocal(
+    val (local, _) = Text.trainLocal(
       units.collect().map(r => (r.getString(0), r.getLong(1))).toSeq, 5)
     val (distributed, _) = Text.bpeChainFrom(units, 5)
     val dist = distributed.reduce(_.unionAll(_)).orderBy("it").collect()
@@ -38,7 +38,7 @@ class BpeDeepSpec extends SparkSpec {
     val units = Text.bigramUnits(spark, sf).collect()
       .map(r => (r.getString(0), r.getLong(1))).toSeq
     val k = 300
-    val fast = Text.trainMergesLocal(units, k)
+    val fast = Text.trainLocal(units, k)._1
     // referee segmentation + tie-break mirror the ENGINE contract, not
     // Scala String conveniences: code-point symbols (Text.codePointTokens
     // — the r16 fix this spec pins) and UTF-8 byte order on count ties
@@ -104,7 +104,7 @@ class BpeDeepSpec extends SparkSpec {
     // a unit with no adjacent symbol pairs leaves round 1 with an empty
     // pair inventory — the loop must refuse, not emit < K rows
     val e = intercept[IllegalArgumentException] {
-      Text.trainMergesLocal(Seq(("x", 1L)), 1)
+      Text.trainLocal(Seq(("x", 1L)), 1)._1
     }
     assert(e.getMessage.contains("saturated"))
   }

@@ -23,7 +23,7 @@ class BpeEncodeBytesLocalSpec extends SparkSpec {
   test("k=5 word-unit training: driver loop == distributed chain") {
     val docs = Tables.t(spark, sf, "documents")
     val collected = Text.collectWordUnits(docs, "spec")
-    val local = Text.trainMergesLocal(collected, 5)
+    val (local, finalSyms) = Text.trainLocal(collected, 5)
     val unitsDf = docs.select(explode(Text.tokens(col("text"))).as("w"))
       .filter(col("w") =!= "")
       .groupBy("w").agg(count(lit(1)).as("n"))
@@ -34,7 +34,6 @@ class BpeEncodeBytesLocalSpec extends SparkSpec {
     assert(local == dist,
       "k=5 driver-loop merges diverged from the distributed chain on word units")
     // the APPLIED vocabulary too (t_bpe_encode consumes finalSyms)
-    val (_, finalSyms) = Text.trainLocal(collected, 5)
     val distSyms = distVocab.collect()
       .map(r => (r.getString(0), r.getString(1))).toMap
     assert(finalSyms.toMap == distSyms,

@@ -350,7 +350,7 @@ class PlanSpec extends SparkSpec {
 
   test("etl pipeline: conform collapses to a single Project per source branch (no shuffle)") {
     val engine = new graft.etl.MultiSourceAdEtl(graft.etl.Configs.apsl)
-    val p = engine.run(spark, graft.etl.Fixtures.materialize("apsl"), capitalize = true)
+    val p = engine.run(spark, graft.etl.Fixtures.dir("apsl"), capitalize = true)
       .queryExecution.sparkPlan.toString
     assert(!p.contains("Exchange"), "reference-surface ETL must be shuffle-free")
     assert(p.contains("Union"))

@@ -9,58 +9,14 @@ import graft.{SparkSpec, TestSpark}
 import graft.queries.Tables
 
 /** Streaming semantics through a real MemoryStream → memory-sink query:
-  * watermark advance, incremental windowed aggregation, custom stateful
-  * session closing — plus batch/stream plan equivalence on the testdata.
+  * watermark advance, the interval join, content dedup, custom stateful
+  * session closing — plus batch/stream equivalence on the testdata.
   */
 class EventStreamsSpec extends SparkSpec {
 
   import EventStreams._
 
   private def ts(minute: Int): Timestamp = new Timestamp(3600000L * 10 + minute * 60000L)
-
-  test("hourlyCounts over a MemoryStream: incremental update with watermark") {
-    implicit val sqlCtx = spark.sqlContext
-    import spark.implicits._
-    val mem = MemoryStream[Event]
-    val q = hourlyCounts(mem.toDF()).writeStream
-      .format("memory").queryName("hourly_test").outputMode(OutputMode.Update).start()
-    try {
-      mem.addData(
-        Event(1, ts(0), 1, "click", 1.0),
-        Event(2, ts(10), 1, "click", 2.0),
-        Event(3, ts(70), 2, "view", 3.0))
-      q.processAllAvailable()
-      val rows = spark.table("hourly_test")
-        .select("hour_ts", "event_type", "cnt", "sum_value")
-        .as[(Timestamp, String, Long, Double)].collect().toSet
-      assert(rows == Set(
-        (ts(0), "click", 2L, 3.0),
-        (new Timestamp(ts(60).getTime), "view", 1L, 3.0)))
-    } finally q.stop()
-  }
-
-  test("hourlyCounts over a real FILE stream source matches the batch plan") {
-    import spark.implicits._
-    // file streaming sources need a DIRECTORY: stage the real sf0.001 events
-    // (µs-converted) as a parquet dir, then readStream over it — the actual
-    // production shape (files dropped into a watched directory)
-    val dir = java.nio.file.Files.createTempDirectory("events-stream").toString
-    val batchDf = Tables.events(spark, TestSpark.sf0001)
-    batchDf.write.mode("overwrite").parquet(dir)
-    val streamed = spark.readStream.schema(batchDf.schema).parquet(dir)
-    val q = hourlyCounts(streamed).writeStream
-      .format("memory").queryName("hourly_file_test")
-      .outputMode(OutputMode.Complete).start()
-    try {
-      q.processAllAvailable()
-      val streamRows = spark.table("hourly_file_test")
-        .as[(Timestamp, String, Long, Double)].collect().toSet
-      val batchRows = hourlyCounts(batchDf)
-        .as[(Timestamp, String, Long, Double)].collect().toSet
-      assert(streamRows == batchRows)
-      assert(streamRows.nonEmpty)
-    } finally q.stop()
-  }
 
   test("sessionizeStateful: closes a session only after the gap passes the watermark") {
     implicit val sqlCtx = spark.sqlContext
@@ -104,22 +60,6 @@ class EventStreamsSpec extends SparkSpec {
     } finally q.stop()
   }
 
-  test("dedupStream drops duplicate event_ids across micro-batches") {
-    implicit val sqlCtx = spark.sqlContext
-    import spark.implicits._
-    val mem = MemoryStream[Event]
-    val q = dedupStream(mem.toDF()).writeStream
-      .format("memory").queryName("dedup_test").outputMode(OutputMode.Append).start()
-    try {
-      mem.addData(Event(1, ts(0), 1, "click", 1.0), Event(1, ts(0), 1, "click", 1.0))
-      q.processAllAvailable()
-      mem.addData(Event(1, ts(5), 1, "click", 1.0), Event(2, ts(6), 1, "view", 2.0))
-      q.processAllAvailable()
-      val ids = spark.table("dedup_test").as[Event].collect().map(_.event_id).sorted
-      assert(ids.toSeq == Seq(1L, 2L))
-    } finally q.stop()
-  }
-
   test("sessionizeStateful survives a straggler whose timeout lands below the eviction watermark") {
     implicit val sqlCtx = spark.sqlContext
     import spark.implicits._
@@ -142,14 +82,6 @@ class EventStreamsSpec extends SparkSpec {
       val u5 = spark.table("clamp_test").as[Session].collect().filter(_.user_id == 5)
       assert(u5.toSeq == Seq(Session(5, ts(0), ts(30), 2)))
     } finally q.stop()
-  }
-
-  test("dedupStream on a batch frame falls back to plain dropDuplicates") {
-    import spark.implicits._
-    val batch = Seq(
-      Event(1, ts(0), 1, "click", 1.0), Event(1, ts(0), 1, "click", 1.0),
-      Event(2, ts(5), 1, "view", 2.0)).toDF()
-    assert(dedupStream(batch).count() == 2)
   }
 
   test("docDedupStream drops re-posted CONTENT across micro-batches (normalized fingerprint)") {
@@ -177,13 +109,6 @@ class EventStreamsSpec extends SparkSpec {
     } finally q.stop()
   }
 
-  test("batch/stream equivalence: hourlyCounts on batch events == e_hourly_window query") {
-    val batch = hourlyCounts(Tables.events(spark, TestSpark.sf0001))
-      .orderBy("hour_ts", "event_type")
-    val oracle = graft.queries.Events.queries("e_hourly_window")(spark, TestSpark.sf0001)
-    assert(batch.collect().toSeq == oracle.collect().toSeq)
-  }
-
   test("sessionWindows (built-in session_window) matches stateful session count on batch") {
     import spark.implicits._
     val ev = Tables.events(spark, TestSpark.sf0001)
@@ -194,115 +119,6 @@ class EventStreamsSpec extends SparkSpec {
     val oracle = graft.queries.Events.queries("e_sessionize")(spark, TestSpark.sf0001)
       .select("user_id", "n_sessions").as[(Long, Long)].collect().toSeq
     assert(builtin == oracle)
-  }
-
-  test("rateAlerts: burst crossing the threshold alerts at the crossing event") {
-    implicit val sqlCtx = spark.sqlContext
-    import spark.implicits._
-    val mem = MemoryStream[Event]
-    // 10-minute window, threshold 3
-    val q = rateAlerts(mem.toDS(), 600000L, 3).writeStream
-      .format("memory").queryName("rate_test").outputMode(OutputMode.Append).start()
-    try {
-      mem.addData(
-        Event(1, ts(0), 1, "click", 1.0),
-        Event(2, ts(2), 1, "click", 1.0),
-        Event(3, ts(4), 1, "click", 1.0),   // 3rd in 10 min → alert here
-        Event(4, ts(6), 1, "click", 1.0),   // still 4 in window → alert again
-        Event(5, ts(0), 2, "view", 1.0),
-        Event(6, ts(30), 2, "view", 1.0))   // user 2 never bursts
-      q.processAllAvailable()
-      val rows = spark.table("rate_test")
-        .as[(Long, Timestamp, Int)].collect().toSet
-      assert(rows == Set((1L, ts(4), 3), (1L, ts(6), 4)))
-    } finally q.stop()
-  }
-
-  test("rateAlerts: state prunes to the window — a burst split across batches still fires") {
-    implicit val sqlCtx = spark.sqlContext
-    import spark.implicits._
-    val mem = MemoryStream[Event]
-    val q = rateAlerts(mem.toDS(), 600000L, 3).writeStream
-      .format("memory").queryName("rate_split_test").outputMode(OutputMode.Append).start()
-    try {
-      // batch 1: one event long ago (will be pruned) + one in-window
-      mem.addData(
-        Event(1, ts(-60), 7, "click", 1.0),
-        Event(2, ts(1), 7, "click", 1.0))
-      q.processAllAvailable()
-      // batch 2: two more inside the window → exactly 3 in window (the
-      // ts(-60) event must NOT count toward the burst)
-      mem.addData(
-        Event(3, ts(3), 7, "click", 1.0),
-        Event(4, ts(5), 7, "click", 1.0))
-      q.processAllAvailable()
-      val rows = spark.table("rate_split_test")
-        .as[(Long, Timestamp, Int)].collect().toSet
-      assert(rows == Set((7L, ts(5), 3)))
-    } finally q.stop()
-  }
-
-  test("enrichScd: events pick the dim version valid at their event time; misses survive as NULL") {
-    implicit val sqlCtx = spark.sqlContext
-    import spark.implicits._
-    // click weight 1.0 before ts(30), 2.0 after; view never covered
-    val dim = Seq(
-      ("click", ts(-600), ts(30), 1.0),
-      ("click", ts(30), ts(600), 2.0))
-      .toDF("event_type", "valid_from", "valid_to", "weight")
-    val mem = MemoryStream[Event]
-    val q = enrichScd(mem.toDF(), dim).writeStream
-      .format("memory").queryName("scd_test").outputMode(OutputMode.Append).start()
-    try {
-      mem.addData(
-        Event(1, ts(10), 1, "click", 5.0),  // v1 → weight 1.0
-        Event(2, ts(40), 1, "click", 5.0),  // v2 → weight 2.0
-        Event(3, ts(40), 2, "view", 7.0))   // no dim row → NULL
-      q.processAllAvailable()
-      val rows = spark.table("scd_test")
-        .select("event_id", "weight", "weighted_value")
-        .as[(Long, Option[Double], Option[Double])].collect().toSet
-      assert(rows == Set(
-        (1L, Some(1.0), Some(5.0)),
-        (2L, Some(2.0), Some(10.0)),
-        (3L, None, None)))
-      // batch form produces the identical enrichment (plan parity)
-      val batch = enrichScd(
-        Seq(Event(1, ts(10), 1, "click", 5.0),
-          Event(2, ts(40), 1, "click", 5.0),
-          Event(3, ts(40), 2, "view", 7.0)).toDS().toDF(), dim)
-        .select("event_id", "weight", "weighted_value")
-        .as[(Long, Option[Double], Option[Double])].collect().toSet
-      assert(batch == rows)
-    } finally q.stop()
-  }
-
-  test("rateAlerts: a cross-batch late event neither counts future events nor evicts them") {
-    implicit val sqlCtx = spark.sqlContext
-    import spark.implicits._
-    val mem = MemoryStream[Event]
-    val q = rateAlerts(mem.toDS(), 600000L, 3).writeStream
-      .format("memory").queryName("rate_late_test").outputMode(OutputMode.Append).start()
-    try {
-      // batch 1: two in-window events for user 9
-      mem.addData(
-        Event(1, ts(0), 9, "click", 1.0),
-        Event(2, ts(8), 9, "click", 1.0))
-      q.processAllAvailable()
-      // batch 2: a LATE event at ts(4) (watermark is 2h, so it's admitted).
-      // State becomes {0, 8, 4}; its own trailing window holds {0, 4} = 2 —
-      // the ts(8) event is in the FUTURE and must not count → no alert yet.
-      mem.addData(Event(3, ts(4), 9, "click", 1.0))
-      q.processAllAvailable()
-      assert(spark.table("rate_late_test").count() == 0)
-      // batch 3: one more at ts(9). The late event must not have evicted or
-      // shrunk state: window (ts(-1), ts(9)] holds all four → alert n=4.
-      mem.addData(Event(4, ts(9), 9, "click", 1.0))
-      q.processAllAvailable()
-      val rows = spark.table("rate_late_test")
-        .as[(Long, Timestamp, Int)].collect().toSet
-      assert(rows == Set((9L, ts(9), 4)))
-    } finally q.stop()
   }
 
   test("sessionizeStateful == batch session_window on the same cross-batch disordered input") {
@@ -346,43 +162,6 @@ class EventStreamsSpec extends SparkSpec {
       assert(streamed == batchSessions.filter(_.user_id != 9L))
       assert(streamed.size == 4, s"expected 4 closed sessions, got $streamed")
     } finally q.stop()
-  }
-
-  test("compactCdc: emits only advancing changes, swallows stale replays, tombstones") {
-    implicit val sqlCtx = spark.sqlContext
-    import spark.implicits._
-    val mem = MemoryStream[CdcChange]
-    val q = compactCdc(mem.toDS()).writeStream
-      .format("memory").queryName("cdc_test").outputMode(OutputMode.Append).start()
-    try {
-      // batch 1: key 1 upserts twice (seq 5 wins in-batch), key 2 inserts
-      mem.addData(
-        CdcChange(1, 3, "U", 10.0, "O"),
-        CdcChange(1, 5, "U", 12.0, "O"),
-        CdcChange(2, 1, "U", 99.0, "F"))
-      q.processAllAvailable()
-      val b1 = spark.table("cdc_test").as[CdcChange].collect().toSet
-      assert(b1 == Set(CdcChange(1, 5, "U", 12.0, "O"),
-        CdcChange(2, 1, "U", 99.0, "F")))
-      // batch 2: stale replay for key 1 (seq 4 < 5: swallowed, no emission),
-      // delete for key 2 (advances: tombstone flows through)
-      mem.addData(
-        CdcChange(1, 4, "U", 11.0, "O"),
-        CdcChange(2, 7, "D", 99.0, "F"))
-      q.processAllAvailable()
-      val all = spark.table("cdc_test").as[CdcChange].collect().toSeq
-      assert(all.size == 3, s"stale seq-4 must not emit: $all")
-      assert(all.count(_ == CdcChange(2, 7, "D", 99.0, "F")) == 1)
-    } finally q.stop()
-    // batch fallback compacts to the same final snapshot as replaying the
-    // full log through the streaming path
-    val log = Seq(
-      CdcChange(1, 3, "U", 10.0, "O"), CdcChange(1, 5, "U", 12.0, "O"),
-      CdcChange(1, 4, "U", 11.0, "O"), CdcChange(2, 1, "U", 99.0, "F"),
-      CdcChange(2, 7, "D", 99.0, "F")).toDS()
-    val snap = compactCdc(log).collect().toSet
-    assert(snap == Set(CdcChange(1, 5, "U", 12.0, "O"),
-      CdcChange(2, 7, "D", 99.0, "F")))
   }
 
   test("st_sessionize corpus entry: live checkpointed ledger equals the batch gap rewrite") {

@@ -23,8 +23,8 @@ class IngestPipelineSpec extends SparkSpec {
     val nShards = 8
 
     // stage the dup corpus (every 5th doc twice) as 8 files with synthetic
-    // ingest timestamps inside one watermark horizon; 8 files ×
-    // maxFilesPerTrigger=1 → 8 micro-batches to interrupt between
+    // ingest timestamps inside one watermark horizon; 8 files, one per
+    // micro-batch → 8 micro-batches to interrupt between
     val staged = Dedup.corpusWithDups(spark, TestSpark.sf0001)
       .select(col("doc_id"),
         timestamp_seconds(lit(1700000000L) + col("doc_id")).as("ts"),
@@ -59,7 +59,8 @@ class IngestPipelineSpec extends SparkSpec {
     // the committed view (read through the _spark_metadata manifest)
     val out = spark.read.parquet(outDir)
     val mirror = EventStreams.docDedupStream(staged) // batch branch
-      .withColumn("shard", graft.io.TrainingShards.assignShard(col("fp"), nShards))
+      .withColumn("shard",
+        graft.io.TrainingShards.assignShardReplayable(col("fp"), nShards))
 
     // exactly once: one row per content fingerprint, nothing lost
     val perFp = out.groupBy("fp").count()
@@ -71,7 +72,7 @@ class IngestPipelineSpec extends SparkSpec {
 
     // content hash match vs the batch mirror: duplicates share text, so the
     // (fp, text, shard) projection is keep-choice-invariant and must match
-    // EXACTLY; shard placement must be the deterministic xxhash64 draw
+    // EXACTLY; shard placement must be the deterministic md5-48 draw
     val outSet = out.select("fp", "text", "shard").collect()
       .map(r => (r.getString(0), r.getString(1), r.getInt(2))).toSet
     val mirrorSet = mirror.select("fp", "text", "shard").collect()
