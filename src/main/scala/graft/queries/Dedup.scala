@@ -950,14 +950,11 @@ object Dedup {
         |SELECT n_copies, count(*) AS n_groups, min(keep_id) AS min_keep
         |FROM grp GROUP BY n_copies ORDER BY n_copies""".stripMargin,
     "d_embed_neardup" ->
-      """WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
+      s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
         |           FROM embeddings WHERE vec_id < 300)
-        |SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-        |  round(list_dot_product(a.v, b.v) /
-        |        (sqrt(list_dot_product(a.v, a.v)) * sqrt(list_dot_product(b.v, b.v))), 4) AS cos
+        |SELECT a.vec_id AS id_a, b.vec_id AS id_b, ${cosSql("a.v", "b.v", 4)} AS cos
         |FROM e a, e b WHERE a.vec_id < b.vec_id
-        |  AND round(list_dot_product(a.v, b.v) /
-        |        (sqrt(list_dot_product(a.v, a.v)) * sqrt(list_dot_product(b.v, b.v))), 4) >= 0.3
+        |  AND ${cosSql("a.v", "b.v", 4)} >= 0.3
         |ORDER BY id_a, id_b""".stripMargin,
     "d_dup_clusters" ->
       """WITH g AS (

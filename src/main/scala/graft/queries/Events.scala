@@ -25,6 +25,22 @@ object Events {
       .select(explode(expr("sequence(h0, h1, interval 1 hour)")).as("hour_ts")
         +: extra: _*)
 
+  /** The gap-filled (type × hour) panel over [[hourSpine]]: every hour
+    * crossed with every event type, `c` = that hour's event count, 0
+    * where none, plus the `extra` columns (which may read `hour_ts`). Its
+    * SQL twin is [[hourlyPanelSql]].
+    */
+  private def hourlyPanel(e: DataFrame, extra: Column*): DataFrame = {
+    val hourly = e
+      .groupBy(date_trunc("HOUR", col("ts")).as("hour_ts"), col("event_type"))
+      .agg(count(lit(1)).as("c"))
+    hourSpine(e)
+      .crossJoin(e.select("event_type").distinct())
+      .join(hourly, Seq("hour_ts", "event_type"), "left")
+      .select(Seq(col("hour_ts"), col("event_type"),
+        coalesce(col("c"), lit(0L)).as("c")) ++ extra: _*)
+  }
+
   val queries: Map[String, Q] = Map(
     // JSON extraction from the props column (get_json_object ~ E-extension).
     "e_json_extract" -> ((s, d) =>
@@ -682,19 +698,10 @@ object Events {
     // the frame is always 24 REAL hours); only full windows are reported.
     // Integer counts → positional picks are exact on both engines.
     "e_moving_percentile" -> ((s, d) => {
-      val e = Tables.events(s, d)
-      val hourly = e
-        .groupBy(date_trunc("HOUR", col("ts")).as("hour_ts"), col("event_type"))
-        .agg(count(lit(1)).as("c"))
-      val spine = hourSpine(e)
-      val panel = spine
-        .crossJoin(e.select("event_type").distinct())
-        .join(hourly, Seq("hour_ts", "event_type"), "left")
-        .select(col("hour_ts"), col("event_type"),
-          coalesce(col("c"), lit(0L)).as("c"))
       val w = Window.partitionBy("event_type").orderBy("hour_ts")
         .rowsBetween(-23, 0)
-      panel.withColumn("win", array_sort(collect_list("c").over(w)))
+      hourlyPanel(Tables.events(s, d))
+        .withColumn("win", array_sort(collect_list("c").over(w)))
         .filter(size(col("win")) === 24)
         // ceil(0.5·24) = 12, ceil(0.95·24) = 23 — fixed 1-based positions
         .select(col("hour_ts"), col("event_type"),
@@ -713,17 +720,8 @@ object Events {
     // engines' avg — the e_anomaly discipline); MAPE/bias round their
     // order-dependent averages.
     "e_forecast_baseline" -> ((s, d) => {
-      val e = Tables.events(s, d)
-      val hourly = e
-        .groupBy(date_trunc("HOUR", col("ts")).as("hour_ts"), col("event_type"))
-        .agg(count(lit(1)).as("c"))
-      val spine = hourSpine(e)
-      val panel = spine
-        .crossJoin(e.select("event_type").distinct())
-        .join(hourly, Seq("hour_ts", "event_type"), "left")
-        .select(col("hour_ts"), col("event_type"), coalesce(col("c"), lit(0L)).as("c"))
       val w = Window.partitionBy("event_type").orderBy("hour_ts")
-      panel
+      hourlyPanel(Tables.events(s, d))
         .withColumn("pred", lag("c", 24).over(w))
         .filter(col("pred").isNotNull)
         .groupBy("event_type")
@@ -799,16 +797,7 @@ object Events {
     // INTEGER counts is exact-sum-then-divide on both engines, so only
     // the final z needs the 6-dp round (the e_anomaly discipline).
     "e_seasonal_anomaly" -> ((s, d) => {
-      val e = Tables.events(s, d)
-      val hourly = e
-        .groupBy(date_trunc("HOUR", col("ts")).as("hour_ts"), col("event_type"))
-        .agg(count(lit(1)).as("c"))
-      val spine = hourSpine(e)
-      val panel = spine
-        .crossJoin(e.select("event_type").distinct())
-        .join(hourly, Seq("hour_ts", "event_type"), "left")
-        .select(col("hour_ts"), col("event_type"),
-          coalesce(col("c"), lit(0L)).as("c"), hour(col("hour_ts")).as("hod"))
+      val panel = hourlyPanel(Tables.events(s, d), hour(col("hour_ts")).as("hod"))
       val profile = panel.groupBy("event_type", "hod")
         .agg(avg("c").as("mu_hod"))
       val resid = panel.join(broadcast(profile), Seq("event_type", "hod"))
@@ -1272,6 +1261,23 @@ object Events {
        |spine AS (
        |  SELECT unnest(generate_series(h0, h1, INTERVAL 1 HOUR)) AS hour_ts$extra FROM b)""".stripMargin
 
+  /** hourlyPanel in SQL: [[hourSpineSql]], then CTE `panel` of
+    * (hour_ts, event_type, c) and the `extra` select items — every spine
+    * hour crossed with every event type, `c` = that hour's event count, 0
+    * where none. */
+  private def hourlyPanelSql(extra: String = ""): String =
+    s"""${hourSpineSql()},
+       |types AS (SELECT DISTINCT event_type FROM events),
+       |hourly AS (
+       |  SELECT CAST(date_trunc('hour', ts) AS TIMESTAMP) AS hour_ts, event_type,
+       |         count(*) AS c
+       |  FROM events GROUP BY 1, 2),
+       |panel AS (
+       |  SELECT spine.hour_ts, types.event_type,
+       |         CAST(coalesce(c, 0) AS BIGINT) AS c$extra
+       |  FROM spine CROSS JOIN types
+       |  LEFT JOIN hourly USING (hour_ts, event_type))""".stripMargin
+
   val oracles: Map[String, String] = Map(
     "e_json_extract" ->
       """SELECT event_type, count(*) AS cnt,
@@ -1656,17 +1662,7 @@ object Events {
         |   * 281474976710656) // theta AS est_du FROM m ORDER BY day""".stripMargin,
     // the identical panel + 24-row sorted-list window, same 1-based picks
     "e_moving_percentile" ->
-      s"""WITH ${hourSpineSql()},
-        |types AS (SELECT DISTINCT event_type FROM events),
-        |hourly AS (
-        |  SELECT CAST(date_trunc('hour', ts) AS TIMESTAMP) AS hour_ts, event_type,
-        |         count(*) AS c
-        |  FROM events GROUP BY 1, 2),
-        |panel AS (
-        |  SELECT spine.hour_ts, types.event_type,
-        |         CAST(coalesce(c, 0) AS BIGINT) AS c
-        |  FROM spine CROSS JOIN types
-        |  LEFT JOIN hourly USING (hour_ts, event_type)),
+      s"""WITH ${hourlyPanelSql()},
         |wl AS (
         |  SELECT hour_ts, event_type,
         |    list_sort(list(c) OVER (PARTITION BY event_type ORDER BY hour_ts
@@ -1676,17 +1672,7 @@ object Events {
         |FROM wl WHERE len(win) = 24
         |ORDER BY hour_ts, event_type""".stripMargin,
     "e_forecast_baseline" ->
-      s"""WITH ${hourSpineSql()},
-        |types AS (SELECT DISTINCT event_type FROM events),
-        |hourly AS (
-        |  SELECT CAST(date_trunc('hour', ts) AS TIMESTAMP) AS hour_ts, event_type,
-        |         count(*) AS c
-        |  FROM events GROUP BY 1, 2),
-        |panel AS (
-        |  SELECT spine.hour_ts, types.event_type,
-        |         CAST(coalesce(c, 0) AS BIGINT) AS c
-        |  FROM spine CROSS JOIN types
-        |  LEFT JOIN hourly USING (hour_ts, event_type)),
+      s"""WITH ${hourlyPanelSql()},
         |lg AS (
         |  SELECT event_type, c,
         |    lag(c, 24) OVER (PARTITION BY event_type ORDER BY hour_ts) AS pred
@@ -1739,18 +1725,7 @@ object Events {
     // same gap-filled panel as e_forecast_baseline, hour-of-day profile
     // subtraction, z rounded to 6 dp before the threshold (e_anomaly)
     "e_seasonal_anomaly" ->
-      s"""WITH ${hourSpineSql()},
-        |types AS (SELECT DISTINCT event_type FROM events),
-        |hourly AS (
-        |  SELECT CAST(date_trunc('hour', ts) AS TIMESTAMP) AS hour_ts, event_type,
-        |         count(*) AS c
-        |  FROM events GROUP BY 1, 2),
-        |panel AS (
-        |  SELECT spine.hour_ts, types.event_type,
-        |         CAST(coalesce(c, 0) AS BIGINT) AS c,
-        |         hour(spine.hour_ts) AS hod
-        |  FROM spine CROSS JOIN types
-        |  LEFT JOIN hourly USING (hour_ts, event_type)),
+      s"""WITH ${hourlyPanelSql(", hour(spine.hour_ts) AS hod")},
         |prof AS (SELECT event_type, hod, avg(c) AS mu_hod
         |         FROM panel GROUP BY 1, 2),
         |resid AS (

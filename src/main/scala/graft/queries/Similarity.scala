@@ -1676,12 +1676,12 @@ object Similarity {
     // greedily pick k=5 results trading relevance against redundancy,
     // score = 0.7·rel − 0.3·max-sim-to-already-selected. The data-sized
     // work is ONE relevance pass (broadcast 1-row query, TakeOrdered
-    // top-20 candidates); the greedy loop then runs entirely on the
-    // 20-row candidate lattice — each of the four unrolled iterations is
+    // top-20 candidates); the greedy loop (mmrGreedy) then runs entirely
+    // on the 20-row candidate lattice — each of its four later picks is
     // an argmax over ≤20 rows with the (6-dp score, vec_id) tiebreak
     // discipline, and the DuckDB oracle replays the identical chain as
-    // CTEs. Candidate relevances and pairwise sims round to 4 dp BEFORE
-    // the greedy math so both engines walk one trajectory.
+    // CTEs (mmrSql). Candidate relevances and pairwise sims round to 4 dp
+    // BEFORE the greedy math so both engines walk one trajectory.
     "s_mmr_rerank" -> ((s, d) => {
       graft.functions.GraftFunctions.ensureRegistered(s)
       val cos = graft.functions.GraftFunctions.cosineSim _
@@ -1709,63 +1709,9 @@ object Similarity {
         .collect()
         .filter(r0 => !r0.isNullAt(2))
         .map(r0 => (r0.getLong(0), r0.getSeq[Float](1).toArray, r0.getDouble(2)))
-      // mirrors the native CosineSimilarity null semantics: None for a
-      // zero-norm vector (denominator 0) instead of NaN — BigDecimal(NaN)
-      // throws, and the DataFrame form propagated NULL here, not a crash
-      def cosF(a: Array[Float], b: Array[Float]): Option[Double] = {
-        var dot = 0.0; var nx = 0.0; var ny = 0.0; var i = 0
-        while (i < a.length) {
-          val x = a(i).toDouble; val y = b(i).toDouble
-          dot += x * y; nx += x * x; ny += y * y; i += 1
-        }
-        val denom = math.sqrt(nx) * math.sqrt(ny)
-        if (denom == 0.0) None else Some(dot / denom)
-      }
-      def rnd(x: Double, dp: Int) =
-        BigDecimal(x).setScale(dp, BigDecimal.RoundingMode.HALF_UP).toDouble
-      val sim: Map[(Long, Long), Double] = (for {
-        (ia, ea, _) <- cands; (ib, eb, _) <- cands if ia != ib
-        c <- cosF(ea, eb)
-      } yield (ia, ib) -> rnd(c, 4)).toMap
-      // greedy: seed with the best-rel candidate (cands are already in
-      // (rel desc, vec_id) order), then argmax of 0.7·rel − 0.3·max-sim
-      // over the unselected, ties (mmr desc, vec_id asc). max-sim ignores
-      // undefined (null) sims — SQL max semantics; a candidate whose sims
-      // are ALL undefined gets a null mmr, which a desc sort ranks last,
-      // so it is only pickable when no scored candidate remains.
-      val first = cands.head
-      var selected =
-        Vector((first._1, first._3, 1L, Double.box(first._3): java.lang.Double))
-      for (i <- 2 to 5) {
-        val selIds = selected.map(_._1).toSet
-        val remaining = cands.filter(c => !selIds.contains(c._1))
-        if (remaining.nonEmpty) {
-          val scored = remaining.map { case (ia, _, rela) =>
-            val sims = selIds.flatMap(ib => sim.get((ia, ib)))
-            val mmr = if (sims.isEmpty) None
-                      else Some(rnd(0.7 * rela - 0.3 * sims.max, 6))
-            (ia, rela, mmr)
-          }
-          val pick =
-            if (scored.exists(_._3.isDefined))
-              scored.filter(_._3.isDefined)
-                .minBy { case (ia, _, mmr) => (-mmr.get, ia) }
-            else scored.minBy(_._1)
-          selected :+=
-            ((pick._1, pick._2, i.toLong,
-              pick._3.map(Double.box).orNull: java.lang.Double))
-        }
-      }
-      val rows: java.util.List[org.apache.spark.sql.Row] = new java.util.ArrayList()
-      selected.foreach { case (id, rel, rank, mmr) =>
-        rows.add(org.apache.spark.sql.Row(rank, id, rel, mmr))
-      }
-      import org.apache.spark.sql.types._
-      s.createDataFrame(rows, StructType(Seq(
-        StructField("rank", LongType, nullable = true),
-        StructField("vec_id", LongType, nullable = true),
-        StructField("rel", DoubleType, nullable = true),
-        StructField("mmr", DoubleType, nullable = true))))
+      mmrFrame(s, mmrGreedy(cands.toSeq)(_._1, _._3, _._2).map {
+        case ((id, _, rel), rank, mmr) => org.apache.spark.sql.Row(rank, id, rel, mmr)
+      }, Seq("vec_id"), Seq("rel"))
     }),
 
     // Hybrid retrieval via reciprocal-rank fusion (Cormack et al. 2009):
@@ -1931,63 +1877,70 @@ object Similarity {
         .filter(r0 => !r0.isNullAt(3))
         .map(r0 => (r0.getLong(0), r0.getLong(1), r0.getDouble(2),
           r0.getDouble(3), r0.getSeq[Float](4).toArray))
-      def cosF(a: Array[Float], b: Array[Float]): Option[Double] = {
-        var dot = 0.0; var nx = 0.0; var ny = 0.0; var i = 0
-        while (i < a.length) {
-          val x = a(i).toDouble; val y = b(i).toDouble
-          dot += x * y; nx += x * x; ny += y * y; i += 1
-        }
-        val denom = math.sqrt(nx) * math.sqrt(ny)
-        if (denom == 0.0) None else Some(dot / denom)
-      }
-      def rnd(x: Double, dp: Int) =
-        BigDecimal(x).setScale(dp, BigDecimal.RoundingMode.HALF_UP).toDouble
-      val sim: Map[((Long, Long), (Long, Long)), Double] = (for {
-        (da, sa, _, _, ea) <- lattice; (db, sb, _, _, eb) <- lattice
-        if (da, sa) != (db, sb)
-        c <- cosF(ea, eb)
-      } yield ((da, sa), (db, sb)) -> rnd(c, 4)).toMap
-      // greedy: seed with the best-rel candidate (rel desc, doc, start),
-      // then argmax of 0.7·rel − 0.3·max-sim (mmr desc, doc, start)
-      val bySeed = lattice.sortBy(c => (-c._4, c._1, c._2))
-      var selected = Vector.empty[(Long, Long, Double, Double, Long, java.lang.Double)]
-      if (bySeed.nonEmpty) {
-        val f = bySeed.head
-        selected :+= ((f._1, f._2, f._3, f._4, 1L, Double.box(f._4): java.lang.Double))
-      }
-      for (i <- 2 to 5) {
-        val selKeys = selected.map(x => (x._1, x._2)).toSet
-        val remaining = bySeed.filter(c => !selKeys.contains((c._1, c._2)))
-        if (remaining.nonEmpty) {
-          val scored = remaining.map { case (dc, sc0, rrfv, rel, _) =>
-            val sims = selKeys.flatMap(k => sim.get(((dc, sc0), k)))
-            val mmr = if (sims.isEmpty) None
-                      else Some(rnd(0.7 * rel - 0.3 * sims.max, 6))
-            (dc, sc0, rrfv, rel, mmr)
-          }
-          val pick =
-            if (scored.exists(_._5.isDefined))
-              scored.filter(_._5.isDefined)
-                .minBy { case (dc, sc0, _, _, mmr) => (-mmr.get, dc, sc0) }
-            else scored.minBy(c => (c._1, c._2))
-          selected :+= ((pick._1, pick._2, pick._3, pick._4, i.toLong,
-            pick._5.map(Double.box).orNull: java.lang.Double))
-        }
-      }
-      val rows: java.util.List[org.apache.spark.sql.Row] = new java.util.ArrayList()
-      selected.foreach { case (dc, sc0, rrfv, rel, rank, mmr) =>
-        rows.add(org.apache.spark.sql.Row(rank, dc, sc0, rnd(rrfv, 6), rel, mmr))
-      }
-      import org.apache.spark.sql.types._
-      s.createDataFrame(rows, StructType(Seq(
-        StructField("rank", LongType, nullable = true),
-        StructField("doc_id", LongType, nullable = true),
-        StructField("start", LongType, nullable = true),
-        StructField("rrf", DoubleType, nullable = true),
-        StructField("rel", DoubleType, nullable = true),
-        StructField("mmr", DoubleType, nullable = true))))
+      mmrFrame(s, mmrGreedy(lattice.toSeq)(c => (c._1, c._2), _._4, _._5).map {
+        case ((dc, sc0, rrfv, rel, _), rank, mmr) =>
+          org.apache.spark.sql.Row(rank, dc, sc0, rnd(rrfv, 6), rel, mmr)
+      }, Seq("doc_id", "start"), Seq("rrf", "rel"))
     })
   )
+
+  /** Cosine of two float vectors on the driver, the native CosineSimilarity
+    * exactly: per-element float→double widening, sequential accumulation,
+    * and None (the expression's NULL) for a zero-norm vector. */
+  private def cosF(a: Array[Float], b: Array[Float]): Option[Double] = {
+    var dot = 0.0; var nx = 0.0; var ny = 0.0; var i = 0
+    while (i < a.length) {
+      val x = a(i).toDouble; val y = b(i).toDouble
+      dot += x * y; nx += x * x; ny += y * y; i += 1
+    }
+    val denom = math.sqrt(nx) * math.sqrt(ny)
+    if (denom == 0.0) None else Some(dot / denom)
+  }
+
+  /** `x` rounded HALF_UP to `dp` decimals — Spark's round() on the driver. */
+  private def rnd(x: Double, dp: Int): Double =
+    BigDecimal(x).setScale(dp, BigDecimal.RoundingMode.HALF_UP).toDouble
+
+  /** The driver-side greedy MMR of s_mmr_rerank and s_rag_pipeline (its
+    * SQL twin is [[mmrSql]]) over `cands`, each with a `key`, a relevance
+    * `rel` and a vector `vec`. Rank 1 is the best rel; ranks 2 to 5 each
+    * take the best 0.7·rel − 0.3·max-sim over the unselected (6-dp
+    * HALF_UP), sims being the 4-dp [[cosF]] to every pick so far; the
+    * smaller key wins every tie. Undefined sims are skipped (SQL max), and
+    * a candidate with none defined is picked only when no scored candidate
+    * remains. Returns (candidate, rank, mmr), the seed's mmr being its rel;
+    * no candidates give no picks.
+    */
+  private def mmrGreedy[C, K: Ordering](cands: Seq[C])(key: C => K,
+      rel: C => Double, vec: C => Array[Float]): Vector[(C, Long, java.lang.Double)] =
+    (1 to 5).foldLeft(Vector.empty[(C, Long, java.lang.Double)]) { (sel, rank) =>
+      val left = cands.filterNot(c => sel.exists(p => key(p._1) == key(c)))
+      if (left.isEmpty) sel
+      else {
+        val scored = left.map { c =>
+          val sims = sel.flatMap(p => cosF(vec(c), vec(p._1)).map(rnd(_, 4)))
+          c -> (if (rank == 1) Some(rel(c))
+                else if (sims.isEmpty) None
+                else Some(rnd(0.7 * rel(c) - 0.3 * sims.max, 6)))
+        }
+        val (pick, mmr) = scored.minBy { case (c, m) =>
+          (m.isEmpty, -m.getOrElse(0.0), key(c)) }
+        sel :+ ((pick, rank.toLong, mmr.map(Double.box).orNull))
+      }
+    }
+
+  /** The result frame of an MMR entry: `rows` of (rank, `keys`…,
+    * `vals`…, mmr), rank and the keys LONG, the rest DOUBLE, all
+    * nullable. */
+  private def mmrFrame(s: org.apache.spark.sql.SparkSession,
+      rows: Seq[org.apache.spark.sql.Row], keys: Seq[String],
+      vals: Seq[String]): DataFrame = {
+    import org.apache.spark.sql.types._
+    import scala.jdk.CollectionConverters._
+    s.createDataFrame(rows.asJava, StructType(
+      ("rank" +: keys).map(StructField(_, LongType, nullable = true)) ++
+        (vals :+ "mmr").map(StructField(_, DoubleType, nullable = true))))
+  }
 
   /** 64-bit sign signature of `embedding`: bit i set iff component i > 0.
     * Packed via bitwise OR over shiftleft terms — deterministic, no
@@ -1998,12 +1951,6 @@ object Similarity {
       |  (x, i) -> CASE WHEN x > 0d THEN shiftleft(CAST(1 AS BIGINT), i)
       |            ELSE CAST(0 AS BIGINT) END),
       |  CAST(0 AS BIGINT), (acc, b) -> acc | b)""".stripMargin)
-
-  /** SQL cosine of list expressions `x` and `y` (the oracles' one
-    * spelling of the engine's CosineSimilarity). */
-  private def cosSql(x: String, y: String): String =
-    s"list_dot_product($x, $y) /\n" +
-      s"      (sqrt(list_dot_product($x, $x)) * sqrt(list_dot_product($y, $y)))"
 
   /** The SQL twin of the engine's literal-quantizer assignment
     * (Quantizer.cellOf), CTE `name`: every row of FROM item `rows` (id
@@ -2022,7 +1969,7 @@ object Similarity {
     val carry = if (keepV) s" any_value(r.$v) AS $v," else ""
     s"""$name AS $hint(
       |  SELECT r.$id,$carry
-      |    (max({'c': round(${cosSql(s"r.$v", s"k.$cv")}, 9),
+      |    (max({'c': ${cosSql(s"r.$v", s"k.$cv", 9)},
       |          'k': k.$key})).k AS $key
       |  FROM $from GROUP BY r.$id)""".stripMargin
   }
@@ -2084,10 +2031,7 @@ object Similarity {
         |         FROM cb, q),
         |adc AS (
         |  SELECT vec_id,
-        |    max(CASE WHEN m = 0 THEN qd END) AS d0,
-        |    max(CASE WHEN m = 1 THEN qd END) AS d1,
-        |    max(CASE WHEN m = 2 THEN qd END) AS d2,
-        |    max(CASE WHEN m = 3 THEN qd END) AS d3
+        |    ${adcPivotSql("m")}
         |  FROM assign JOIN qlut USING (m, code) GROUP BY vec_id)
         |SELECT vec_id, round(d0 + d1 + d2 + d3, 4) AS approx_dot
         |FROM adc ORDER BY approx_dot DESC, vec_id LIMIT 10""".stripMargin
@@ -2103,51 +2047,88 @@ object Similarity {
     Seq(3, 5, 10).map(np =>
       (np, math.ceil(graft.io.AnnIndex.shortlist * np / 3.0).toInt))
 
-  /** One probe→ADC→shortlist→refine hierarchy instance over arbitrary
-    * centroid/assignment CTE names, CTE names suffixed by `sfx` — the
-    * shared builder behind every recall replay: the census (no suffix),
-    * the recall-curve sweep points (suffix = the nprobe value over
-    * c/assign), the quantizer A/B (suffixes lab/km over c/assign vs
-    * kc/kassign) and the raw side of the coding A/B. Callers provide
-    * `q`, `qlut` and the shared `codes`.
+  /** The 4-way ADC pivot: per vector, the LUT dot `qd` of each PQ
+    * subspace (codes column `m` = 0..3) as d0..d3, summed by callers as
+    * round(d0 + d1 + d2 + d3, 4) — the SQL twin of the engine's
+    * per-subspace lookup sum (AnnIndex.querySegments' ADC, s_pq_topk). */
+  private def adcPivotSql(m: String): String =
+    (0 until 4).map(i => s"max(CASE WHEN $m = $i THEN qd END) AS d$i")
+      .mkString(",\n    ")
+
+  /** Rows (qid, cell, rn): every centroid of CTE `c` ranked per query of
+    * `q` by 9-dp cosine, the lower cell on ties — the probe order of
+    * AnnIndex.querySegments (its probe extract). */
+  private def probeRankSql(c: String): String =
+    s"""SELECT q.qid, c.cell,
+      |    row_number() OVER (PARTITION BY q.qid ORDER BY
+      |      ${cosSql("c.centroid", "q.qv", 9)} DESC, c.cell) AS rn
+      |  FROM $c c, q""".stripMargin
+
+  /** The candidate mask of a self-query panel: the query row itself, as
+    * querySegments excludes it when no external batch is given. */
+  private val selfMask = "a.vec_id <> p.qid"
+
+  /** One probe → ADC → shortlist → exact-refine hierarchy, CTE names
+    * suffixed by `sfx` — the SQL twin of AnnIndex.querySegments: the `np`
+    * best cells of centroid CTE `c` per query ([[probeRankSql]]), their
+    * members in assignment CTE `assign` passing `mask` (empty = none), the
+    * [[adcPivotSql]] over codes CTE `codes`, the `rk`-deep shortlist, and
+    * `idx<sfx>(qid, vec_id, cos)`: the exact 4-dp refine, top topK per
+    * qid (cos desc, vec_id). The LUT is the shared `qlut`, or with
+    * `residual` the query's residual per probed cell against the residual
+    * codebook `rcb` (`qres`/`qlutr`; the candidates then carry their
+    * cell) — querySegments(residual = true). Callers provide `q`, and
+    * `qlut` unless `residual`.
     */
-  private def quantBlockSql(sfx: String, cCte: String, aCte: String,
-      np: Int, rk: Int): String = {
-    val K = graft.io.AnnIndex.topK
+  private def annTailSql(sfx: String, c: String = "c",
+      assign: String = "assign", codes: String = "codes",
+      mask: String = selfMask, residual: Boolean = false,
+      np: Int = graft.io.AnnIndex.nProbe,
+      rk: Int = graft.io.AnnIndex.shortlist): String = {
+    val cell = if (residual) " p.cell," else ""
+    val lut = if (residual) s"qlutr$sfx" else "qlut"
+    val residualLut =
+      if (!residual) ""
+      else s"""
+        |qres$sfx AS (
+        |  SELECT p.qid, p.cell,
+        |    list(round(q.qv[r.i + 1] - c.centroid[r.i + 1], 9) ORDER BY r.i) AS rqv
+        |  FROM probe$sfx p JOIN $c c USING (cell) JOIN q ON q.qid = p.qid,
+        |    range(64) r(i)
+        |  GROUP BY p.qid, p.cell),
+        |qlutr$sfx AS (
+        |  SELECT qr.qid, qr.cell, m, code,
+        |    round(list_dot_product(rqv[m*16+1 : m*16+16], cw), 9) AS qd
+        |  FROM qres$sfx qr, rcb),""".stripMargin
     s"""probe$sfx AS (
       |  SELECT qid, cell FROM (
-      |    SELECT q.qid, c.cell,
-      |      row_number() OVER (PARTITION BY q.qid ORDER BY
-      |        round(list_dot_product(c.centroid, q.qv) /
-      |          (sqrt(list_dot_product(c.centroid, c.centroid)) *
-      |           sqrt(list_dot_product(q.qv, q.qv))), 9) DESC, c.cell) AS rn
-      |    FROM $cCte c, q) WHERE rn <= $np),
+      |  ${probeRankSql(c)}) WHERE rn <= $np),
       |cand$sfx AS MATERIALIZED (
-      |  SELECT p.qid, a.vec_id, a.v FROM $aCte a JOIN probe$sfx p USING (cell)
-      |  WHERE a.vec_id <> p.qid),
+      |  SELECT p.qid,$cell a.vec_id, a.v FROM $assign a JOIN probe$sfx p USING (cell)
+      |  ${if (mask.isEmpty) "" else s"WHERE $mask"}),$residualLut
       |adc0$sfx AS (
       |  SELECT c1.qid, c1.vec_id,
-      |    max(CASE WHEN codes.m = 0 THEN qd END) AS d0,
-      |    max(CASE WHEN codes.m = 1 THEN qd END) AS d1,
-      |    max(CASE WHEN codes.m = 2 THEN qd END) AS d2,
-      |    max(CASE WHEN codes.m = 3 THEN qd END) AS d3
-      |  FROM cand$sfx c1 JOIN codes USING (vec_id)
-      |  JOIN qlut ON qlut.qid = c1.qid AND qlut.m = codes.m
-      |    AND qlut.code = codes.code
+      |    ${adcPivotSql(s"$codes.m")}
+      |  FROM cand$sfx c1 JOIN $codes USING (vec_id)
+      |  JOIN $lut ql ON ql.qid = c1.qid${if (residual) " AND ql.cell = c1.cell" else ""}
+      |    AND ql.m = $codes.m AND ql.code = $codes.code
       |  GROUP BY c1.qid, c1.vec_id),
       |short$sfx AS (
       |  SELECT qid, vec_id, round(d0 + d1 + d2 + d3, 4) AS adc FROM adc0$sfx
       |  QUALIFY row_number() OVER (PARTITION BY qid ORDER BY adc DESC, vec_id) <= $rk),
       |idx$sfx AS (
-      |  SELECT s.qid AS qid, s.vec_id AS vec_id,
-      |    round(list_dot_product(c2.v, q.qv) /
-      |      (sqrt(list_dot_product(c2.v, c2.v)) *
-      |       sqrt(list_dot_product(q.qv, q.qv))), 4) AS cos
+      |  SELECT s.qid AS qid, s.vec_id AS vec_id, ${cosSql("c2.v", "q.qv", 4)} AS cos
       |  FROM short$sfx s JOIN cand$sfx c2 ON c2.qid = s.qid AND c2.vec_id = s.vec_id
       |  JOIN q ON q.qid = s.qid
-      |  QUALIFY row_number() OVER (PARTITION BY s.qid ORDER BY cos DESC, s.vec_id) <= $K)"""
+      |  QUALIFY row_number() OVER (PARTITION BY s.qid ORDER BY cos DESC, s.vec_id) <= ${graft.io.AnnIndex.topK})"""
       .stripMargin
   }
+
+  /** The index query's result over [[annTailSql]]'s `idx` — the rows
+    * querySegments returns: per qid, the top topK ranked 1.. by
+    * (cos desc, vec_id). */
+  private val annTopKSql =
+    "SELECT qid, CAST(row_number() OVER (PARTITION BY qid ORDER BY cos DESC, vec_id) AS BIGINT) AS rnk, vec_id, cos FROM idx ORDER BY qid, rnk"
 
   /** The operating-point rule behind s_index_nprobe_select: smallest
     * nprobe whose recall meets `floor`; when no sweep point qualifies,
@@ -2173,10 +2154,7 @@ object Similarity {
   private def bfCteSql: String =
     s"""bf AS (
       |  SELECT qid, vec_id FROM (
-      |    SELECT q.qid, e.vec_id,
-      |      round(list_dot_product(e.v, q.qv) /
-      |        (sqrt(list_dot_product(e.v, e.v)) *
-      |         sqrt(list_dot_product(q.qv, q.qv))), 4) AS cos
+      |    SELECT q.qid, e.vec_id, ${cosSql("e.v", "q.qv", 4)} AS cos
       |    FROM e, q WHERE e.vec_id <> q.qid)
       |  QUALIFY row_number() OVER (PARTITION BY qid ORDER BY cos DESC, vec_id) <= ${graft.io.AnnIndex.topK})"""
       .stripMargin
@@ -2201,7 +2179,7 @@ object Similarity {
     * suffixed by nprobe, refine depth from [[recallSweep]]). */
   private def curveBlocksSql: String =
     recallSweep.map { case (np, rk) =>
-      quantBlockSql(np.toString, "c", "assign", np, rk)
+      annTailSql(np.toString, np = np, rk = rk)
     }.mkString(",\n")
 
   /** One pooled recall row per sweep point. */
@@ -2374,109 +2352,6 @@ object Similarity {
       .stripMargin
   }
 
-  /** One residual-ADC probe→shortlist→refine hierarchy instance (the
-    * residBlockSql sibling of quantBlockSql): the ADC joins on
-    * (qid, CELL, m, code) because the query-side LUT is the QUERY'S
-    * residual per probed cell — exactly querySegments(residual = true).
-    * Callers provide `q`, `c`, `assign`, `rcb`, `rcodes`.
-    */
-  private def residBlockSql(sfx: String, np: Int, rk: Int): String = {
-    val K = graft.io.AnnIndex.topK
-    s"""probe$sfx AS (
-      |  SELECT qid, cell FROM (
-      |    SELECT q.qid, c.cell,
-      |      row_number() OVER (PARTITION BY q.qid ORDER BY
-      |        round(list_dot_product(c.centroid, q.qv) /
-      |          (sqrt(list_dot_product(c.centroid, c.centroid)) *
-      |           sqrt(list_dot_product(q.qv, q.qv))), 9) DESC, c.cell) AS rn
-      |    FROM c, q) WHERE rn <= $np),
-      |cand$sfx AS MATERIALIZED (
-      |  SELECT p.qid, p.cell, a.vec_id, a.v
-      |  FROM assign a JOIN probe$sfx p USING (cell)
-      |  WHERE a.vec_id <> p.qid),
-      |qres$sfx AS (
-      |  SELECT p.qid, p.cell,
-      |    list(round(q.qv[r.i + 1] - c.centroid[r.i + 1], 9) ORDER BY r.i) AS rqv
-      |  FROM probe$sfx p JOIN c USING (cell) JOIN q ON q.qid = p.qid,
-      |    range(64) r(i)
-      |  GROUP BY p.qid, p.cell),
-      |qlutr$sfx AS (
-      |  SELECT qr.qid, qr.cell, m, code,
-      |    round(list_dot_product(rqv[m*16+1 : m*16+16], cw), 9) AS qd
-      |  FROM qres$sfx qr, rcb),
-      |adc0$sfx AS (
-      |  SELECT c1.qid, c1.vec_id,
-      |    max(CASE WHEN rcodes.m = 0 THEN qd END) AS d0,
-      |    max(CASE WHEN rcodes.m = 1 THEN qd END) AS d1,
-      |    max(CASE WHEN rcodes.m = 2 THEN qd END) AS d2,
-      |    max(CASE WHEN rcodes.m = 3 THEN qd END) AS d3
-      |  FROM cand$sfx c1 JOIN rcodes USING (vec_id)
-      |  JOIN qlutr$sfx ql ON ql.qid = c1.qid AND ql.cell = c1.cell
-      |    AND ql.m = rcodes.m AND ql.code = rcodes.code
-      |  GROUP BY c1.qid, c1.vec_id),
-      |short$sfx AS (
-      |  SELECT qid, vec_id, round(d0 + d1 + d2 + d3, 4) AS adc FROM adc0$sfx
-      |  QUALIFY row_number() OVER (PARTITION BY qid ORDER BY adc DESC, vec_id) <= $rk),
-      |idx$sfx AS (
-      |  SELECT s.qid AS qid, s.vec_id AS vec_id,
-      |    round(list_dot_product(c2.v, q.qv) /
-      |      (sqrt(list_dot_product(c2.v, c2.v)) *
-      |       sqrt(list_dot_product(q.qv, q.qv))), 4) AS cos
-      |  FROM short$sfx s JOIN cand$sfx c2 ON c2.qid = s.qid AND c2.vec_id = s.vec_id
-      |  JOIN q ON q.qid = s.qid
-      |  QUALIFY row_number() OVER (PARTITION BY s.qid ORDER BY cos DESC, s.vec_id) <= $K)"""
-      .stripMargin
-  }
-
-  /** The single-segment query tail — the s_index_query probe/ADC/
-    * shortlist/exact-refine hierarchy over c/assign/codes, ending in
-    * the top-topK per qid. Callers prepend a train block and a `q`
-    * batch CTE. `selfExclude` mirrors querySegments' `queries`
-    * parameter: self-query panels exclude the query row itself; an
-    * EXTERNAL batch (qids disjoint from every indexed id) has no self
-    * row to exclude.
-    */
-  private def annIndexQueryTailSql(selfExclude: Boolean): String = {
-    val I = graft.io.AnnIndex
-    val candMask = if (selfExclude) "\n      |  WHERE a.vec_id <> p.qid" else ""
-    s"""probe AS (
-      |  SELECT qid, cell FROM (
-      |    SELECT q.qid, c.cell,
-      |      row_number() OVER (PARTITION BY q.qid ORDER BY
-      |        round(list_dot_product(c.centroid, q.qv) /
-      |          (sqrt(list_dot_product(c.centroid, c.centroid)) *
-      |           sqrt(list_dot_product(q.qv, q.qv))), 9) DESC, c.cell) AS rn
-      |    FROM c, q) WHERE rn <= ${I.nProbe}),
-      |cand AS MATERIALIZED (
-      |  SELECT p.qid, a.vec_id, a.v FROM assign a JOIN probe p USING (cell)$candMask),
-      |$qlutSql,
-      |adc0 AS (
-      |  SELECT cand.qid, cand.vec_id,
-      |    max(CASE WHEN codes.m = 0 THEN qd END) AS d0,
-      |    max(CASE WHEN codes.m = 1 THEN qd END) AS d1,
-      |    max(CASE WHEN codes.m = 2 THEN qd END) AS d2,
-      |    max(CASE WHEN codes.m = 3 THEN qd END) AS d3
-      |  FROM cand JOIN codes USING (vec_id)
-      |  JOIN qlut ON qlut.qid = cand.qid AND qlut.m = codes.m
-      |    AND qlut.code = codes.code
-      |  GROUP BY cand.qid, cand.vec_id),
-      |short AS (
-      |  SELECT qid, vec_id, round(d0 + d1 + d2 + d3, 4) AS adc FROM adc0
-      |  QUALIFY row_number() OVER (PARTITION BY qid ORDER BY adc DESC, vec_id) <= ${I.shortlist}),
-      |ref AS (
-      |  SELECT s.qid, s.vec_id,
-      |    round(list_dot_product(cand.v, q.qv) /
-      |      (sqrt(list_dot_product(cand.v, cand.v)) *
-      |       sqrt(list_dot_product(q.qv, q.qv))), 4) AS cos
-      |  FROM short s JOIN cand ON cand.qid = s.qid AND cand.vec_id = s.vec_id
-      |  JOIN q ON q.qid = s.qid)
-      |SELECT qid, CAST(row_number() OVER (PARTITION BY qid
-      |    ORDER BY cos DESC, vec_id) AS BIGINT) AS rnk, vec_id, cos
-      |FROM ref
-      |QUALIFY rnk <= ${I.topK}
-      |ORDER BY qid, rnk""".stripMargin
-  }
-
   /** The frozen-parameter DELTA segment replay, appended after a train
     * block (annIndexPreludeSql — it defines e/c/cb/ms/assign/codes): the
     * deterministic %7==3 re-keyed reversed delta `deltae`, assigned
@@ -2502,60 +2377,8 @@ object Similarity {
       |  SELECT vec_id, v, cell FROM assign
       |  UNION ALL SELECT vec_id, v, cell FROM dassign)""".stripMargin
 
-  /** The segmented-query probe/ADC/refine tail over massign/mcodes — the
-    * s_index_query hierarchy with a caller-supplied extra candidate mask
-    * (empty for the plain merged query, the tombstone predicate for the
-    * delete-masked one). Callers provide the `q` CTE.
-    */
-  private def annIndexMergedTailSql(candMask: String): String =
-    s"""probe AS (
-      |  SELECT qid, cell FROM (
-      |    SELECT q.qid, c.cell,
-      |      row_number() OVER (PARTITION BY q.qid ORDER BY
-      |        round(list_dot_product(c.centroid, q.qv) /
-      |          (sqrt(list_dot_product(c.centroid, c.centroid)) *
-      |           sqrt(list_dot_product(q.qv, q.qv))), 9) DESC, c.cell) AS rn
-      |    FROM c, q) WHERE rn <= 3),
-      |cand AS MATERIALIZED (
-      |  SELECT p.qid, a.vec_id, a.v FROM massign a JOIN probe p USING (cell)
-      |  WHERE a.vec_id <> p.qid$candMask),
-      |$qlutSql,
-      |adc0 AS (
-      |  SELECT cand.qid, cand.vec_id,
-      |    max(CASE WHEN mcodes.m = 0 THEN qd END) AS d0,
-      |    max(CASE WHEN mcodes.m = 1 THEN qd END) AS d1,
-      |    max(CASE WHEN mcodes.m = 2 THEN qd END) AS d2,
-      |    max(CASE WHEN mcodes.m = 3 THEN qd END) AS d3
-      |  FROM cand JOIN mcodes USING (vec_id)
-      |  JOIN qlut ON qlut.qid = cand.qid AND qlut.m = mcodes.m
-      |    AND qlut.code = mcodes.code
-      |  GROUP BY cand.qid, cand.vec_id),
-      |short AS (
-      |  SELECT qid, vec_id, round(d0 + d1 + d2 + d3, 4) AS adc FROM adc0
-      |  QUALIFY row_number() OVER (PARTITION BY qid ORDER BY adc DESC, vec_id) <= 20),
-      |ref AS (
-      |  SELECT s.qid, s.vec_id,
-      |    round(list_dot_product(cand.v, q.qv) /
-      |      (sqrt(list_dot_product(cand.v, cand.v)) *
-      |       sqrt(list_dot_product(q.qv, q.qv))), 4) AS cos
-      |  FROM short s JOIN cand ON cand.qid = s.qid AND cand.vec_id = s.vec_id
-      |  JOIN q ON q.qid = s.qid)
-      |SELECT qid, CAST(row_number() OVER (PARTITION BY qid
-      |    ORDER BY cos DESC, vec_id) AS BIGINT) AS rnk, vec_id, cos
-      |FROM ref
-      |QUALIFY rnk <= 5
-      |ORDER BY qid, rnk""".stripMargin
-
-  /** CTE `ranked`: every (qid, cell) of the panel in probe order (9-dp
-    * centroid cosine, lower cell on ties). */
-  private def rankedSql: String =
-    """ranked AS (
-      |  SELECT q.qid, c.cell,
-      |    row_number() OVER (PARTITION BY q.qid ORDER BY
-      |      round(list_dot_product(c.centroid, q.qv) /
-      |        (sqrt(list_dot_product(c.centroid, c.centroid)) *
-      |         sqrt(list_dot_product(q.qv, q.qv))), 9) DESC, c.cell) AS rn
-      |  FROM c, q)""".stripMargin
+  /** CTE `ranked`: every (qid, cell) of the panel in probe order. */
+  private def rankedSql: String = s"ranked AS (\n  ${probeRankSql("c")})"
 
   /** One probe-cost row per sweep point over `ranked` and the per-cell
     * counts `cc`. */
@@ -2578,13 +2401,17 @@ object Similarity {
   private def indexQuerySql(stratum: Option[Int]): String =
     s"""WITH ${annIndexPreludeSql(stratum)},
       |${qPanelSql(stratum)},
-      |${annIndexQueryTailSql(selfExclude = true)}""".stripMargin
+      |$qlutSql,
+      |${annTailSql("")}
+      |$annTopKSql""".stripMargin
 
   private def indexQueryMergedSql(stratum: Option[Int]): String =
     s"""WITH ${annIndexPreludeSql(stratum)},
       |$annIndexDeltaMergedCtesSql,
       |${qPanelSql(stratum)},
-      |${annIndexMergedTailSql("")}""".stripMargin
+      |$qlutSql,
+      |${annTailSql("", assign = "massign", codes = "mcodes")}
+      |$annTopKSql""".stripMargin
 
   /** External query batch: the first `batch` embeddings REVERSED and
     * re-keyed +2,000,000; for the stratum index the `batch` smallest ids
@@ -2603,7 +2430,9 @@ object Similarity {
         |   WHERE rn <= $batch)""".stripMargin)
     s"""WITH ${annIndexPreludeSql(stratum)},
       |$q,
-      |${annIndexQueryTailSql(selfExclude = false)}""".stripMargin
+      |$qlutSql,
+      |${annTailSql("", mask = "")}
+      |$annTopKSql""".stripMargin
   }
 
   private def indexRecallSql(stratum: Option[Int]): String = {
@@ -2612,7 +2441,7 @@ object Similarity {
       |${qPanelSql(stratum)},
       |$qlutSql,
       |$bfCteSql,
-      |${quantBlockSql("", "c", "assign", I.nProbe, I.shortlist)}
+      |${annTailSql("")}
       |${recallAggSql("i.qid AS qid", "idx", I.topK)}
       |GROUP BY i.qid ORDER BY i.qid""".stripMargin
   }
@@ -2623,33 +2452,29 @@ object Similarity {
       |$qlutSql,
       |$recallCurveTailSql""".stripMargin
 
-  private def quantizerRecallSql(stratum: Option[Int], matched: Boolean): String = {
-    val I = graft.io.AnnIndex
+  private def quantizerRecallSql(stratum: Option[Int], matched: Boolean): String =
     s"""WITH ${annIndexPreludeSql(stratum)},
       |${annIndexKMeansCtesSql(stratum, matched)},
       |${qPanelSql(stratum)},
       |$qlutSql,
       |$bfCteSql,
-      |${quantBlockSql("lab", "c", "assign", I.nProbe, I.shortlist)},
-      |${quantBlockSql("km", "kc", "kassign", I.nProbe, I.shortlist)}
+      |${annTailSql("lab")},
+      |${annTailSql("km", c = "kc", assign = "kassign")}
       |SELECT * FROM (
       |${recallUnionSql("quantizer", Seq("'kmeans'" -> "idxkm", "'label'" -> "idxlab"))})
       |ORDER BY quantizer""".stripMargin
-  }
 
-  private def codingRecallSql(stratum: Option[Int], refineK: Int): String = {
-    val I = graft.io.AnnIndex
+  private def codingRecallSql(stratum: Option[Int], refineK: Int): String =
     s"""WITH ${annIndexPreludeSql(stratum)},
       |${annIndexResidCtesSql(stratum)},
       |${qPanelSql(stratum)},
       |$qlutSql,
       |$bfCteSql,
-      |${quantBlockSql("raw", "c", "assign", I.nProbe, refineK)},
-      |${residBlockSql("res", I.nProbe, refineK)}
+      |${annTailSql("raw", rk = refineK)},
+      |${annTailSql("res", codes = "rcodes", residual = true, rk = refineK)}
       |SELECT * FROM (
       |${recallUnionSql("coding", Seq("'raw'" -> "idxraw", "'residual'" -> "idxres"))})
       |ORDER BY coding""".stripMargin
-  }
 
   /** s_semdedup replay with the DATA-DERIVED k and the ADAPTIVE
     * assignment (see semDedup): k = greatest(8, (N+249) // 250) and
@@ -2697,13 +2522,56 @@ object Similarity {
         |drp AS MATERIALIZED (
         |  SELECT DISTINCT b.vec_id
         |  FROM a2 a JOIN a2 b ON a.cl = b.cl AND a.vec_id < b.vec_id
-        |  WHERE round(list_dot_product(a.v, b.v) /
-        |    (sqrt(list_dot_product(a.v, a.v)) * sqrt(list_dot_product(b.v, b.v))), 4) >= 0.32)
+        |  WHERE ${cosSql("a.v", "b.v", 4)} >= 0.32)
         |SELECT CAST(a2.cl AS BIGINT) AS cl, count(*) AS n_members,
         |  CAST(sum(CASE WHEN drp.vec_id IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_dropped,
         |  CAST(count(*) - sum(CASE WHEN drp.vec_id IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_kept
         |FROM a2 LEFT JOIN drp ON a2.vec_id = drp.vec_id
         |GROUP BY a2.cl ORDER BY cl""".stripMargin
+
+  /** The SQL twin of [[mmrGreedy]] over the candidate CTE `lat` (key
+    * columns `keys`, pass-through `carry`, relevance `rel`, vector `v`):
+    * `sims` holds every ordered pair's 4-dp cosine (`nullOnZero` as in
+    * cosSql); `s1` is the best rel, each `s<i>` for ranks 2 to 5 the best
+    * 6-dp 0.7·rel − 0.3·max-sim over the candidates outside `sel<i-1>`
+    * (the picks so far), the smaller key winning ties and a NULL score
+    * sorting last. CTE `picked` holds every pick as (keys, carry, rel,
+    * rank, mmr).
+    */
+  private def mmrSql(lat: String, keys: Seq[String], carry: Seq[String],
+      nullOnZero: Boolean): String = {
+    val cols = keys ++ carry :+ "rel"
+    def side(cs: Seq[String], x: String) = cs.map(k => s"${k}_$x")
+    def in(sel: String, x: String) =
+      keys.map(k => s"$sel.$k = ${k}_$x").mkString(" AND ")
+    val steps = (2 to 5).map { i =>
+      val sel = if (i == 2) "s1" else s"sel${i - 1}"
+      val next =
+        if (i == 5) ""
+        else s""",
+          |sel$i AS MATERIALIZED (SELECT ${keys.mkString(", ")} FROM $sel
+          |  UNION ALL SELECT ${keys.mkString(", ")} FROM s$i)""".stripMargin
+      s"""p$i AS (SELECT ${side(cols, "a").mkString(", ")},
+        |    round(0.7 * rel_a - 0.3 * max(sim), 6) AS mmr
+        |  FROM sims WHERE EXISTS (SELECT 1 FROM $sel WHERE ${in(sel, "b")})
+        |    AND NOT EXISTS (SELECT 1 FROM $sel WHERE ${in(sel, "a")})
+        |  GROUP BY ${side(cols, "a").mkString(", ")}),
+        |s$i AS MATERIALIZED (SELECT ${cols.map(c => s"${c}_a AS $c").mkString(", ")},
+        |    $i AS rank, mmr
+        |  FROM p$i ORDER BY mmr DESC, ${side(keys, "a").mkString(", ")} LIMIT 1)$next""".stripMargin
+    }
+    s"""sims AS MATERIALIZED (
+      |  SELECT ${cols.map(c => s"a.$c AS ${c}_a").mkString(", ")},
+      |    ${keys.map(k => s"b.$k AS ${k}_b").mkString(", ")},
+      |    ${cosSql("a.v", "b.v", 4, nullOnZero)} AS sim
+      |  FROM $lat a, $lat b
+      |  WHERE NOT (${keys.map(k => s"a.$k = b.$k").mkString(" AND ")})),
+      |s1 AS MATERIALIZED (SELECT ${cols.mkString(", ")}, 1 AS rank, rel AS mmr
+      |  FROM $lat ORDER BY rel DESC, ${keys.mkString(", ")} LIMIT 1),
+      |${steps.mkString(",\n")},
+      |picked AS (${(1 to 5).map(i => s"SELECT * FROM s$i").mkString(" UNION ALL ")})"""
+      .stripMargin
+  }
 
   val oracles: Map[String, String] = Map(
     // same IVF pipeline in SQL: centroids → nearest-cell assignment →
@@ -2720,12 +2588,9 @@ object Similarity {
         |q AS (SELECT v AS qv FROM e WHERE vec_id = 0),
         |probe AS (
         |  SELECT cell FROM c, q
-        |  ORDER BY round(list_dot_product(centroid, qv) /
-        |    (sqrt(list_dot_product(centroid, centroid)) * sqrt(list_dot_product(qv, qv))), 9) DESC, cell
+        |  ORDER BY ${cosSql("centroid", "qv", 9)} DESC, cell
         |  LIMIT 3)
-        |SELECT a.vec_id,
-        |  round(list_dot_product(a.v, q.qv) /
-        |    (sqrt(list_dot_product(a.v, a.v)) * sqrt(list_dot_product(q.qv, q.qv))), 4) AS cos
+        |SELECT a.vec_id, ${cosSql("a.v", "q.qv", 4)} AS cos
         |FROM assign a, q
         |WHERE a.vec_id <> 0 AND a.cell IN (SELECT cell FROM probe)
         |ORDER BY cos DESC, vec_id LIMIT 10""".stripMargin,
@@ -2743,7 +2608,7 @@ object Similarity {
     // per-(label, parity) component means rounded to 9 dp (the s_kmeans m1
     // CTE), then cosine + norm delta over the identical rounded arrays
     "s_centroid_drift" ->
-      """WITH e AS (SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS v
+      s"""WITH e AS (SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS v
         |           FROM embeddings),
         |m AS (
         |  SELECT label, vec_id % 2 AS half, CAST(r.i AS INT) AS pos,
@@ -2756,9 +2621,7 @@ object Similarity {
         |  SELECT a.label, a.n AS n0, b.n AS n1, a.cent AS c0, b.cent AS c1
         |  FROM c a JOIN c b ON a.label = b.label AND a.half = 0 AND b.half = 1)
         |SELECT CAST(label AS BIGINT) AS label, n0, n1,
-        |  round(list_dot_product(c0, c1) /
-        |    (sqrt(list_dot_product(c0, c0)) * sqrt(list_dot_product(c1, c1))), 6)
-        |    AS centroid_cos,
+        |  ${cosSql("c0", "c1", 6)} AS centroid_cos,
         |  round(sqrt(list_dot_product(c1, c1)) - sqrt(list_dot_product(c0, c0)), 6)
         |    AS norm_delta
         |FROM j ORDER BY label""".stripMargin,
@@ -2782,11 +2645,8 @@ object Similarity {
         |  CAST(sum(CASE WHEN keep THEN 1 ELSE 0 END) AS BIGINT) AS n_kept
         |FROM k GROUP BY cl, n_members ORDER BY cl""".stripMargin,
     "s_cosine_topk" ->
-      """WITH q AS (SELECT embedding AS qvec FROM embeddings WHERE vec_id = 0)
-        |SELECT vec_id,
-        |  round(list_dot_product(CAST(embedding AS DOUBLE[]), CAST(qvec AS DOUBLE[])) /
-        |        (sqrt(list_dot_product(CAST(embedding AS DOUBLE[]), CAST(embedding AS DOUBLE[]))) *
-        |         sqrt(list_dot_product(CAST(qvec AS DOUBLE[]), CAST(qvec AS DOUBLE[])))), 4) AS cos
+      s"""WITH q AS (SELECT embedding AS qvec FROM embeddings WHERE vec_id = 0)
+        |SELECT vec_id, ${cosSql("CAST(embedding AS DOUBLE[])", "CAST(qvec AS DOUBLE[])", 4)} AS cos
         |FROM embeddings, q WHERE vec_id <> 0
         |ORDER BY cos DESC, vec_id LIMIT 10""".stripMargin,
     // Full replay of the hyperplane bucket listing: the same md5-48 plane
@@ -2818,7 +2678,7 @@ object Similarity {
     // (table, bucket) join, truth side ranked by 4-dp-rounded cosine with
     // vec_id tie-break — a total order both engines share.
     "s_ann_recall" ->
-      """WITH g AS MATERIALIZED (
+      s"""WITH g AS MATERIALIZED (
         |  SELECT vec_id, unnest(list_transform(embedding, (x, ix) ->
         |    struct_pack(i := ix - 1,
         |      q := CAST(floor(CAST(x AS DOUBLE) * 1000) AS BIGINT)))) AS u
@@ -2842,9 +2702,7 @@ object Similarity {
         |qv AS (SELECT embedding AS qvec FROM embeddings WHERE vec_id = 0),
         |top10 AS (
         |  SELECT vec_id,
-        |    round(list_dot_product(CAST(embedding AS DOUBLE[]), CAST(qvec AS DOUBLE[])) /
-        |          (sqrt(list_dot_product(CAST(embedding AS DOUBLE[]), CAST(embedding AS DOUBLE[]))) *
-        |           sqrt(list_dot_product(CAST(qvec AS DOUBLE[]), CAST(qvec AS DOUBLE[])))), 4) AS cos
+        |    ${cosSql("CAST(embedding AS DOUBLE[])", "CAST(qvec AS DOUBLE[])", 4)} AS cos
         |  FROM embeddings, qv WHERE vec_id <> 0
         |  ORDER BY cos DESC, vec_id LIMIT 10)
         |SELECT CAST(10 AS BIGINT) AS k, count(*) AS n_candidates,
@@ -2897,8 +2755,7 @@ object Similarity {
         |q AS (SELECT v AS qv FROM e WHERE vec_id = 0),
         |probe AS (
         |  SELECT cell FROM c, q
-        |  ORDER BY round(list_dot_product(centroid, qv) /
-        |    (sqrt(list_dot_product(centroid, centroid)) * sqrt(list_dot_product(qv, qv))), 9) DESC, cell
+        |  ORDER BY ${cosSql("centroid", "qv", 9)} DESC, cell
         |  LIMIT 3),
         |cand AS MATERIALIZED (
         |  SELECT a.vec_id, a.v FROM assign a
@@ -2911,16 +2768,11 @@ object Similarity {
         |         FROM cb, q),
         |adc0 AS (
         |  SELECT vec_id,
-        |    max(CASE WHEN m = 0 THEN qd END) AS d0,
-        |    max(CASE WHEN m = 1 THEN qd END) AS d1,
-        |    max(CASE WHEN m = 2 THEN qd END) AS d2,
-        |    max(CASE WHEN m = 3 THEN qd END) AS d3
+        |    ${adcPivotSql("m")}
         |  FROM codes JOIN qlut USING (m, code) GROUP BY vec_id),
         |short AS (SELECT vec_id, round(d0 + d1 + d2 + d3, 4) AS adc FROM adc0
         |          ORDER BY adc DESC, vec_id LIMIT 20)
-        |SELECT s.vec_id, s.adc,
-        |  round(list_dot_product(cand.v, q.qv) /
-        |    (sqrt(list_dot_product(cand.v, cand.v)) * sqrt(list_dot_product(q.qv, q.qv))), 4) AS cos
+        |SELECT s.vec_id, s.adc, ${cosSql("cand.v", "q.qv", 4)} AS cos
         |FROM short s JOIN cand USING (vec_id), q
         |ORDER BY cos DESC, vec_id LIMIT 10""".stripMargin,
     // the per-cell census of the persisted index: assignment + PQ codes
@@ -3068,7 +2920,10 @@ object Similarity {
       s"""WITH $annIndexCtesSql,
         |$annIndexDeltaMergedCtesSql,
         |${qPanelSql(None)},
-        |${annIndexMergedTailSql(" AND a.vec_id % 11 <> 5")}""".stripMargin,
+        |$qlutSql,
+        |${annTailSql("", assign = "massign", codes = "mcodes",
+            mask = s"$selfMask AND a.vec_id % 11 <> 5")}
+        |$annTopKSql""".stripMargin,
     // the upsert replay: updated rows (%13==2, reversed, frozen-coded)
     // SUBSTITUTED into the merged views — stale base rows excluded by
     // the same rule the engine's latest-segment-wins mask enforces
@@ -3084,7 +2939,9 @@ object Similarity {
         |  SELECT vec_id, v, cell FROM assign WHERE vec_id % 13 <> 2
         |  UNION ALL SELECT vec_id, v, cell FROM uassign),
         |${qPanelSql(None)},
-        |${annIndexMergedTailSql("")}""".stripMargin,
+        |$qlutSql,
+        |${annTailSql("", assign = "massign", codes = "mcodes")}
+        |$annTopKSql""".stripMargin,
     // recall census replay: the s_index_query hierarchy's top-5 vs the
     // exact brute-force top-5, intersected per qid — both rankings are
     // 4-dp + vec_id deterministic, so recall is an exact integer ratio
@@ -3139,25 +2996,22 @@ object Similarity {
     // (the equivalence to the PLAIN inner-product top-10 is asserted
     // separately in SelfCheckSpec; the oracle pins the construction)
     "s_mips_topk" ->
-      """WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
+      s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
         |m AS (SELECT max(list_dot_product(v, v)) AS m2 FROM e),
         |aug AS (SELECT vec_id,
         |          list_append(v, sqrt(m2 - list_dot_product(v, v))) AS a
         |        FROM e, m),
         |q AS (SELECT list_append(v, CAST(0.0 AS DOUBLE)) AS qa FROM e WHERE vec_id = 0)
-        |SELECT vec_id,
-        |  round(list_dot_product(a, qa) /
-        |        (sqrt(list_dot_product(a, a)) * sqrt(list_dot_product(qa, qa))), 9) AS cos9
+        |SELECT vec_id, ${cosSql("a", "qa", 9)} AS cos9
         |FROM aug, q WHERE vec_id <> 0
         |ORDER BY cos9 DESC, vec_id LIMIT 10""".stripMargin,
     // ranks order by the ROUNDED cosine + vec_id tie-break on both engines
     "s_batch_topk" ->
-      """WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
+      s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
         |q AS (SELECT vec_id AS qid, v AS qv FROM e WHERE vec_id < 8),
         |sc AS (
         |  SELECT qid, e.vec_id,
-        |    round(list_dot_product(e.v, q.qv) /
-        |          (sqrt(list_dot_product(e.v, e.v)) * sqrt(list_dot_product(q.qv, q.qv))), 4) AS cos
+        |    ${cosSql("e.v", "q.qv", 4)} AS cos
         |  FROM e, q WHERE e.vec_id >= 8),
         |r AS (SELECT qid, vec_id, cos,
         |        row_number() OVER (PARTITION BY qid ORDER BY cos DESC, vec_id) AS rnk
@@ -3167,19 +3021,17 @@ object Similarity {
     // both rankings deterministic (rounded cos + id tie-break); overlap by
     // set intersection of the two 10-row lists
     "s_mrl_recall" ->
-      """WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
+      s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
         |qf AS (SELECT v AS qv FROM e WHERE vec_id = 0),
         |full10 AS (
         |  SELECT vec_id FROM e, qf WHERE vec_id <> 0
-        |  ORDER BY round(list_dot_product(v, qv) /
-        |    (sqrt(list_dot_product(v, v)) * sqrt(list_dot_product(qv, qv))), 4) DESC, vec_id
+        |  ORDER BY ${cosSql("v", "qv", 4)} DESC, vec_id
         |  LIMIT 10),
         |et AS (SELECT vec_id, v[1:16] AS v FROM e),
         |qt AS (SELECT v AS qv FROM et WHERE vec_id = 0),
         |trunc10 AS (
         |  SELECT vec_id FROM et, qt WHERE vec_id <> 0
-        |  ORDER BY round(list_dot_product(v, qv) /
-        |    (sqrt(list_dot_product(v, v)) * sqrt(list_dot_product(qv, qv))), 4) DESC, vec_id
+        |  ORDER BY ${cosSql("v", "qv", 4)} DESC, vec_id
         |  LIMIT 10)
         |SELECT CAST(10 AS BIGINT) AS k,
         |  (SELECT count(*) FROM full10 WHERE vec_id IN (SELECT vec_id FROM trunc10)) AS n_overlap,
@@ -3187,12 +3039,11 @@ object Similarity {
         |        / CAST(10.0 AS DOUBLE), 2) AS recall""".stripMargin,
     // same rank determinism; majority-with-tie-break is one max-of-struct
     "s_knn_classify" ->
-      """WITH e AS (SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
+      s"""WITH e AS (SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
         |q AS (SELECT vec_id AS qid, label AS true_label, v AS qv FROM e WHERE vec_id < 50),
         |sc AS (
         |  SELECT qid, true_label, e.vec_id, e.label,
-        |    round(list_dot_product(e.v, q.qv) /
-        |          (sqrt(list_dot_product(e.v, e.v)) * sqrt(list_dot_product(q.qv, q.qv))), 4) AS cos
+        |    ${cosSql("e.v", "q.qv", 4)} AS cos
         |  FROM e, q WHERE e.vec_id >= 50),
         |r AS (SELECT qid, true_label, label,
         |        row_number() OVER (PARTITION BY qid ORDER BY cos DESC, vec_id) AS rn
@@ -3273,7 +3124,7 @@ object Similarity {
         |FROM e, q WHERE vec_id <> 0
         |ORDER BY hamming, vec_id LIMIT 10""".stripMargin,
     "s_rerank_twostage" ->
-      """WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
+      s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
         |q AS (SELECT v AS qv FROM e WHERE vec_id = 0),
         |h AS (
         |  SELECT vec_id, v,
@@ -3284,13 +3135,11 @@ object Similarity {
         |cand AS (SELECT vec_id, v FROM h ORDER BY hamming, vec_id LIMIT 50),
         |rr AS (
         |  SELECT vec_id FROM cand, q
-        |  ORDER BY round(list_dot_product(v, qv) /
-        |    (sqrt(list_dot_product(v, v)) * sqrt(list_dot_product(qv, qv))), 4) DESC, vec_id
+        |  ORDER BY ${cosSql("v", "qv", 4)} DESC, vec_id
         |  LIMIT 10),
         |ex AS (
         |  SELECT vec_id FROM e, q WHERE vec_id <> 0
-        |  ORDER BY round(list_dot_product(v, qv) /
-        |    (sqrt(list_dot_product(v, v)) * sqrt(list_dot_product(qv, qv))), 4) DESC, vec_id
+        |  ORDER BY ${cosSql("v", "qv", 4)} DESC, vec_id
         |  LIMIT 10)
         |SELECT CAST(10 AS BIGINT) AS k, CAST(50 AS BIGINT) AS n_candidates,
         |  (SELECT count(*) FROM ex WHERE vec_id IN (SELECT vec_id FROM rr)) AS n_overlap,
@@ -3299,15 +3148,13 @@ object Similarity {
     // same centroids (9-dp components, the s_ivf_topk discipline), same
     // a/b/s arithmetic per vector
     "s_silhouette" ->
-      """WITH e AS (SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
+      s"""WITH e AS (SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
         |m AS (SELECT label AS clabel, CAST(r.i AS INT) AS pos,
         |        avg(v[CAST(r.i AS INT) + 1]) AS mv
         |      FROM e, range(64) r(i) GROUP BY 1, 2),
         |c AS (SELECT clabel, list(round(mv, 9) ORDER BY pos) AS cent FROM m GROUP BY clabel),
         |sc AS (SELECT e.vec_id, e.label, c.clabel,
-        |         round(1 - list_dot_product(e.v, c.cent) /
-        |           (sqrt(list_dot_product(e.v, e.v)) *
-        |            sqrt(list_dot_product(c.cent, c.cent))), 9) AS dist
+        |         ${cosSql("e.v", "c.cent", 9, distance = true)} AS dist
         |       FROM e, c),
         |p AS (SELECT vec_id, label,
         |        min(CASE WHEN clabel = label THEN dist END) AS a,
@@ -3335,52 +3182,16 @@ object Similarity {
     // the s_kmeans two-iteration chain verbatim, then cluster-local pairs
     "s_semdedup" -> semDedupSql(None),
     "s_semdedup_s41" -> semDedupSql(Some(41)),
-    // the same greedy chain as four unrolled argmax CTEs
+    // the same greedy chain as unrolled argmax CTEs (mmrSql)
     "s_mmr_rerank" ->
-      """WITH e AS MATERIALIZED (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
+      s"""WITH e AS MATERIALIZED (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
         |q AS (SELECT v AS qv FROM e WHERE vec_id = 0),
         |cands AS MATERIALIZED (
-        |  SELECT vec_id, v, round(list_dot_product(v, qv) /
-        |    (sqrt(list_dot_product(v, v)) * sqrt(list_dot_product(qv, qv))), 4) AS rel
+        |  SELECT vec_id, v, ${cosSql("v", "qv", 4)} AS rel
         |  FROM e, q WHERE vec_id <> 0
         |  ORDER BY rel DESC, vec_id LIMIT 20),
-        |sims AS MATERIALIZED (
-        |  SELECT a.vec_id AS ia, a.rel AS rela, b.vec_id AS ib,
-        |    round(list_dot_product(a.v, b.v) /
-        |      (sqrt(list_dot_product(a.v, a.v)) * sqrt(list_dot_product(b.v, b.v))), 4) AS sim
-        |  FROM cands a, cands b WHERE a.vec_id <> b.vec_id),
-        |s1 AS MATERIALIZED (SELECT vec_id, rel, 1 AS rank, rel AS mmr FROM cands
-        |       ORDER BY rel DESC, vec_id LIMIT 1),
-        |p2 AS (SELECT ia, rela, round(0.7 * rela - 0.3 * max(sim), 6) AS mmr
-        |       FROM sims WHERE ib IN (SELECT vec_id FROM s1)
-        |         AND ia NOT IN (SELECT vec_id FROM s1) GROUP BY ia, rela),
-        |s2 AS MATERIALIZED (SELECT ia AS vec_id, rela AS rel, 2 AS rank, mmr FROM p2
-        |       ORDER BY mmr DESC, ia LIMIT 1),
-        |sel2 AS MATERIALIZED (SELECT vec_id FROM s1 UNION ALL SELECT vec_id FROM s2),
-        |p3 AS (SELECT ia, rela, round(0.7 * rela - 0.3 * max(sim), 6) AS mmr
-        |       FROM sims WHERE ib IN (SELECT vec_id FROM sel2)
-        |         AND ia NOT IN (SELECT vec_id FROM sel2) GROUP BY ia, rela),
-        |s3 AS MATERIALIZED (SELECT ia AS vec_id, rela AS rel, 3 AS rank, mmr FROM p3
-        |       ORDER BY mmr DESC, ia LIMIT 1),
-        |sel3 AS MATERIALIZED (SELECT vec_id FROM sel2 UNION ALL SELECT vec_id FROM s3),
-        |p4 AS (SELECT ia, rela, round(0.7 * rela - 0.3 * max(sim), 6) AS mmr
-        |       FROM sims WHERE ib IN (SELECT vec_id FROM sel3)
-        |         AND ia NOT IN (SELECT vec_id FROM sel3) GROUP BY ia, rela),
-        |s4 AS MATERIALIZED (SELECT ia AS vec_id, rela AS rel, 4 AS rank, mmr FROM p4
-        |       ORDER BY mmr DESC, ia LIMIT 1),
-        |sel4 AS MATERIALIZED (SELECT vec_id FROM sel3 UNION ALL SELECT vec_id FROM s4),
-        |p5 AS (SELECT ia, rela, round(0.7 * rela - 0.3 * max(sim), 6) AS mmr
-        |       FROM sims WHERE ib IN (SELECT vec_id FROM sel4)
-        |         AND ia NOT IN (SELECT vec_id FROM sel4) GROUP BY ia, rela),
-        |s5 AS MATERIALIZED (SELECT ia AS vec_id, rela AS rel, 5 AS rank, mmr FROM p5
-        |       ORDER BY mmr DESC, ia LIMIT 1)
-        |SELECT CAST(rank AS BIGINT) AS rank, vec_id, rel, mmr FROM (
-        |  SELECT vec_id, rel, rank, mmr FROM s1
-        |  UNION ALL SELECT vec_id, rel, rank, mmr FROM s2
-        |  UNION ALL SELECT vec_id, rel, rank, mmr FROM s3
-        |  UNION ALL SELECT vec_id, rel, rank, mmr FROM s4
-        |  UNION ALL SELECT vec_id, rel, rank, mmr FROM s5)
-        |ORDER BY rank""".stripMargin,
+        |${mmrSql("cands", Seq("vec_id"), Nil, nullOnZero = false)}
+        |SELECT CAST(rank AS BIGINT) AS rank, vec_id, rel, mmr FROM picked ORDER BY rank""".stripMargin,
     // identical tower CTEs (t_bm25_topk / s_cosine_topk spellings), ranks
     // over the rounded scores, reciprocals forced to DOUBLE (a bare
     // 1.0/(60.0+BIGINT) would divide in DECIMAL and drift from Spark)
@@ -3394,9 +3205,7 @@ object Similarity {
         |q AS (SELECT embedding AS qvec FROM embeddings WHERE vec_id = 0),
         |co AS MATERIALIZED (
         |  SELECT vec_id AS doc_id,
-        |    round(list_dot_product(CAST(embedding AS DOUBLE[]), CAST(qvec AS DOUBLE[])) /
-        |      (sqrt(list_dot_product(CAST(embedding AS DOUBLE[]), CAST(embedding AS DOUBLE[]))) *
-        |       sqrt(list_dot_product(CAST(qvec AS DOUBLE[]), CAST(qvec AS DOUBLE[])))), 4) AS cos
+        |    ${cosSql("CAST(embedding AS DOUBLE[])", "CAST(qvec AS DOUBLE[])", 4)} AS cos
         |  FROM embeddings, q WHERE vec_id <> 0
         |  ORDER BY cos DESC, doc_id LIMIT 50),
         |rc AS (SELECT doc_id,
@@ -3413,19 +3222,14 @@ object Similarity {
     // device): chunk windows → chunk BM25 → max-over-chunks doc
     // reduction → index-probed dense tower (the annIndexCtesSql
     // assignment) → DOC-granularity RRF full-outer fuse → the 20-row
-    // MMR lattice with the s_mmr_rerank unrolled greedy chain
+    // MMR lattice with the s_mmr_rerank greedy chain (mmrSql)
     "s_rag_pipeline" ->
-      ("WITH " + annIndexCtesSql + ",\n" +
-      """q AS (SELECT v AS qv FROM e WHERE vec_id = 0),
+      s"""WITH $annIndexCtesSql,
+        |q AS (SELECT v AS qv FROM e WHERE vec_id = 0),
         |probe AS (SELECT cell FROM c, q
-        |  ORDER BY round(list_dot_product(centroid, qv) /
-        |    (sqrt(list_dot_product(centroid, centroid)) *
-        |     sqrt(list_dot_product(qv, qv))), 9) DESC, cell LIMIT 3),
+        |  ORDER BY ${cosSql("centroid", "qv", 9)} DESC, cell LIMIT ${graft.io.AnnIndex.nProbe}),
         |dense AS MATERIALIZED (
-        |  SELECT a.vec_id AS doc_id,
-        |    round(list_dot_product(a.v, q.qv) /
-        |      (sqrt(list_dot_product(a.v, a.v)) *
-        |       sqrt(list_dot_product(q.qv, q.qv))), 4) AS cosd
+        |  SELECT a.vec_id AS doc_id, ${cosSql("a.v", "q.qv", 4)} AS cosd
         |  FROM assign a, q
         |  WHERE a.vec_id <> 0 AND a.cell IN (SELECT cell FROM probe)
         |  ORDER BY cosd DESC, doc_id LIMIT 50),
@@ -3442,7 +3246,7 @@ object Similarity {
         |          CAST(unnest(generate_series(0, n_chunks - 1)) AS BIGINT) AS i
         |        FROM nch)),
         |toksc AS MATERIALIZED (SELECT doc_id, start,
-        |  string_split_regex(trim(lower(ct)), '[ \t\n\x0B\f\r]+') AS sp FROM chunks),
+        |  string_split_regex(trim(lower(ct)), '[ \\t\\n\\x0B\\f\\r]+') AS sp FROM chunks),
         |dlc AS MATERIALIZED (SELECT doc_id, start, CAST(len(sp) AS DOUBLE) AS dl FROM toksc),
         |statsc AS (SELECT CAST(count(*) AS DOUBLE) AS n_docs, avg(dl) AS avgdl FROM dlc),
         |tfc AS MATERIALIZED (
@@ -3475,71 +3279,12 @@ object Similarity {
         |    ON rbc.doc_id = rc.doc_id),
         |lat0 AS MATERIALIZED (
         |  SELECT f.doc_id, f.start, f.rrf, e.v,
-        |    round(list_dot_product(e.v, q.qv) /
-        |      NULLIF(sqrt(list_dot_product(e.v, e.v)) *
-        |             sqrt(list_dot_product(q.qv, q.qv)), 0), 4) AS rel
+        |    ${cosSql("e.v", "q.qv", 4, nullOnZero = true)} AS rel
         |  FROM fusedc f JOIN e ON e.vec_id = f.doc_id, q
         |  ORDER BY f.rrf DESC, f.doc_id, f.start LIMIT 20),
         |lat AS (SELECT * FROM lat0 WHERE rel IS NOT NULL),
-        |simsl AS MATERIALIZED (
-        |  SELECT a.doc_id AS da, a.start AS sa, a.rel AS rela, a.rrf AS rrfa,
-        |         b.doc_id AS db, b.start AS sb,
-        |    round(list_dot_product(a.v, b.v) /
-        |      NULLIF(sqrt(list_dot_product(a.v, a.v)) *
-        |             sqrt(list_dot_product(b.v, b.v)), 0), 4) AS sim
-        |  FROM lat a, lat b
-        |  WHERE NOT (a.doc_id = b.doc_id AND a.start = b.start)),
-        |s1 AS MATERIALIZED (SELECT doc_id, start, rrf, rel, 1 AS rank, rel AS mmr
-        |  FROM lat ORDER BY rel DESC, doc_id, start LIMIT 1),
-        |p2 AS (SELECT da, sa, rela, rrfa,
-        |    round(0.7 * rela - 0.3 * max(sim), 6) AS mmr
-        |  FROM simsl WHERE EXISTS (SELECT 1 FROM s1
-        |      WHERE s1.doc_id = db AND s1.start = sb)
-        |    AND NOT EXISTS (SELECT 1 FROM s1
-        |      WHERE s1.doc_id = da AND s1.start = sa)
-        |  GROUP BY da, sa, rela, rrfa),
-        |s2 AS MATERIALIZED (SELECT da AS doc_id, sa AS start, rrfa AS rrf,
-        |    rela AS rel, 2 AS rank, mmr FROM p2 ORDER BY mmr DESC, da, sa LIMIT 1),
-        |sel2 AS MATERIALIZED (SELECT doc_id, start FROM s1
-        |  UNION ALL SELECT doc_id, start FROM s2),
-        |p3 AS (SELECT da, sa, rela, rrfa,
-        |    round(0.7 * rela - 0.3 * max(sim), 6) AS mmr
-        |  FROM simsl WHERE EXISTS (SELECT 1 FROM sel2
-        |      WHERE sel2.doc_id = db AND sel2.start = sb)
-        |    AND NOT EXISTS (SELECT 1 FROM sel2
-        |      WHERE sel2.doc_id = da AND sel2.start = sa)
-        |  GROUP BY da, sa, rela, rrfa),
-        |s3 AS MATERIALIZED (SELECT da AS doc_id, sa AS start, rrfa AS rrf,
-        |    rela AS rel, 3 AS rank, mmr FROM p3 ORDER BY mmr DESC, da, sa LIMIT 1),
-        |sel3 AS MATERIALIZED (SELECT doc_id, start FROM sel2
-        |  UNION ALL SELECT doc_id, start FROM s3),
-        |p4 AS (SELECT da, sa, rela, rrfa,
-        |    round(0.7 * rela - 0.3 * max(sim), 6) AS mmr
-        |  FROM simsl WHERE EXISTS (SELECT 1 FROM sel3
-        |      WHERE sel3.doc_id = db AND sel3.start = sb)
-        |    AND NOT EXISTS (SELECT 1 FROM sel3
-        |      WHERE sel3.doc_id = da AND sel3.start = sa)
-        |  GROUP BY da, sa, rela, rrfa),
-        |s4 AS MATERIALIZED (SELECT da AS doc_id, sa AS start, rrfa AS rrf,
-        |    rela AS rel, 4 AS rank, mmr FROM p4 ORDER BY mmr DESC, da, sa LIMIT 1),
-        |sel4 AS MATERIALIZED (SELECT doc_id, start FROM sel3
-        |  UNION ALL SELECT doc_id, start FROM s4),
-        |p5 AS (SELECT da, sa, rela, rrfa,
-        |    round(0.7 * rela - 0.3 * max(sim), 6) AS mmr
-        |  FROM simsl WHERE EXISTS (SELECT 1 FROM sel4
-        |      WHERE sel4.doc_id = db AND sel4.start = sb)
-        |    AND NOT EXISTS (SELECT 1 FROM sel4
-        |      WHERE sel4.doc_id = da AND sel4.start = sa)
-        |  GROUP BY da, sa, rela, rrfa),
-        |s5 AS MATERIALIZED (SELECT da AS doc_id, sa AS start, rrfa AS rrf,
-        |    rela AS rel, 5 AS rank, mmr FROM p5 ORDER BY mmr DESC, da, sa LIMIT 1)
-        |SELECT CAST(rank AS BIGINT) AS rank, doc_id, start,
-        |  round(rrf, 6) AS rrf, rel, mmr FROM (
-        |  SELECT doc_id, start, rrf, rel, rank, mmr FROM s1
-        |  UNION ALL SELECT doc_id, start, rrf, rel, rank, mmr FROM s2
-        |  UNION ALL SELECT doc_id, start, rrf, rel, rank, mmr FROM s3
-        |  UNION ALL SELECT doc_id, start, rrf, rel, rank, mmr FROM s4
-        |  UNION ALL SELECT doc_id, start, rrf, rel, rank, mmr FROM s5)
-        |ORDER BY rank""".stripMargin)
+        |${mmrSql("lat", Seq("doc_id", "start"), Seq("rrf"), nullOnZero = true)}
+        |SELECT CAST(rank AS BIGINT) AS rank, doc_id, start, round(rrf, 6) AS rrf, rel, mmr
+        |FROM picked ORDER BY rank""".stripMargin
   )
 }

@@ -91,6 +91,19 @@ object Tables {
   def stratumSql(idCol: String, p: Int): String =
     s"CAST('0x' || substr(md5(CAST($idCol AS VARCHAR)), 1, 12) AS BIGINT) % $p = 0"
 
+  /** The engine's cosine (GraftFunctions.cosineSim) of DuckDB list
+    * expressions `x` and `y`, rounded to `dp` decimals — the oracles' one
+    * spelling of it. `distance` rounds 1 − cosine instead. `nullOnZero`
+    * wraps the norm product in NULLIF(…, 0), so a zero-norm side gives
+    * NULL as the engine's expression does; without it the division by
+    * zero follows DuckDB's own rule. */
+  def cosSql(x: String, y: String, dp: Int, nullOnZero: Boolean = false,
+      distance: Boolean = false): String = {
+    val norms = s"sqrt(list_dot_product($x, $x)) * sqrt(list_dot_product($y, $y))"
+    val den = if (nullOnZero) s"NULLIF($norms, 0)" else s"($norms)"
+    s"round(${if (distance) "1 - " else ""}list_dot_product($x, $y) / $den, $dp)"
+  }
+
   /** Text.normText in SQL: whitespace runs collapsed to one space, then
     * trimmed and lower-cased — the content every fingerprint and gram
     * draw hashes. `x` is any text expression. */

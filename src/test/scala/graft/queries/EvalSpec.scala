@@ -310,6 +310,17 @@ class EvalSpec extends SparkSpec {
     }
   }
 
+  test("s_mmr_rerank: a corpus holding only the query vector gives zero rows") {
+    import org.apache.spark.sql.functions.col
+    graft.util.Dirs.withNonceDir("graft_mmr_query_only_") { dir =>
+      Tables.t(spark, sf, "embeddings").filter(col("vec_id") === 0)
+        .write.parquet(s"$dir/embeddings.parquet")
+      val r = Similarity.queries("s_mmr_rerank")(spark, dir.getPath)
+      assert(r.columns.toSeq == Seq("rank", "vec_id", "rel", "mmr"))
+      assert(r.collect().isEmpty)
+    }
+  }
+
   test("e_shapley_attrib: efficiency and monotonicity axioms hold") {
     import org.apache.spark.sql.functions._
     val r = Events.queries("e_shapley_attrib")(spark, sf).collect()
