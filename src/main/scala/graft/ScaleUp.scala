@@ -102,15 +102,9 @@ object ScaleUp {
     val hive = flags("hive")
     val perturb = flags("perturb")
 
-    val spark = SparkSession.builder()
-      .master(s"local[${GraftSession.cpus}]")
+    val spark = GraftSession.builder(GraftSession.cpus)
       .appName("graft-scaleup")
       .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // tz-naive parquet timestamps → TIMESTAMP (UTC session), not NTZ
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     scale(spark, src, dst, copies, files, hive, perturb)

@@ -3,18 +3,20 @@ package graft.functions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.{Column, SparkSession, SparkSessionExtensions}
+import org.apache.spark.sql.{Column, SparkSessionExtensions, SparkSessionExtensionsProvider}
 import org.apache.spark.sql.functions.{array, call_function, lit}
 import org.apache.spark.sql.types.{ArrayType, DoubleType, IntegerType, StringType}
 
-/** Registration + Column-API access for graft's native functions.
+/** Declaration + Column-API access for graft's native functions.
   *
   * [[GraftFunctions.natives]] is the only place a native function is
   * declared: its SQL name, the expression class its `ExpressionInfo`
-  * names, its argument signature and its builder. `ensureRegistered` and
-  * [[GraftSessionExtensions]] both register exactly that table, and every
-  * builder reads its literal parameters through one reader
-  * ([[GraftFunctions.Args]]), which also raises the arity error.
+  * names, its argument signature and its builder. The one registration
+  * path is [[GraftSessionExtensions]], a `SparkSessionExtensionsProvider`
+  * that Spark loads into every session it builds (including every
+  * `newSession()`), so no caller registers anything. Every builder reads
+  * its literal parameters through one reader ([[GraftFunctions.Args]]),
+  * which also raises the arity error.
   */
 object GraftFunctions {
 
@@ -150,24 +152,13 @@ object GraftFunctions {
     }
   }
 
-  /** Idempotent runtime registration into an existing session: registers
-    * every table entry whose name the session does not know yet.
-    */
-  def ensureRegistered(spark: SparkSession): Unit = {
-    val registry = spark.sessionState.functionRegistry
-    for (f <- natives) {
-      val id = FunctionIdentifier(f.name)
-      if (!registry.functionExists(id)) registry.registerFunction(id, f.info, f.builder)
-    }
-  }
-
-  /** Column API: `cosineSim(a, b)` after `ensureRegistered`. */
+  /** Column API: `cosineSim(a, b)`. */
   def cosineSim(a: Column, b: Column): Column = call_function("cosine_sim", a, b)
 
-  /** Column API: `dotProduct(a, b)` after `ensureRegistered`. */
+  /** Column API: `dotProduct(a, b)`. */
   def dotProduct(a: Column, b: Column): Column = call_function("dot_product", a, b)
 
-  /** Column API: n minhashes of k-char shingles, after `ensureRegistered`. */
+  /** Column API: n minhashes of k-char shingles. */
   def minhashSigs(text: Column, k: Int, n: Int, seed: Long = 42L): Column =
     call_function("minhash_sigs", text, lit(k), lit(n), lit(seed))
 
@@ -176,25 +167,23 @@ object GraftFunctions {
     */
   def simhash64(text: Column): Column = call_function("simhash64", text)
 
-  /** Column API: winnowed k-gram fingerprints, after `ensureRegistered`. */
+  /** Column API: winnowed k-gram fingerprints. */
   def winnowFps(text: Column, k: Int, w: Int): Column =
     call_function("winnow_fps", text, lit(k), lit(w))
 
-  /** Column API: all char-n-grams in order, after `ensureRegistered`. */
+  /** Column API: all char-n-grams in order. */
   def charNgrams(text: Column, n: Int): Column =
     call_function("char_ngrams", text, lit(n))
 
-  /** Column API: position-ordered k-gram md5-48 hashes, after
-    * `ensureRegistered`.
-    */
+  /** Column API: position-ordered k-gram md5-48 hashes. */
   def gramFps(text: Column, k: Int): Column = call_function("gram_fps", text, lit(k))
 
-  /** Column API: `unicodeNorm(c, "NFC")` after `ensureRegistered`. */
+  /** Column API: `unicodeNorm(c, "NFC")`. */
   def unicodeNorm(c: Column, form: String = "NFC"): Column =
     call_function("unicode_norm", c, lit(form))
 
   /** Column API: frozen-quantizer argmax over a literal candidate
-    * matrix, after `ensureRegistered` — see [[ArgmaxSim]].
+    * matrix — see [[ArgmaxSim]].
     */
   def argmaxSim(v: Column, cosine: Boolean, offset: Int,
       ids: Seq[Int], mat: Seq[Seq[Double]]): Column =
@@ -202,17 +191,21 @@ object GraftFunctions {
       array(ids.map(lit): _*),
       array(mat.map(r => array(r.map(lit): _*)): _*))
 
-  /** Column API: max token multiplicity of a string array, after
-    * `ensureRegistered` — see [[TopTokenCount]].
+  /** Column API: max token multiplicity of a string array — see
+    * [[TopTokenCount]].
     */
   def topTokenCount(arr: Column): Column = call_function("top_token_count", arr)
 }
 
-/** `spark.sql.extensions=graft.functions.GraftSessionExtensions` path
-  * for deployments (injects at session build; no runtime call needed):
-  * the same table `ensureRegistered` registers.
+/** The one registration path: injects the [[GraftFunctions.natives]] table
+  * when a session is built. Named in
+  * `META-INF/services/org.apache.spark.sql.SparkSessionExtensionsProvider`,
+  * so Spark's session builder loads it from the classpath into every
+  * session; `spark.sql.extensions=graft.functions.GraftSessionExtensions`
+  * names the same class. None of the names is a Spark builtin, so the
+  * injection never shadows one.
   */
-class GraftSessionExtensions extends (SparkSessionExtensions => Unit) {
+class GraftSessionExtensions extends SparkSessionExtensionsProvider {
   override def apply(ext: SparkSessionExtensions): Unit =
     GraftFunctions.natives.foreach(f =>
       ext.injectFunction((FunctionIdentifier(f.name), f.info, f.builder)))

@@ -28,8 +28,7 @@ import org.apache.spark.sql.types.StructType
   * null id, a null vector or a null element raises an
   * `IllegalArgumentException` that names the table. A label past
   * `Int.MaxValue` fails in [[labelCentroids]]' ANSI cast
-  * (`CAST_OVERFLOW`), never wraps. Callers must
-  * `GraftFunctions.ensureRegistered` first.
+  * (`CAST_OVERFLOW`), never wraps.
   */
 object Quantizer {
   /** PQ subspaces per 64-dim vector, dims per subspace, codes per subspace. */

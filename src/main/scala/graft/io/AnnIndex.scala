@@ -249,7 +249,6 @@ object AnnIndex {
       cents: DataFrame => DataFrame): String = {
     val root = rootFor(d, prime, variant).getAbsolutePath
     gate(d, root, "vectors", Nil, reuse) {
-      graft.functions.GraftFunctions.ensureRegistered(s)
       val emb = embFor(s, d, prime)
       val centRows = Quantizer.collect("AnnIndex centroids", cents(emb))
       writeLocal(s, centRows, s"$root/centroids")
@@ -399,7 +398,6 @@ object AnnIndex {
     * mutated). */
   private def writeSegment(s: SparkSession, root: String, seg: String,
       rows: DataFrame): Unit = {
-    graft.functions.GraftFunctions.ensureRegistered(s)
     val (cents, cb) = frozen(s, root)
     writeTree(s, root, seg, assignAndCode(rows, cents, cb))
   }
@@ -666,7 +664,6 @@ object AnnIndex {
   private def probeExtract(s: SparkSession, d: String, root: String,
       prime: Option[Int], queries: Option[DataFrame], nprobe: Int)
       : (Array[org.apache.spark.sql.Row], org.apache.spark.sql.types.StructType) = {
-    graft.functions.GraftFunctions.ensureRegistered(s)
     val cos = graft.functions.GraftFunctions.cosineSim _
     val cents = s.read.parquet(s"$root/centroids")
     val qsPlan = queries.getOrElse(
@@ -693,7 +690,6 @@ object AnnIndex {
       residual: Boolean,
       probeRows: Array[org.apache.spark.sql.Row],
       pSchema: org.apache.spark.sql.types.StructType): DataFrame = {
-    graft.functions.GraftFunctions.ensureRegistered(s)
     val cos = graft.functions.GraftFunctions.cosineSim _
     val dotN = graft.functions.GraftFunctions.dotProduct _
     val cents = s.read.parquet(s"$root/centroids")

@@ -155,8 +155,7 @@ object Curation {
     // is the native per-row TopTokenCount (r20, guide §2.4: the former
     // explode → two groupBys → join shuffled the exploded token stream
     // twice for a per-row decision); everything else is narrow.
-    "c_gopher_quality" -> ((s, d) => {
-      graft.functions.GraftFunctions.ensureRegistered(s)
+    "c_gopher_quality" -> ((s, d) =>
       t(s, d, "documents")
         .select(col("doc_id"), col("lang"), tokens(col("text")).as("sp"))
         .select(col("lang"),
@@ -173,8 +172,7 @@ object Curation {
           sum(when(col("pass"), 1L).otherwise(0L)).cast("bigint").as("n_pass"),
           round(avg("top_frac"), 4).as("avg_top_frac"),
           round(avg("distinct_frac"), 4).as("avg_distinct_frac"))
-        .orderBy("lang")
-    }),
+        .orderBy("lang")),
 
     // Repetition metrics per document — duplicate-word and duplicate-bigram
     // fractions, computed with array ops only (no explode, no shuffle
@@ -334,7 +332,6 @@ object Curation {
     // deterministic suffix (decomposed / precomposed / plain, by doc_id%3)
     // and the normalizer is exercised against real combining sequences.
     "c_unicode_norm" -> ((s, d) => {
-      graft.functions.GraftFunctions.ensureRegistered(s)
       val decomposed = " cafe\u0301" // e + COMBINING ACUTE ACCENT (not NFC)
       val precomposed = " caf\u00e9" // single-codepoint LATIN SMALL E ACUTE (already NFC)
       val suffix = when(pmod(col("doc_id"), lit(3)) === 0, lit(decomposed))
@@ -1013,7 +1010,6 @@ object Curation {
         .select(col("doc_id"), col("n_chars"), col("text"),
           tokens(col("text")).as("spr"),
           tokens(lower(col("text"))).as("spl"))
-      graft.functions.GraftFunctions.ensureRegistered(s)
       // top_cnt is the native per-row TopTokenCount (r20) — the former
       // explode → two groupBys → join re-attached a per-row decision
       // through an exchange pair

@@ -58,7 +58,6 @@ object Dedup {
     * struct, ReusedExchange on the self-join.
     */
   def minhashPairsOf(docs: DataFrame): DataFrame = {
-    graft.functions.GraftFunctions.ensureRegistered(docs.sparkSession)
     val bands = 4
     val rows = 4
     val n = bands * rows
@@ -115,7 +114,6 @@ object Dedup {
     * oracle remains construction-guaranteed for any deterministic family.
     */
   def simhashSigs(s: org.apache.spark.sql.SparkSession, d: String): DataFrame = {
-    graft.functions.GraftFunctions.ensureRegistered(s)
     // token-less docs are excluded (they have no signal — the native
     // expression would give them all signature 0 and bucket them together
     // as spurious "duplicates"). NOTE: this intentionally CHANGES
@@ -279,7 +277,6 @@ object Dedup {
   private[queries] def spanEdgesPlan(
       s: org.apache.spark.sql.SparkSession, d: String, k: Int,
       stratum: Option[Int] = None): DataFrame = {
-    graft.functions.GraftFunctions.ensureRegistered(s)
     val docs = corpusWithDups(s, d, stratum)
       .select(col("doc_id"), Text.normText(col("text")).as("nt"))
       .filter(length(col("nt")) >= k)
@@ -307,7 +304,6 @@ object Dedup {
     * for the scale/key-design discussion.
     */
   private def snmPairs(s: org.apache.spark.sql.SparkSession, d: String): DataFrame = {
-    graft.functions.GraftFunctions.ensureRegistered(s)
     val w = 3
     val docs = corpusWithDups(s, d)
       .select(col("doc_id"), Text.normText(col("text")).as("nt"))
@@ -498,7 +494,6 @@ object Dedup {
     // candidate set for the oracle; the scale path feeds LSH-bucket
     // candidates (s_ann_lsh_buckets) into the same verify expression.
     "d_embed_neardup" -> ((s, d) => {
-      graft.functions.GraftFunctions.ensureRegistered(s)
       val emb = t(s, d, "embeddings").filter(col("vec_id") < 300)
         .select(col("vec_id"), col("embedding"))
       val a = emb.as("a")
@@ -599,7 +594,6 @@ object Dedup {
       // (md5 first 48 bits per char-k-gram, w-window min, distinct in
       // first-occurrence order) in one codegen'd loop — values are
       // bit-identical to the SQL draw, proven by SketchesSpec parity.
-      graft.functions.GraftFunctions.ensureRegistered(s)
       val fps = docs.select(col("doc_id"),
         graft.functions.GraftFunctions.winnowFps(col("nt"), k, w).as("fps"))
       val planted = fps.filter(col("doc_id") % 10 === 1)
@@ -643,7 +637,6 @@ object Dedup {
     // sf0.1; this shape ~2 s, same oracle hash).
     "d_dup_spans" -> ((s, d) => {
       val k = 20
-      graft.functions.GraftFunctions.ensureRegistered(s)
       val docs = Dedup.corpusWithDups(s, d)
         .select(col("doc_id"), Text.normText(col("text")).as("nt"))
         .filter(length(col("nt")) >= k)

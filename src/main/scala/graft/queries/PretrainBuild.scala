@@ -54,7 +54,6 @@ object PretrainBuild {
     // exploded token stream twice and re-attached through an equi-join
     // carrying the text payload, for a decision that needs only the
     // row's own token array.
-    graft.functions.GraftFunctions.ensureRegistered(s)
     val q = graft.queries.Dedup.corpusWithDups(s, d)
       .select(col("doc_id"), col("lang"), col("text"),
         Text.tokens(col("text")).as("sp"))

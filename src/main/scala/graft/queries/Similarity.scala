@@ -74,7 +74,7 @@ object Similarity {
     * Callers quantize ONCE per row (`quantizedEmbedding.as("qemb")`) and
     * project that column per plane — re-deriving the transform inside
     * each of 16–64 projections would repeat the per-element lambda per
-    * plane. Callers must `GraftFunctions.ensureRegistered` first.
+    * plane.
     */
   private def planeProj(qemb: Column, p: Int): Column =
     graft.functions.GraftFunctions.dotProduct(qemb, typedLit(hyperplane(p)))
@@ -98,7 +98,6 @@ object Similarity {
     */
   private def semDedup(s: org.apache.spark.sql.SparkSession, d: String,
       stratum: Option[Int]): DataFrame = {
-    graft.functions.GraftFunctions.ensureRegistered(s)
     val emb0 = t(s, d, "embeddings")
     val emb = stratum.fold(emb0)(p =>
       emb0.filter(col("vec_id") < 8 || Tables.stratum(col("vec_id"), p)))
@@ -245,7 +244,6 @@ object Similarity {
     */
   private def pqTopk(s: org.apache.spark.sql.SparkSession, d: String,
       stratum: Option[Int]): DataFrame = {
-    graft.functions.GraftFunctions.ensureRegistered(s)
     val emb0 = t(s, d, "embeddings")
     val emb = stratum.fold(emb0)(p =>
       emb0.filter(col("vec_id") < 8 || Tables.stratum(col("vec_id"), p)))
@@ -306,7 +304,6 @@ object Similarity {
     * why deployments run it on a sampled query panel.
     */
   private[queries] def exactTopK(emb: DataFrame, qs: DataFrame): DataFrame = {
-    graft.functions.GraftFunctions.ensureRegistered(emb.sparkSession)
     val cos = graft.functions.GraftFunctions.cosineSim _
     val w = Window.partitionBy("qid").orderBy(col("cos").desc, col("vec_id"))
     emb.crossJoin(broadcast(qs))
@@ -455,7 +452,6 @@ object Similarity {
     // Exact brute-force cosine top-k against one query vector (vec_id 0).
     // The query side is a 1-row broadcast; the scan side stays narrow.
     "s_cosine_topk" -> ((s, d) => {
-      graft.functions.GraftFunctions.ensureRegistered(s)
       val emb = t(s, d, "embeddings")
       val q = emb.filter(col("vec_id") === 0).select(col("embedding").as("qvec"))
       emb.filter(col("vec_id") =!= 0)
@@ -500,7 +496,6 @@ object Similarity {
     // quantized components make every projection exact, so the bucket
     // listing replays in DuckDB SQL (see oracles below).
     "s_ann_lsh_buckets" -> ((s, d) => {
-      graft.functions.GraftFunctions.ensureRegistered(s)
       val emb = t(s, d, "embeddings")
       // 16 constant hyperplanes (see [[hyperplane]] — precomputed
       // driver-side, shipped as literals; per-row work is multiply-
@@ -526,7 +521,6 @@ object Similarity {
     // assignment, a broadcast semi-join on probed cells, and TakeOrdered —
     // no all-pairs anywhere. Fully deterministic → DuckDB-oracle-checked.
     "s_ivf_topk" -> ((s, d) => {
-      graft.functions.GraftFunctions.ensureRegistered(s)
       val nprobe = 3
       val emb = t(s, d, "embeddings")
       // Centroid COMPONENTS are rounded to 9 dp on both engines before any
@@ -576,7 +570,6 @@ object Similarity {
     // summation-order-dependent), ties break on the larger cluster id via
     // max-of-struct — the s_ivf_topk parity discipline.
     "s_kmeans" -> ((s, d) => {
-      graft.functions.GraftFunctions.ensureRegistered(s)
       val k = 8
       val emb = t(s, d, "embeddings")
       val vecMean = graft.functions.VectorMean(64)
@@ -612,7 +605,6 @@ object Similarity {
     // passes + a 10-row join — one scan each, no pairwise anything. The
     // 9-dp centroid rounding is the s_kmeans cross-engine discipline.
     "s_centroid_drift" -> ((s, d) => {
-      graft.functions.GraftFunctions.ensureRegistered(s)
       val emb = t(s, d, "embeddings")
       val vecMean = graft.functions.VectorMean(64)
       def half(m: Int): DataFrame =
@@ -645,7 +637,6 @@ object Similarity {
     // aggregate (k rows), one narrow keep pass against the k-row broadcast
     // rate table. No window, no join wider than k rows.
     "s_cluster_balance_sample" -> ((s, d) => {
-      graft.functions.GraftFunctions.ensureRegistered(s)
       val k = 8
       val emb = t(s, d, "embeddings")
       // r21 (the literal-quantizer license): the k = 8 seed quantizer
@@ -694,7 +685,6 @@ object Similarity {
     // summation-order ulp). The pass boolean is additionally asserted in
     // QueriesSelfCheckSpec.
     "s_ann_recall" -> ((s, d) => {
-      graft.functions.GraftFunctions.ensureRegistered(s)
       val tables = 16
       val planesPer = 4
       val emb = t(s, d, "embeddings")
@@ -817,7 +807,6 @@ object Similarity {
     // refine reuses the s_cosine_topk 4-dp contract. Recall vs the exact
     // top-10 is asserted in QueriesSelfCheckSpec.
     "s_ivfpq_topk" -> ((s, d) => {
-      graft.functions.GraftFunctions.ensureRegistered(s)
       val cos = graft.functions.GraftFunctions.cosineSim _
       val nprobe = 3; val shortlist = 20
       val emb = t(s, d, "embeddings")
@@ -1117,7 +1106,6 @@ object Similarity {
     // ever touched — this is exactly the ledger an index keeps in its
     // catalog at 100 TB.
     "s_index_probe_cost" -> ((s, d) => {
-      graft.functions.GraftFunctions.ensureRegistered(s)
       val I = graft.io.AnnIndex
       val root = I.ensure(s, d)
       val cos = graft.functions.GraftFunctions.cosineSim _
@@ -1158,7 +1146,6 @@ object Similarity {
     // what the ledger should show); n_tombstoned = the delete-mask id
     // list. No vector is ever touched.
     "s_index_probe_cost_live" -> ((s, d) => {
-      graft.functions.GraftFunctions.ensureRegistered(s)
       val I = graft.io.AnnIndex
       val root = I.ensure(s, d)
       I.ensureDelta(s, d, root)
@@ -1319,7 +1306,6 @@ object Similarity {
     // augmented-cosine top-10 equals the plain inner-product top-10.
     // M² comes from a 1-row broadcast max over ‖x‖².
     "s_mips_topk" -> ((s, d) => {
-      graft.functions.GraftFunctions.ensureRegistered(s)
       val dot = graft.functions.GraftFunctions.dotProduct _
       val emb = t(s, d, "embeddings")
       val m2 = emb.agg(max(dot(col("embedding"), col("embedding"))).as("m2"))
@@ -1351,7 +1337,6 @@ object Similarity {
     // cosine with vec_id tie-break, so rank assignment is deterministic
     // cross-engine (the s_ivf_topk rounding discipline).
     "s_batch_topk" -> ((s, d) => {
-      graft.functions.GraftFunctions.ensureRegistered(s)
       val emb = t(s, d, "embeddings")
       val qs = emb.filter(col("vec_id") < 8)
         .select(col("vec_id").as("qid"), col("embedding").as("qvec"))
@@ -1377,7 +1362,6 @@ object Similarity {
     // stream is the s_batch_topk broadcast cross join, so the corpus
     // scans once however many queries are in the batch.
     "s_knn_classify" -> ((s, d) => {
-      graft.functions.GraftFunctions.ensureRegistered(s)
       val emb = t(s, d, "embeddings")
       val qs = emb.filter(col("vec_id") < 50)
         .select(col("vec_id").as("qid"), col("label").as("true_label"),
@@ -1414,7 +1398,6 @@ object Similarity {
     // oracle-checkable because truncation — unlike LSH — is
     // hash-independent.
     "s_mrl_recall" -> ((s, d) => {
-      graft.functions.GraftFunctions.ensureRegistered(s)
       val cos = graft.functions.GraftFunctions.cosineSim _
       val emb = t(s, d, "embeddings")
       def topk(vecExpr: Column => Column) = {
@@ -1444,7 +1427,6 @@ object Similarity {
     // exactly. One narrow map + two tiny aggregates (the stats row
     // broadcasts back); no joins on data-scale keys.
     "s_norm_outliers" -> ((s, d) => {
-      graft.functions.GraftFunctions.ensureRegistered(s)
       val dot = graft.functions.GraftFunctions.dotProduct _
       val norms = t(s, d, "embeddings")
         .select(col("vec_id"), sqrt(dot(col("embedding"), col("embedding"))).as("nrm"))
@@ -1472,7 +1454,6 @@ object Similarity {
     // list_dot_product). Output: per-label projection stats along the top
     // component (sign is pinned by the deterministic start).
     "s_pca_project" -> ((s, d) => {
-      graft.functions.GraftFunctions.ensureRegistered(s)
       val dot = graft.functions.GraftFunctions.dotProduct _
       // deliberately NOT persisted: caching the array column was measured
       // SLOWER than re-scanning parquet (nested-type columnar cache
@@ -1493,34 +1474,45 @@ object Similarity {
       val mu: Seq[Double] = emb.select(posexplode(col("v")).as(Seq("pos", "x")))
         .groupBy("pos").agg(round(avg("x"), 9).as("m"))
         .orderBy("pos").collect().toSeq.map(_.getDouble(1))
-      val muLit = array(mu.map(lit): _*)
-      var pv: Seq[Double] = Seq.fill(64)(0.125)
-      for (_ <- 1 to 3) {
-        val pvLit = array(pv.map(lit): _*)
-        val sj = emb
-          .select(col("v"), (dot(col("v"), pvLit) - dot(muLit, pvLit)).as("sj"))
-        val ss = sj.agg(round(sum("sj"), 9)).head().getDouble(0)
-        val tArr = sj.select(col("sj"), posexplode(col("v")).as(Seq("pos", "x")))
-          .groupBy("pos").agg(round(sum(col("sj") * col("x")), 9).as("t"))
-          .orderBy("pos").collect().toSeq.map(_.getDouble(1))
-        // t − ss·μ and the unit normalization run as the SAME engine
-        // expressions over one local row (zip_with is element-wise; the
-        // aggregate fold is the index-order list_dot_product identity)
-        val t2 = zip_with(array(tArr.map(lit): _*), muLit,
-          (tv, mv) => tv - lit(ss) * mv)
-        val norm = aggregate(t2, lit(0.0d), (a, y) => a + y * y)
-        pv = s.range(1)
-          .select(transform(t2, x => round(x / sqrt(norm), 9)).as("pv"))
-          .head().getSeq[Double](0).toVector
-      }
-      val pvLit = array(pv.map(lit): _*)
-      emb.select(col("label"),
-          (dot(col("v"), pvLit) - dot(muLit, pvLit)).as("proj"))
+      def stats(proj: Column): DataFrame = emb.select(col("label"), proj.as("proj"))
         .groupBy("label")
         .agg(count(lit(1)).as("n"),
           round(avg("proj"), 4).as("avg_proj"),
           round(avg(col("proj") * col("proj")), 3).as("var_along"))
         .orderBy("label")
+      // an empty table has no mean and no rows to project: zero rows, as
+      // the oracle returns
+      if (mu.isEmpty) stats(lit(0.0d))
+      else {
+        val muLit = array(mu.map(lit): _*)
+        var pv: Seq[Double] = Seq.fill(64)(0.125)
+        for (_ <- 1 to 3) {
+          val pvLit = array(pv.map(lit): _*)
+          val sj = emb
+            .select(col("v"), (dot(col("v"), pvLit) - dot(muLit, pvLit)).as("sj"))
+          val ss = sj.agg(round(sum("sj"), 9)).head().getDouble(0)
+          val tArr = sj.select(col("sj"), posexplode(col("v")).as(Seq("pos", "x")))
+            .groupBy("pos").agg(round(sum(col("sj") * col("x")), 9).as("t"))
+            .orderBy("pos").collect().toSeq.map(_.getDouble(1))
+          // C·v is the zero vector only when every centred vector is
+          // orthogonal to v (one row, or all vectors equal): there is no
+          // top component to normalize
+          require(tArr.zip(mu).exists { case (tv, mv) => tv - ss * mv != 0.0 },
+            "s_pca_project: the centred corpus has no direction (C·v = 0), " +
+              "so it has no top component to project on")
+          // t − ss·μ and the unit normalization run as the SAME engine
+          // expressions over one local row (zip_with is element-wise; the
+          // aggregate fold is the index-order list_dot_product identity)
+          val t2 = zip_with(array(tArr.map(lit): _*), muLit,
+            (tv, mv) => tv - lit(ss) * mv)
+          val norm = aggregate(t2, lit(0.0d), (a, y) => a + y * y)
+          pv = s.range(1)
+            .select(transform(t2, x => round(x / sqrt(norm), 9)).as("pv"))
+            .head().getSeq[Double](0).toVector
+        }
+        val pvLit = array(pv.map(lit): _*)
+        stats(dot(col("v"), pvLit) - dot(muLit, pvLit))
+      }
     }),
 
     // Sign-bit binary quantization + Hamming search — the 32× index
@@ -1550,7 +1542,6 @@ object Similarity {
     // top-10; fully deterministic (rounded rank keys, id tie-breaks) →
     // oracle-checked, unlike the hash-specific LSH listings.
     "s_rerank_twostage" -> ((s, d) => {
-      graft.functions.GraftFunctions.ensureRegistered(s)
       val cos = graft.functions.GraftFunctions.cosineSim _
       val emb = t(s, d, "embeddings")
       val base = emb.select(col("vec_id"), col("embedding"), binarySig.as("sig"))
@@ -1588,7 +1579,6 @@ object Similarity {
     // products, never a data×data join. Centroid components and
     // distances round to 9 dp (summation-order discipline), s to 6.
     "s_silhouette" -> ((s, d) => {
-      graft.functions.GraftFunctions.ensureRegistered(s)
       val cos = graft.functions.GraftFunctions.cosineSim _
       val emb = t(s, d, "embeddings")
         .select(col("vec_id"), col("label"),
@@ -1625,7 +1615,6 @@ object Similarity {
     // to near-duplicates?" at any corpus size. Per-position sums round
     // to 9 dp (the centroid discipline); the final statistic to 6.
     "s_intra_diversity" -> ((s, d) => {
-      graft.functions.GraftFunctions.ensureRegistered(s)
       val dotN = graft.functions.GraftFunctions.dotProduct _
       val emb = t(s, d, "embeddings")
         .select(col("label"), col("embedding").cast("array<double>").as("v"))
@@ -1683,7 +1672,6 @@ object Similarity {
     // CTEs (mmrSql). Candidate relevances and pairwise sims round to 4 dp
     // BEFORE the greedy math so both engines walk one trajectory.
     "s_mmr_rerank" -> ((s, d) => {
-      graft.functions.GraftFunctions.ensureRegistered(s)
       val cos = graft.functions.GraftFunctions.cosineSim _
       val emb = t(s, d, "embeddings")
       val q = emb.filter(col("vec_id") === 0).select(col("embedding").as("qv"))
@@ -1729,7 +1717,6 @@ object Similarity {
     // rank windows run on those literal-50-row panels (WindowBoundSpec),
     // and the fusion join is 50×50-bounded.
     "s_hybrid_rrf" -> ((s, d) => {
-      graft.functions.GraftFunctions.ensureRegistered(s)
       val bm25 = Text.bm25(t(s, d, "documents").filter(col("doc_id") =!= 0))
         .orderBy(col("bm25").desc, col("doc_id")).limit(50)
       val rb = bm25.withColumn("r_bm25",
@@ -1781,7 +1768,6 @@ object Similarity {
     // on the 20-row lattice. DuckDB replays the whole chain as one CTE
     // stack (the c_pretrain_build device).
     "s_rag_pipeline" -> ((s, d) => {
-      graft.functions.GraftFunctions.ensureRegistered(s)
       val cos = graft.functions.GraftFunctions.cosineSim _
       val I = graft.io.AnnIndex
       val root = I.ensure(s, d)

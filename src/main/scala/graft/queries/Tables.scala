@@ -22,27 +22,20 @@ object Tables {
 
   /** `events.ts` is parquet TIMESTAMP(NANOS), which Spark's vectorized
     * reader rejects — the SESSION must be built with
-    * `spark.sql.legacy.parquet.nanosAsLong=true` (Verify/Bench/TestSpark all
-    * do); this reader asserts that instead of mutating shared conf
-    * mid-plan. The ns → µs downcast uses exact integer floor division
-    * (`(ts - pmod(ts, 1000)) div 1000`), matching the floor-based downcast
-    * other engines use — correct for pre-1970 values too, with no
-    * double-precision loss on 18-digit nanosecond values.
+    * [[graft.GraftSession.parquetTimestamps]] (every
+    * `GraftSession.builder` session is); this reader asserts that instead
+    * of mutating shared conf mid-plan. A session built without them would
+    * fail the scan or silently diverge from the DuckDB oracle's
+    * naive-as-UTC epochs. The ns → µs downcast uses exact integer floor
+    * division (`(ts - pmod(ts, 1000)) div 1000`), matching the
+    * floor-based downcast other engines use — correct for pre-1970 values
+    * too, with no double-precision loss on 18-digit nanosecond values.
     */
   def events(spark: SparkSession, dir: String): DataFrame = {
-    require(
-      spark.conf.getOption("spark.sql.legacy.parquet.nanosAsLong").contains("true"),
-      "session must set spark.sql.legacy.parquet.nanosAsLong=true at build " +
-        "time (events.ts is parquet TIMESTAMP(NANOS))")
-    // the other half of the timestamp-semantics contract: tz-naive parquet
-    // timestamps (the ScaleUp-written µs datasets) must read as TIMESTAMP
-    // in the UTC session, not TIMESTAMP_NTZ — a session built without this
-    // would silently diverge from the DuckDB oracle's naive-as-UTC epochs
-    require(
-      spark.conf.getOption("spark.sql.parquet.inferTimestampNTZ.enabled")
-        .contains("false"),
-      "session must set spark.sql.parquet.inferTimestampNTZ.enabled=false " +
-        "at build time (tz-naive parquet ts must read as TIMESTAMP, not NTZ)")
+    for ((k, v) <- graft.GraftSession.parquetTimestamps)
+      require(spark.conf.getOption(k).contains(v),
+        s"session must set $k=$v at build time (events.ts is parquet " +
+          "TIMESTAMP(NANOS); tz-naive parquet ts must read as TIMESTAMP, not NTZ)")
     val raw = t(spark, dir, "events")
     raw.schema("ts").dataType match {
       // driver testdata: TIMESTAMP(NANOS) read as long ns → downcast

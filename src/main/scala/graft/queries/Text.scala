@@ -1038,7 +1038,6 @@ object Text {
       // HOF+persist 3.6 s, native 2.5 s, native+persist 3.1 s (caching
       // 12M short strings costs more than a second codegen'd scan) — so:
       // native, no cache.
-      graft.functions.GraftFunctions.ensureRegistered(s)
       val tgStream = t(s, d, "documents")
         .select(col("doc_id"), col("lang"), prefix.as("p"))
         .filter(length(col("p")) >= 3)

@@ -278,7 +278,6 @@ object EventStreams {
     */
   def nearDupDropStream(docs: DataFrame): Dataset[NearDupDrop] = {
     val s = docs.sparkSession
-    graft.functions.GraftFunctions.ensureRegistered(s)
     import s.implicits._
     if (!docs.isStreaming) {
       return graft.queries.Dedup

@@ -3,44 +3,14 @@ package graft.util
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** Skew mitigation for joins whose hot keys overwhelm single shuffle
-  * partitions at scale. AQE's skew-join splitting (on by default) handles
-  * most cases at runtime; explicit salting remains the tool when a
-  * sort-merge join must be forced co-partitioned, or when AQE cannot split
-  * (e.g. bucketed tables, aggregations feeding the join).
+/** Skew mitigation for aggregations whose hot keys overwhelm single
+  * shuffle partitions at scale. AQE's skew-join splitting (on by default)
+  * handles skewed joins at runtime; explicit salting remains the tool when
+  * a single group key dominates an aggregation.
   */
 object Skew {
 
   private val SaltCol = "__graft_salt"
-
-  /** Salted equi-join: the (large, skewed) `fact` side gets a deterministic
-    * pseudo-random salt in [0, salts); the (smaller) `dim` side is
-    * replicated `salts` times so every (key, salt) pair finds its match.
-    * A hot fact key now spreads across `salts` shuffle partitions.
-    *
-    * Semantics are identical to `fact.join(dim, Seq(key), joinType)` for
-    * inner/left joins when `dim(key)` is unique per row (the dim-replica
-    * side contributes exactly one match per fact row).
-    */
-  def saltedJoin(
-      fact: DataFrame,
-      dim: DataFrame,
-      key: String,
-      salts: Int,
-      joinType: String = "inner"): DataFrame = {
-    require(salts > 0, s"salts must be positive, got $salts")
-    // right/full would emit `salts` copies of every unmatched dim row
-    val supported = Set("inner", "left", "left_outer", "leftouter",
-      "left_semi", "leftsemi", "semi", "left_anti", "leftanti", "anti")
-    require(supported.contains(joinType.toLowerCase.replace(" ", "")),
-      s"saltedJoin supports inner/left/semi/anti join types, got '$joinType' " +
-        "(right/full would duplicate unmatched dim rows per salt)")
-    val saltedFact = fact.withColumn(
-      SaltCol, pmod(xxhash64(col(key), monotonically_increasing_id()), lit(salts.toLong)))
-    val saltedDim = dim.withColumn(
-      SaltCol, explode(sequence(lit(0L), lit(salts.toLong - 1))))
-    saltedFact.join(saltedDim, Seq(key, SaltCol), joinType).drop(SaltCol)
-  }
 
   /** Salted two-phase aggregation for skewed group keys: partial aggregate
     * on (key, salt), then final aggregate on key. Use when a single group

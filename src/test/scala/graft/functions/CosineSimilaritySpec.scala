@@ -11,7 +11,6 @@ import graft.queries.{Similarity, Tables}
 class CosineSimilaritySpec extends SparkSpec {
 
   test("matches the higher-order-function formulation on real embeddings") {
-    GraftFunctions.ensureRegistered(spark)
     val emb = Tables.t(spark, TestSpark.sf0001, "embeddings")
     val q = emb.filter(col("vec_id") === 0).select(col("embedding").as("qvec"))
     val both = emb.crossJoin(broadcast(q))
@@ -24,7 +23,6 @@ class CosineSimilaritySpec extends SparkSpec {
   }
 
   test("null semantics: null input, length mismatch, zero vector") {
-    GraftFunctions.ensureRegistered(spark)
     import spark.implicits._
     val df = Seq(
       (Some(Seq(Some(1f), Some(2f))), Some(Seq(Some(1f), Some(2f)))),   // 1.0
@@ -60,8 +58,7 @@ class CosineSimilaritySpec extends SparkSpec {
     assert(math.abs(proj(row).getDouble(0) - 1.0) < 1e-12)
   }
 
-  test("SQL registration: callable from spark.sql after ensureRegistered") {
-    GraftFunctions.ensureRegistered(spark)
+  test("SQL registration: callable from spark.sql with no registration call") {
     val r = spark.sql("SELECT cosine_sim(array(CAST(3 AS FLOAT), CAST(4 AS FLOAT)), " +
       "array(CAST(3 AS FLOAT), CAST(4 AS FLOAT)))").head().getDouble(0)
     assert(math.abs(r - 1.0) < 1e-12)

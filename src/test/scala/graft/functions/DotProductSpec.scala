@@ -11,7 +11,6 @@ import graft.queries.{Similarity, Tables}
 class DotProductSpec extends SparkSpec {
 
   test("bit-identical to the aggregate(zip_with(...)) HOF form on real embeddings") {
-    GraftFunctions.ensureRegistered(spark)
     val emb = Tables.t(spark, TestSpark.sf0001, "embeddings")
     val q = emb.filter(col("vec_id") === 0).select(col("embedding").as("qvec"))
     val both = emb.crossJoin(broadcast(q))
@@ -25,7 +24,6 @@ class DotProductSpec extends SparkSpec {
   }
 
   test("mixed float/double sides: float column against a double literal plane") {
-    GraftFunctions.ensureRegistered(spark)
     import spark.implicits._
     val plane = Array(0.5, -1.0, 2.0)
     val df = Seq(Seq(1f, 2f, 3f), Seq(-1f, 0f, 4f)).toDF("a")
@@ -38,7 +36,6 @@ class DotProductSpec extends SparkSpec {
   }
 
   test("null semantics: null input, length mismatch, null element") {
-    GraftFunctions.ensureRegistered(spark)
     import spark.implicits._
     val df = Seq(
       (Some(Seq(Some(1f), Some(2f))), Some(Seq(Some(3f), Some(4f)))),   // 11.0

@@ -11,7 +11,6 @@ class LiteralParamSpec extends SparkSpec {
 
   private def rejects(fn: String, param: String, call: String): Unit =
     test(s"$fn rejects $call") {
-      GraftFunctions.ensureRegistered(spark)
       import spark.implicits._
       val df = Seq(("some document text", Seq(1.0, 2.0, 3.0))).toDF("text", "v")
       val e = intercept[IllegalArgumentException](df.selectExpr(call).collect())

@@ -11,7 +11,6 @@ import graft.SparkSpec
 class SketchesSpec extends SparkSpec {
 
   test("minhash: identical text gives identical signatures; different text differs") {
-    GraftFunctions.ensureRegistered(spark)
     import spark.implicits._
     val df = Seq((1L, "the quick brown fox"), (2L, "the quick brown fox"),
       (3L, "a completely different document body")).toDF("id", "text")
@@ -23,7 +22,6 @@ class SketchesSpec extends SparkSpec {
   }
 
   test("minhash: near-duplicates share most members, disjoint texts almost none") {
-    GraftFunctions.ensureRegistered(spark)
     import spark.implicits._
     val base = "the quick brown fox jumps over the lazy dog again and again"
     val near = base + " ok"
@@ -38,7 +36,6 @@ class SketchesSpec extends SparkSpec {
   }
 
   test("minhash: short text (< k chars) hashes whole; multi-byte chars shingle by CHAR") {
-    GraftFunctions.ensureRegistered(spark)
     import spark.implicits._
     val df = Seq((1L, "ab"), (2L, "ab"), (3L, "한국어 문서입니다 테스트")).toDF("id", "text")
     val out = df.select(col("id"), GraftFunctions.minhashSigs(col("text"), 5, 4).as("mh"))
@@ -50,7 +47,6 @@ class SketchesSpec extends SparkSpec {
   }
 
   test("simhash: identical normalized text collides; token-permuted text also collides") {
-    GraftFunctions.ensureRegistered(spark)
     import spark.implicits._
     // simhash is bag-of-tokens: permutation preserves the bit sums exactly
     val df = Seq((1L, "alpha beta gamma delta"), (2L, "delta gamma beta alpha"),
@@ -62,7 +58,6 @@ class SketchesSpec extends SparkSpec {
   }
 
   test("simhash: repeated/leading/trailing spaces are harmless; empty text is stable") {
-    GraftFunctions.ensureRegistered(spark)
     import spark.implicits._
     val df = Seq((1L, "a b"), (2L, "  a   b  "), (3L, "")).toDF("id", "text")
     val out = df.select(col("id"), GraftFunctions.simhash64(col("text")).as("s"))
@@ -72,7 +67,6 @@ class SketchesSpec extends SparkSpec {
   }
 
   test("builder errors name the offending parameter, including non-integral literals") {
-    GraftFunctions.ensureRegistered(spark)
     import spark.implicits._
     val df = Seq("abc").toDF("text")
     // non-integral literal must get the named-parameter message, not a
@@ -90,7 +84,6 @@ class SketchesSpec extends SparkSpec {
   }
 
   test("minhash: native members are bit-identical to the SQL md5/conv + XOR formulation") {
-    GraftFunctions.ensureRegistered(spark)
     import spark.implicits._
     // the exact draw d_minhash_lsh's oracle pins: md5-48 per 5-char
     // shingle (end-clamped like SQL substring), XOR with the seed-42
@@ -121,7 +114,6 @@ class SketchesSpec extends SparkSpec {
   }
 
   test("simhash: native signature is bit-identical to the SQL md5/conv bit-sum formulation") {
-    GraftFunctions.ensureRegistered(spark)
     import spark.implicits._
     // the exact draw d_simhash's oracle pins: md5-48 per space-separated
     // token, 48 ±1 bit sums, sign fold — spelled with nested SQL HOFs
@@ -147,7 +139,6 @@ class SketchesSpec extends SparkSpec {
   }
 
   test("winnow: native draws are bit-identical to the SQL md5/conv formulation") {
-    GraftFunctions.ensureRegistered(spark)
     import spark.implicits._
     // the exact draw d_winnow_fingerprints' oracle pins, spelled in SQL —
     // the native expression must reproduce it value-for-value, including
@@ -176,7 +167,6 @@ class SketchesSpec extends SparkSpec {
   }
 
   test("winnow: text too short for one window yields an empty array") {
-    GraftFunctions.ensureRegistered(spark)
     import spark.implicits._
     val out = Seq((1L, "abcdefghij")) // 10 chars < k + w - 1 = 11
       .toDF("id", "nt")
@@ -186,7 +176,6 @@ class SketchesSpec extends SparkSpec {
   }
 
   test("char_ngrams: native grams are identical to the SQL transform/substring draw") {
-    GraftFunctions.ensureRegistered(spark)
     import spark.implicits._
     val texts = Seq(
       "the quick brown fox",
@@ -212,7 +201,6 @@ class SketchesSpec extends SparkSpec {
   }
 
   test("gram_fps: native hashes are bit-identical to the SQL md5/conv draw") {
-    GraftFunctions.ensureRegistered(spark)
     import spark.implicits._
     // the exact per-position draw d_dup_spans previously spelled in SQL
     // (sequence-explode + md5/conv per row) — the native array must carry
@@ -239,7 +227,6 @@ class SketchesSpec extends SparkSpec {
   }
 
   test("gram_fps: text shorter than k yields an empty array; length-k yields one") {
-    GraftFunctions.ensureRegistered(spark)
     import spark.implicits._
     val out = Seq((1L, "short"), (2L, "exactly twenty chars"))
       .toDF("id", "nt")

@@ -16,7 +16,6 @@ class TopTokenCountSpec extends SparkSpec {
 
   test("native == explode+groupBy max on the dup corpus, every doc") {
     val s = spark
-    GraftFunctions.ensureRegistered(s)
     val docs = graft.queries.Dedup.corpusWithDups(s, TestSpark.sf0001)
       .select(col("doc_id"), Text.tokens(col("text")).as("sp"))
     val ref = docs.select(col("doc_id"), explode(col("sp")).as("w"))
@@ -30,7 +29,6 @@ class TopTokenCountSpec extends SparkSpec {
 
   test("edge shapes: empty-string token, singleton, ties, null element, empty array") {
     val s = spark
-    GraftFunctions.ensureRegistered(s)
     import s.implicits._
     val df = Seq(
       (1L, Seq("")),                        // whitespace-only doc: split yields [""]

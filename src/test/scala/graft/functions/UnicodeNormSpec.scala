@@ -11,7 +11,6 @@ class UnicodeNormSpec extends SparkSpec {
   private val fullwidth = "\uff11\uff12" // fullwidth '12' (NFKC-only fold)
 
   test("NFC folds combining sequences; already-NFC text passes through") {
-    GraftFunctions.ensureRegistered(spark)
     import spark.implicits._
     val df = Seq(decomposed, precomposed, "plain ascii").toDF("s")
     val out = df.select(GraftFunctions.unicodeNorm(col("s")).as("n"),
@@ -23,7 +22,6 @@ class UnicodeNormSpec extends SparkSpec {
   }
 
   test("NFKC additionally folds compatibility characters; NFC does not") {
-    GraftFunctions.ensureRegistered(spark)
     import spark.implicits._
     val df = Seq(fullwidth).toDF("s")
     val out = df.select(
@@ -34,7 +32,6 @@ class UnicodeNormSpec extends SparkSpec {
   }
 
   test("interpreted eval matches codegen and SQL registration works") {
-    GraftFunctions.ensureRegistered(spark)
     import spark.implicits._
     // force the interpreted path via direct expression eval
     val e = NormalizeUnicode(
@@ -50,7 +47,6 @@ class UnicodeNormSpec extends SparkSpec {
   }
 
   test("null propagates; invalid form rejected at analysis") {
-    GraftFunctions.ensureRegistered(spark)
     import spark.implicits._
     val out = Seq(Option.empty[String]).toDF("s")
       .select(GraftFunctions.unicodeNorm(col("s"))).collect()

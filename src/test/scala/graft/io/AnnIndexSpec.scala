@@ -484,7 +484,6 @@ class AnnIndexSpec extends SparkSpec with BeforeAndAfterAll {
   }
 
   test("refine recall floor: each query's top-5 overlaps brute force") {
-    graft.functions.GraftFunctions.ensureRegistered(spark)
     val idx = Similarity.queries("s_index_query")(spark, sf).collect()
       .groupBy(_.getAs[Long]("qid"))
       .view.mapValues(_.map(_.getAs[Long]("vec_id")).toSet).toMap

@@ -24,7 +24,6 @@ class LiteralQuantizerSpec extends SparkSpec with BeforeAndAfterAll {
 
   test("literal-form build == broadcast-join argmax formulation, every row") {
     val s = spark
-    graft.functions.GraftFunctions.ensureRegistered(s)
     val cos = graft.functions.GraftFunctions.cosineSim _
     val dotN = graft.functions.GraftFunctions.dotProduct _
     val root = AnnIndex.ensure(s, sf)
@@ -64,7 +63,6 @@ class LiteralQuantizerSpec extends SparkSpec with BeforeAndAfterAll {
 
   test("residual tree: rv when-chain == broadcast-join subtraction, every row") {
     val s = spark
-    graft.functions.GraftFunctions.ensureRegistered(s)
     val cos = graft.functions.GraftFunctions.cosineSim _
     val dotN = graft.functions.GraftFunctions.dotProduct _
     val root = AnnIndex.ensureResidual(s, sf)

@@ -30,7 +30,6 @@ class CompositeLiteralSpec extends SparkSpec {
 
   test("s_kmeans: literal Lloyd rounds == broadcast-join formulation") {
     val s = spark
-    graft.functions.GraftFunctions.ensureRegistered(s)
     val k = 8
     val emb = Tables.t(s, sf, "embeddings")
     val vecMean = graft.functions.VectorMean(64)
@@ -56,7 +55,6 @@ class CompositeLiteralSpec extends SparkSpec {
 
   test("s_ivf_topk: literal assignment + probe == broadcast formulation") {
     val s = spark
-    graft.functions.GraftFunctions.ensureRegistered(s)
     val nprobe = 3
     val emb = Tables.t(s, sf, "embeddings")
     val vecMean = graft.functions.VectorMean(64)
@@ -89,7 +87,6 @@ class CompositeLiteralSpec extends SparkSpec {
 
   test("s_pq_topk: literal codes + ADC map == exploded-subspace formulation") {
     val s = spark
-    graft.functions.GraftFunctions.ensureRegistered(s)
     val dot = graft.functions.GraftFunctions.dotProduct _
     val emb = Tables.t(s, sf, "embeddings")
     val M = 4; val sub = 16
@@ -127,7 +124,6 @@ class CompositeLiteralSpec extends SparkSpec {
 
   test("s_ivfpq_topk: literal assign/code/ADC == broadcast formulation") {
     val s = spark
-    graft.functions.GraftFunctions.ensureRegistered(s)
     val cos = graft.functions.GraftFunctions.cosineSim _
     val dotN = graft.functions.GraftFunctions.dotProduct _
     val nprobe = 3; val M = 4; val sub = 16; val shortlist = 20
@@ -188,7 +184,6 @@ class CompositeLiteralSpec extends SparkSpec {
 
   test("s_cluster_balance_sample: literal assignment == broadcast formulation") {
     val s = spark
-    graft.functions.GraftFunctions.ensureRegistered(s)
     val k = 8
     val emb = Tables.t(s, sf, "embeddings")
     val seeds = emb.filter(col("vec_id") < k)
@@ -216,7 +211,6 @@ class CompositeLiteralSpec extends SparkSpec {
 
   test("s_semdedup (flat path): literal Lloyd rounds == broadcast formulation") {
     val s = spark
-    graft.functions.GraftFunctions.ensureRegistered(s)
     val emb = Tables.t(s, sf, "embeddings")
     val n = emb.count()
     val k = math.max(8L, (n + 249L) / 250L)

@@ -321,6 +321,29 @@ class EvalSpec extends SparkSpec {
     }
   }
 
+  test("s_pca_project: an empty embeddings table gives zero rows") {
+    import org.apache.spark.sql.functions.lit
+    graft.util.Dirs.withNonceDir("graft_pca_empty_") { dir =>
+      Tables.t(spark, sf, "embeddings").filter(lit(false))
+        .write.parquet(s"$dir/embeddings.parquet")
+      val r = Similarity.queries("s_pca_project")(spark, dir.getPath)
+      assert(r.columns.toSeq == Seq("label", "n", "avg_proj", "var_along"))
+      assert(r.collect().isEmpty)
+    }
+  }
+
+  test("s_pca_project: a one-row corpus fails naming the entry, not with a divide by zero") {
+    import org.apache.spark.sql.functions.col
+    graft.util.Dirs.withNonceDir("graft_pca_one_row_") { dir =>
+      Tables.t(spark, sf, "embeddings").filter(col("vec_id") === 0)
+        .write.parquet(s"$dir/embeddings.parquet")
+      val e = intercept[IllegalArgumentException](
+        Similarity.queries("s_pca_project")(spark, dir.getPath).collect())
+      assert(e.getMessage.contains("s_pca_project") &&
+        e.getMessage.contains("no direction"), e.getMessage)
+    }
+  }
+
   test("e_shapley_attrib: efficiency and monotonicity axioms hold") {
     import org.apache.spark.sql.functions._
     val r = Events.queries("e_shapley_attrib")(spark, sf).collect()

@@ -53,7 +53,6 @@ class SelfCheckSpec extends SparkSpec {
 
   test("s_pq_topk: ADC top-10 overlaps the exact-dot top-10 (recall >= 0.2 floor)") {
     import org.apache.spark.sql.functions._
-    graft.functions.GraftFunctions.ensureRegistered(spark)
     val emb = Tables.t(spark, sf, "embeddings")
     val q = emb.filter(col("vec_id") === 0).select(col("embedding").as("qv"))
     val exact = emb.filter(col("vec_id") =!= 0).crossJoin(broadcast(q))
@@ -95,7 +94,6 @@ class SelfCheckSpec extends SparkSpec {
 
   test("s_mips_topk: augmented-cosine top-10 IS the plain inner-product top-10") {
     import org.apache.spark.sql.functions._
-    graft.functions.GraftFunctions.ensureRegistered(spark)
     val emb = Tables.t(spark, sf, "embeddings")
     val q = emb.filter(col("vec_id") === 0).select(col("embedding").as("qv"))
     val exact = emb.filter(col("vec_id") =!= 0).crossJoin(broadcast(q))

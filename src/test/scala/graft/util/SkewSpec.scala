@@ -7,28 +7,6 @@ import graft.queries.Tables
 
 class SkewSpec extends SparkSpec {
 
-  test("saltedJoin matches the plain join on a real fact/dim pair") {
-    val l = Tables.t(spark, TestSpark.sf0001, "lineitem")
-    val p = Tables.t(spark, TestSpark.sf0001, "part")
-      .select("p_partkey", "p_brand").withColumnRenamed("p_partkey", "l_partkey")
-    val plain = l.join(p, Seq("l_partkey"))
-      .groupBy("p_brand").agg(count(lit(1)).as("cnt"), round(sum("l_quantity"), 2).as("q"))
-      .orderBy("p_brand").collect().toSeq
-    val salted = Skew.saltedJoin(l, p, "l_partkey", salts = 8)
-      .groupBy("p_brand").agg(count(lit(1)).as("cnt"), round(sum("l_quantity"), 2).as("q"))
-      .orderBy("p_brand").collect().toSeq
-    assert(salted == plain)
-  }
-
-  test("saltedJoin left join keeps unmatched fact rows exactly once") {
-    import spark.implicits._
-    val fact = Seq((1, "a"), (1, "b"), (2, "c"), (99, "orphan")).toDF("k", "v")
-    val dim = Seq((1, "x"), (2, "y")).toDF("k", "d")
-    val out = Skew.saltedJoin(fact, dim, "k", salts = 4, joinType = "left")
-      .orderBy("k", "v").collect().map(r => (r.getInt(0), r.getString(1), r.getString(2)))
-    assert(out.toSeq == Seq((1, "a", "x"), (1, "b", "x"), (2, "c", "y"), (99, "orphan", null)))
-  }
-
   test("AQE skew-join splits a planted whale key natively (executed-plan marker)") {
     // The scale story documented in Skew.scala: AQE's skewJoin handles hot
     // keys at runtime without salting. Prove it fires — with test-sized
