@@ -455,7 +455,7 @@ object Dedup {
       plantedPairs(s, d).join(found, Seq("id_a", "id_b"), "left")
         .agg(count(lit(1)).as("n_truth"), count(col("est_sim")).as("n_found"))
         .select(col("n_truth"), col("n_found"),
-          round(col("n_found").cast("double") / col("n_truth").cast("double"), 4).as("recall"),
+          plantedRecall(col("n_found"), col("n_truth")).as("recall"),
           (col("n_found") === col("n_truth")).as("pass"))
     }),
 
@@ -483,9 +483,11 @@ object Dedup {
         .join(sig.select(col("doc_id").as("id_b"), col("simhash").as("sig_b")),
           Seq("id_b"), "left")
         .agg(count(lit(1)).as("n_truth"),
-          sum(when(col("sig_a") === col("sig_b"), 1L).otherwise(0L)).as("n_found"))
+          // an empty corpus has no pair to sum: 0 found, not NULL
+          coalesce(sum(when(col("sig_a") === col("sig_b"), 1L).otherwise(0L)), lit(0L))
+            .as("n_found"))
         .select(col("n_truth"), col("n_found"),
-          round(col("n_found").cast("double") / col("n_truth").cast("double"), 4).as("recall"),
+          plantedRecall(col("n_found"), col("n_truth")).as("recall"),
           (col("n_found") === col("n_truth")).as("pass"))
     }),
 

@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 
 /** Readers for the driver's synthetic parquet corpus (TESTDATA.md).
   * Every query takes `(spark, sfDir)` and reads only the tables it needs —
@@ -75,6 +75,16 @@ object Tables {
   def inStratum(df: DataFrame, idCol: String, stratum: Option[Int]): DataFrame =
     stratum.fold(df)(p =>
       df.filter(Tables.stratum(org.apache.spark.sql.functions.col(idCol), p)))
+
+  /** Recall of `found` out of `planted` pairs, rounded to 4 decimals, and
+    * a vacuous 1.0 when nothing is planted (an empty or tiny corpus): the
+    * one rule of every planted-recall entry, so a corpus with no planted
+    * pair gives neither an ANSI division by zero nor NULL. */
+  private[graft] def plantedRecall(found: Column, planted: Column): Column = {
+    import org.apache.spark.sql.functions._
+    when(planted === 0, lit(1.0))
+      .otherwise(round(found.cast("double") / planted.cast("double"), 4))
+  }
 
   // ---- oracle-side renderers shared by the DuckDB replays. They are
   // spelled once here so that no two oracles can drift apart; none is

@@ -13,6 +13,18 @@ package graft
   * the check stays strict for the leak it exists to catch.
   */
 object TestDirs {
+  /** Runs `body` on an edge corpus: a fresh `Dirs.withNonceDir` dir that
+    * holds one table, sf0.001's `table` cut to the rows `keep` selects,
+    * with its schema. The dir is deleted on every exit path.
+    */
+  def withEdgeCorpus[A](table: String, keep: org.apache.spark.sql.Column)(
+      body: String => A): A =
+    graft.util.Dirs.withNonceDir(s"graft_edge_${table}_") { dir =>
+      graft.queries.Tables.t(TestSpark.spark, TestSpark.sf0001, table).filter(keep)
+        .write.parquet(s"$dir/$table.parquet")
+      body(dir.getPath)
+    }
+
   def nonceDirs(prefix: String): Set[String] =
     Option(graft.util.Dirs.root.listFiles())
       .getOrElse(Array.empty)

@@ -179,6 +179,14 @@ class MultimodalSpec extends SparkSpec {
     // non-mono / non-16-bit input is rejected, not silently misread
     intercept[IllegalArgumentException](
       Multimodal.audioFingerprint64("RIFFxxxxNOPE".getBytes))
+    // too short for a RIFF header, and a 24-byte WAV whose last chunk is a
+    // 4-byte `fmt `: the fingerprint reads them through decodeWav's checks
+    intercept[IllegalArgumentException](
+      Multimodal.audioFingerprint64(Array[Byte](1, 2, 3)))
+    val fmt4 = "RIFF".getBytes ++ Array[Byte](16, 0, 0, 0) ++ "WAVEfmt ".getBytes ++
+      Array[Byte](4, 0, 0, 0, 1, 0, 1, 0)
+    assert(fmt4.length == 24)
+    intercept[IllegalArgumentException](Multimodal.audioFingerprint64(fmt4))
   }
 
   test("aviFrameLumas + flicker synth: per-frame decode recovers the planted bit pattern") {

@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.{SparkSpec, TestSpark}
+import graft.{SparkSpec, TestDirs, TestSpark}
 
 /** Invariant tests for the k-NN label eval (s_knn_classify) and the
   * seasonal-naive forecast baseline (e_forecast_baseline).
@@ -312,10 +312,8 @@ class EvalSpec extends SparkSpec {
 
   test("s_mmr_rerank: a corpus holding only the query vector gives zero rows") {
     import org.apache.spark.sql.functions.col
-    graft.util.Dirs.withNonceDir("graft_mmr_query_only_") { dir =>
-      Tables.t(spark, sf, "embeddings").filter(col("vec_id") === 0)
-        .write.parquet(s"$dir/embeddings.parquet")
-      val r = Similarity.queries("s_mmr_rerank")(spark, dir.getPath)
+    TestDirs.withEdgeCorpus("embeddings", col("vec_id") === 0) { dir =>
+      val r = Similarity.queries("s_mmr_rerank")(spark, dir)
       assert(r.columns.toSeq == Seq("rank", "vec_id", "rel", "mmr"))
       assert(r.collect().isEmpty)
     }
@@ -323,10 +321,8 @@ class EvalSpec extends SparkSpec {
 
   test("s_pca_project: an empty embeddings table gives zero rows") {
     import org.apache.spark.sql.functions.lit
-    graft.util.Dirs.withNonceDir("graft_pca_empty_") { dir =>
-      Tables.t(spark, sf, "embeddings").filter(lit(false))
-        .write.parquet(s"$dir/embeddings.parquet")
-      val r = Similarity.queries("s_pca_project")(spark, dir.getPath)
+    TestDirs.withEdgeCorpus("embeddings", lit(false)) { dir =>
+      val r = Similarity.queries("s_pca_project")(spark, dir)
       assert(r.columns.toSeq == Seq("label", "n", "avg_proj", "var_along"))
       assert(r.collect().isEmpty)
     }
@@ -334,11 +330,9 @@ class EvalSpec extends SparkSpec {
 
   test("s_pca_project: a one-row corpus fails naming the entry, not with a divide by zero") {
     import org.apache.spark.sql.functions.col
-    graft.util.Dirs.withNonceDir("graft_pca_one_row_") { dir =>
-      Tables.t(spark, sf, "embeddings").filter(col("vec_id") === 0)
-        .write.parquet(s"$dir/embeddings.parquet")
+    TestDirs.withEdgeCorpus("embeddings", col("vec_id") === 0) { dir =>
       val e = intercept[IllegalArgumentException](
-        Similarity.queries("s_pca_project")(spark, dir.getPath).collect())
+        Similarity.queries("s_pca_project")(spark, dir).collect())
       assert(e.getMessage.contains("s_pca_project") &&
         e.getMessage.contains("no direction"), e.getMessage)
     }

@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.{SparkSpec, TestSpark}
+import graft.{SparkSpec, TestDirs, TestSpark}
 
 /** Self-verifying checks for the approximate / hash-specific operators
   * (VERDICT round 1, item 2): each query grades itself against exact ground
@@ -33,6 +33,23 @@ class SelfCheckSpec extends SparkSpec {
     assert(r.length == 1)
     assert(r(0).getAs[Double]("recall") == 1.0)
     assert(r(0).getAs[Boolean]("pass"))
+  }
+
+  test("planted-pair recall entries: an empty documents table gives the vacuous recall 1.0") {
+    import org.apache.spark.sql.functions.lit
+    // the rows the DuckDB oracles return on the same empty table
+    val expected = Seq(
+      "d_minhash_recall" -> Seq(0L, 0L, 1.0, true),
+      "d_simhash_recall" -> Seq(0L, 0L, 1.0, true),
+      "m_phash_dedup" -> Seq(0L, 0L, 0L, 1.0),
+      "m_audio_fprint_dedup" -> Seq(0L, 0L, 0L, 1.0))
+    val entries = Dedup.queries ++ graft.multimodal.Multimodal.queries
+    TestDirs.withEdgeCorpus("documents", lit(false)) { dir =>
+      expected.foreach { case (name, row) =>
+        val r = entries(name)(spark, dir).collect()
+        assert(r.map(_.toSeq) sameElements Array(row), s"$name gave ${r.mkString}")
+      }
+    }
   }
 
   test("s_ann_recall: LSH bucket recall@10 of the brute-force top-k >= 0.5 floor") {
