@@ -1,6 +1,7 @@
 package graft.etl
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.classic.ClassicConversions.castToImpl
 import org.apache.spark.sql.functions._
 
 import graft.io.Sources
@@ -30,7 +31,11 @@ final case class Sourced(source: String, df: DataFrame)
   * one independent branch of a final `UNION ALL`. Detect/clean/conform run
   * once per group, so the plan grows with the number of distinct export
   * shapes, not with the number of files; every stage is narrow (zero
-  * shuffles).
+  * shuffles). The union is fitted to the input size ([[merge]]): below one
+  * `spark.sql.files.openCostInBytes` of input per core it is coalesced to
+  * `ceil(bytes / openCost)` partitions, so a small raw directory of many
+  * files reaches the caller as one partition, not one per file group and
+  * core.
   */
 final class MultiSourceAdEtl(val config: EtlConfig) {
   config.validate()
@@ -105,9 +110,33 @@ final class MultiSourceAdEtl(val config: EtlConfig) {
   /** UNION ALL of the conformed frames (`multi_source_ad_etl.py:202-205`).
     * Name-based union: schemas are identical post-standardize by
     * construction, but `unionByName` keeps it robust to column order.
+    *
+    * The union is then fitted to its input size: each group scan spreads
+    * its files over the cores on its own, so a small raw directory would
+    * otherwise reach every later action as dozens of tiny partitions. With
+    * `bytes` the summed size estimate of the union's leaves (the file
+    * lengths a CSV scan's index already listed, a local frame's row
+    * estimate; no file-system call, no job) and `n = ceil(bytes /
+    * spark.sql.files.openCostInBytes)`, at least 1, the union is coalesced
+    * to `n` partitions when `n` is below `defaultParallelism`, and returned
+    * untouched otherwise. A coalesce is narrow, so the plan stays
+    * shuffle-free; at `n = 1` the frame is a single partition, and a sort
+    * or a global aggregate over it needs no exchange.
+    *
+    * Skew: a coalesce groups partitions by count, not by size, so with
+    * skewed file sizes one task may get most of the input. It only fires
+    * when the whole input is below one file-open cost per core (16 MB at
+    * 4 cores with the defaults), which bounds that task. Larger inputs keep
+    * Spark's size-packed scan partitions as they are.
     */
-  def merge(dfs: Seq[DataFrame]): DataFrame =
-    dfs.reduce(_.unionByName(_))
+  def merge(dfs: Seq[DataFrame]): DataFrame = {
+    require(dfs.nonEmpty, "merge: no frames were given")
+    val union = dfs.reduce(_.unionByName(_))
+    val bytes = union.queryExecution.analyzed.collectLeaves().map(_.stats.sizeInBytes).sum
+    val openCost = castToImpl(union.sparkSession).sessionState.conf.filesOpenCostInBytes
+    val n = ((bytes + openCost - 1) / openCost).max(1)
+    if (n < union.sparkSession.sparkContext.defaultParallelism) union.coalesce(n.toInt) else union
+  }
 
   /** Full pipeline over a directory of raw exports. */
   def run(spark: SparkSession, rawDir: String, capitalize: Boolean = false): DataFrame = {

@@ -15,7 +15,11 @@ import graft.util.A1
   * by three actions: one aggregate for the row count and the file name's
   * date range, the sorted CSV write, and one sheet collect when there are
   * sheet targets. `orderBy` keys make the exported row order deterministic
-  * where the reference relied on eager concat order.
+  * where the reference relied on eager concat order. The persisted frame
+  * has the partitions `MultiSourceAdEtl.merge` fitted to the input size:
+  * below one `spark.sql.files.openCostInBytes` per core a small raw
+  * directory is one partition, so each of the three actions runs one task
+  * and its sort or aggregate needs no shuffle.
   */
 object PipelineRunner {
 

@@ -11,6 +11,8 @@ import graft.SparkSpec
 import graft.io.Sinks
 import graft.util.Columns
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.logical.Repartition
+import org.apache.spark.sql.classic.ClassicConversions.castToImpl
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types._
 
@@ -177,6 +179,75 @@ class MultiSourceAdEtlSpec extends SparkSpec {
     val e = intercept[IllegalArgumentException] { engine.readTabularFiles(spark, empty.toString) }
     assert(e.getMessage.contains("No CSV or XLSX"))
     assert(e.getMessage.contains("notes.txt"))
+  }
+
+  /** The partition counts `merge` coalesced the union to (none when it
+    * returned the union untouched).
+    */
+  private def coalescedTo(df: DataFrame): Seq[Int] =
+    df.queryExecution.analyzed.collect { case r: Repartition if !r.shuffle => r.numPartitions }
+
+  /** Runs `body` with `spark.sql.files.openCostInBytes` set to `bytes`,
+    * restoring the session's value after.
+    */
+  private def withOpenCost[T](bytes: Long)(body: => T): T = {
+    val key = "spark.sql.files.openCostInBytes"
+    val prev = spark.conf.get(key)
+    spark.conf.set(key, bytes.toString)
+    try body finally spark.conf.set(key, prev)
+  }
+
+  /** What the fit computes for the apsl fixtures from the session values:
+    * (input bytes, partitions n, cores).
+    */
+  private def apslFit(): (Long, Long, Int) = {
+    val bytes = Using.resource(Files.list(Paths.get(Fixtures.dir("apsl"))))(_.iterator().asScala.toSeq)
+      .map(Files.size).sum
+    val openCost = castToImpl(spark).sessionState.conf.filesOpenCostInBytes
+    (bytes, math.max(1L, (bytes + openCost - 1) / openCost), spark.sparkContext.defaultParallelism)
+  }
+
+  test("merge fits a small raw dir to one partition, and its sorted plan needs no Exchange") {
+    val (_, n, cores) = apslFit()
+    assert(n == 1 && n < cores, s"the fixtures no longer fit one partition (n = $n, cores = $cores)")
+    val out = new MultiSourceAdEtl(Configs.apsl).run(spark, Fixtures.dir("apsl"), capitalize = true)
+    assert(coalescedTo(out) == Seq(1))
+    assert(out.rdd.getNumPartitions == 1)
+    val sorted = out.orderBy("Source", "Day")
+    assert(sorted.count() == 8)
+    val plan = sorted.queryExecution.executedPlan.toString
+    assert(!plan.contains("Exchange"), plan)
+  }
+
+  test("merge coalesces to ceil(bytes / openCostInBytes) partitions when that is below the cores") {
+    val (bytes, _, cores) = apslFit()
+    assert(cores > 2, s"needs at least 3 cores for 1 < n < cores, has $cores")
+    val engine = new MultiSourceAdEtl(Configs.apsl)
+    val plain = engine.run(spark, Fixtures.dir("apsl"), capitalize = true)
+    withOpenCost((bytes + 1) / 2) {
+      val (_, n, _) = apslFit()
+      assert(n == 2)
+      val out = engine.run(spark, Fixtures.dir("apsl"), capitalize = true)
+      assert(coalescedTo(out) == Seq(n))
+      assert(out.rdd.getNumPartitions == n)
+      assert(sortedRows(out) == sortedRows(plain))
+    }
+  }
+
+  test("merge returns the union untouched when the input needs the cores or more") {
+    withOpenCost(1L) {
+      val (_, n, cores) = apslFit()
+      assert(n >= cores)
+      val out = new MultiSourceAdEtl(Configs.apsl).run(spark, Fixtures.dir("apsl"), capitalize = true)
+      assert(coalescedTo(out).isEmpty)
+    }
+  }
+
+  test("merge of no frames raises an IllegalArgumentException saying so") {
+    val engine = new MultiSourceAdEtl(Configs.apsl)
+    val e = intercept[IllegalArgumentException](engine.merge(Nil))
+    assert(e.getMessage.contains("no frames"), e.getMessage)
+    assert(engine.standardizeDataFrames(Nil).isEmpty)
   }
 
   private def sortedRows(df: DataFrame): Seq[String] =
