@@ -31,11 +31,10 @@ final case class Sourced(source: String, df: DataFrame)
   * one independent branch of a final `UNION ALL`. Detect/clean/conform run
   * once per group, so the plan grows with the number of distinct export
   * shapes, not with the number of files; every stage is narrow (zero
-  * shuffles). The union is fitted to the input size ([[merge]]): below one
-  * `spark.sql.files.openCostInBytes` of input per core it is coalesced to
-  * `ceil(bytes / openCost)` partitions, so a small raw directory of many
-  * files reaches the caller as one partition, not one per file group and
-  * core.
+  * shuffles). A union of at most one `spark.sql.files.openCostInBytes`
+  * of input is coalesced to one partition ([[merge]]), so a small raw
+  * directory of many files reaches the caller as one partition, not one
+  * per file group and core.
   */
 final class MultiSourceAdEtl(val config: EtlConfig) {
   config.validate()
@@ -111,31 +110,27 @@ final class MultiSourceAdEtl(val config: EtlConfig) {
     * Name-based union: schemas are identical post-standardize by
     * construction, but `unionByName` keeps it robust to column order.
     *
-    * The union is then fitted to its input size: each group scan spreads
-    * its files over the cores on its own, so a small raw directory would
+    * A small union is then made one partition: each group scan spreads its
+    * files over the cores on its own, so a small raw directory would
     * otherwise reach every later action as dozens of tiny partitions. With
     * `bytes` the summed size estimate of the union's leaves (the file
     * lengths a CSV scan's index already listed, a local frame's row
-    * estimate; no file-system call, no job) and `n = ceil(bytes /
-    * spark.sql.files.openCostInBytes)`, at least 1, the union is coalesced
-    * to `n` partitions when `n` is below `defaultParallelism`, and returned
-    * untouched otherwise. A coalesce is narrow, so the plan stays
-    * shuffle-free; at `n = 1` the frame is a single partition, and a sort
-    * or a global aggregate over it needs no exchange.
+    * estimate; no file-system call, no job), the union is coalesced to one
+    * partition when `bytes` is at most `spark.sql.files.openCostInBytes`,
+    * and returned untouched otherwise. A coalesce is narrow, so the plan
+    * stays shuffle-free, and a sort or a global aggregate over a single
+    * partition needs no exchange.
     *
-    * Skew: a coalesce groups partitions by count, not by size, so with
-    * skewed file sizes one task may get most of the input. It only fires
-    * when the whole input is below one file-open cost per core (16 MB at
-    * 4 cores with the defaults), which bounds that task. Larger inputs keep
-    * Spark's size-packed scan partitions as they are.
+    * Skew: that one task holds the whole input, so it never holds more than
+    * one file-open cost, which is what Spark's size-packed scan already
+    * puts in one partition. Larger inputs keep the scans' partitions.
     */
   def merge(dfs: Seq[DataFrame]): DataFrame = {
     require(dfs.nonEmpty, "merge: no frames were given")
     val union = dfs.reduce(_.unionByName(_))
     val bytes = union.queryExecution.analyzed.collectLeaves().map(_.stats.sizeInBytes).sum
     val openCost = castToImpl(union.sparkSession).sessionState.conf.filesOpenCostInBytes
-    val n = ((bytes + openCost - 1) / openCost).max(1)
-    if (n < union.sparkSession.sparkContext.defaultParallelism) union.coalesce(n.toInt) else union
+    if (bytes <= openCost) union.coalesce(1) else union
   }
 
   /** Full pipeline over a directory of raw exports. */

@@ -16,10 +16,10 @@ import graft.util.A1
   * date range, the sorted CSV write, and one sheet collect when there are
   * sheet targets. `orderBy` keys make the exported row order deterministic
   * where the reference relied on eager concat order. The persisted frame
-  * has the partitions `MultiSourceAdEtl.merge` fitted to the input size:
-  * below one `spark.sql.files.openCostInBytes` per core a small raw
-  * directory is one partition, so each of the three actions runs one task
-  * and its sort or aggregate needs no shuffle.
+  * has the partitions `MultiSourceAdEtl.merge` gave it: a raw directory
+  * of at most one `spark.sql.files.openCostInBytes` is one partition, so
+  * each of the three actions runs one task and its sort or aggregate needs
+  * no shuffle.
   */
 object PipelineRunner {
 

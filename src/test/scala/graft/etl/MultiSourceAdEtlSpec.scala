@@ -197,19 +197,14 @@ class MultiSourceAdEtlSpec extends SparkSpec {
     try body finally spark.conf.set(key, prev)
   }
 
-  /** What the fit computes for the apsl fixtures from the session values:
-    * (input bytes, partitions n, cores).
-    */
-  private def apslFit(): (Long, Long, Int) = {
-    val bytes = Using.resource(Files.list(Paths.get(Fixtures.dir("apsl"))))(_.iterator().asScala.toSeq)
+  /** The apsl fixtures' input size: the sum of their file lengths. */
+  private def apslBytes(): Long =
+    Using.resource(Files.list(Paths.get(Fixtures.dir("apsl"))))(_.iterator().asScala.toSeq)
       .map(Files.size).sum
-    val openCost = castToImpl(spark).sessionState.conf.filesOpenCostInBytes
-    (bytes, math.max(1L, (bytes + openCost - 1) / openCost), spark.sparkContext.defaultParallelism)
-  }
 
-  test("merge fits a small raw dir to one partition, and its sorted plan needs no Exchange") {
-    val (_, n, cores) = apslFit()
-    assert(n == 1 && n < cores, s"the fixtures no longer fit one partition (n = $n, cores = $cores)")
+  test("merge makes a small raw dir one partition, and its sorted plan needs no Exchange") {
+    val openCost = castToImpl(spark).sessionState.conf.filesOpenCostInBytes
+    assert(apslBytes() <= openCost, s"the fixtures outgrew one file-open cost ($openCost bytes)")
     val out = new MultiSourceAdEtl(Configs.apsl).run(spark, Fixtures.dir("apsl"), capitalize = true)
     assert(coalescedTo(out) == Seq(1))
     assert(out.rdd.getNumPartitions == 1)
@@ -219,27 +214,17 @@ class MultiSourceAdEtlSpec extends SparkSpec {
     assert(!plan.contains("Exchange"), plan)
   }
 
-  test("merge coalesces to ceil(bytes / openCostInBytes) partitions when that is below the cores") {
-    val (bytes, _, cores) = apslFit()
-    assert(cores > 2, s"needs at least 3 cores for 1 < n < cores, has $cores")
+  test("merge coalesces an input of exactly openCostInBytes, and not one a byte larger") {
+    val bytes = apslBytes()
     val engine = new MultiSourceAdEtl(Configs.apsl)
     val plain = engine.run(spark, Fixtures.dir("apsl"), capitalize = true)
-    withOpenCost((bytes + 1) / 2) {
-      val (_, n, _) = apslFit()
-      assert(n == 2)
-      val out = engine.run(spark, Fixtures.dir("apsl"), capitalize = true)
-      assert(coalescedTo(out) == Seq(n))
-      assert(out.rdd.getNumPartitions == n)
-      assert(sortedRows(out) == sortedRows(plain))
+    withOpenCost(bytes) {
+      assert(coalescedTo(engine.run(spark, Fixtures.dir("apsl"), capitalize = true)) == Seq(1))
     }
-  }
-
-  test("merge returns the union untouched when the input needs the cores or more") {
-    withOpenCost(1L) {
-      val (_, n, cores) = apslFit()
-      assert(n >= cores)
-      val out = new MultiSourceAdEtl(Configs.apsl).run(spark, Fixtures.dir("apsl"), capitalize = true)
+    withOpenCost(bytes - 1) {
+      val out = engine.run(spark, Fixtures.dir("apsl"), capitalize = true)
       assert(coalescedTo(out).isEmpty)
+      assert(sortedRows(out) == sortedRows(plain))
     }
   }
 
